@@ -311,10 +311,6 @@ object Bench {
     } catch { case e: Throwable => System.err.println(s"[bench] local dump: ${e.getMessage}") }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
   /** Shuffle/spill blocks are ephemeral: put them on tmpfs when the host has
     * one — local-disk bandwidth on this box is subject to hypervisor IO
     * throttling (measured 15 MB/s windows; PLANS.md "host-noise"), and a
@@ -337,7 +333,7 @@ object Bench {
           val pid = f.getName.stripPrefix("graft-spark-local-").toLongOption
           pid.forall(p => scala.jdk.OptionConverters.RichOptional(ProcessHandle.of(p)).toScala.forall(!_.isAlive))
         }
-      }.foreach(deleteRecursively)
+      }.foreach(f => graft.model.Views.rmTree(f.toPath))
     if (shm.getUsableSpace >= (64L << 30))
       s"/dev/shm/graft-spark-local-${ProcessHandle.current().pid()}"
     else fallback
@@ -358,7 +354,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     sfDirV = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // a WARMUP_ONLY prime of a restricted registry is a contradiction:
     // the warmup phase itself requires the unrestricted registry, so
     // the combination used to silently emit an empty scoped artifact
@@ -383,17 +378,7 @@ object Bench {
     Runtime.getRuntime.addShutdownHook(new Thread(() => printHeadlineOnce()))
     val localDir = pickLocalDir()
     val onTmpfs = localDir.startsWith("/dev/shm")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", localDir)
-      // UTC like GraftSession/Verify (ADVICE r8): without it the
-      // events ts cast is host-timezone dependent and q_sessions
-      // cardinalities/timings drift across hosts
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(Some(localDir))
     // noop sink: full computation, no write cost, no count() shortcuts.
     // With SPARK_GRAFT_PASSES=2, min-of-2 filters codegen-compile and
     // transient JIT/GC cost; the default is one pass so the wall clock
@@ -450,24 +435,14 @@ object Bench {
     // Materialize the shared session MVs BEFORE the cold sweep and
     // report each build as its own labeled line: cold per-query numbers
     // then mean "this query's own work", not "whichever query happened
-    // to first-touch the ledger fold". Dependency-ordered (base tables,
-    // then log fixtures, then derived folds) so each label's time is
-    // its own build, not a transitively-triggered one. SPARK_GRAFT_WARMUP=0
+    // to first-touch the ledger fold". In SparkEntry.sessionViews'
+    // declared dependency order, so each label's time is its own
+    // build, not a transitively-triggered one. SPARK_GRAFT_WARMUP=0
     // restores the r10-and-earlier attribution for comparison runs.
     val warmupOn = !sys.env.get("SPARK_GRAFT_WARMUP").exists(v =>
       v == "0" || v.equalsIgnoreCase("false"))
     var warmedNames: Set[String] = Set.empty
     if ((warmupOn || warmupOnlyV) && !contextDead && only.isEmpty) {
-      def prio(n: String) = n match {
-        case "trades" | "event_stream" => 0
-        case x if x.startsWith("logs_") => 1
-        // wallet_token_flows must warm BEFORE wallet_market_flows
-        // (alphabetical order inverts the dependency): each label's
-        // time stays its own build
-        case "wallet_token_flows" => 1
-        case _ => 2
-      }
-      val mvs = SparkEntry.sessionViews.toSeq.sortBy { case (n, _) => (prio(n), n) }
       // Phase 1, SEQUENTIAL: register every MV. With the disk layer on
       // (the Bench default), a cache MISS runs the build and parquet
       // write inside Views.cached — so cold build cost lands on its own
@@ -476,7 +451,7 @@ object Bench {
       // with SPARK_GRAFT_MV_DISK=off the build cost lands in the
       // (materialize) line below instead.
       var registered: List[(String, org.apache.spark.sql.DataFrame)] = Nil
-      for ((name, fn) <- mvs if !contextDead) {
+      for ((name, fn) <- SparkEntry.sessionViews if !contextDead) {
         if (spark.sparkContext.isStopped) contextDead = true
         else {
           val t0 = System.nanoTime()
@@ -553,11 +528,7 @@ object Bench {
       // gate-local MVs (ANN truth sets / recall-gate rows) are BUILT BY
       // their gate query on purpose — the build is that query's own
       // work (and its disk-attach win); they are not warmup-list drift
-      // ann_q_: the ANN serving queries' own k-rows results (VERDICT
-      // r18 #4) — built by their query on a cold cache, disk-attached
-      // on a primed one; either way the cost is that query's own line
-      val queryLocal = Set("ann_truth_", "ann_gate_", "neardup_gate_",
-        "ann_q_")
+      val queryLocal = Set("ann_truth_", "ann_gate_", "neardup_gate_")
       val missed = (graft.model.Views.cachedNames(spark) -- warmedNames)
         .filterNot(n => queryLocal.exists(n.startsWith))
       if (missed.nonEmpty)

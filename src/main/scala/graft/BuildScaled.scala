@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize a grown-entity (or density) replica of an sf dir to disk
   * so the DuckDB oracle can crosscheck correctness AT THE SECOND SCALE
   * POINT — the sweep (ScaleSweep) measures time at ×1/×10, this makes
@@ -14,14 +12,7 @@ object BuildScaled {
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1); val k = args(2).toInt
     val axis = if (args.length > 3) args(3) else "entities"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     ScaleBench.buildScaled(spark, src, out, k, axis)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries (plan
   * hygiene: pushdown, broadcast, partial agg, codegen spans). */
 object Explain {
@@ -10,10 +8,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "q_leaderboard", "q_positions",
         "q_candles_1m", "q_token_trades", "q_market_stats")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     names.foreach { n =>
       println(s"\n========== $n ==========")
       println(SparkEntry.queries(n)(spark, d).queryExecution.explainString(

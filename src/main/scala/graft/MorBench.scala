@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.VersionedStore
 
@@ -27,17 +26,10 @@ object MorBench {
   private def fmt(v: Double): String = f"$v%.3f"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val rows = sys.env.get("SPARK_GRAFT_MOR_ROWS").flatMap(_.toLongOption)
       .getOrElse(4000000L)
     val files = 64
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-morbench")
       .toFile
@@ -102,10 +94,6 @@ object MorBench {
     println(line)
 
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(tmp)
+    graft.model.Views.rmTree(tmp.toPath)
   }
 }

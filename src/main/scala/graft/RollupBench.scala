@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Leaderboard
 
@@ -33,14 +32,7 @@ object RollupBench {
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val root = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"graft-rollupbench-${ProcessHandle.current().pid()}")
@@ -112,13 +104,7 @@ object RollupBench {
       println(
         s"""{"metric":"rollup_rewrite","sf":"$srcDir","points":[""" +
           rows.mkString(",") + "]}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root)
-    }
+    } finally graft.model.Views.rmTree(root.toPath)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Off-clamp evidence for the corpus-size-derived ANN operating points
@@ -29,7 +28,7 @@ import org.apache.spark.sql.functions._
   *
   * Env: SPARK_GRAFT_SF_DIR (source, default /root/testdata/sf0.1),
   * SPARK_GRAFT_ANN_SCALE (default 100), SPARK_GRAFT_ANN_OUT
-  * (default SCALE_ANN.json), SPARK_GRAFT_CPUS (default 32).
+  * (default SCALE_ANN.json), SPARK_GRAFT_CPUS (default: all cores).
   */
 object ScaleAnn {
   private def fmt(v: Double): String = f"$v%.4f"
@@ -39,7 +38,6 @@ object ScaleAnn {
     val k = sys.env.get("SPARK_GRAFT_ANN_SCALE").flatMap(_.toIntOption)
       .filter(_ >= 1).getOrElse(100)
     val out = sys.env.getOrElse("SPARK_GRAFT_ANN_OUT", "SCALE_ANN.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // the persisted-MV layer rides along by default: truth sets and
     // per-method gate results attach across ScaleAnn runs the same way
@@ -47,13 +45,7 @@ object ScaleAnn {
     // the advertised attach seam structurally unreachable)
     graft.model.Views.enableDefaultDiskRoot()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // ScaleSweep's stable replica cache, reused (ADVICE r17): keyed by
     // (source listing, code build) so re-runs attach to the built
@@ -66,15 +58,11 @@ object ScaleAnn {
       if (fresh) s"graft-scaleann-${ProcessHandle.current().pid()}"
       else s"graft-sweep-cache-${graft.model.Views.datasetFingerprint(srcDir)}/ann-x$k")
     val dir = dirF.getAbsolutePath
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
     val marker = new java.io.File(dirF, "_GRAFT_BUILD_COMPLETE")
     val tb0 = System.nanoTime()
     if (marker.exists()) System.err.println(s"[scaleann] reusing cached x$k replica at $dir")
     else {
-      rm(dirF)
+      graft.model.Views.rmTree(dirF.toPath)
       ScaleBench.buildScaledTable(spark, srcDir, dir, k, "entities", "embeddings")
       marker.createNewFile(): Unit
     }
@@ -127,7 +115,7 @@ object ScaleAnn {
 
     // cached replicas stay for the next run (that's the point);
     // a FRESH run's throwaway dir is cleaned up as before
-    if (fresh) rm(dirF)
+    if (fresh) graft.model.Views.rmTree(dirF.toPath)
     spark.sparkContext.setLogLevel("OFF"); spark.stop()
     println(json); System.out.flush()
   }

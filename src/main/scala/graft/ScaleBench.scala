@@ -139,11 +139,6 @@ object ScaleBench {
                            // shuffles before the output sort — the
                            // purest linear shape in the registry
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Write the ×k replica of `srcDir` to `outDir`. Replica 0 is the
     * source rows unchanged (so ×1 differs from sf0.1 only in file
     * layout — every scale point is written by the same writer and read
@@ -229,7 +224,6 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,2,4,8,16")
       .split(",").flatMap(_.trim.toIntOption).filter(_ >= 1).distinct.sorted.toSeq
     // entities (default): ×k wallets/markets/docs, per-key density fixed.
@@ -251,20 +245,14 @@ object ScaleBench {
     // ledger fold's sortWithinPartitions hits its spill cliff (the ×32
     // focus-run finding; see PLANS.md r13). The knob measures that
     // same query with data-proportional width.
-    val shuffleParts = sys.env.get("SPARK_GRAFT_SHUFFLE")
-      .flatMap(_.toIntOption).getOrElse(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    sys.env.get("SPARK_GRAFT_SHUFFLE").flatMap(_.toIntOption).foreach(n =>
+      spark.conf.set("spark.sql.shuffle.partitions", n.toLong))
 
     val root = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft-scale-${ProcessHandle.current().pid()}")
-    deleteRecursively(root)
+    graft.model.Views.rmTree(root.toPath)
 
     // times(query)(k) = steady seconds (min of 3 passes — the host's
     // documented IO-throttle windows last long enough to eat two
@@ -302,9 +290,9 @@ object ScaleBench {
         // per-dir session MVs + pinned histograms die with the scale
         // point — the next point starts cold like the previous one
         graft.model.Views.reset(spark)
-        deleteRecursively(new java.io.File(root, s"x$k"))
+        graft.model.Views.rmTree(root.toPath.resolve(s"x$k"))
       }
-    } finally deleteRecursively(root)
+    } finally graft.model.Views.rmTree(root.toPath)
 
     // least-squares slope of log2(t) on log2(k), k >= 2 (×1 sits on the
     // fixed-cost floor); exponent e in t ≈ c·k^e

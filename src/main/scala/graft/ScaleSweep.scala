@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Full-registry sweep at TWO REAL SCALE POINTS (VERDICT r15 #1).
   *
   * Why it exists: every scale claim through r15 rested on per-family
@@ -42,7 +40,7 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SWEEP_SCALES (default "1,10"), SPARK_GRAFT_SWEEP_AXIS
   * (entities|density, default entities), SPARK_GRAFT_SWEEP_OUT
   * (default SCALE_SWEEP.json), SPARK_GRAFT_ONLY (name filter),
-  * SPARK_GRAFT_CPUS (default 32).
+  * SPARK_GRAFT_CPUS (default: all cores).
   */
 object ScaleSweep {
   private def fmt(v: Double): String = f"$v%.3f"
@@ -138,11 +136,6 @@ object ScaleSweep {
       s"[sweep] run does not cover the full registry — left at $partialPath " +
         s"(covered ${times.size}/${registry.size}); $outV untouched")
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     srcV = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     axisV = sys.env.getOrElse("SPARK_GRAFT_SWEEP_AXIS", "entities") match {
@@ -156,7 +149,6 @@ object ScaleSweep {
     outV = sys.env.getOrElse("SPARK_GRAFT_SWEEP_OUT",
       (if (axisV == "density") "SCALE_SWEEP_DENSITY" else "SCALE_SWEEP") +
         (if (scoped) "_SCOPED.json" else ".json"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     scalesV = sys.env.getOrElse("SPARK_GRAFT_SWEEP_SCALES", "1,10")
       .split(",").flatMap(_.trim.toIntOption).filter(_ >= 1).distinct.sorted.toSeq
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -166,13 +158,7 @@ object ScaleSweep {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       if (!promoted) dump()))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -188,7 +174,7 @@ object ScaleSweep {
       System.getProperty("java.io.tmpdir"),
       if (fresh) s"graft-sweep-${ProcessHandle.current().pid()}"
       else s"graft-sweep-cache-${graft.model.Views.datasetFingerprint(srcV)}")
-    if (fresh) deleteRecursively(root)
+    if (fresh) graft.model.Views.rmTree(root.toPath)
     try {
       for (k <- scalesV) {
         val dirF = new java.io.File(root, s"$axisV-x$k")
@@ -198,7 +184,7 @@ object ScaleSweep {
         if (marker.exists()) {
           System.err.println(s"[sweep] reusing cached x$k replica at $dir")
         } else {
-          deleteRecursively(dirF)
+          graft.model.Views.rmTree(dirF.toPath)
           ScaleBench.buildScaled(spark, srcV, dir, k, axisV)
           marker.createNewFile(): Unit
           System.err.println(f"[sweep] built x$k in ${(System.nanoTime() - tb0) / 1e9}%.1fs")
@@ -206,14 +192,8 @@ object ScaleSweep {
         // dependency-ordered MV warmup (Bench's mv_warmup design: each
         // query's cold time is its own work, the shared folds are one
         // labeled cost per scale point)
-        def prio(n: String) = n match {
-          case "trades" | "event_stream" => 0
-          case x if x.startsWith("logs_") => 1
-          case "wallet_token_flows" => 1
-          case _ => 2
-        }
         val tw0 = System.nanoTime()
-        for ((name, fn) <- SparkEntry.sessionViews.toSeq.sortBy { case (n, _) => (prio(n), n) }) {
+        for ((name, fn) <- SparkEntry.sessionViews) {
           try fn(spark, dir).write.format("noop").mode("overwrite").save()
           catch { case e: Throwable =>
             System.err.println(s"[sweep] warmup $name x$k failed: ${e.getMessage}") }
@@ -240,9 +220,9 @@ object ScaleSweep {
           }
         }
         graft.model.Views.reset(spark)
-        if (fresh) deleteRecursively(new java.io.File(root, s"$axisV-x$k"))
+        if (fresh) graft.model.Views.rmTree(root.toPath.resolve(s"$axisV-x$k"))
       }
-    } finally if (fresh) deleteRecursively(root)
+    } finally if (fresh) graft.model.Views.rmTree(root.toPath)
     dump()
     promoteIfComplete(SparkEntry.queries.keySet)
     spark.sparkContext.setLogLevel("OFF"); spark.stop()

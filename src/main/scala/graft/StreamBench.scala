@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.{StreamingIngest, StreamingLedger}
 
@@ -107,20 +107,13 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val files = 32              // replay granularity
     // Two operating points (VERDICT r10 #6): 2 files/trigger → 16
     // batches and 8 files/trigger → 4 batches. If per-batch fixed cost
     // dominates (the r10 claim), wall time ≈ a + b·batches — the slope
     // between the points separates fixed cost from per-row cost.
     val perTriggers = Seq(2, 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // materialize the replay corpus once: ticks (candles input) and
     // two-sided fills (leaderboard/ledger input)
@@ -232,10 +225,6 @@ object StreamBench {
     }
     lines.flatten.foreach(l => System.err.println(s"[streambench] $l"))
     spark.stop()
-    def rmTree(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree)
-      f.delete(): Unit
-    }
-    rmTree(new java.io.File(tmp))
+    graft.model.Views.rmTree(java.nio.file.Paths.get(tmp))
   }
 }

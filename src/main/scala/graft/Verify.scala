@@ -1,23 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // plain disk tmpdir: the sf0.01 verify pass never hit the host's IO
-      // throttle (that motivated Bench's tmpfs local dir), and the
-      // correctness gate must carry zero tmpfs/RAM liability (VERDICT r5 §2)
-      .config("spark.local.dir", System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // plain disk tmpdir: the sf0.01 verify pass never hit the host's IO
+    // throttle (that motivated Bench's tmpfs local dir), and the
+    // correctness gate must carry zero tmpfs/RAM liability (VERDICT r5 §2)
+    val spark = GraftSession.local(Some(System.getProperty("java.io.tmpdir")))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (targeted re-verify)
     val only = sys.env.get("SPARK_GRAFT_ONLY")

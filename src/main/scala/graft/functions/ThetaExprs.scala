@@ -136,8 +136,6 @@ object ThetaExprs {
       d.getResult(false).getEstimate
   }
 
-  def sketchEstimate(bytes: Array[Byte]): Double = wrap(bytes).getEstimate
-
   /** Column API: aggregate bigint keys into a compact theta sketch. */
   def theta_agg(key: Column, lgK: Int): Column =
     ColumnBridge.column(

@@ -349,7 +349,6 @@ object Views {
     graft.operators.IvfIndex.reset(spark)
     graft.operators.PqIndex.reset(spark)
     graft.operators.EmbeddingCompress.reset(spark)
-    graft.operators.Similarity.reset(spark)
     ()
   }
 

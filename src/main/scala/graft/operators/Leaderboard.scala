@@ -136,57 +136,6 @@ object Leaderboard {
       .orderBy(col("net_cashflow_usd").desc, col("wallet"))
       .limit(k)
 
-  /** [[leaderboardWindow]] re-aggregated from the daily [[rollupState]]
-    * partials: the window bounds are day-aligned, so `ts ∈ [from, to)`
-    * ⟺ `bucket ∈ [from, to)` and the decimal partial sums re-aggregate
-    * to the identical totals. Markets = per-wallet count of (wallet,
-    * token) pairs with ≥1 in-window bucket — derived from the same
-    * (wallet, token) pre-aggregation that carries the sums, so the
-    * whole leaderboard is one pass over the state MV. */
-  def leaderboardWindowFromState(state: DataFrame, fromTs: String,
-                                 toTs: String, k: Int,
-                                 minTrades: Int = 5): DataFrame = {
-    val perTok = state
-      .filter(!col("wallet").isin(ExcludedWallets: _*))
-      .filter(col("bucket") >= lit(fromTs) && col("bucket") < lit(toTs))
-      .groupBy(col("wallet"), col("token_id"))
-      .agg(sum(col("t")).as("t"), sum(col("v")).as("v"), sum(col("c")).as("c"))
-    perTok.groupBy(col("wallet"))
-      .agg(sum(col("t")).as("trades"),
-        sum(col("v")).cast("double").as("volume_usd"),
-        sum(col("c")).cast("double").as("net_cashflow_usd"),
-        count(lit(1)).as("markets"))
-      .select(col("wallet"), col("trades"), col("volume_usd"),
-        col("net_cashflow_usd"), col("markets"))
-      .filter(col("trades") >= minTrades)
-      .orderBy(col("net_cashflow_usd").desc, col("wallet"))
-      .limit(k)
-  }
-
-  /** [[auditOnePass]] re-aggregated from the daily [[rollupState]]
-    * partials (window bounds day-aligned): both metric sets fold from
-    * the state's exact decimal (t, c) partials, one keyed pass over
-    * the MV instead of a full corpus shuffle. */
-  def auditOnePassFromState(state: DataFrame, fromTs: String, toTs: String,
-                            k: Int, minTrades: Int = 5): DataFrame = {
-    val inWin = col("bucket") >= lit(fromTs) && col("bucket") < lit(toTs)
-    val g = state.filter(!col("wallet").isin(ExcludedWallets: _*))
-      .groupBy(col("wallet"))
-      .agg(
-        sum(col("t")).as("trades_a"),
-        sum(col("c")).cast("double").as("net_a"),
-        sum(when(inWin, col("t")).otherwise(0L)).as("trades_b"),
-        sum(when(inWin, col("c")).otherwise(lit(0).cast("decimal(18,4)")))
-          .cast("double").as("net_b"))
-    val lbA = g.filter(col("trades_a") >= minTrades)
-      .orderBy(col("net_a").desc, col("wallet")).limit(k)
-      .select(col("wallet"), col("net_a").as("net_cashflow_usd"))
-    val lbB = g.filter(col("trades_b") >= minTrades)
-      .orderBy(col("net_b").desc, col("wallet")).limit(k)
-      .select(col("wallet"), col("net_b").as("net_cashflow_usd"))
-    audit(lbA, lbB)
-  }
-
   /** [[topPerMarket]] re-aggregated from [[walletTokenFlows]]: the
     * (market, wallet) volume/trades sums fold from the rollup's exact
     * partials; only rollup-sized rows ever shuffle. */
@@ -205,27 +154,6 @@ object Leaderboard {
       .filter(col("rank") <= n)
       .select(col("market"), col("rank"), col("wallet"),
         col("volume_usd"), col("trades"))
-  }
-
-  def leaderboardFromRollup(walletTrades: DataFrame, bucket: String, k: Int,
-                            minTrades: Int = 5): DataFrame = {
-    val base = walletTrades.filter(!col("wallet").isin(ExcludedWallets: _*))
-    val pre = base
-      .groupBy(col("wallet"), date_trunc(bucket, col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("t"), sum(col("usd")).as("v"),
-        sum(when(col("side") === "sell", col("usd")).otherwise(-col("usd"))).as("c"))
-    val sums = pre.groupBy(col("wallet"))
-      .agg(sum(col("t")).as("trades"),
-        sum(col("v")).cast("double").as("volume_usd"),
-        sum(col("c")).cast("double").as("net_cashflow_usd"))
-    val markets = base.select(col("wallet"), col("token_id")).distinct()
-      .groupBy(col("wallet")).agg(count(lit(1)).as("markets"))
-    sums.join(markets, Seq("wallet"))
-      .select(col("wallet"), col("trades"), col("volume_usd"),
-        col("net_cashflow_usd"), col("markets"))
-      .filter(col("trades") >= minTrades)
-      .orderBy(col("net_cashflow_usd").desc, col("wallet"))
-      .limit(k)
   }
 
   /** Leaderboard restricted to a time window, computed from hourly

@@ -30,57 +30,6 @@ object Similarity {
       .filter(col("n") > 0)
       .select(col("id"), transform(col("v"), x => x / col("n")).as("unit"))
 
-  private val truthCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), DataFrame]()
-
-  /** Session-cached [[bruteForceTopK]] keyed by a caller-chosen corpus
-    * key — the ANN recall gate consumes ONE ground-truth set per corpus
-    * shape from SEVEN method gates, so without a cache the corpus-wide
-    * brute-force plan re-executes once per gate (VERDICT r15 #1: the
-    * suite's most expensive steady query was ~6 re-runs of this). The
-    * result is tiny (k rows per query vector) and persisted; lifetime
-    * follows the session MVs via [[reset]]. */
-  def bruteForceTopKCached(corpus: DataFrame, queries: DataFrame, k: Int,
-                           cacheKey: String): DataFrame =
-    truthCache.computeIfAbsent(
-      (corpus.sparkSession.sparkContext.applicationId, cacheKey, k),
-      _ => bruteForceTopK(corpus, queries, k).cache())
-
-  private val gateCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), DataFrame]()
-
-  /** Session-cached per-method gate result (the truth-set cache's
-    * companion, closing the other half of VERDICT r15 #1's cost): each
-    * recall-gate method's result is deterministic — seeded hyperplanes
-    * and hashes, deterministic k-means init, fixed probe counts — and
-    * tiny (k rows per query vector, or a few recall rows), but UNCACHED
-    * its corpus-wide scan re-ran on every steady pass even though the
-    * gate's booleans cannot change within a session. `build` is by-name
-    * so a warm hit constructs no plan at all. Lifetime follows
-    * [[reset]], same as the truth sets. */
-  def methodTopKCached(s: org.apache.spark.sql.SparkSession,
-                       cacheKey: String, method: String)
-                      (build: => DataFrame): DataFrame =
-    gateCache.computeIfAbsent(
-      (s.sparkContext.applicationId, cacheKey + ":" + method),
-      _ => build.cache())
-
-  /** Unpersist and forget this app's cached truth sets + gate results
-    * ([[graft.model.Views.reset]] calls this). */
-  def reset(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    val it = truthCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == app) { e.getValue.unpersist(); it.remove() }
-    }
-    val it2 = gateCache.entrySet().iterator()
-    while (it2.hasNext) {
-      val e = it2.next()
-      if (e.getKey._1 == app) { e.getValue.unpersist(); it2.remove() }
-    }
-  }
-
   /** Exact brute-force top-k: for each query vector, the k nearest
     * corpus vectors by cosine. The (small) query set is broadcast —
     * the corpus streams once, no shuffle until the per-query top-k. */

@@ -95,10 +95,6 @@ object LogDecode {
   def wordLong(w: Column): Column =
     conv(substring(w, 49, 16), 16, 10).cast("long")
 
-  /** A topic's address payload: the low 20 bytes, `0x`-prefixed. */
-  def topicAddress(topic: Column): Column =
-    concat(lit("0x"), substring(topic, 27, 40))
-
   /** Left-pad a BIGINT into a 32-byte hex word (encode side). */
   def toWord(v: Column): Column =
     lpad(lower(hex(v.cast("long"))), 64, "0")

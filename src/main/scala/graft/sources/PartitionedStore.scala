@@ -58,11 +58,6 @@ object PartitionedStore {
     swapDir(src, tmp, s"$path/.old-$ym")
   }
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
-
   /** Crash-safe directory replacement: move the live dir ASIDE first
     * (one rename), move tmp into place (one rename), only then delete
     * the old copy. A crash between the renames leaves either the old
@@ -86,17 +81,17 @@ object PartitionedStore {
     val liveDir = new java.io.File(live)
     val tmpDir = new java.io.File(tmp)
     val asideDir = new java.io.File(aside)
-    rm(asideDir)
+    graft.model.Views.rmTree(asideDir.toPath)
     val hadLive = liveDir.exists()
     if (hadLive && !liveDir.renameTo(asideDir))
       throw new java.io.IOException(s"swap: cannot move $live aside")
     if (!tmpDir.renameTo(liveDir)) {
       // restore the original before failing
       if (hadLive) asideDir.renameTo(liveDir)
-      rm(tmpDir)
+      graft.model.Views.rmTree(tmpDir.toPath)
       throw new java.io.IOException(s"swap failed for $live")
     }
-    rm(asideDir)
+    graft.model.Views.rmTree(asideDir.toPath)
   }
 
   /** Z-order-clustered write: range-partition + sort by the morton

@@ -100,25 +100,6 @@ class FlowsRollupSpec extends SparkSpec {
     assert(direct == served); assert(direct.nonEmpty)
   }
 
-  test("leaderboardWindowFromState == leaderboardWindow row-for-row " +
-    "(day-aligned window)") {
-    val state = Leaderboard.rollupState(wt, "day")
-    val direct = rowSet(
-      Leaderboard.leaderboardWindow(wt, "1996-01-01", "1997-01-01", 100))
-    val served = rowSet(Leaderboard.leaderboardWindowFromState(
-      state, "1996-01-01", "1997-01-01", 100))
-    assert(direct == served); assert(direct.nonEmpty)
-  }
-
-  test("auditOnePassFromState == auditOnePass row-for-row") {
-    val state = Leaderboard.rollupState(wt, "day")
-    val direct = rowSet(
-      Leaderboard.auditOnePass(wt, "1996-01-01", "1997-01-01", 100))
-    val served = rowSet(Leaderboard.auditOnePassFromState(
-      state, "1996-01-01", "1997-01-01", 100))
-    assert(direct == served); assert(direct.nonEmpty)
-  }
-
   test("weight-2 histogram over trades == histogram over the explode " +
     "(each fill contributes two identical-usd rows)") {
     val markets = Tables.part(spark, sf).select(
