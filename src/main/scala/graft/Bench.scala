@@ -437,12 +437,9 @@ object Bench {
     // then mean "this query's own work", not "whichever query happened
     // to first-touch the ledger fold". In SparkEntry.sessionViews'
     // declared dependency order, so each label's time is its own
-    // build, not a transitively-triggered one. SPARK_GRAFT_WARMUP=0
-    // restores the r10-and-earlier attribution for comparison runs.
-    val warmupOn = !sys.env.get("SPARK_GRAFT_WARMUP").exists(v =>
-      v == "0" || v.equalsIgnoreCase("false"))
+    // build, not a transitively-triggered one.
     var warmedNames: Set[String] = Set.empty
-    if ((warmupOn || warmupOnlyV) && !contextDead && only.isEmpty) {
+    if (!contextDead && only.isEmpty) {
       // Phase 1, SEQUENTIAL: register every MV. With the disk layer on
       // (the Bench default), a cache MISS runs the build and parquet
       // write inside Views.cached — so cold build cost lands on its own
@@ -524,7 +521,7 @@ object Bench {
     // sweeps is one the warmup list missed — its build cost landed on
     // some query's cold time. Loud so SparkEntry.sessionViews drift is
     // caught the round it happens.
-    if (warmupOn && warmedNames.nonEmpty && !contextDead) {
+    if (warmedNames.nonEmpty && !contextDead) {
       // gate-local MVs (ANN truth sets / recall-gate rows) are BUILT BY
       // their gate query on purpose — the build is that query's own
       // work (and its disk-attach win); they are not warmup-list drift

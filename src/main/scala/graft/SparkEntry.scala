@@ -325,15 +325,16 @@ object SparkEntry {
 
   // HIERARCHICAL merge-on-read fixture — q_versioned_mor_part: the
   // customer dim partitioned by market segment, driven through the
-  // partitioned vectored ops:
+  // vectored ops (the store picks the hierarchical path from the
+  // table's manifest form):
   //   v1 = appendPartitioned by segment;
-  //   v2 = deletePartitionedVectored custkey%7==3 (O(1) metadata:
+  //   v2 = deleteVectored custkey%7==3 (O(1) metadata:
   //        every pmanifest carried verbatim, one table-level #dv);
-  //   v3 = mergePartitionedVectored moving every %10==0 key to the
+  //   v3 = mergeVectored moving every %10==0 key to the
   //        AUTOMOBILE partition (PARTITION-MOVING upsert: source
   //        partitions never rewritten) + a %100==1 echo insert into
   //        BUILDING;
-  //   v4 = deletePartitionedVectored name='UPDATED' AND custkey%20==0
+  //   v4 = deleteVectored name='UPDATED' AND custkey%20==0
   //        (vectors over the merge's own new files).
   // The hash pins the hierarchical vector subtraction end-to-end:
   // the anti-join above the Catalyst FileIndex scan, cross-partition
@@ -350,7 +351,7 @@ object SparkEntry {
           col("c_name").as("name"),
           col("c_mktsegment").as("segment"))
         graft.sources.VersionedStore.appendPartitioned(base, path, "segment")
-        graft.sources.VersionedStore.deletePartitionedVectored(s, path,
+        graft.sources.VersionedStore.deleteVectored(s, path,
           col("c_custkey") % 7 === 3)
         val updates = base.filter(col("c_custkey") % 10 === 0)
           .select(col("c_custkey"), lit("UPDATED").as("name"),
@@ -358,9 +359,9 @@ object SparkEntry {
           .unionByName(base.filter(col("c_custkey") % 100 === 1)
             .select((col("c_custkey") + 1000000L).as("c_custkey"),
               lit("INSERTED").as("name"), lit("BUILDING").as("segment")))
-        graft.sources.VersionedStore.mergePartitionedVectored(s, path,
+        graft.sources.VersionedStore.mergeVectored(s, path,
           updates, Seq("c_custkey"))
-        graft.sources.VersionedStore.deletePartitionedVectored(s, path,
+        graft.sources.VersionedStore.deleteVectored(s, path,
           col("name") === "UPDATED" && col("c_custkey") % 20 === 0)
         path
       })

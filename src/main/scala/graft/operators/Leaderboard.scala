@@ -231,32 +231,11 @@ object Leaderboard {
     audit(lbA, lbB)
   }
 
-  /** Audit breakdown for the leaderboard: per wallet × market, with
-    * counts both sides (reference: /leaderboard/explain). `markets` is
-    * a broadcast dimension mapping token_id → market. */
-  def explain(walletTrades: DataFrame, markets: DataFrame): DataFrame = {
-    // usd is ≤4-decimals-exact, so the sums ride 1e-4-scaled LONGS
-    // (integer partial aggregation, ~30% faster than decimal sums at
-    // equal exactness — measured sf0.1) and divide back to double
-    // once per group; net = sell − buy needs no third sum
-    val ui = round(col("usd") * 10000).cast("long")
-    walletTrades
-      .join(broadcast(markets), Seq("token_id"))
-      .groupBy(col("wallet"), col("market"))
-      .agg(
-        count(lit(1)).as("trades"),
-        sum(when(col("side") === "buy", ui).otherwise(0L)).as("bi"),
-        sum(when(col("side") === "sell", ui).otherwise(0L)).as("si"))
-      .select(col("wallet"), col("market"), col("trades"),
-        (col("bi") / 10000.0).as("buy_usd"),
-        (col("si") / 10000.0).as("sell_usd"),
-        ((col("si") - col("bi")) / 10000.0).as("net_cashflow_usd"))
-  }
-
   /** (wallet, token_id) flow partials — the SummingMergeTree-style
-    * rollup the reference maintains at ingest; [[explainFromFlows]]
-    * and the win/loss record re-aggregate THIS (one cached ~halved
-    * frame) instead of re-shuffling the two-sided explode per query.
+    * rollup the reference maintains at ingest; the leaderboard explain
+    * breakdown (`q_lb_explain`, served through `RollupRewrite`) and the
+    * win/loss record re-aggregate THIS (one cached ~halved frame)
+    * instead of re-shuffling the two-sided explode per query.
     * All sums are exact: qty values are integral (double sums of
     * integers commute), usd rides 1e-4-scaled longs. */
   def walletTokenFlows(walletTrades: DataFrame): DataFrame = {
@@ -276,17 +255,4 @@ object Leaderboard {
         sum(col("qty")).as("tq"),
         max(col("qty")).as("mxq"))
   }
-
-  /** [[explain]] re-aggregated from [[walletTokenFlows]] partials —
-    * identical output, but the per-query work is a broadcast join and
-    * a group-by over the rollup instead of the raw explode. */
-  def explainFromFlows(flows: DataFrame, markets: DataFrame): DataFrame =
-    flows.join(broadcast(markets), Seq("token_id"))
-      .groupBy(col("wallet"), col("market"))
-      .agg(sum(col("trades")).as("trades"),
-        sum(col("bi")).as("bi"), sum(col("si")).as("si"))
-      .select(col("wallet"), col("market"), col("trades"),
-        (col("bi") / 10000.0).as("buy_usd"),
-        (col("si") / 10000.0).as("sell_usd"),
-        ((col("si") - col("bi")) / 10000.0).as("net_cashflow_usd"))
 }

@@ -66,7 +66,8 @@ object VersionedSqlTables {
 }
 
 /** `DELETE FROM <registered> [WHERE <pred>]` — dispatches to the
-  * store's delete family by table layout and mutation mode. */
+  * store's delete by mutation mode; the store reads the table's
+  * layout itself. */
 case class GraftDeleteCommand(table: String, whereSql: Option[String])
     extends LeafRunnableCommand {
   override val output: Seq[AttributeReference] =
@@ -76,16 +77,10 @@ case class GraftDeleteCommand(table: String, whereSql: Option[String])
     val path = VersionedSqlTables.pathOf(spark, table).getOrElse(
       sys.error(s"$table is not a registered graft-versioned table"))
     val cond = whereSql.map(expr).getOrElse(lit(true))
-    val cur = VersionedStore.currentVersion(path)
-    require(cur > 0, s"cannot DELETE: no committed version at $path")
-    val vectored = VersionedSqlTables.modeVectored(spark)
     val v =
-      if (VersionedStore.isFlatVersion(path, cur))
-        if (vectored) VersionedStore.deleteVectored(spark, path, cond)
-        else VersionedStore.delete(spark, path, cond)
-      else if (vectored)
-        VersionedStore.deletePartitionedVectored(spark, path, cond)
-      else VersionedStore.deletePartitioned(spark, path, cond)
+      if (VersionedSqlTables.modeVectored(spark))
+        VersionedStore.deleteVectored(spark, path, cond)
+      else VersionedStore.delete(spark, path, cond)
     Seq(Row(v))
   }
 }
@@ -103,25 +98,19 @@ case class GraftMergeCommand(table: String, source: String,
     val path = VersionedSqlTables.pathOf(spark, table).getOrElse(
       sys.error(s"$table is not a registered graft-versioned table"))
     val updates = spark.table(source)
-    val cur = VersionedStore.currentVersion(path)
-    require(cur > 0, s"cannot MERGE: no committed version at $path")
-    val vectored = VersionedSqlTables.modeVectored(spark)
     val v =
-      if (VersionedStore.isFlatVersion(path, cur))
-        if (vectored) VersionedStore.mergeVectored(spark, path, updates, keys)
-        else VersionedStore.merge(spark, path, updates, keys)
-      else if (vectored)
-        VersionedStore.mergePartitionedVectored(spark, path, updates, keys)
-      else VersionedStore.mergePartitioned(spark, path, updates, keys)
+      if (VersionedSqlTables.modeVectored(spark))
+        VersionedStore.mergeVectored(spark, path, updates, keys)
+      else VersionedStore.merge(spark, path, updates, keys)
     Seq(Row(v))
   }
 }
 
 /** `UPDATE <registered> SET c = expr[, …] [WHERE <pred>]` (ANSI) and
   * ClickHouse's `ALTER TABLE <registered> UPDATE c = expr WHERE pred` —
-  * both lower onto the store's update family by table layout and
-  * mutation mode (VERDICT r15 next-round #4: the one mutation verb the
-  * parser still refused). SET expressions evaluate against the OLD row
+  * both lower onto the store's update by mutation mode (VERDICT r15
+  * next-round #4: the one mutation verb the parser still refused).
+  * SET expressions evaluate against the OLD row
   * and cast back to the column's type; vectored mode kills matched
   * rows by delete vector and appends the projected copies. */
 case class GraftUpdateCommand(table: String, sets: Seq[(String, String)],
@@ -135,16 +124,10 @@ case class GraftUpdateCommand(table: String, sets: Seq[(String, String)],
       sys.error(s"$table is not a registered graft-versioned table"))
     val cond = whereSql.map(expr).getOrElse(lit(true))
     val setCols = sets.map { case (c, e) => c -> expr(e) }
-    val cur = VersionedStore.currentVersion(path)
-    require(cur > 0, s"cannot UPDATE: no committed version at $path")
-    val vectored = VersionedSqlTables.modeVectored(spark)
     val v =
-      if (VersionedStore.isFlatVersion(path, cur))
-        if (vectored) VersionedStore.updateVectored(spark, path, cond, setCols)
-        else VersionedStore.update(spark, path, cond, setCols)
-      else if (vectored)
-        VersionedStore.updatePartitionedVectored(spark, path, cond, setCols)
-      else VersionedStore.updatePartitioned(spark, path, cond, setCols)
+      if (VersionedSqlTables.modeVectored(spark))
+        VersionedStore.updateVectored(spark, path, cond, setCols)
+      else VersionedStore.update(spark, path, cond, setCols)
     Seq(Row(v))
   }
 }

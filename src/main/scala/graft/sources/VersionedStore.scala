@@ -306,27 +306,41 @@ object VersionedStore {
     * still attached — the find-matches input for the row-level ops:
     * probes read THIS so matched positions (for vectors) and matched
     * files (for rewrites) fall out of the same scan, vector-applied
-    * so already-deleted rows can never re-match. */
-  private def snapshotWithMeta(spark: SparkSession, path: String,
-                               v: Int): DataFrame = {
-    val base = withMeta(readFiles(spark, path, filesAsOf(path, v),
-      Some(effectiveSchema(spark, path, v))))
+    * so already-deleted rows can never re-match. A flat version reads
+    * its files under the recorded schema; a hierarchical one scans
+    * through the Catalyst FileIndex ([[snapshotRelation]]), so
+    * partition, stats and bloom predicates prune before any data is
+    * read. */
+  private def probeSnapshot(spark: SparkSession, path: String,
+                            v: Int): DataFrame = {
+    val scan =
+      if (isFlatVersion(path, v))
+        readFiles(spark, path, filesAsOf(path, v),
+          Some(effectiveSchema(spark, path, v)))
+      else spark.baseRelationToDataFrame(snapshotRelation(spark, path, v))
+    val stamped = withMeta(scan)
     val dvs = deleteVectorsAsOf(path, v)
-    if (dvs.isEmpty) base
-    else base.join(dvFrame(spark, path, dvs),
+    if (dvs.isEmpty) stamped
+    else stamped.join(dvFrame(spark, path, dvs),
       Seq("__dv_file", "__dv_pos"), "left_anti")
   }
 
-  /** Read a bounded set of version `v`'s data files with `v`'s
-    * delete vectors applied — the copy-on-write rewrite input (a raw
-    * [[readFiles]] would resurrect vector-deleted rows). */
-  private def readFilesApplied(spark: SparkSession, path: String,
-                               rel: Seq[String],
-                               schema: Option[
-                                 org.apache.spark.sql.types.StructType],
-                               v: Int): DataFrame =
-    applyDvs(spark, path, readFiles(spark, path, rel, schema),
-      deleteVectorsAsOf(path, v))
+  /** Version `v`'s data files `rel` with `v`'s delete vectors applied
+    * — the copy-on-write rewrite input (a raw read would resurrect
+    * vector-deleted rows), under the recorded schema so pre-evolution
+    * files null-fill. A hierarchical version's files come back with
+    * their partition value reattached (the predicate may reference it;
+    * data files do not store it), so the commit can lay the rows back
+    * out by partition. */
+  private def readTouched(spark: SparkSession, path: String, v: Int,
+                          rel: Seq[String]): DataFrame = {
+    val dvs = deleteVectorsAsOf(path, v)
+    // stamp each scan, subtract once over the union
+    val rows = readVersionFiles(spark, path, v, rel,
+      Some(effectiveSchema(spark, path, v)),
+      perScan = if (dvs.isEmpty) identity else withMeta).get
+    if (dvs.isEmpty) rows else subtractStamped(spark, path, rows, dvs)
+  }
 
   /** Read the table as of version `v` — a stable snapshot: later
     * commits, compactions and vacuums of other versions never change
@@ -474,21 +488,34 @@ object VersionedStore {
   def compactSmall(spark: SparkSession, path: String, targetBytes: Long,
                    minFiles: Int = 2): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val cur = flatCurrent(path, "compactSmall")
+    val cur = headVersion(path, "compactSmall")
+    require(isFlatVersion(path, cur),
+      s"compactSmall bin-packs flat tables; version $cur is hierarchical " +
+        "— compactPartition compacts one of its partitions")
     val small = filesAsOf(path, cur)
       .filter(f => new File(path, f).length() < targetBytes)
-    if (small.size < minFiles) cur
+    if (small.isEmpty || small.size < minFiles) cur
     else {
       val totalBytes = small.map(f => new File(path, f).length()).sum
       val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
-      val rewritten = readFilesApplied(spark, path, small,
-        Some(effectiveSchema(spark, path, cur)), cur)
+      val rewritten = readTouched(spark, path, cur, small)
         .repartition(nOut.toInt)
       commitRewrite(spark, rewritten, path, cur, small)
     }
   }
 
-  // ---- row-level operations (copy-on-write) --------------------------
+  // ---- row-level operations ------------------------------------------
+  //
+  // One entry point per verb, on either layout: each operation reads
+  // its base version's manifest form and runs that layout's commit — a
+  // flat version publishes a `.manifest` (carried data files + `D:`
+  // vector lines), a hierarchical one a manifest list whose touched
+  // partitions re-mint their pmanifests while untouched ones are
+  // carried by reference (`#dv` lines for vectors). The find-matches
+  // probe ([[probeSnapshot]]), the rewrite input ([[readTouched]]) and
+  // the vector sidecar ([[vectorOf]]) are shared; the caller never
+  // says how the table is laid out (ClickHouse's `ALTER TABLE …
+  // DELETE/UPDATE` on a month-partitioned table).
 
   /** Delete the rows matching `predicate` as a new version, rewriting
     * ONLY the data files that contain at least one match — every other
@@ -498,11 +525,16 @@ object VersionedStore {
     *
     * Two scans, both file-bounded: (1) a find-matches scan whose
     * predicate is pushed to the parquet reader (row-group stats skip
-    * non-matching files wholesale), collecting the DISTINCT file names
-    * that contain matches — driver state is O(#files), never O(rows);
-    * (2) a rewrite scan over only those files. At 100 TB a delete
-    * whose predicate touches one time band rewrites that band's few
-    * files and carries the rest — O(matching data), not O(table).
+    * non-matching files wholesale; on a hierarchical table the scan
+    * runs through the Catalyst FileIndex, so a partition or stats
+    * predicate prunes whole partitions and files first), collecting
+    * the DISTINCT file names that contain matches — driver state is
+    * O(#files), never O(rows); (2) a rewrite scan over only those
+    * files, each inside its own partition. At 100 TB a delete whose
+    * predicate touches one time band rewrites that band's few files
+    * and carries the rest — O(matching data), not O(table). A
+    * partition whose every row is deleted disappears from the new
+    * manifest list.
     *
     * Delete semantics are WHERE-true: rows where the predicate is
     * false OR NULL are kept. A predicate matching nothing is a no-op
@@ -510,21 +542,8 @@ object VersionedStore {
   def delete(spark: SparkSession, path: String,
              predicate: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val cur = flatCurrent(path, "delete")
-    val touched = touchedFiles(spark, path, cur,
-      _.filter(predicate))
-    if (touched.isEmpty) cur
-    else {
-      // touched files are read under the RECORDED schema: a file
-      // written before a schema evolution null-fills the added
-      // columns, so a predicate on an evolved column still evaluates;
-      // vector-applied so an earlier merge-on-read delete's rows do
-      // not resurrect into the rewrite
-      val survivors = readFilesApplied(spark, path, touched,
-          Some(effectiveSchema(spark, path, cur)), cur)
-        .filter(not(coalesce(predicate, lit(false))))
-      commitRewrite(spark, survivors, path, cur, touched)
-    }
+    rewriteMatched(spark, path, headVersion(path, "delete"),
+      _.filter(predicate), _.filter(not(coalesce(predicate, lit(false)))))
   }
 
   /** Project `sets` onto rows matching `predicate` — each SET
@@ -555,25 +574,28 @@ object VersionedStore {
     }: _*)
   }
 
-  /** ANSI `UPDATE … SET … WHERE …` (flat table, copy-on-write): the
-    * [[delete]] machinery with a projection instead of a drop — only
-    * the data files holding a matched row are rewritten (matched rows
-    * projected through `sets`, their file-mates carried into the
-    * rewrite verbatim), every other file carried by reference.
-    * ClickHouse's `ALTER TABLE … UPDATE` / Delta's UPDATE. Returns
-    * the new version, or the current one when nothing matched. */
+  /** ANSI `UPDATE … SET … WHERE …` (copy-on-write): the [[delete]]
+    * machinery with a projection instead of a drop — only the data
+    * files holding a matched row are rewritten (matched rows projected
+    * through `sets`, their file-mates carried into the rewrite
+    * verbatim), every other file carried by reference. ClickHouse's
+    * `ALTER TABLE … UPDATE` / Delta's UPDATE. Returns the new version,
+    * or the current one when nothing matched. SET on a hierarchical
+    * table's partition column refuses loudly: a partition-moving
+    * update is [[updateVectored]] territory (copy-on-write would have
+    * to rewrite both partitions). */
   def update(spark: SparkSession, path: String,
              predicate: org.apache.spark.sql.Column,
              sets: Seq[(String, org.apache.spark.sql.Column)]): Int = {
-    val cur = flatCurrent(path, "update")
-    val touched = touchedFiles(spark, path, cur, _.filter(predicate))
-    if (touched.isEmpty) cur
-    else {
-      val rows = readFilesApplied(spark, path, touched,
-        Some(effectiveSchema(spark, path, cur)), cur)
-      commitRewrite(spark, applySets(rows, predicate, sets), path, cur,
-        touched)
+    val cur = headVersion(path, "update")
+    if (!isFlatVersion(path, cur)) {
+      val partCol = readMlist(path, cur).partCol
+      require(!sets.exists(_._1.equalsIgnoreCase(partCol)),
+        s"UPDATE SET on partition column $partCol is not supported " +
+          "copy-on-write — use the vectored mode for partition moves")
     }
+    rewriteMatched(spark, path, cur, _.filter(predicate),
+      applySets(_, predicate, sets))
   }
 
   /** Upsert `updates` by `keys` as a new version: rows whose key
@@ -582,7 +604,11 @@ object VersionedStore {
     * matched key are rewritten — the rest carried by reference
     * (Delta's MERGE, specialized to whenMatched-update-all /
     * whenNotMatched-insert-all: the ReplacingMergeTree keep-latest
-    * upsert as a table operation instead of a read-time dedup).
+    * upsert as a table operation instead of a read-time dedup). On a
+    * hierarchical table the update rows land in THEIR OWN partitions,
+    * so a partition-moving update rewrites both sides; the table stays
+    * vector-free (e.g. to stay servable through the relation-based
+    * reader).
     *
     * The find-matches pass is a semi-join of the snapshot against the
     * update keys — Spark broadcasts the key set when it is small (the
@@ -592,46 +618,56 @@ object VersionedStore {
     * replaced. `updates` must carry exactly the table's columns. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
             keys: Seq[String]): Int = {
-    val cur = flatCurrent(path, "merge")
-    val table = readAsOf(spark, path, cur)
-    require(updates.columns.toSet == table.columns.toSet,
-      s"merge schema mismatch: table has ${table.columns.sorted.mkString(",")}" +
-        s" but updates carry ${updates.columns.sorted.mkString(",")}")
-    require(keys.nonEmpty && keys.forall(updates.columns.contains),
-      s"merge keys $keys must be update columns")
-    val keyRows = updates.select(keys.map(org.apache.spark.sql.functions.col): _*)
-      .distinct()
-    requireUniqueKeys(updates, keys,
-      "updates carry duplicate keys — which row wins would be nondeterministic")
-    val touched = touchedFiles(spark, path, cur,
-      _.join(keyRows, keys, "left_semi"))
-    val aligned = updates.select(table.columns.map(
-      org.apache.spark.sql.functions.col): _*)
-    // no file holds a matched key -> a pure insert: append the update
-    // rows, carry every existing file
-    val rewritten =
-      if (touched.isEmpty) aligned
-      else readFilesApplied(spark, path, touched,
-          Some(effectiveSchema(spark, path, cur)), cur)
-        .join(keyRows, keys, "left_anti")
-        .unionByName(aligned)
-    commitRewrite(spark, rewritten, path, cur, touched)
+    val cur = headVersion(path, "merge")
+    val (cols, keyRows) = mergeInput(spark, path, cur, updates, keys)
+    // no file holds a matched key -> a pure insert: the update rows
+    // land, every existing file is carried
+    rewriteMatched(spark, path, cur, _.join(keyRows, keys, "left_semi"),
+      _.join(keyRows, keys, "left_anti"),
+      inserts = Some(updates.select(cols.map(
+        org.apache.spark.sql.functions.col): _*)))
+  }
+
+  /** The copy-on-write core of [[delete]] / [[update]] / [[merge]]:
+    * find the files of version `cur` holding a `probe` match on the
+    * vector-applied snapshot, re-read only those ([[readTouched]]),
+    * put them through `rewrite`, and commit the result together with
+    * `inserts` while every other file is carried by reference. Nothing
+    * touched and nothing to insert mints no version. */
+  private def rewriteMatched(spark: SparkSession, path: String, cur: Int,
+                             probe: DataFrame => DataFrame,
+                             rewrite: DataFrame => DataFrame,
+                             inserts: Option[DataFrame] = None): Int = {
+    val touched = touchedFiles(spark, path, cur, probe)
+    if (touched.isEmpty && inserts.isEmpty) cur
+    else {
+      val kept =
+        if (touched.isEmpty) None
+        else Some(rewrite(readTouched(spark, path, cur, touched)))
+      commitRewrite(spark, (kept ++ inserts).reduce(_.unionByName(_)),
+        path, cur, touched)
+    }
   }
 
   /** [[delete]] in merge-on-read form: publish a DELETE VECTOR of the
     * matched rows' (file, position) pairs instead of rewriting any
     * data file — commit cost O(matched rows), not O(touched files),
     * the right shape for a point/narrow delete in a huge table (a
-    * GDPR erasure, a reorg retraction). Readers subtract the vector
-    * with one broadcast anti-join; [[compact]] folds accumulated
-    * vectors back into clean files (the read-amplification reclaim,
-    * Delta's OPTIMIZE after DV deletes). Returns the new version, or
-    * the current one unchanged when nothing matched. NULL-predicate
-    * rows never match, the [[delete]] contract. */
+    * GDPR erasure, a reorg retraction). On a hierarchical table the
+    * commit carries the ENTIRE previous manifest list VERBATIM plus
+    * the new `#dv` lines — O(1) metadata, not even the touched
+    * partitions' pmanifests re-mint; vector rows key on
+    * manifest-relative paths, so one table-level set serves every
+    * partition. Readers subtract the vector with one broadcast
+    * anti-join; [[reorgVectored]], [[compact]] and [[compactPartition]]
+    * fold accumulated vectors back into clean files (the
+    * read-amplification reclaim, Delta's OPTIMIZE after DV deletes).
+    * Returns the new version, or the current one unchanged when
+    * nothing matched. NULL-predicate rows never match, the [[delete]]
+    * contract. */
   def deleteVectored(spark: SparkSession, path: String,
                      predicate: org.apache.spark.sql.Column): Int =
-    deleteVectoredAt(spark, path, predicate,
-      flatCurrent(path, "deleteVectored"))
+    deleteVectoredAt(spark, path, predicate, headVersion(path, "delete"))
 
   /** [[deleteVectored]] against an EXPLICIT base version — the test
     * seam for the auto-rebase race (a stale base makes the publish
@@ -640,22 +676,12 @@ object VersionedStore {
   private[graft] def deleteVectoredAt(spark: SparkSession, path: String,
                                       predicate: org.apache.spark.sql.Column,
                                       base: Int): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = base
-    val v = cur + 1
+    import org.apache.spark.sql.functions.{coalesce, lit}
     // matched positions off the vector-applied snapshot: re-deleting
     // an already-dead row can never re-list its position
-    val matched = snapshotWithMeta(spark, path, cur)
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      // cluster by file (AQE re-coalesces the small shuffle): one
-      // tight run-length-friendly sidecar per touched file region
-      .repartition(col("file"))
-    val dvRel = writeSidecar(matched, path, v)
-    val parts = listParquet(path, dvRel)
-    if (sidecarRowCount(path, parts) == 0L)
-      cur // nothing matched — the empty attempt dir is invisible debris
-    else publishDvCommit(spark, path, cur, parts, flat = true)
+    val dv = vectorOf(probeSnapshot(spark, path, base)
+      .filter(coalesce(predicate, lit(false))), path, base + 1)
+    if (dv.isEmpty) base else publishDvCommit(spark, path, base, dv)
   }
 
   /** Publish a metadata-only delete-vector commit with bounded
@@ -673,8 +699,8 @@ object VersionedStore {
     * serial schedule in which this delete ran FIRST, so the history
     * stays serializable. */
   private def publishDvCommit(spark: SparkSession, path: String,
-                              baseV: Int, dvParts: Seq[String],
-                              flat: Boolean): Int = {
+                              baseV: Int, dvParts: Seq[String]): Int = {
+    val flat = isFlatVersion(path, baseV)
     var base = baseV
     var target = baseV + 1
     var tries = 0
@@ -721,76 +747,39 @@ object VersionedStore {
     * rewritten, so commit cost is O(updates + matched rows) even when
     * the matches scatter across thousands of files (the dimension-
     * refresh-into-giant-fact shape copy-on-write merge handles worst).
-    * Same contract as [[merge]] otherwise: whenMatched-replace-all /
+    * On a hierarchical table the update rows land through the ordinary
+    * partitioned commit into THEIR partitions (untouched partitions
+    * carried by reference), and because the old row dies by position
+    * this natively supports PARTITION-MOVING upserts. Same contract as
+    * [[merge]] otherwise: whenMatched-replace-all /
     * whenNotMatched-insert-all, duplicate update keys refused. */
   def mergeVectored(spark: SparkSession, path: String, updates: DataFrame,
-                    keys: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.col
-    val cur = flatCurrent(path, "mergeVectored")
-    val table = readAsOf(spark, path, cur)
-    require(updates.columns.toSet == table.columns.toSet,
-      s"merge schema mismatch: table has ${table.columns.sorted.mkString(",")}" +
-        s" but updates carry ${updates.columns.sorted.mkString(",")}")
-    require(keys.nonEmpty && keys.forall(updates.columns.contains),
-      s"merge keys $keys must be update columns")
-    val keyRows = updates.select(keys.map(col): _*).distinct()
-    requireUniqueKeys(updates, keys,
-      "updates carry duplicate keys — which row wins would be nondeterministic")
-    val v = cur + 1
-    val matched = snapshotWithMeta(spark, path, cur)
-      .join(keyRows, keys, "left_semi")
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .repartition(col("file"))
-    val dvRel = writeSidecar(matched, path, v)
-    val dvParts = listParquet(path, dvRel)
-    val anyDead =
-      sidecarRowCount(path, dvParts) > 0L
-    val aligned = updates.select(table.columns.map(col): _*)
-    val dataRel = s"data/commit-$v-${attemptId()}"
-    aligned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$dataRel")
-    val dataParts = listParquet(path, dataRel)
-    recordSchema(path, v, effectiveSchema(spark, path, cur))
-    publishManifest(path, v,
-      (carriedLines(path, cur) ++ dataParts ++
-        (if (anyDead) dvParts.map(DvPrefix + _) else Nil)).sorted)
-    v
-  }
+                    keys: Seq[String]): Int =
+    mergeVectoredAt(spark, path, updates, keys,
+      headVersion(path, "merge") + 1, replayable = false)
 
   /** [[update]] in merge-on-read form: matched rows die by DELETE
     * VECTOR, their `sets`-projected copies land in new data files —
     * nothing rewritten, commit cost O(matched rows), the scattered-
-    * point-update shape at 100 TB. Returns the current version
-    * unchanged when nothing matched. */
+    * point-update shape at 100 TB. Because the old row dies by
+    * position while the new row lands wherever its (possibly updated)
+    * partition value says, SET on a hierarchical table's partition
+    * column works natively here. Returns the current version unchanged
+    * when nothing matched. */
   def updateVectored(spark: SparkSession, path: String,
                      predicate: org.apache.spark.sql.Column,
                      sets: Seq[(String, org.apache.spark.sql.Column)])
       : Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = flatCurrent(path, "updateVectored")
-    val v = cur + 1
-    val matched = snapshotWithMeta(spark, path, cur)
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    val cur = headVersion(path, "update")
+    val matched = probeSnapshot(spark, path, cur)
       .filter(coalesce(predicate, lit(false)))
-    val dvRel = writeSidecar(
-      matched.select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-        .repartition(col("file")), path, v)
-    val dvParts = listParquet(path, dvRel)
-    if (sidecarRowCount(path, dvParts) == 0L)
-      cur // nothing matched — the empty attempt dir is invisible debris
-    else {
-      // the replacements: matched rows, every SET applied (predicate
-      // already filtered, so the projection is unconditional)
-      val updated = applySets(matched, lit(true), sets)
-      val dataRel = s"data/commit-$v-${attemptId()}"
-      updated.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$path/$dataRel")
-      val dataParts = listParquet(path, dataRel)
-      recordSchema(path, v, effectiveSchema(spark, path, cur))
-      publishManifest(path, v,
-        (carriedLines(path, cur) ++ dataParts ++
-          dvParts.map(DvPrefix + _)).sorted)
-      v
-    }
+    val dv = vectorOf(matched, path, cur + 1)
+    if (dv.isEmpty) cur
+    // the replacements: matched rows, every SET applied (predicate
+    // already filtered, so the projection is unconditional)
+    else commitVectored(spark, path, cur + 1,
+      applySets(matched, lit(true), sets), dv, replayable = false)
   }
 
   /** Targeted read-amplification reclaim (Delta's `REORG … APPLY
@@ -801,16 +790,18 @@ object VersionedStore {
     * decision input is O(vector rows + one footer probe per dead
     * file): a small aggregation over the sidecars gives per-file dead
     * counts, footers give totals. Untouched files (and the vector
-    * lines still guarding them) are carried by reference; when the
-    * rewrite covers every file the vectors name, the `D:` lines are
-    * dropped entirely and reads return to a bare scan. At
-    * `minDeadRatio = 0` this IS the full vector fold, still
-    * rewriting only the files that have dead rows at all. */
+    * lines still guarding them) are carried by reference — on a
+    * hierarchical table a dead-heavy file rewrites inside its own
+    * partition and untouched partitions are carried; when the rewrite
+    * covers every file the vectors name, the vector lines are dropped
+    * entirely and reads return to a bare scan. At `minDeadRatio = 0`
+    * this IS the full vector fold, still rewriting only the files that
+    * have dead rows at all. */
   def reorgVectored(spark: SparkSession, path: String,
                     minDeadRatio: Double): Int = {
     require(minDeadRatio >= 0.0 && minDeadRatio <= 1.0,
       s"minDeadRatio must be in [0, 1]: $minDeadRatio")
-    val cur = flatCurrent(path, "reorgVectored")
+    val cur = headVersion(path, "reorg")
     val dvs = deleteVectorsAsOf(path, cur)
     if (dvs.isEmpty) cur
     else {
@@ -830,14 +821,8 @@ object VersionedStore {
       if (touched.isEmpty) cur
       else {
         val liveDead = deadByFile.keySet.filter(live.contains)
-        val allFolded = liveDead.subsetOf(touched.toSet)
-        val survivors = readFilesApplied(spark, path, touched,
-          Some(effectiveSchema(spark, path, cur)), cur)
-        val carried = filesAsOf(path, cur).filterNot(touched.toSet) ++
-          (if (allFolded) Nil
-           else deleteVectorsAsOf(path, cur).map(DvPrefix + _))
-        commitData(survivors, path, cur + 1, carried,
-          schema = Some(effectiveSchema(spark, path, cur)))
+        commitRewrite(spark, readTouched(spark, path, cur, touched), path,
+          cur, touched, dropDvs = liveDead.subsetOf(touched.toSet))
       }
     }
   }
@@ -856,10 +841,16 @@ object VersionedStore {
     * nondeterministic across replays. Matched rows die by vector,
     * batch rows land as new files: O(batch + matched rows) per
     * micro-batch, never a rewrite — the upsert-stream-into-100 TB-
-    * table shape. */
+    * table shape.
+    *
+    * `partCol` declares the layout when the first batch creates the
+    * table: `Some(c)` makes it hierarchical by `c` (a month-partitioned
+    * warehouse: O(touched partitions) metadata per batch, partition
+    * moves included). Afterwards the table's own form rules, and a
+    * `partCol` that disagrees with it refuses loudly. */
   def mergeBatchVectored(df: DataFrame, path: String, keys: Seq[String],
-                         batchId: Long): Int = {
-    import org.apache.spark.sql.functions.col
+                         batchId: Long,
+                         partCol: Option[String] = None): Int = {
     require(batchId >= 0 && batchId < Int.MaxValue,
       s"batchId $batchId outside the supported version range")
     val v = batchId.toInt + 1
@@ -868,172 +859,119 @@ object VersionedStore {
       s"batch $batchId would commit version $v but the table at $path is at " +
         s"version $cur — a reset checkpoint or a concurrent batch writer; " +
         "refusing to rewrite published history")
-    val prev = v - 1
-    require(prev == 0 || manifestFile(path, prev).exists(),
-      s"version $prev is not a flat commit — the vectored upsert sink " +
-        "targets flat tables")
-    val spark = df.sparkSession
-    val schema = evolvedSchema(spark, path, prev, df.schema,
-      allowEvolution = false)
-    require(keys.nonEmpty && keys.forall(df.columns.contains),
-      s"merge keys $keys must be batch columns")
-    val keyRows = df.select(keys.map(col): _*).distinct()
-    requireUniqueKeys(df, keys,
-      "micro-batch carries duplicate keys — pre-dedup each batch " +
-        "(keep-latest) before the upsert sink")
-    val dvParts: Seq[String] =
-      if (prev == 0) Nil
-      else {
-        val stamped = withMeta(readFiles(spark, path, filesAsOf(path, prev),
-          Some(effectiveSchema(spark, path, prev))))
-        val dvs = deleteVectorsAsOf(path, prev)
-        val applied =
-          if (dvs.isEmpty) stamped
-          else stamped.join(dvFrame(spark, path, dvs),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-        val matched = applied.join(keyRows, keys, "left_semi")
-          .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-          .repartition(col("file"))
-        val rel = writeSidecar(matched, path, v)
-        val parts = listParquet(path, rel)
-        if (sidecarRowCount(path, parts) == 0L)
-          Nil
-        else parts
-      }
-    val aligned = df.select(schema.fieldNames.map(col).toSeq: _*)
-    val dataRel = s"data/commit-$v-${attemptId()}"
-    aligned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$dataRel")
-    val dataParts = listParquet(path, dataRel)
-    recordSchema(path, v, schema)
-    publishManifest(path, v,
-      ((if (prev == 0) Nil else carriedLines(path, prev)) ++ dataParts ++
-        dvParts.map(DvPrefix + _)).sorted,
-      replayable = true)
-    v
+    if (cur > 0) {
+      val laid = if (isFlatVersion(path, cur)) None
+                 else Some(readMlist(path, cur).partCol)
+      require(partCol.forall(laid.contains),
+        s"partCol ${partCol.getOrElse("")} disagrees with the table at " +
+          s"$path, which is ${laid.fold("flat")(c => s"partitioned by $c")}")
+    }
+    if (v == 1) {
+      // bootstrap batch: nothing to match — a plain batch commit that
+      // declares the layout, under the same per-batch key contract
+      requireMergeKeys(df, keys)
+      partCol.fold(commitBatch(df, path, batchId))(
+        commitBatchPartitioned(df, path, _, batchId))
+    } else {
+      // stream schema drift fails loudly — no silent evolution from a
+      // micro-batch writer
+      evolvedSchema(df.sparkSession, path, v - 1, df.schema,
+        allowEvolution = false)
+      mergeVectoredAt(df.sparkSession, path, df, keys, v,
+        replayable = true)
+    }
   }
 
-  /** Write a delete-vector frame under an attempt-unique sidecar dir
-    * (same invisibility-until-publish contract as data commits). */
-  private def writeSidecar(dv: DataFrame, path: String, v: Int): String = {
+  /** The vectored merge committing version `v` over `v − 1`: every
+    * input — the snapshot probe, the vector subtraction, the carried
+    * manifest — derives from v−1, which is what makes the batch-replay
+    * seam idempotent. */
+  private def mergeVectoredAt(spark: SparkSession, path: String,
+                              updates: DataFrame, keys: Seq[String],
+                              v: Int, replayable: Boolean): Int = {
+    val (cols, keyRows) = mergeInput(spark, path, v - 1, updates, keys)
+    val dv = vectorOf(probeSnapshot(spark, path, v - 1)
+      .join(keyRows, keys, "left_semi"), path, v)
+    commitVectored(spark, path, v,
+      updates.select(cols.map(org.apache.spark.sql.functions.col): _*), dv,
+      replayable)
+  }
+
+  /** The merge-input checks against version `v`: `updates` carries
+    * exactly the table's columns and passes [[requireMergeKeys]].
+    * Returns the table's column order (the write alignment) and the
+    * distinct key rows (the probe side). */
+  private def mergeInput(spark: SparkSession, path: String, v: Int,
+                         updates: DataFrame, keys: Seq[String])
+      : (Seq[String], DataFrame) = {
+    val cols = effectiveSchema(spark, path, v).fieldNames.toSeq
+    require(updates.columns.toSet == cols.toSet,
+      s"merge schema mismatch: table has ${cols.sorted.mkString(",")}" +
+        s" but updates carry ${updates.columns.sorted.mkString(",")}")
+    requireMergeKeys(updates, keys)
+    (cols, updates.select(keys.map(org.apache.spark.sql.functions.col): _*)
+      .distinct())
+  }
+
+  /** `keys` must name update columns, and NON-NULL key tuples must not
+    * repeat — which row wins would be nondeterministic. NULL-keyed
+    * rows are exempt: the merge contract says a NULL key never matches
+    * and is inserted as-is, so two NULL-keyed rows are two inserts,
+    * not a conflict (a `distinct().count()` comparison would wrongly
+    * collapse them). One Spark job, not two. */
+  private def requireMergeKeys(updates: DataFrame, keys: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    require(keys.nonEmpty && keys.forall(updates.columns.contains),
+      s"merge keys $keys must be update columns")
+    val dups = updates
+      .filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > 1).limit(1).count()
+    require(dups == 0L,
+      "updates carry duplicate keys — which row wins would be " +
+        "nondeterministic; pre-dedup a micro-batch (keep-latest) before " +
+        "the upsert sink")
+  }
+
+  /** Write the (file, position) stamps of `matched` — rows of a
+    * [[probeSnapshot]] — as version `v`'s delete-vector sidecar under
+    * an attempt-unique dir (same invisibility-until-publish contract as
+    * data commits), clustered by file (AQE re-coalesces the small
+    * shuffle). Returns the sidecar parts, or Nil when nothing matched
+    * — the empty attempt dir is invisible debris. */
+  private def vectorOf(matched: DataFrame, path: String,
+                       v: Int): Seq[String] = {
+    import org.apache.spark.sql.functions.col
     val rel = s"data/commit-$v-${attemptId()}-dv"
-    dv.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    matched.select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+      .repartition(col("file"))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/$rel")
-    rel
+    val parts = listParquet(path, rel)
+    if (sidecarRowCount(path, parts) == 0L) Nil else parts
+  }
+
+  /** The merge-on-read commit of version `v` over `v − 1`: `rows` land
+    * in new data files (on a hierarchical table, in THEIR partitions),
+    * `dv` kills the matched positions, nothing is rewritten and every
+    * existing file is carried by reference. Row-level operations never
+    * change the schema — the new version re-records v−1's. */
+  private def commitVectored(spark: SparkSession, path: String, v: Int,
+                             rows: DataFrame, dv: Seq[String],
+                             replayable: Boolean): Int = {
+    val schema = Some(effectiveSchema(spark, path, v - 1))
+    if (isFlatVersion(path, v - 1))
+      commitData(rows, path, v,
+        carriedLines(path, v - 1) ++ dv.map(DvPrefix + _), replayable, schema)
+    else commitPartitionedAt(rows, path, readMlist(path, v - 1).partCol, v,
+      replaceTouched = false, replayable = replayable,
+      schemaOverride = schema, extraDvs = dv)
   }
 
   private def listParquet(path: String, rel: String): Seq[String] =
     Option(new File(path, rel).listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
       .map(f => s"$rel/${f.getName}").toSeq.sorted
-
-  /** [[delete]] on a HIERARCHICAL table, still at FILE granularity:
-    * the find-matches scan runs through [[readIndexed]], so a
-    * predicate on the partition column prunes whole partitions and a
-    * predicate on a stats column prunes whole files before any data
-    * is read; only the files that actually contain matches are
-    * rewritten, within their partitions. Untouched partitions are
-    * carried by reference as ever (O(touched) metadata); a touched
-    * partition's pmanifest is re-minted with its untouched lines
-    * (stats riding along) plus the rewrite's new files. A partition
-    * whose every row is deleted disappears from the new manifest
-    * list. */
-  def deletePartitioned(spark: SparkSession, path: String,
-                        predicate: org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rewriteMatchedPartitioned(spark, path, predicate, "delete",
-      _.filter(not(coalesce(predicate, lit(false)))))
-  }
-
-  /** [[update]] on a HIERARCHICAL table (copy-on-write): probe for the
-    * files holding a matched row, rewrite only those inside their own
-    * partitions with matched rows projected through `sets`, carry the
-    * rest by reference — [[deletePartitioned]]'s metadata shape with a
-    * projection instead of a drop. SET on the partition column refuses
-    * loudly (a partition-moving update is [[updatePartitionedVectored]]
-    * territory — copy-on-write would have to rewrite both partitions). */
-  def updatePartitioned(spark: SparkSession, path: String,
-                        predicate: org.apache.spark.sql.Column,
-                        sets: Seq[(String, org.apache.spark.sql.Column)])
-      : Int = {
-    val cur = currentVersion(path)
-    if (cur > 0 && !isFlatVersion(path, cur)) {
-      val partCol = readMlist(path, cur).partCol
-      require(!sets.exists(_._1.equalsIgnoreCase(partCol)),
-        s"UPDATE SET on partition column $partCol is not supported " +
-          "copy-on-write — use the vectored mode for partition moves")
-    }
-    rewriteMatchedPartitioned(spark, path, predicate, "update",
-      applySets(_, predicate, sets))
-  }
-
-  /** Shared copy-on-write matched-file rewrite on a hierarchical
-    * table: find the files holding a predicate match on the
-    * vector-applied snapshot, re-read them file-bounded inside their
-    * partitions, put them through `rewrite`, and commit with untouched
-    * partitions carried by reference. `rewrite` sees the partition
-    * column attached and vectors subtracted. */
-  private def rewriteMatchedPartitioned(spark: SparkSession, path: String,
-                                        predicate: org.apache.spark.sql.Column,
-                                        op: String,
-                                        rewrite: DataFrame => DataFrame)
-      : Int = {
-    import org.apache.spark.sql.functions.lit
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot $op: no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use $op()")
-    val ml = readMlist(path, cur)
-    // table-relative file -> its partition value (relative paths are
-    // the manifest lines themselves — unique by construction, where a
-    // basename key would collide across partition dirs)
-    val valueOf: Map[String, String] = ml.parts.flatMap { p =>
-      readPmanifestEntries(path, p.pmanifest).map(e => e.file -> p.value)
-    }.toMap
-    // probe on the vector-applied snapshot, stamped from the scan's
-    // _metadata (an already-dead row can never re-touch its file)
-    val dvsCur = deleteVectorsAsOf(path, cur)
-    val stamped = withMeta(
-      spark.baseRelationToDataFrame(snapshotRelation(spark, path, cur)))
-    val snap =
-      if (dvsCur.isEmpty) stamped
-      else stamped.join(dvFrame(spark, path, dvsCur),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val hit = snap.filter(predicate)
-      .select("__dv_file").distinct()
-      .collect().map(_.getString(0))
-    val touched: Seq[(String, String)] = hit.map { f =>
-      (valueOf.getOrElse(f,
-        sys.error(s"scanned file $f not in version $cur's manifests")), f)
-    }.toSeq.sortBy(_._2)
-    if (touched.isEmpty) cur
-    else {
-      // survivors read file-bounded, partition value reattached so the
-      // commit can lay them back out by partition
-      // partition column reattached BEFORE the filter (the predicate
-      // may reference it; data files do not store it), so the commit
-      // can lay survivors back out by partition; files read under the
-      // recorded data schema so pre-evolution files null-fill
-      val dataSchema = schemaAsOf(path, cur).map(s =>
-        org.apache.spark.sql.types.StructType(
-          s.fields.filterNot(_.name == ml.partCol)))
-      // rewrite inputs read vector-applied (per-scan stamp, one
-      // subtraction over the union) so earlier merge-on-read deletes
-      // do not resurrect into the rewritten files
-      val unioned = touched.groupBy(_._1).map { case (value, fs) =>
-        val raw = readFiles(spark, path, fs.map(_._2), dataSchema)
-        (if (dvsCur.isEmpty) raw else withMeta(raw))
-          .withColumn(ml.partCol, lit(value).cast(ml.partType))
-      }.reduce(_.unionByName(_))
-      val applied =
-        if (dvsCur.isEmpty) unioned
-        else subtractStamped(spark, path, unioned, dvsCur)
-      val survivors = rewrite(applied)
-      commitPartitionedAt(survivors, path, ml.partCol, cur + 1,
-        replaceTouched = false, removedFiles = touched.map(_._2).toSet,
-        schemaOverride = Some(effectiveSchema(spark, path, cur)))
-    }
-  }
 
   /** ClickHouse MergeTree TTL at partition granularity (`TTL ts +
     * INTERVAL … DELETE` where the TTL key drives PARTITION BY;
@@ -1044,7 +982,7 @@ object VersionedStore {
     * O(#partitions). Provability is the point: a predicate on the
     * partition value cannot be wrong about any row inside the
     * partition, so no file probe runs at all — contrast
-    * [[deletePartitioned]], which probes files because a row
+    * [[delete]], which probes files because a row
     * predicate needs row evidence (a TTL expressed as a row
     * predicate there would READ every expired partition just to
     * learn everything matched). Carried `#dv` lines stay: vector
@@ -1055,8 +993,7 @@ object VersionedStore {
     * `overwrite()` decision, not a maintenance pass. */
   def expirePartitions(spark: SparkSession, path: String,
                        expired: String => Boolean): Int = {
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot expire: no committed version at $path")
+    val cur = headVersion(path, "expire")
     require(!isFlatVersion(path, cur),
       s"version $cur is flat — TTL expiry drops PARTITIONS")
     val ml = readMlist(path, cur)
@@ -1076,309 +1013,6 @@ object VersionedStore {
       writeAtomic(mlistFile(path, v),
         (prevLines.head +: kept).mkString("\n"), replace = false)
       v
-    }
-  }
-
-  /** [[merge]] on a HIERARCHICAL table — the COPY-ON-WRITE upsert:
-    * files holding a matched key rewrite inside their partitions
-    * (matched rows drop from the rewrite; the update rows land
-    * through the same commit into THEIR OWN partitions, so a
-    * partition-moving update rewrites both sides), untouched files
-    * and partitions carried by reference. [[mergePartitionedVectored]]
-    * is the O(batch + matched) merge-on-read twin; this form keeps
-    * the table vector-free (e.g. to stay servable through the
-    * relation-based reader). Same probe discipline as
-    * [[deletePartitioned]]: find-matches runs on the vector-applied
-    * FileIndex snapshot, rewrite inputs read vector-applied. */
-  def mergePartitioned(spark: SparkSession, path: String,
-                       updates: DataFrame, keys: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot merge: no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use merge()")
-    val ml = readMlist(path, cur)
-    val table = readAsOf(spark, path, cur)
-    require(updates.columns.toSet == table.columns.toSet,
-      s"merge schema mismatch: table has ${table.columns.sorted.mkString(",")}" +
-        s" but updates carry ${updates.columns.sorted.mkString(",")}")
-    require(keys.nonEmpty && keys.forall(updates.columns.contains),
-      s"merge keys $keys must be update columns")
-    val keyRows = updates.select(keys.map(col): _*).distinct()
-    requireUniqueKeys(updates, keys,
-      "updates carry duplicate keys — which row wins would be nondeterministic")
-    val valueOf: Map[String, String] = ml.parts.flatMap { p =>
-      readPmanifestEntries(path, p.pmanifest).map(e => e.file -> p.value)
-    }.toMap
-    val dvsCur = deleteVectorsAsOf(path, cur)
-    val stamped = withMeta(
-      spark.baseRelationToDataFrame(snapshotRelation(spark, path, cur)))
-    val snap =
-      if (dvsCur.isEmpty) stamped
-      else stamped.join(dvFrame(spark, path, dvsCur),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val hit = snap.join(keyRows, keys, "left_semi")
-      .select("__dv_file").distinct()
-      .collect().map(_.getString(0))
-    val touched: Seq[(String, String)] = hit.map { f =>
-      (valueOf.getOrElse(f,
-        sys.error(s"scanned file $f not in version $cur's manifests")), f)
-    }.toSeq.sortBy(_._2)
-    val aligned = updates.select(table.columns.map(col): _*)
-    if (touched.isEmpty)
-      // pure insert: every existing file carried, update rows land in
-      // their partitions
-      commitPartitionedAt(aligned, path, ml.partCol, cur + 1,
-        replaceTouched = false,
-        schemaOverride = Some(effectiveSchema(spark, path, cur)))
-    else {
-      val dataSchema = schemaAsOf(path, cur).map(s =>
-        org.apache.spark.sql.types.StructType(
-          s.fields.filterNot(_.name == ml.partCol)))
-      val unioned = touched.groupBy(_._1).map { case (value, fs) =>
-        val raw = readFiles(spark, path, fs.map(_._2), dataSchema)
-        (if (dvsCur.isEmpty) raw else withMeta(raw))
-          .withColumn(ml.partCol, lit(value).cast(ml.partType))
-      }.reduce(_.unionByName(_))
-      val applied =
-        if (dvsCur.isEmpty) unioned
-        else subtractStamped(spark, path, unioned, dvsCur)
-      val survivors = applied.join(keyRows, keys, "left_anti")
-      commitPartitionedAt(survivors.unionByName(aligned), path,
-        ml.partCol, cur + 1, replaceTouched = false,
-        removedFiles = touched.map(_._2).toSet,
-        schemaOverride = Some(effectiveSchema(spark, path, cur)))
-    }
-  }
-
-  /** [[deleteVectored]] on a HIERARCHICAL table — the merge-on-read
-    * delete at the 100 TB form: the find-matches probe runs through
-    * the Catalyst FileIndex (partition + stats + bloom predicates
-    * prune before any data read), matched positions land in one
-    * table-level vector sidecar, and the commit carries the ENTIRE
-    * previous manifest list VERBATIM plus the new `#dv` lines —
-    * O(matched rows) data cost and O(1) metadata cost (not even the
-    * touched partitions' pmanifests re-mint; compare
-    * [[deletePartitioned]]'s O(touched files) rewrite). Vector rows
-    * key on manifest-relative paths, so one table-level set serves every
-    * partition and a later partition rewrite leaves its rows inert.
-    * Readers subtract above the FileIndex scan; [[compactPartition]]
-    * folds a partition's dead rows into clean files. */
-  def deletePartitionedVectored(spark: SparkSession, path: String,
-                                predicate: org.apache.spark.sql.Column)
-      : Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot delete: no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use deleteVectored()")
-    val v = cur + 1
-    val stamped = withMeta(
-      spark.baseRelationToDataFrame(snapshotRelation(spark, path, cur)))
-    val dvs = deleteVectorsAsOf(path, cur)
-    val applied =
-      if (dvs.isEmpty) stamped
-      else stamped.join(dvFrame(spark, path, dvs),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val matched = applied.filter(coalesce(predicate, lit(false)))
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .repartition(col("file"))
-    val dvRel = writeSidecar(matched, path, v)
-    val parts = listParquet(path, dvRel)
-    if (sidecarRowCount(path, parts) == 0L)
-      cur // nothing matched — the empty attempt dir is invisible debris
-    else publishDvCommit(spark, path, cur, parts, flat = false)
-  }
-
-  /** [[mergeVectored]] on a HIERARCHICAL table: matched rows die by a
-    * table-level delete vector, update rows land through the ordinary
-    * partitioned commit (new files in THEIR partitions' pmanifests,
-    * untouched partitions carried by reference) — O(updates + matched
-    * rows), nothing rewritten. Because the old row dies by position
-    * and the new row lands wherever its partition value says, this
-    * merge natively supports PARTITION-MOVING upserts (a row whose
-    * key changes partitions), which the copy-on-write form cannot do
-    * without rewriting both partitions. Same contract as [[merge]]:
-    * whenMatched-replace-all / whenNotMatched-insert-all, duplicate
-    * update keys refused; `updates` must carry the table's columns
-    * including the partition column. */
-  def mergePartitionedVectored(spark: SparkSession, path: String,
-                               updates: DataFrame,
-                               keys: Seq[String]): Int = {
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot merge: no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use mergeVectored()")
-    mergePartitionedVectoredAt(spark, path, updates, keys, cur + 1,
-      replayable = false)
-  }
-
-  /** [[updateVectored]] on a HIERARCHICAL table: matched rows die by a
-    * table-level delete vector, their `sets`-projected copies land
-    * through the ordinary partitioned commit — O(matched rows),
-    * nothing rewritten, and because the old row dies by position while
-    * the new row lands wherever its (possibly updated) partition value
-    * says, SET on the partition column works natively here. */
-  def updatePartitionedVectored(spark: SparkSession, path: String,
-                                predicate: org.apache.spark.sql.Column,
-                                sets: Seq[(String,
-                                  org.apache.spark.sql.Column)]): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = currentVersion(path)
-    require(cur > 0, s"cannot update: no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use updateVectored()")
-    val v = cur + 1
-    val ml = readMlist(path, cur)
-    val stamped = withMeta(
-      spark.baseRelationToDataFrame(snapshotRelation(spark, path, cur)))
-    val dvs = deleteVectorsAsOf(path, cur)
-    val applied =
-      if (dvs.isEmpty) stamped
-      else stamped.join(dvFrame(spark, path, dvs),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val matched = applied.filter(coalesce(predicate, lit(false)))
-    val dvRel = writeSidecar(
-      matched.select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-        .repartition(col("file")), path, v)
-    val dvParts = listParquet(path, dvRel)
-    if (sidecarRowCount(path, dvParts) == 0L)
-      cur // nothing matched — the empty attempt dir is invisible debris
-    else {
-      val updated = applySets(matched, lit(true), sets)
-      commitPartitionedAt(updated, path, ml.partCol, v,
-        replaceTouched = false,
-        schemaOverride = Some(effectiveSchema(spark, path, cur)),
-        extraDvs = dvParts)
-    }
-  }
-
-  /** [[mergePartitionedVectored]] keyed by micro-batch id — the
-    * CDC-upsert streaming seam on the HIERARCHICAL store, the full
-    * 100 TB warehouse shape: an at-least-once upsert stream into a
-    * month-partitioned table lands exactly-once (version = batchId+1;
-    * carried manifest list, matched positions and vector subtraction
-    * all derive from v−1, so a replay recommits the identical
-    * version), each batch costing O(batch + matched rows) with
-    * O(touched partitions) metadata and ZERO rewrites — partition
-    * moves included. `partCol` declares the layout on the very first
-    * batch (an empty table); afterwards the table's own column rules.
-    * Same key-uniqueness contract as [[mergeBatchVectored]]. */
-  def mergeBatchPartitionedVectored(df: DataFrame, path: String,
-                                    partCol: String, keys: Seq[String],
-                                    batchId: Long): Int = {
-    require(batchId >= 0 && batchId < Int.MaxValue,
-      s"batchId $batchId outside the supported version range")
-    val v = batchId.toInt + 1
-    val cur = currentVersion(path)
-    require(v == cur + 1 || v == cur,
-      s"batch $batchId would commit version $v but the table at $path is at " +
-        s"version $cur — a reset checkpoint or a concurrent batch writer; " +
-        "refusing to rewrite published history")
-    if (v == 1)
-      // bootstrap batch: a plain partitioned commit (nothing to match)
-      commitPartitionedAt(df, path, partCol, v, replaceTouched = false,
-        replayable = true)
-    else {
-      require(!isFlatVersion(path, v - 1),
-        s"version ${v - 1} is flat — the partitioned upsert sink targets " +
-          "hierarchical tables (use sinkVersionedUpsert)")
-      mergePartitionedVectoredAt(df.sparkSession, path, df, keys, v,
-        replayable = true)
-    }
-  }
-
-  /** The vectored-merge commit at an EXPLICIT version: every input
-    * derives from v−1 (snapshot probe, vector subtraction, carried
-    * manifest list), which is what makes the batch-replay seam
-    * idempotent. */
-  private def mergePartitionedVectoredAt(spark: SparkSession, path: String,
-                                         updates: DataFrame,
-                                         keys: Seq[String], v: Int,
-                                         replayable: Boolean): Int = {
-    import org.apache.spark.sql.functions.col
-    val prev = v - 1
-    val ml = readMlist(path, prev)
-    val table = readAsOf(spark, path, prev)
-    require(updates.columns.toSet == table.columns.toSet,
-      s"merge schema mismatch: table has ${table.columns.sorted.mkString(",")}" +
-        s" but updates carry ${updates.columns.sorted.mkString(",")}")
-    require(keys.nonEmpty && keys.forall(updates.columns.contains),
-      s"merge keys $keys must be update columns")
-    val keyRows = updates.select(keys.map(col): _*).distinct()
-    requireUniqueKeys(updates, keys,
-      "updates carry duplicate keys — which row wins would be nondeterministic")
-    val stamped = withMeta(
-      spark.baseRelationToDataFrame(snapshotRelation(spark, path, prev)))
-    val dvs = deleteVectorsAsOf(path, prev)
-    val applied =
-      if (dvs.isEmpty) stamped
-      else stamped.join(dvFrame(spark, path, dvs),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
-    val matched = applied.join(keyRows, keys, "left_semi")
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .repartition(col("file"))
-    val dvRel = writeSidecar(matched, path, v)
-    val dvParts = listParquet(path, dvRel)
-    val anyDead =
-      sidecarRowCount(path, dvParts) > 0L
-    val aligned = updates.select(table.columns.map(col): _*)
-    commitPartitionedAt(aligned, path, ml.partCol, v,
-      replaceTouched = false, replayable = replayable,
-      schemaOverride = Some(effectiveSchema(spark, path, prev)),
-      extraDvs = if (anyDead) dvParts else Nil)
-  }
-
-  /** [[reorgVectored]] on a HIERARCHICAL table: rewrite only the data
-    * files past the dead-ratio threshold, each inside its own
-    * partition (touched partitions' pmanifests re-mint with the
-    * surviving lines, untouched partitions carried by reference —
-    * the [[deletePartitioned]] metadata shape), folding their vector
-    * rows away; the `#dv` lines drop entirely once the rewrite covers
-    * every live file the vectors name. */
-  def reorgPartitionedVectored(spark: SparkSession, path: String,
-                               minDeadRatio: Double): Int = {
-    import org.apache.spark.sql.functions.lit
-    require(minDeadRatio >= 0.0 && minDeadRatio <= 1.0,
-      s"minDeadRatio must be in [0, 1]: $minDeadRatio")
-    val cur = currentVersion(path)
-    require(cur > 0, s"no committed version at $path")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — use reorgVectored()")
-    val dvs = deleteVectorsAsOf(path, cur)
-    if (dvs.isEmpty) cur
-    else {
-      val ml = readMlist(path, cur)
-      val valueOf: Map[String, String] = ml.parts.flatMap { p =>
-        readPmanifestEntries(path, p.pmanifest).map(e => e.file -> p.value)
-      }.toMap
-      val deadByFile = dvFrame(spark, path, dvs)
-        .groupBy("__dv_file").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val touched = deadByFile.toSeq.flatMap { case (rel, dead) =>
-        Some(rel).filter(valueOf.contains).filter { r =>
-          footerRowCount(new File(path, r))
-            .exists(total => total > 0 &&
-              dead.toDouble / total >= minDeadRatio)
-        }
-      }.sorted
-      if (touched.isEmpty) cur
-      else {
-        val liveDead = deadByFile.keySet.filter(valueOf.contains)
-        val allFolded = liveDead.subsetOf(touched.toSet)
-        val dataSchema = schemaAsOf(path, cur).map(s =>
-          org.apache.spark.sql.types.StructType(
-            s.fields.filterNot(_.name == ml.partCol)))
-        val unioned = touched.groupBy(valueOf).map { case (value, fs) =>
-          withMeta(readFiles(spark, path, fs, dataSchema))
-            .withColumn(ml.partCol, lit(value).cast(ml.partType))
-        }.reduce(_.unionByName(_))
-        val survivors = subtractStamped(spark, path, unioned, dvs)
-        commitPartitionedAt(survivors, path, ml.partCol, cur + 1,
-          replaceTouched = false, removedFiles = touched.toSet,
-          schemaOverride = Some(effectiveSchema(spark, path, cur)),
-          dropDvs = allFolded)
-      }
     }
   }
 
@@ -1436,7 +1070,7 @@ object VersionedStore {
       // on the old side — they were already retracted when their
       // vector was published, and re-emitting them here would
       // double-report the delete (or fabricate update pairs when the
-      // key was re-inserted later). Same protection readFilesApplied
+      // key was re-inserted later). Same protection readTouched
       // gives the rewrites themselves.
       val removedRows =
         if (removed.isEmpty) None
@@ -1545,12 +1179,11 @@ object VersionedStore {
       }.reduce(_.unionByName(_)))
     }
 
-  private def flatCurrent(path: String, op: String): Int = {
+  /** The head version a row-level operation bases on — refusing an
+    * empty table, which has nothing to mutate. */
+  private def headVersion(path: String, op: String): Int = {
     val cur = currentVersion(path)
     require(cur > 0, s"cannot $op: no committed version at $path")
-    require(isFlatVersion(path, cur),
-      s"row-level $op targets flat tables; partitioned tables rewrite at " +
-        "partition granularity via overwritePartitions")
     cur
   }
 
@@ -1566,7 +1199,7 @@ object VersionedStore {
     // delete-vector subtraction — joins in another source, where
     // input_file_name() would be ambiguous); the stamp IS the
     // manifest-relative path, no basename mapping
-    val hit = probe(snapshotWithMeta(spark, path, v))
+    val hit = probe(probeSnapshot(spark, path, v))
       .select("__dv_file").distinct()
       .collect().map(_.getString(0))
     hit.map { f =>
@@ -1583,20 +1216,29 @@ object VersionedStore {
     r.parquet(rel.map(f => s"$path/$f"): _*)
   }
 
-  /** Publish the copy-on-write commit: new files from `rewritten`,
-    * every untouched file carried by reference. Row-level operations
-    * never change the schema — the new version re-records the
-    * current one. */
+  /** Publish the copy-on-write commit of version cur+1: new files
+    * from `rewritten`, every untouched file carried by reference — a
+    * flat manifest lists them, a hierarchical commit strikes `touched`
+    * from their partitions' pmanifests (re-minting only those; an
+    * emptied partition leaves the list) and lays `rewritten` out by
+    * partition. Delete-vector lines ride along verbatim — vector rows
+    * whose data file was just rewritten are inert (path-keyed, and the
+    * file left the manifest), the rest still guard untouched files —
+    * unless `dropDvs` (the rewrite folded every file they name).
+    * Row-level operations never change the schema — the new version
+    * re-records the current one. */
   private def commitRewrite(spark: SparkSession, rewritten: DataFrame,
-                            path: String, cur: Int,
-                            touched: Seq[String]): Int = {
-    // delete-vector lines ride along verbatim: vector rows whose data
-    // file was just rewritten are inert (path-keyed, and the file
-    // left the manifest), the rest still guard untouched files
-    val carried = filesAsOf(path, cur).filterNot(touched.toSet) ++
-      deleteVectorsAsOf(path, cur).map(DvPrefix + _)
-    commitData(rewritten, path, cur + 1, carried,
-      schema = Some(effectiveSchema(spark, path, cur)))
+                            path: String, cur: Int, touched: Seq[String],
+                            dropDvs: Boolean = false): Int = {
+    val schema = Some(effectiveSchema(spark, path, cur))
+    if (isFlatVersion(path, cur))
+      commitData(rewritten, path, cur + 1,
+        filesAsOf(path, cur).filterNot(touched.toSet) ++
+          (if (dropDvs) Nil else deleteVectorsAsOf(path, cur).map(DvPrefix + _)),
+        schema = schema)
+    else commitPartitionedAt(rewritten, path, readMlist(path, cur).partCol,
+      cur + 1, replaceTouched = false, removedFiles = touched.toSet,
+      schemaOverride = schema, dropDvs = dropDvs)
   }
 
   // ---- hierarchical manifests (manifest list + per-partition) --------
@@ -2271,22 +1913,6 @@ object VersionedStore {
           "to treat the mutation as a no-op"))
     }.sum
 
-  /** Refuse updates whose NON-NULL key tuples repeat — which row wins
-    * would be nondeterministic. NULL-keyed rows are exempt: the
-    * documented merge contract says a NULL key never matches and is
-    * inserted as-is, so two NULL-keyed rows are two inserts, not a
-    * conflict (a `distinct().count()` comparison would wrongly
-    * collapse them). One Spark job, not two. */
-  private def requireUniqueKeys(updates: DataFrame, keys: Seq[String],
-                                msg: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val dups = updates
-      .filter(keys.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1).limit(1).count()
-    require(dups == 0L, msg)
-  }
-
   /** Per-file (rowCount, min, max) of `column`, harvested from the
     * parquet FOOTER the writer already produced — metadata-only, no
     * data read. None (= "no stats recorded, always keep the file")
@@ -2451,10 +2077,7 @@ object VersionedStore {
     val commitRel = s"data/commit-$v-${attemptId()}"
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/$commitRel")
-    val added = Option(new File(path, commitRel).listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => s"$commitRel/${f.getName}").toSeq
+    val added = listParquet(path, commitRel)
     // schema lands BEFORE the version pointer: a crash in between
     // leaves an orphaned .schema file for an unpublished version —
     // invisible (readers resolve versions through the pointer) and

@@ -130,32 +130,21 @@ object StreamingIngest {
     * same batchId-keyed versioning that makes replays recommit their
     * own version — an at-least-once upsert stream lands exactly-once
     * table STATE. Batches must be key-unique: dedup a raw CDC batch
-    * keep-latest first (the engine's ReplacingMergeTree operator). */
+    * keep-latest first (the engine's ReplacingMergeTree operator).
+    * `partCol = Some(c)` makes the first batch create a hierarchical
+    * table partitioned by `c` — the full 100 TB shape: a CDC-upsert
+    * stream into a month-partitioned warehouse table, O(touched
+    * partitions) metadata per micro-batch, partition-moving updates
+    * included. */
   def sinkVersionedUpsert(stream: DataFrame, path: String,
-                          keys: Seq[String], checkpoint: String)
+                          keys: Seq[String], checkpoint: String,
+                          partCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         graft.sources.VersionedStore.mergeBatchVectored(batch.toDF(),
-          path, keys, id): Unit
-      }
-      .start()
-
-  /** [[sinkVersionedUpsert]] onto the HIERARCHICAL store — the full
-    * 100 TB shape: a CDC-upsert stream into a month-partitioned
-    * warehouse table, O(batch + matched rows) data and O(touched
-    * partitions) metadata per micro-batch, partition-moving updates
-    * included, exactly-once under replay. */
-  def sinkVersionedUpsertPartitioned(stream: DataFrame, path: String,
-                                     partCol: String, keys: Seq[String],
-                                     checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.sources.VersionedStore.mergeBatchPartitionedVectored(
-          batch.toDF(), path, partCol, keys, id): Unit
+          path, keys, id, partCol): Unit
       }
       .start()
 
@@ -165,9 +154,8 @@ object StreamingIngest {
     * before the merge — pass ordering columns that TOTALLY order a
     * key's versions (e.g. ts + event id); rows tied on all of `ord`
     * pick arbitrarily, the ReplacingMergeTree contract. This is the ReplacingMergeTree keep-latest operator
-    * composed with the vectored MERGE, per batch. `partCol = Some(c)`
-    * lands on the hierarchical store (partition-moving updates
-    * included). */
+    * composed with the vectored MERGE, per batch. `partCol` as in
+    * [[sinkVersionedUpsert]]. */
   def sinkVersionedUpsertLatest(stream: DataFrame, path: String,
                                 keys: Seq[String], ord: Seq[String],
                                 checkpoint: String,
@@ -182,14 +170,8 @@ object StreamingIngest {
         val latest = batch.toDF()
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-        partCol match {
-          case None =>
-            graft.sources.VersionedStore.mergeBatchVectored(latest, path,
-              keys, id): Unit
-          case Some(pc) =>
-            graft.sources.VersionedStore.mergeBatchPartitionedVectored(
-              latest, path, pc, keys, id): Unit
-        }
+        graft.sources.VersionedStore.mergeBatchVectored(latest, path,
+          keys, id, partCol): Unit
       }
       .start()
 }

@@ -15,20 +15,6 @@ class FlowsRollupSpec extends SparkSpec {
   private lazy val wt = Leaderboard.walletTrades(trades)
   private lazy val flows = Leaderboard.walletTokenFlows(wt).cache()
 
-  test("explainFromFlows == explain row-for-row") {
-    val markets = Tables.part(spark, sf).select(
-      col("p_partkey").cast("long").as("token_id"),
-      col("p_brand").as("market"))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
-    val direct = rows(Leaderboard.explain(wt, markets))
-    val rollup = rows(Leaderboard.explainFromFlows(flows, markets))
-    assert(direct == rollup, "re-aggregation of the partials must be " +
-      "value-identical, not merely approximately equal")
-    assert(direct.nonEmpty)
-  }
-
   // ---- r19 optimization equivalences: every query body that was
   // re-pointed at the flows / daily-state rollups must stay ROW-
   // IDENTICAL to the direct operator it replaced (the driver oracle

@@ -77,9 +77,9 @@ class VersionedSqlSpec extends SparkSpec {
           .asInstanceOf[GraftDeleteCommand].run(spark)
         val vApi =
           if (mode == "vectored")
-            VersionedStore.deletePartitionedVectored(spark, apiPath,
+            VersionedStore.deleteVectored(spark, apiPath,
               expr("id % 7 = 0 AND month = '1996-01'"))
-          else VersionedStore.deletePartitioned(spark, apiPath,
+          else VersionedStore.delete(spark, apiPath,
             expr("id % 7 = 0 AND month = '1996-01'"))
         assert(got.head.getInt(0) == 2 && vApi == 2,
           s"[$mode] both paths mint version 2")
@@ -115,9 +115,9 @@ class VersionedSqlSpec extends SparkSpec {
           .asInstanceOf[GraftMergeCommand].run(spark)
         val vApi =
           if (mode == "vectored")
-            VersionedStore.mergePartitionedVectored(spark, apiPath,
+            VersionedStore.mergeVectored(spark, apiPath,
               ups, Seq("id"))
-          else VersionedStore.mergePartitioned(spark, apiPath, ups,
+          else VersionedStore.merge(spark, apiPath, ups,
             Seq("id"))
         assert(got.head.getInt(0) == 2 && vApi == 2, s"[$mode]")
         assert(rowsOf(sqlPath) == rowsOf(apiPath),
@@ -137,7 +137,7 @@ class VersionedSqlSpec extends SparkSpec {
   test("DESCRIBE HISTORY returns the commit audit rows, newest first") {
     import graft.sources.GraftHistoryCommand
     val path = partTable()                                     // v1
-    VersionedStore.deletePartitioned(spark, path,
+    VersionedStore.delete(spark, path,
       expr("id = 3"))                                          // v2
     VersionedSqlTables.register(spark, "vsql_hist", path)
     val plan = parser.parsePlan("DESCRIBE HISTORY vsql_hist")
@@ -291,9 +291,9 @@ class VersionedSqlSpec extends SparkSpec {
         val sets = Seq("name" -> expr("concat(name, '!')"))
         val vApi =
           if (mode == "vectored")
-            VersionedStore.updatePartitionedVectored(spark, apiPath,
+            VersionedStore.updateVectored(spark, apiPath,
               expr("id <= 10"), sets)
-          else VersionedStore.updatePartitioned(spark, apiPath,
+          else VersionedStore.update(spark, apiPath,
             expr("id <= 10"), sets)
         assert(got.head.getInt(0) == 2 && vApi == 2)
         assert(rowsOf(sqlPath) == rowsOf(apiPath), s"[$mode] SQL == API")
@@ -306,11 +306,11 @@ class VersionedSqlSpec extends SparkSpec {
     // partition-moving SET: COW refuses loudly, vectored does it
     val cowPath = partTable()
     intercept[IllegalArgumentException] {
-      VersionedStore.updatePartitioned(spark, cowPath, expr("id = 1"),
+      VersionedStore.update(spark, cowPath, expr("id = 1"),
         Seq("month" -> expr("'1996-03'")))
     }
     val vecPath = partTable()
-    VersionedStore.updatePartitionedVectored(spark, vecPath,
+    VersionedStore.updateVectored(spark, vecPath,
       expr("id = 1"), Seq("month" -> expr("'1996-03'")))
     assert(rowsOf(vecPath).contains((1L, "n1", "1996-03")) &&
       !rowsOf(vecPath).exists(r => r._1 == 1L && r._3 == "1996-01"),

@@ -196,7 +196,7 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.appendPartitioned(
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 10L, 20L)),
       path, "month")
-    VersionedStore.deletePartitioned(spark, path, col("id") === 20L)
+    VersionedStore.delete(spark, path, col("id") === 20L)
     val got = VersionedStore.readChangeFeed(spark, path, 1, 2, Seq("id"))
       .collect()
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("month"),
@@ -471,7 +471,7 @@ class VersionedStoreSpec extends SparkSpec {
       path, "month")
     val m2 = VersionedStore.readMlist(path, 2)
     // delete id=20: lives in exactly one of 1996-02's two files
-    val v3 = VersionedStore.deletePartitioned(spark, path, col("id") === 20L)
+    val v3 = VersionedStore.delete(spark, path, col("id") === 20L)
     assert(v3 == 3)
     assert(prows(path, 3) ==
       Set((1L, "1996-01"), (2L, "1996-01"), (10L, "1996-02"),
@@ -492,7 +492,7 @@ class VersionedStoreSpec extends SparkSpec {
     assert((files3 -- files2).isEmpty && files2 != files3,
       "delete with no survivors in the file strikes it; no rewrite needed")
     // wipe a whole partition: its entry disappears from the mlist
-    val v4 = VersionedStore.deletePartitioned(spark, path,
+    val v4 = VersionedStore.delete(spark, path,
       col("month") === "1996-03")
     val m4 = VersionedStore.readMlist(path, v4)
     assert(!m4.parts.exists(_.value == "1996-03"),
@@ -500,7 +500,7 @@ class VersionedStoreSpec extends SparkSpec {
     assert(prows(path, v4) ==
       Set((1L, "1996-01"), (2L, "1996-01"), (10L, "1996-02")))
     // no-match delete mints no version
-    assert(VersionedStore.deletePartitioned(spark, path,
+    assert(VersionedStore.delete(spark, path,
       col("id") === 999L) == v4)
   }
 
@@ -1176,7 +1176,7 @@ class VersionedStoreSpec extends SparkSpec {
     val ml1 = VersionedStore.readMlist(path, 1)
     // v2: vectored delete across BOTH partitions — zero pmanifests
     // re-minted, the part entries are carried byte-identical
-    val v2 = VersionedStore.deletePartitionedVectored(spark, path,
+    val v2 = VersionedStore.deleteVectored(spark, path,
       col("id") % 10 === 4)
     assert(v2 == 2)
     val ml2 = VersionedStore.readMlist(path, 2)
@@ -1194,7 +1194,7 @@ class VersionedStoreSpec extends SparkSpec {
     assert(ids(2) == live)
     assert(ids(1) == (0L until 200L).toSet, "time travel unaffected")
     // zero matches: no new version
-    assert(VersionedStore.deletePartitionedVectored(spark, path,
+    assert(VersionedStore.deleteVectored(spark, path,
       col("id") === -5L) == 2)
     // pruned read paths subtract too
     assert(VersionedStore.readPartitionsAsOf(spark, path, 2, _ == "1996-01")
@@ -1207,7 +1207,7 @@ class VersionedStoreSpec extends SparkSpec {
         .collect()
     }
     // v3: COW partitioned delete must not resurrect vectored rows
-    VersionedStore.deletePartitioned(spark, path, col("id") % 10 === 7)
+    VersionedStore.delete(spark, path, col("id") % 10 === 7)
     assert(ids(3) == live.filterNot(_ % 10 == 7),
       "copy-on-write rewrite reads vector-applied")
     // v4: per-partition compaction folds that partition's dead rows
@@ -1243,7 +1243,7 @@ class VersionedStoreSpec extends SparkSpec {
       statsCol = if (r == 0) Some("ts") else None,
       bloomCol = if (r == 0) Some("tok") else None))
     // vector-delete tok=5 (lives in residue file 1)
-    VersionedStore.deletePartitionedVectored(spark, path, col("tok") === 5L)
+    VersionedStore.deleteVectored(spark, path, col("tok") === 5L)
     def probe(t: Long): (Long, Long) = {
       val q = VersionedStore.read(spark, path)
         .where(col("month") === "p" && col("tok") === t)
@@ -1272,7 +1272,7 @@ class VersionedStoreSpec extends SparkSpec {
     assert(probe(6L) == ((1L, 1L)))
     // fold the vector; the probe shape is unchanged, row resurrection
     // impossible by parity with the pre-fold answers
-    VersionedStore.reorgPartitionedVectored(spark, path, 0.0)
+    VersionedStore.reorgVectored(spark, path, 0.0)
     assert(probe(5L)._2 == 0L && probe(9L)._2 == 1L,
       "post-fold answers identical")
   }
@@ -1284,9 +1284,9 @@ class VersionedStoreSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.StreamingIngest.sinkVersionedUpsertPartitioned(
-      ms.toDF().toDF("id", "name", "month"), path, "month", Seq("id"),
-      freshDir() + "/ckpt")
+    val q = graft.streaming.StreamingIngest.sinkVersionedUpsert(
+      ms.toDF().toDF("id", "name", "month"), path, Seq("id"),
+      freshDir() + "/ckpt", partCol = Some("month"))
     // batch 0 bootstraps two partitions
     ms.addData((1L, "a", "1996-01"), (2L, "b", "1996-02"))
     q.processAllAvailable()
@@ -1304,18 +1304,18 @@ class VersionedStoreSpec extends SparkSpec {
     val ml2 = VersionedStore.readMlist(path, 2)
     assert(ml2.dvs.nonEmpty, "the moved key's old row died by vector")
     // replay of the last batch (post-crash foreachBatch): identical
-    VersionedStore.mergeBatchPartitionedVectored(
+    VersionedStore.mergeBatchVectored(
       Seq((2L, "B2", "1996-01"), (3L, "c", "1996-03"))
-        .toDF("id", "name", "month"), path, "month", Seq("id"),
-      batchId = 1L)
+        .toDF("id", "name", "month"), path, Seq("id"),
+      batchId = 1L, partCol = Some("month"))
     assert(VersionedStore.currentVersion(path) == 2)
     assert(state() == Set((1L, "a", "1996-01"), (2L, "B2", "1996-01"),
       (3L, "c", "1996-03")), "replay is idempotent")
     // divergence guard
     intercept[IllegalArgumentException] {
-      VersionedStore.mergeBatchPartitionedVectored(
+      VersionedStore.mergeBatchVectored(
         Seq((9L, "x", "1996-01")).toDF("id", "name", "month"), path,
-        "month", Seq("id"), batchId = 7L)
+        Seq("id"), batchId = 7L, partCol = Some("month"))
     }
     // time travel: batch 0's snapshot is intact
     assert(VersionedStore.readAsOf(spark, path, 1).collect()
@@ -1380,7 +1380,7 @@ class VersionedStoreSpec extends SparkSpec {
         .unionByName(month("1996-02", 1000 until 2000).coalesce(1)),
       path, "month")
     // dense dead in 1996-01 (50%), sparse in 1996-02 (0.1%)
-    VersionedStore.deletePartitionedVectored(spark, path,
+    VersionedStore.deleteVectored(spark, path,
       (col("id") < 500L) || (col("id") === 1500L))
     val live = ((500L until 1000L) ++
       (1000L until 2000L).filterNot(_ == 1500L)).toSet
@@ -1388,7 +1388,7 @@ class VersionedStoreSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(ids() == live)
     val ml2 = VersionedStore.readMlist(path, 2)
-    val v3 = VersionedStore.reorgPartitionedVectored(spark, path,
+    val v3 = VersionedStore.reorgVectored(spark, path,
       minDeadRatio = 0.10)
     assert(v3 == 3)
     val ml3 = VersionedStore.readMlist(path, 3)
@@ -1401,12 +1401,12 @@ class VersionedStoreSpec extends SparkSpec {
     assert(ml3.dvs.nonEmpty, "the sparse file's vector still guards it")
     assert(ids() == live, "reorg is row-preserving")
     // full fold: vectors drop, reads go join-free
-    val v4 = VersionedStore.reorgPartitionedVectored(spark, path, 0.0)
+    val v4 = VersionedStore.reorgVectored(spark, path, 0.0)
     assert(v4 == 4)
     assert(VersionedStore.readMlist(path, 4).dvs.isEmpty,
       "a full fold drops the #dv lines")
     assert(ids() == live)
-    assert(VersionedStore.reorgPartitionedVectored(spark, path, 0.0) == 4,
+    assert(VersionedStore.reorgVectored(spark, path, 0.0) == 4,
       "nothing left to reclaim: no new version")
   }
 
@@ -1427,7 +1427,7 @@ class VersionedStoreSpec extends SparkSpec {
       (10L, "UPD", "1996-01"),
       (60L, "MOVED", "1996-01"),
       (999L, "NEW", "1996-04")).toDF("id", "name", "month")
-    val v2 = VersionedStore.mergePartitionedVectored(spark, path, updates,
+    val v2 = VersionedStore.mergeVectored(spark, path, updates,
       Seq("id"))
     assert(v2 == 2)
     val ml2 = VersionedStore.readMlist(path, 2)
@@ -1477,8 +1477,8 @@ class VersionedStoreSpec extends SparkSpec {
       == 2)
   }
 
-  test("mergePartitioned (copy-on-write) is row-identical to the " +
-    "vectored twin; untouched partitions carry by reference, no " +
+  test("merge (copy-on-write) on a hierarchical table is row-identical " +
+    "to mergeVectored; untouched partitions carry by reference, no " +
     "vectors published") {
     import spark.implicits._
     def freshTable(): String = {
@@ -1493,8 +1493,8 @@ class VersionedStoreSpec extends SparkSpec {
     // update in 1996-01, MOVE id=40 from 1996-02 to 1996-03, insert
     val ups = Seq((5L, "FIVE", "1996-01"), (40L, "MOVED", "1996-03"),
       (999L, "NEW", "1996-03")).toDF("id", "name", "month")
-    val v1 = VersionedStore.mergePartitioned(spark, cow, ups, Seq("id"))
-    val v2 = VersionedStore.mergePartitionedVectored(spark, mor, ups,
+    val v1 = VersionedStore.merge(spark, cow, ups, Seq("id"))
+    val v2 = VersionedStore.mergeVectored(spark, mor, ups,
       Seq("id"))
     assert(v1 == 2 && v2 == 2)
     def all(p: String) = VersionedStore.read(spark, p).collect()
@@ -1511,7 +1511,7 @@ class VersionedStoreSpec extends SparkSpec {
     // and NO update row must carry: build one more merge touching
     // only 1996-01 and check 1996-02/03 files carry verbatim
     val before = VersionedStore.filesAsOf(cow, 2).toSet
-    VersionedStore.mergePartitioned(spark, cow,
+    VersionedStore.merge(spark, cow,
       Seq((6L, "SIX", "1996-01")).toDF("id", "name", "month"), Seq("id"))
     val after = VersionedStore.filesAsOf(cow, 3).toSet
     val untouched = before.filterNot(_.contains("month=1996-01"))
@@ -1828,7 +1828,7 @@ class VersionedStoreSpec extends SparkSpec {
         .unionByName(month("1996-03", 100 until 150)),
       path, "month")                                                // v1
     // a vectored delete first, so carried `#dv` lines cross the expiry
-    val v2 = VersionedStore.deletePartitionedVectored(spark, path,
+    val v2 = VersionedStore.deleteVectored(spark, path,
       col("id").isin(10L, 60L, 110L))                               // v2
     val ml2 = VersionedStore.readMlist(path, v2)
     // expire everything before 1996-03
@@ -1859,5 +1859,63 @@ class VersionedStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       VersionedStore.expirePartitions(spark, flat, _ => true)
     }
+  }
+
+  test("one entry point per row operation: a flat and a hierarchical " +
+    "table take the same delete/update/merge, COW and vectored, then " +
+    "reorg, and agree row for row") {
+    import spark.implicits._
+    type Rows = Set[(Long, String, String)]
+    val base: Rows = (1L to 60L).map(i =>
+      (i, s"n$i", s"1996-0${(i - 1) / 20 + 1}")).toSet
+    def load() = base.toSeq.toDF("id", "name", "month").repartition(3)
+    val flat = freshDir(); val hier = freshDir()
+    VersionedStore.append(load(), flat)
+    VersionedStore.appendPartitioned(load(), hier, "month")
+    def ups(rs: (Long, String, String)*) = rs.toDF("id", "name", "month")
+    def upsert(rs: (Long, String, String)*)(t: Rows): Rows =
+      t.filterNot(r => rs.exists(_._1 == r._1)) ++ rs
+    def setName(p: Long => Boolean, f: String => String)(t: Rows): Rows =
+      t.map { case r @ (i, n, m) => if (p(i)) (i, f(n), m) else r }
+    val merged = Seq((10L, "TEN", "1996-01"), (45L, "MOVED", "1996-01"),
+      (999L, "NEW", "1996-03"))
+    val mergedVec = Seq((30L, "THIRTY", "1996-03"),
+      (1000L, "NEWER", "1996-01"))
+    val steps: Seq[(String, String => Int, Rows => Rows)] = Seq(
+      ("delete", VersionedStore.delete(spark, _, col("id") % 7 === 0),
+        _.filterNot(_._1 % 7 == 0)),
+      ("update", VersionedStore.update(spark, _, col("id") % 5 === 1,
+        Seq("name" -> concat(col("name"), lit("!")))),
+        setName(_ % 5 == 1, _ + "!")),
+      ("merge", VersionedStore.merge(spark, _, ups(merged: _*), Seq("id")),
+        upsert(merged: _*)),
+      ("deleteVectored",
+        VersionedStore.deleteVectored(spark, _, col("id") % 11 === 0),
+        _.filterNot(_._1 % 11 == 0)),
+      ("updateVectored", VersionedStore.updateVectored(spark, _,
+        col("id").between(20, 25), Seq("name" -> upper(col("name")))),
+        setName(i => i >= 20 && i <= 25, _.toUpperCase)),
+      ("mergeVectored",
+        VersionedStore.mergeVectored(spark, _, ups(mergedVec: _*), Seq("id")),
+        upsert(mergedVec: _*)),
+      ("reorgVectored", VersionedStore.reorgVectored(spark, _, 0.0),
+        identity))
+    def snap(p: String): Rows = VersionedStore.read(spark, p)
+      .select("id", "name", "month").as[(Long, String, String)].collect().toSet
+    var expected = base
+    steps.zipWithIndex.foreach { case ((name, op, model), i) =>
+      val (vf, vh) = (op(flat), op(hier))
+      assert(vf == i + 2 && vh == i + 2, s"[$name] both tables mint v${i + 2}")
+      expected = model(expected)
+      assert(snap(flat) == expected, s"[$name] flat == relational model")
+      assert(snap(hier) == expected, s"[$name] hierarchical == model")
+      assert(snap(flat) == snap(hier), s"[$name] layouts agree")
+      assert(VersionedStore.history(flat).last.form == "flat" &&
+        VersionedStore.history(hier).last.form == "partitioned",
+        s"[$name] each table keeps its own layout")
+    }
+    assert(VersionedStore.deleteVectorsAsOf(flat, 8).isEmpty &&
+      VersionedStore.deleteVectorsAsOf(hier, 8).isEmpty,
+      "reorg at ratio 0 folds every vector on both layouts")
   }
 }
