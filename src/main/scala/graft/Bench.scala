@@ -41,16 +41,10 @@ object Bench {
   @volatile private var order: Vector[String] = Vector.empty
   @volatile private var sfDirV: String = ""
   @volatile private var nPassesV: Int = 1
-  private def modeV: String =
-    if (sys.env.get("SPARK_GRAFT_BUCKETED")
-      .orElse(sys.props.get("spark.graft.bucketed")).contains("1")) "bucketed"
-    else "flat"
   // a SPARK_GRAFT_ONLY run covers a subset of the registry: its dump
   // must not clobber the committed full-registry artifact (it silently
   // did during r13 — VERDICT r13 #3)
-  private def scopedV: Boolean =
-    sys.env.get("SPARK_GRAFT_ONLY").exists(_.trim.nonEmpty) ||
-      warmupOnlyV
+  private def scopedV: Boolean = GraftSession.only.isDefined || warmupOnlyV
   /** SPARK_GRAFT_WARMUP_ONLY=1: run the mv_warmup phase then exit —
     * the priming pass for the persisted-MV attach seam
     * (SPARK_GRAFT_MV_DISK). Counts as scoped so the partial artifact
@@ -58,13 +52,11 @@ object Bench {
   private def warmupOnlyV: Boolean =
     sys.env.get("SPARK_GRAFT_WARMUP_ONLY").exists(v =>
       v == "1" || v.equalsIgnoreCase("true"))
-  /** Artifact the per-query dump writes to — scoped (partial) runs and
-    * bucketed-mode runs land in their own files; only a full
-    * flat-registry sweep may overwrite BENCH_LOCAL.json. */
-  private[graft] def localDumpTarget(mode: String, scoped: Boolean): String =
-    if (mode == "bucketed") "BENCH_BUCKETED.json"
-    else if (scoped) "BENCH_SCOPED.json"
-    else "BENCH_LOCAL.json"
+  /** Artifact the per-query dump writes to — scoped (partial) runs land
+    * in their own file; only a full-registry sweep may overwrite
+    * BENCH_LOCAL.json. */
+  private[graft] def localDumpTarget(scoped: Boolean): String =
+    if (scoped) "BENCH_SCOPED.json" else "BENCH_LOCAL.json"
   // mv_warmup phase (VERDICT r10 #1): (label, seconds, ok) per session
   // MV materialized BEFORE the cold sweep, so each query's cold time is
   // its own work and the shared-MV build cost is its own labeled line
@@ -183,8 +175,7 @@ object Bench {
       steady: Seq[(String, Double)],
       failed: Seq[String],
       done: Int, selected: Int, nPasses: Int,
-      mvTotal: Double, mvN: Int,
-      mode: String, sfDir: String,
+      mvTotal: Double, mvN: Int, sfDir: String,
       vsb: Map[String, (Double, Double)] = Map.empty): String = {
     val total = cold.collect { case (_, v, true) => v }.sum
     // cap BOTH sides (ADVICE r12): the first FailTopN failures in run
@@ -240,11 +231,11 @@ object Bench {
     // finished, which would otherwise read as a (misleadingly fast)
     // complete run — completed < selected marks the COLD line as
     // truncated (ADVICE r6); the steady sweep reports its own count.
-    // steady_scope marks the steady population (ADVICE r9); mode marks
-    // the storage layout under test; queries_scope marks the cold-map
-    // cap so cross-round tooling doesn't read the capped map as the
-    // full population.
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","completed":$done,"selected":$selected,"passes":$nPasses,"mv_warmup":${fmt(mvTotal)},"mv_warmup_n":$mvN,"mv_disk":{"hits":${graft.model.Views.diskHits.get()},"misses":${graft.model.Views.diskMisses.get()}},"queries":${mapJson(line)},"queries_scope":"top${HeadlineTopN}_plus_failed","failed_n":${failed.size},"steady_total":${fmt(steadyTotal)},"steady_n":${steady.size},"steady_scope":"all","steady_worst":$steadyWorstJson,"vs_baseline":$vsShownJson,"vs_baseline_stats":$vsStatsJson,"failed":$failedJs,"mode":"$mode","sf":"$sfDir"}"""
+    // steady_scope marks the steady population (ADVICE r9); mode is
+    // the one trades layout, kept as a constant key for cross-round
+    // tooling; queries_scope marks the cold-map cap so that tooling
+    // doesn't read the capped map as the full population.
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","completed":$done,"selected":$selected,"passes":$nPasses,"mv_warmup":${fmt(mvTotal)},"mv_warmup_n":$mvN,"mv_disk":{"hits":${graft.model.Views.diskHits.get()},"misses":${graft.model.Views.diskMisses.get()}},"queries":${mapJson(line)},"queries_scope":"top${HeadlineTopN}_plus_failed","failed_n":${failed.size},"steady_total":${fmt(steadyTotal)},"steady_n":${steady.size},"steady_scope":"all","steady_worst":$steadyWorstJson,"vs_baseline":$vsShownJson,"vs_baseline_stats":$vsStatsJson,"failed":$failedJs,"mode":"flat","sf":"$sfDir"}"""
   }
   private def headlineJson: String = {
     val rs = merged
@@ -268,7 +259,7 @@ object Bench {
     val done = passes.headOption.map(_.size).getOrElse(0)
     val mvTotal = mvWarmup.collect { case (_, v, true) => v }.sum
     renderHeadline(cold, steady, rs.collect { case (k, _, false) => k },
-      done, order.size, nPassesV, mvTotal, mvWarmup.size, modeV, sfDirV,
+      done, order.size, nPassesV, mvTotal, mvWarmup.size, sfDirV,
       vsBaseline(steady))
   }
   /** Full map + raw per-pass samples → BENCH_LOCAL.json. Called after every
@@ -296,13 +287,10 @@ object Bench {
     val mvDisk = s"""{"hits":${graft.model.Views.diskHits.get()},""" +
       s""""misses":${graft.model.Views.diskMisses.get()}}"""
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":${passes.length},"mv_warmup":${mapJson(mvWarmup)},"mv_disk":$mvDisk,"queries":${mapJson(rs)},$passJson,"failed":${failedJson(rs)},"vs_baseline":$vsbJson,"over2x_substantive":$over2x,"steady_scope":"all","mode":"$modeV","sf":"$sfDirV"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":${passes.length},"mv_warmup":${mapJson(mvWarmup)},"mv_disk":$mvDisk,"queries":${mapJson(rs)},$passJson,"failed":${failedJson(rs)},"vs_baseline":$vsbJson,"over2x_substantive":$over2x,"steady_scope":"all","mode":"flat","sf":"$sfDirV"}"""
     try {
-      // bucketed-mode sweeps land in their own artifact so the
-      // zero-exchange layout gets a longitudinal signal (VERDICT r9
-      // #3) without clobbering the flat-layout baseline; scoped
-      // (SPARK_GRAFT_ONLY) runs likewise — BENCH_SCOPED.json
-      val out = localDumpTarget(modeV, scopedV)
+      // scoped (SPARK_GRAFT_ONLY) runs land in BENCH_SCOPED.json
+      val out = localDumpTarget(scopedV)
       val tmp = java.nio.file.Paths.get(out + ".tmp")
       java.nio.file.Files.writeString(tmp, full)
       java.nio.file.Files.move(tmp, java.nio.file.Paths.get(out),
@@ -354,11 +342,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     sfDirV = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (targeted re-bench)
+    val only = GraftSession.only
     // a WARMUP_ONLY prime of a restricted registry is a contradiction:
     // the warmup phase itself requires the unrestricted registry, so
     // the combination used to silently emit an empty scoped artifact
     // (ADVICE r17) — refuse instead
-    if (warmupOnlyV && sys.env.get("SPARK_GRAFT_ONLY").exists(_.trim.nonEmpty)) {
+    if (warmupOnlyV && only.isDefined) {
       System.err.println("[bench] SPARK_GRAFT_WARMUP_ONLY=1 with " +
         "SPARK_GRAFT_ONLY set would prime nothing (the warmup phase " +
         "only runs for the full registry) — unset one of them")
@@ -396,9 +386,6 @@ object Bench {
       System.err.println(f"[bench] $name $dt%.2fs")
       (dt, ok)
     }
-    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (targeted re-bench)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     order = selected.map(_._1).toVector
@@ -534,8 +521,7 @@ object Bench {
     }
     // Teardown: release every session MV / pinned histogram through the
     // registry's own lifecycle hook (VERDICT r10 #3 — reset existed but
-    // nothing called it in production code). Separate bucketed-mode
-    // launches get a fresh JVM, so teardown is the between-sweeps reset.
+    // nothing called it in production code).
     if (!contextDead) {
       val n = graft.model.Views.cachedNames(spark).size
       graft.model.Views.reset(spark)

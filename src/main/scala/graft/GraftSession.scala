@@ -29,6 +29,13 @@ object GraftSession {
   private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
     .filter(_ >= 1).getOrElse(Runtime.getRuntime.availableProcessors)
 
+  /** `SPARK_GRAFT_ONLY=q_a,q_b`: the query names a main restricts its
+    * run to. Unset, empty or blank means the whole registry (None). */
+  def only: Option[Set[String]] = parseOnly(sys.env.get("SPARK_GRAFT_ONLY"))
+
+  private[graft] def parseOnly(v: Option[String]): Option[Set[String]] =
+    v.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+
   /** The one session every main runs on: `local[cpus]`, one shuffle
     * partition per worker thread, UTC (without it the events ts cast
     * is host-timezone dependent and results drift across hosts), UI

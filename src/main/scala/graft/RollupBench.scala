@@ -91,7 +91,7 @@ object RollupBench {
           if (k == 1) srcDir
           else {
             val d = new java.io.File(root, s"x$k").getAbsolutePath
-            ScaleBench.testBuildScaled(spark, srcDir, d, k, "density")
+            BuildScaled.buildScaled(spark, srcDir, d, k, "density")
             d
           }
         val (raw, rolled, rr, fr) = point(dir)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * which means the committed ×10 sweep only evidences them at 20k
   * vectors. This main grows JUST the embeddings table to ×k (default
   * ×100 = 200k vectors, the point where the rules actually bind),
-  * using ScaleBench's orthogonal per-replica ±1 sign transform (intra-
+  * using BuildScaled's orthogonal per-replica ±1 sign transform (intra-
   * replica cosines preserved bit-for-bit, cross-replica cosines
   * scrambled — replicas cannot alias), and runs the full AnnGates
   * harness — seven methods × two corpus shapes — with the recall
@@ -63,7 +63,7 @@ object ScaleAnn {
     if (marker.exists()) System.err.println(s"[scaleann] reusing cached x$k replica at $dir")
     else {
       graft.model.Views.rmTree(dirF.toPath)
-      ScaleBench.buildScaledTable(spark, srcDir, dir, k, "entities", "embeddings")
+      BuildScaled.buildScaledTable(spark, srcDir, dir, k, "entities", "embeddings")
       marker.createNewFile(): Unit
     }
     val buildS = (System.nanoTime() - tb0) / 1e9

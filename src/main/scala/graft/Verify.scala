@@ -11,8 +11,7 @@ object Verify {
     val spark = GraftSession.local(Some(System.getProperty("java.io.tmpdir")))
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the dump (targeted re-verify)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = GraftSession.only
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -51,50 +51,16 @@ object Tables {
     * wallet roles). One row per lineitem; the orders join supplies the
     * taker (customer) wallet. The join key (orderkey) is the natural
     * co-partitioning key; at scale both sides would be bucketed by it
-    * — and `SPARK_GRAFT_BUCKETED=1` (or -Dspark.graft.bucketed=1)
-    * exercises exactly that layout: the join sides are written once
-    * per session as co-bucketed catalog tables and every trades build
-    * is a shuffle-free bucket-local sort-merge join (SURVEY §5's
-    * "bucket both tables" claim, measurable in the bench).
+    * (`graft.sources.BucketedWarehouse` writes that layout; BucketedSpec
+    * pins its shuffle-free join).
     *
     * Columns: trade_id, ts, maker, taker, token_id, qty, usd, price,
     * is_taker_buy, is_maker_buy.
     */
   def trades(spark: SparkSession, dir: String): DataFrame = {
-    val joined =
-      if (bucketedMode) {
-        val prefix = bucketedPrefix(spark, dir)
-        graft.sources.BucketedWarehouse.bucketedJoin(spark, prefix)
-      } else {
-        val li = lineitem(spark, dir)
-        val o  = orders(spark, dir).select("o_orderkey", "o_custkey")
-        li.join(o, li("l_orderkey") === o("o_orderkey"))
-      }
-    tradesFrom(joined)
-  }
-
-  private def bucketedMode: Boolean =
-    sys.env.get("SPARK_GRAFT_BUCKETED")
-      .orElse(sys.props.get("spark.graft.bucketed")).contains("1")
-
-  /** One-time co-bucketed write per (session, dir); later calls reuse
-    * the catalog tables. Bucket count follows the session's shuffle
-    * parallelism (on a cluster: a divisor of total cores). */
-  private val bucketedDone =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def bucketedPrefix(spark: SparkSession, dir: String): String = {
-    val prefix = "graft_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    bucketedDone.computeIfAbsent((spark.sparkContext.applicationId, prefix), _ => {
-      val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      graft.sources.BucketedWarehouse.create(spark, lineitem(spark, dir),
-        orders(spark, dir).select("o_orderkey", "o_custkey"), n, prefix)
-      prefix
-    })
-    prefix
-  }
-
-  private def tradesFrom(joined: DataFrame): DataFrame = {
-    joined
+    val li = lineitem(spark, dir)
+    val o  = orders(spark, dir).select("o_orderkey", "o_custkey")
+    li.join(o, li("l_orderkey") === o("o_orderkey"))
       .select(
         (col("l_orderkey") * lit(10L) + col("l_linenumber")).as("trade_id"),
         col("l_shipdate").as("ts"),

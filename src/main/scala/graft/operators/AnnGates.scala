@@ -36,7 +36,7 @@ object AnnGates {
     "src/main/scala/graft/operators/Similarity.scala",
     "src/main/scala/graft/functions/VectorExprs.scala",
     "src/main/scala/graft/ScaleAnn.scala",
-    "src/main/scala/graft/ScaleBench.scala")
+    "src/main/scala/graft/BuildScaled.scala")
 
   /** Known limitation (ADVICE r18): this hashes the WORKING-TREE
     * sources, i.e. the code the evidence claims, not necessarily the

@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is one doc-id list per (band, bucket), capped at
   * `maxDocsPerBucket`: a hot bucket (stop-gram band collision, or a
   * duplicate-dense corpus) stops accumulating once full, which bounds
-  * BOTH the per-key state and the ∝k² pair-output cliff ScaleBench
+  * BOTH the per-key state and the ∝k² pair-output cliff the r11 scale curve
   * measured on duplicate-dense replicas (PLANS.md r11 "kept negative
   * result") — this is the streaming form of the bucket-emission-cap
   * mitigation recorded there. At 100 TB the key space is the band

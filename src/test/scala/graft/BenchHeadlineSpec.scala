@@ -30,8 +30,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
     val steady = (0 until 300).map(i => (mkName(i), 100.0 + i))
     val line = Bench.renderHeadline(cold, steady, Nil,
       done = 300, selected = 300, nPasses = 1,
-      mvTotal = 1234.567, mvN = 25,
-      mode = "bucketed", sfDir = "/root/testdata/sf0.1",
+      mvTotal = 1234.567, mvN = 25, sfDir = "/data/testdata/sf0.1",
       vsb = vsbFor(steady.map(_._1)))
     assert(line.length < 1900, s"len=${line.length}: $line")
   }
@@ -41,7 +40,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
     val steady = (0 until 100).filter(_ != 7).map(i => (mkName(i), i.toDouble))
     val line = Bench.renderHeadline(cold, steady, Seq(mkName(7)),
       done = 100, selected = 100, nPasses = 1,
-      mvTotal = 10.0, mvN = 3, mode = "flat", sfDir = "sf0.1")
+      mvTotal = 10.0, mvN = 3, sfDir = "sf0.1")
     // heaviest success present, lightest absent from the cold map
     assert(line.contains(s""""${mkName(99)}":99.000"""))
     assert(!line.contains(s""""${mkName(1)}":"""))
@@ -54,6 +53,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
     // scope markers for cross-round tooling
     assert(line.contains(""""queries_scope":"top20_plus_failed""""))
     assert(line.contains(""""steady_scope":"all""""))
+    assert(line.contains(""""mode":"flat""""))
   }
 
   test("mass failure stays under 1900 chars with a true failed_n count") {
@@ -66,7 +66,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
     val failed = (0 until 100).map(mkName)
     val line = Bench.renderHeadline(cold, steady, failed,
       done = 150, selected = 150, nPasses = 1,
-      mvTotal = 100.0, mvN = 25, mode = "flat", sfDir = "sf0.1",
+      mvTotal = 100.0, mvN = 25, sfDir = "sf0.1",
       vsb = vsbFor(steady.map(_._1)))
     assert(line.length < 1900, s"len=${line.length}: $line")
     assert(line.contains(""""failed_n":100"""), "true count survives the cap")
@@ -92,7 +92,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
     val vsb = Map(mkName(39) -> ((0.05, 0.1)), mkName(38) -> ((0.2, 0.1)),
       mkName(2) -> ((9.0, 1.0)))
     val line = Bench.renderHeadline(cold, steady, Nil,
-      40, 40, 1, 5.0, 2, "flat", "sf0.1", vsb)
+      40, 40, 1, 5.0, 2, "sf0.1", vsb)
     // steady_worst members with a ratio appear; non-members don't
     assert(line.contains(s""""vs_baseline":{"${mkName(39)}":0.50,"${mkName(38)}":2.00}"""))
     // stats cover ALL ratio'd queries, including the non-headline one;
@@ -106,7 +106,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
   test("no baseline file → empty vs_baseline objects, line still parses") {
     val cold = (0 until 10).map(i => (mkName(i), i.toDouble, true))
     val line = Bench.renderHeadline(cold, cold.map(c => (c._1, c._2)), Nil,
-      10, 10, 1, 5.0, 2, "flat", "sf0.01")
+      10, 10, 1, 5.0, 2, "sf0.01")
     assert(line.contains(""""vs_baseline":{},"vs_baseline_stats":{"n":0}"""))
   }
 
@@ -124,7 +124,7 @@ class BenchHeadlineSpec extends AnyFunSuite {
   test("headline is valid JSON shape (balanced, parse-spot-checked)") {
     val cold = (0 until 40).map(i => (mkName(i), i * 1.5, true))
     val line = Bench.renderHeadline(cold, cold.map(c => (c._1, c._2)), Nil,
-      40, 40, 1, 5.0, 2, "flat", "sf0.01",
+      40, 40, 1, 5.0, 2, "sf0.01",
       vsb = vsbFor(cold.map(_._1)))
     // cheap structural check without a JSON lib: balanced braces/brackets
     assert(line.count(_ == '{') == line.count(_ == '}'))
@@ -157,16 +157,9 @@ class BenchHeadlineSpec extends AnyFunSuite {
 
   test("scoped and bucketed runs never target the committed " +
     "BENCH_LOCAL.json (VERDICT r13 #3)") {
-    assert(Bench.localDumpTarget("flat", scoped = false) ==
-      "BENCH_LOCAL.json")
-    assert(Bench.localDumpTarget("flat", scoped = true) ==
-      "BENCH_SCOPED.json",
+    assert(Bench.localDumpTarget(scoped = false) == "BENCH_LOCAL.json")
+    assert(Bench.localDumpTarget(scoped = true) == "BENCH_SCOPED.json",
       "a SPARK_GRAFT_ONLY run holds a partial map - it must not " +
         "overwrite the full-registry artifact")
-    assert(Bench.localDumpTarget("bucketed", scoped = false) ==
-      "BENCH_BUCKETED.json")
-    assert(Bench.localDumpTarget("bucketed", scoped = true) ==
-      "BENCH_BUCKETED.json",
-      "bucketed artifacts are already mode-scoped")
   }
 }

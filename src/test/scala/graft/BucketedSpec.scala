@@ -51,29 +51,4 @@ class BucketedSpec extends SparkSpec {
       assert(BucketedWarehouse.bucketedJoin(spark, prefix).count() > 0)
     } finally BucketedWarehouse.drop(spark, prefix)
   }
-
-  test("SPARK_GRAFT_BUCKETED mode: trades rows identical, join shuffle-free") {
-    // the bench-facing switch (VERDICT r8 #6): Tables.trades routed
-    // through the co-bucketed warehouse must return the SAME rows as
-    // the ad hoc join (multiset equality) and plan no hash exchange
-    // above the bucketed scans
-    val normal = Tables.trades(spark, sf)
-    sys.props("spark.graft.bucketed") = "1"
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val bucketed = Tables.trades(spark, sf)
-      val plan = bucketed.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed trades must not shuffle:\n$plan")
-      assert(bucketed.exceptAll(normal).isEmpty &&
-        normal.exceptAll(bucketed).isEmpty,
-        "bucketed-mode trades must be row-identical")
-    } finally {
-      sys.props.remove("spark.graft.bucketed"): Unit
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      BucketedWarehouse.drop(spark,
-        "graft_" + sf.replaceAll("[^A-Za-z0-9]", "_"))
-    }
-  }
 }

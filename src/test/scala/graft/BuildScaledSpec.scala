@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Guards the scale-curve harness's replica construction — if the
-  * replicas are malformed the curve measures nothing (key collisions
+/** Guards BuildScaled's replica construction — if the replicas are
+  * malformed the scale evidence measures nothing (key collisions
   * collapse groups; aliased replicas inflate LSH pair output ∝k²).
   */
-class ScaleBenchSpec extends SparkSpec {
+class BuildScaledSpec extends SparkSpec {
 
   private def build(axis: String): String = {
     val out = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft-scalespec-$axis-${ProcessHandle.current().pid()}")
-    ScaleBench.testBuildScaled(spark, sf, out.getAbsolutePath, 2, axis)
+    BuildScaled.buildScaled(spark, sf, out.getAbsolutePath, 2, axis)
     out.getAbsolutePath
   }
 

@@ -55,6 +55,26 @@ class ScaleSweepSpec extends AnyFunSuite {
     assert(!ScaleSweep.isComplete(Map.empty, Nil, Set.empty, scales))
   }
 
+  // A query that fails in either pass has no cell at that scale point
+  // (Bench's any-pass rule): a pass-1 time must not survive a pass-2
+  // failure as "steady", and a pass-2 success after a pass-1 failure
+  // must not leave a placeholder cold time behind.
+  test("a failure in either pass drops that scale point's cell") {
+    val prior = Map(1 -> (0.5, 0.4))
+    // pass 1 ok, pass 2 fails
+    val okThenFail = ScaleSweep.recordPass(
+      ScaleSweep.recordPass(prior, 10, 1, Some(3.0)), 10, 2, None)
+    assert(okThenFail == prior)
+    // pass 1 fails, pass 2 ok
+    val failThenOk = ScaleSweep.recordPass(
+      ScaleSweep.recordPass(prior, 10, 1, None), 10, 2, Some(2.0))
+    assert(failThenOk == prior)
+    // both ok: cold is pass 1, steady the min of the two
+    val both = ScaleSweep.recordPass(
+      ScaleSweep.recordPass(prior, 10, 1, Some(3.0)), 10, 2, Some(2.0))
+    assert(both == prior + (10 -> (3.0, 2.0)))
+  }
+
   test("degenerate inputs return None, never throw") {
     assert(ScaleSweep.exponent(Nil).isEmpty)
     assert(ScaleSweep.exponent(Seq(10 -> 3.0)).isEmpty)
