@@ -61,6 +61,9 @@ object Bench {
   // MV materialized BEFORE the cold sweep, so each query's cold time is
   // its own work and the shared-MV build cost is its own labeled line
   @volatile private var mvWarmup: Vector[(String, Double, Boolean)] = Vector.empty
+  // (MV, MB in storage memory, MB on block-manager disk) after the
+  // warmup, read from the block manager
+  @volatile private var mvResident: Seq[(String, Double, Double)] = Nil
   // exactly-once guard shared by the normal path and the shutdown hook
   // (on SIGTERM the main loop keeps running concurrently with the hook)
   private val headlinePrinted = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -148,6 +151,12 @@ object Bench {
       .map { case (n, r) => s""""$n":${fmt2(r)}""" }
       .mkString("{", ",", "}")
 
+  /** Pure renderer of BENCH_LOCAL.json's `mv_resident` map, unit-
+    * tested by BenchHeadlineSpec: MV → {"mem_mb", "disk_mb"}. */
+  private[graft] def residentJson(rs: Seq[(String, Double, Double)]): String =
+    rs.map { case (n, mem, disk) =>
+      s""""$n":{"mem_mb":${fmt(mem)},"disk_mb":${fmt(disk)}}""" }
+      .mkString("{", ",", "}")
   private def mapJson(rs: Seq[(String, Double, Boolean)]): String =
     rs.map { case (k, v, ok) => s"\"$k\":" + (if (ok) fmt(v) else "-1") }
       .mkString("{", ",", "}")
@@ -287,7 +296,7 @@ object Bench {
     val mvDisk = s"""{"hits":${graft.model.Views.diskHits.get()},""" +
       s""""misses":${graft.model.Views.diskMisses.get()}}"""
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":${passes.length},"mv_warmup":${mapJson(mvWarmup)},"mv_disk":$mvDisk,"queries":${mapJson(rs)},$passJson,"failed":${failedJson(rs)},"vs_baseline":$vsbJson,"over2x_substantive":$over2x,"steady_scope":"all","mode":"flat","sf":"$sfDirV"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":${passes.length},"mv_warmup":${mapJson(mvWarmup)},"mv_disk":$mvDisk,"mv_resident":${residentJson(mvResident)},"queries":${mapJson(rs)},$passJson,"failed":${failedJson(rs)},"vs_baseline":$vsbJson,"over2x_substantive":$over2x,"steady_scope":"all","mode":"flat","sf":"$sfDirV"}"""
     try {
       // scoped (SPARK_GRAFT_ONLY) runs land in BENCH_SCOPED.json
       val out = localDumpTarget(scopedV)
@@ -417,6 +426,15 @@ object Bench {
           }
         }
       }
+      // generated classes compiled so far (each one a codegen-cache
+      // miss) and the metaspace they sit in: the input that sizes
+      // GraftSession.CodegenCacheEntries
+      val metaMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+        .toArray(Array.empty[java.lang.management.MemoryPoolMXBean])
+        .filter(_.getName == "Metaspace").map(_.getUsage.getUsed / 1048576.0).sum
+      System.err.println(f"[bench] pass ${pi + 1}: codegen compiled " +
+        s"${org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount}" +
+        f" classes so far, metaspace $metaMb%.1f MB")
     }
     // ---- mv_warmup phase (VERDICT r10 #1) -----------------------------
     // Materialize the shared session MVs BEFORE the cold sweep and
@@ -484,6 +502,7 @@ object Bench {
         dumpLocal()
       }
       warmedNames = graft.model.Views.cachedNames(spark)
+      if (!contextDead) { mvResident = graft.model.Views.residency(spark); dumpLocal() }
     }
     var pi = 0
     while (pi < nPasses && !contextDead && !warmupOnlyV) {

@@ -32,7 +32,8 @@ package graft
   * in-flight re-run's crash dump overwrote the 183-query evidence with
   * a 4-query partial and the snapshot committed it). In-progress dumps
   * go to `<out>.partial`; the final path is written only when every
-  * registry query is covered at every scale point (isComplete).
+  * selected query is covered at every scale point (isComplete). A
+  * focus run's default path is its own `_SCOPED` file.
   *
   * Artifact: SCALE_SWEEP.json —
   *   {"metric":"scale_sweep","scales":[1,10],"queries":{name:
@@ -113,7 +114,13 @@ object ScaleSweep {
       case (Some(_), None)            => cells
     }
 
-  /** True iff the run covers the ENTIRE registry: every query either
+  /** The queries a run measures: the registry, or the part of it a
+    * SPARK_GRAFT_ONLY focus set names (unknown names are dropped). */
+  private[graft] def selectedNames(only: Option[Set[String]],
+                                   registry: Set[String]): Set[String] =
+    only.fold(registry)(_.intersect(registry))
+
+  /** True iff the run covers every query it selected: each one either
     * has a measured cell at every scale point or is recorded as failed.
     * This is the promotion gate — anything less stays at `.partial`. */
   private[graft] def isComplete(
@@ -139,9 +146,9 @@ object ScaleSweep {
   @volatile private var promoted = false
 
   /** Promote `.partial` → the final artifact, but ONLY for a run that
-    * covered the full registry at all scale points. */
-  private def promoteIfComplete(registry: Set[String]): Unit =
-    if (isComplete(times, failed, registry, scalesV)) {
+    * covered its whole selection at all scale points. */
+  private def promoteIfComplete(selection: Set[String]): Unit =
+    if (isComplete(times, failed, selection, scalesV)) {
       java.nio.file.Files.move(
         java.nio.file.Paths.get(partialPath), java.nio.file.Paths.get(outV),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
@@ -149,8 +156,8 @@ object ScaleSweep {
       promoted = true
       System.err.println(s"[sweep] complete — promoted to $outV")
     } else System.err.println(
-      s"[sweep] run does not cover the full registry — left at $partialPath " +
-        s"(covered ${times.size}/${registry.size}); $outV untouched")
+      s"[sweep] run does not cover its selection — left at $partialPath " +
+        s"(covered ${times.size}/${selection.size}); $outV untouched")
 
   def main(args: Array[String]): Unit = {
     srcV = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -175,8 +182,9 @@ object ScaleSweep {
 
     val spark = GraftSession.local()
 
+    val names = selectedNames(only, SparkEntry.queries.keySet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => names(n) }
     // Scaled replicas live in a STABLE cache keyed by (source listing,
     // code build) — deterministic content, so a re-run reuses the
     // build instead of repeating it, and stable file mtimes let the
@@ -239,7 +247,7 @@ object ScaleSweep {
       }
     } finally if (fresh) graft.model.Views.rmTree(root.toPath)
     dump()
-    promoteIfComplete(SparkEntry.queries.keySet)
+    promoteIfComplete(names)
     spark.sparkContext.setLogLevel("OFF"); spark.stop()
     println(render()); System.out.flush()
   }

@@ -387,12 +387,15 @@ object SparkEntry {
   // Raw-log fixture MVs (VERDICT r8 #3): in production ingest the
   // logs ARRIVE as data — the encoders exist only to synthesize them
   // from the relational tables, so their collect_list hex-assembly
-  // cost is no part of the decode path under test. Materialized once
-  // per session like every other MV so the bench's log-decode numbers
-  // measure DECODE, not fixture synthesis.
+  // cost is no part of the decode path under test. Built once per
+  // session so the bench's log-decode numbers measure DECODE, not
+  // fixture synthesis — but kept out of storage memory (inMemory =
+  // false): the reference decodes logs as they arrive and stores only
+  // the decoded tables, and the 64-char hex words are the widest rows
+  // in the session. The decoded_* MVs stay resident.
   private def fixture(s: SparkSession, d: String, name: String)
                      (build: => DataFrame): DataFrame =
-    graft.model.Views.cached(s, d, name)(build)
+    graft.model.Views.cached(s, d, name, inMemory = false)(build)
   // Unit-lot fill frame shared by the exact-twin family: qty=1,
   // integer-scaled usd, zero fee — FIFO provenance becomes closed-form
   // SQL on these (see each twin's comment).
@@ -520,7 +523,7 @@ object SparkEntry {
   // fixture runs once per session, not once per consumer (VERDICT r14
   // #5: warmup budget)
   private def decodedUnitFills(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_unit_fills")(
+    graft.model.Views.cached(s, d, "decoded_unit_fills")(
       LogDecode.decodeOrderFilled(logsOrderFilledUnit(s, d)))
   private def logsLedgerTopology(s: SparkSession, d: String) =
     fixture(s, d, "logs_ledger_topology")(
@@ -532,7 +535,7 @@ object SparkEntry {
   // the full-topology fold (aux trade events + the holders dim), so
   // the ABI decode runs once per session, not once per consumer
   private def decodedTopoFills(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_topo_fills")(
+    graft.model.Views.cached(s, d, "decoded_topo_fills")(
       LogDecode.decodeOrderFilled(logsLedgerTopology(s, d)))
   // Decoded ABI frames as session MVs (VERDICT r18 #1/#7): in the
   // reference the decode is INGEST-time work (main.ts handlers write
@@ -543,20 +546,20 @@ object SparkEntry {
   // materialized once per session; the queries project scalars over the
   // cached frame.
   private def decodedConditionEvents(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_condition_events")(
+    graft.model.Views.cached(s, d, "decoded_condition_events")(
       LogDecode.decodeConditionEvents(logsConditionEvents(s, d)))
   private def decodedConditionLifecycle(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_condition_lifecycle")(
+    graft.model.Views.cached(s, d, "decoded_condition_lifecycle")(
       LogDecode.decodeConditionLifecycle(logsConditionLifecycle(s, d)))
   private def decodedTransferBatch(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_transfer_batch")(
+    graft.model.Views.cached(s, d, "decoded_transfer_batch")(
       LogDecode.explodeTransferBatch(
         LogDecode.decodeTransferBatch(logsTransferBatch(s, d))))
   // decoded OrderFilled → canonical trade rows (q_log_decode_e2e's
   // ingest seam, materialized like the other decoded families; the
   // query keeps the OHLCV aggregation as its own work)
   private def decodedOfTrades(s: SparkSession, d: String) =
-    fixture(s, d, "decoded_of_trades")(
+    graft.model.Views.cached(s, d, "decoded_of_trades")(
       sources.LogDecode.decodedToTrades(
         sources.LogDecode.decodeOrderFilled(logsOrderFilled(s, d))))
 

@@ -12,7 +12,9 @@ import java.util.concurrent.ConcurrentHashMap
   * view, every later query reuses the in-memory columnar copy instead
   * of re-running the lineitem⋈orders join. At 100 TB the same role is
   * played by bucketed storage of the canonical trades table; the
-  * per-query plans are unchanged either way.
+  * per-query plans are unchanged either way. The raw-log fixtures are
+  * the exception: the reference stores decoded tables, never raw logs,
+  * so they stay out of memory (see [[cached]]'s `inMemory`).
   */
 object Views {
   private val cache = new ConcurrentHashMap[(String, String, String), DataFrame]()
@@ -157,7 +159,9 @@ object Views {
   /** Build-or-attach through the disk layer. Both branches return a
     * frame that SCANS the persisted parquet (not the builder's plan),
     * so dependent MVs see identical lineage whether this one was built
-    * or attached. The write is atomic: temp dir, then rename. */
+    * or attached; [[cached]] persists that scan unless the MV is kept
+    * out of memory, in which case the scan itself is the MV. The write
+    * is atomic: temp dir, then rename. */
   private def throughDisk(spark: SparkSession, dir: String, name: String,
                           root: java.nio.file.Path)
                          (build: => DataFrame): DataFrame = {
@@ -227,9 +231,15 @@ object Views {
     * in-memory and disk-attach paths (a plain parquet read has unknown
     * partitioning — without the re-shuffle here, attach mode would
     * silently cost every consumer the exchange the in-memory mode
-    * saves). One rollup-sized exchange per session per MV. */
+    * saves). One rollup-sized exchange per session per MV.
+    *
+    * `inMemory = false` keeps the MV out of storage memory, for wide
+    * inputs read whole by few queries (the raw-log fixtures): with the
+    * disk layer on, the MV is the parquet copy [[throughDisk]] wrote,
+    * with no second persist; with it off, the frame is persisted
+    * DISK_ONLY. Every other MV persists MEMORY_AND_DISK. */
   def cached(spark: SparkSession, dir: String, name: String,
-             partitionBy: Seq[String] = Nil)
+             partitionBy: Seq[String] = Nil, inMemory: Boolean = true)
             (build: => DataFrame): DataFrame = {
     val key = (spark.sparkContext.applicationId, dir, name)
     val hit = cache.get(key)
@@ -238,14 +248,15 @@ object Views {
       val again = cache.get(key)
       if (again != null) again
       else {
-        val raw = diskRoot match {
-          case Some(root) => throughDisk(spark, dir, name, root)(build)
-          case None => build
-        }
+        val onDisk = diskRoot.map(root => throughDisk(spark, dir, name, root)(build))
+        val raw = onDisk.getOrElse(build)
         val keyed =
           if (partitionBy.isEmpty) raw
           else raw.repartition(partitionBy.map(org.apache.spark.sql.functions.col): _*)
-        val df = keyed.persist(StorageLevel.MEMORY_AND_DISK)
+        val df =
+          if (inMemory) keyed.persist(StorageLevel.MEMORY_AND_DISK)
+          else if (onDisk.isDefined && partitionBy.isEmpty) keyed
+          else keyed.persist(StorageLevel.DISK_ONLY)
         cache.put(key, df)
         df
       }
@@ -260,6 +271,31 @@ object Views {
     val out = Set.newBuilder[String]
     cache.forEach((k, _) => if (k._1 == app) { out += k._3; () })
     out.result()
+  }
+
+  /** (MV name, MB in storage memory, MB on block-manager disk) for
+    * every session MV registered for `spark`'s app, by name, read from
+    * the block manager. An MV that is not persisted (a raw-log fixture
+    * read from the disk layer's parquet) or not yet materialized shows
+    * 0 and 0. */
+  def residency(spark: SparkSession): Seq[(String, Double, Double)] = {
+    val app = spark.sparkContext.applicationId
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val info = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i).toMap
+    val out = Seq.newBuilder[(String, Double, Double)]
+    cache.forEach { (k, df) =>
+      if (k._1 == app) {
+        val rdd = cm.lookupCachedData(
+            df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+          .map(_.cachedRepresentation.cacheBuilder)
+          .filter(_.isCachedColumnBuffersLoaded)
+          .flatMap(b => info.get(b.cachedColumnBuffers.id))
+        out += ((k._3, rdd.fold(0.0)(_.memSize / 1048576.0),
+          rdd.fold(0.0)(_.diskSize / 1048576.0)))
+      }
+    }
+    out.result().sortBy(_._1)
   }
 
   // Pinned derived plans (e.g. Rank's bucket histograms): small

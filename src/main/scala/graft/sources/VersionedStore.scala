@@ -813,7 +813,7 @@ object VersionedStore {
         // a vector row whose file is gone (earlier rewrite) is inert:
         // it names nothing in this version's manifest — skip it
         Some(rel).filter(live.contains).filter { r =>
-          footerRowCount(new File(path, r))
+          footerRowCount(spark, new File(path, r))
             .exists(total => total > 0 &&
               dead.toDouble / total >= minDeadRatio)
         }
@@ -948,7 +948,7 @@ object VersionedStore {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/$rel")
     val parts = listParquet(path, rel)
-    if (sidecarRowCount(path, parts) == 0L) Nil else parts
+    if (sidecarRowCount(matched.sparkSession, path, parts) == 0L) Nil else parts
   }
 
   /** The merge-on-read commit of version `v` over `v − 1`: `rows` land
@@ -1745,7 +1745,8 @@ object VersionedStore {
       else try {
         val bcol = effBloom.get
         val maxRows = addedRels
-          .flatMap(r => footerRowCount(new File(path, r))).foldLeft(0L)(math.max)
+          .flatMap(r => footerRowCount(df.sparkSession, new File(path, r)))
+          .foldLeft(0L)(math.max)
         val numBits = math.min(1L << 20,
           math.max(1024L, ((16 * maxRows + 63) / 64) * 64)).toInt
         import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
@@ -1799,7 +1800,8 @@ object VersionedStore {
           val addedLines = added.map { rel =>
             // all-or-nothing per line: bounds must cover EVERY
             // declared column or the line stays bare (conservative)
-            val per = effStats.map(c => footerStats(new File(path, rel), c))
+            val per = effStats.map(c =>
+              footerStats(df.sparkSession, new File(path, rel), c))
             val base = if (per.nonEmpty && per.forall(_.isDefined)) {
               val rows = per.head.get._1
               val bounds = per.flatten.map { case (_, mn, mx) => s"$mn\t$mx" }
@@ -1887,15 +1889,24 @@ object VersionedStore {
     * and the loud loser is the right answer. */
   private val MaxCommitRetries = 5
 
+  /** Open `file`'s parquet footer with the session's Hadoop
+    * configuration: the settings Spark wrote the file with, parsed
+    * once per session rather than once per probed data file. */
+  private def openFooter(spark: SparkSession, file: File)
+      : org.apache.parquet.hadoop.ParquetFileReader = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toURI), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+  }
+
   /** Total row count from the parquet footer — sketch-sizing input
     * for the bloom fingerprints and the dead-row denominator for
     * [[reorgVectored]]; None on any surprise. */
-  private def footerRowCount(file: File): Option[Long] =
+  private def footerRowCount(spark: SparkSession, file: File): Option[Long] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toURI),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(spark, file)
       try Some(r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
       finally r.close()
     } catch { case _: Throwable => None }
@@ -1906,9 +1917,10 @@ object VersionedStore {
     * matched anything — so a footer read failure fails LOUDLY: the
     * graceful `None → 0` degradation would silently turn a real
     * delete into a no-op commit. */
-  private def sidecarRowCount(path: String, parts: Seq[String]): Long =
+  private def sidecarRowCount(spark: SparkSession, path: String,
+                              parts: Seq[String]): Long =
     parts.map { p =>
-      footerRowCount(new File(path, p)).getOrElse(sys.error(
+      footerRowCount(spark, new File(path, p)).getOrElse(sys.error(
         s"cannot read footer of freshly-written sidecar $p — refusing " +
           "to treat the mutation as a no-op"))
     }.sum
@@ -1919,13 +1931,10 @@ object VersionedStore {
     * when the column is absent, non-numeric, all-null, or anything
     * about the footer surprises us: stats can only ever PRUNE, so the
     * safe failure mode is silence, not a failed commit. */
-  private def footerStats(file: File,
+  private def footerStats(spark: SparkSession, file: File,
                           column: String): Option[(Long, Double, Double)] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toURI),
-        new org.apache.hadoop.conf.Configuration())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = openFooter(spark, file)
       try {
         val blocks = r.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum

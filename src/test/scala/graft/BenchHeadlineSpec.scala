@@ -162,4 +162,26 @@ class BenchHeadlineSpec extends AnyFunSuite {
       "a SPARK_GRAFT_ONLY run holds a partial map - it must not " +
         "overwrite the full-registry artifact")
   }
+
+  // BENCH_LOCAL.json gains the per-MV residency map; the driver's
+  // headline line keeps its bytes (no mv_resident key, same layout)
+  test("mv_resident rides BENCH_LOCAL.json; the headline is byte-compatible") {
+    assert(Bench.residentJson(Seq(("logs_fees", 0.0, 0.0),
+        ("trades", 12.3456, 0.5))) ==
+      """{"logs_fees":{"mem_mb":0.000,"disk_mb":0.000},""" +
+        """"trades":{"mem_mb":12.346,"disk_mb":0.500}}""")
+    assert(Bench.residentJson(Nil) == "{}")
+    val line = Bench.renderHeadline(Seq(("q_a", 1.0, true)), Seq(("q_a", 0.5)),
+      Nil, 1, 1, 1, 2.0, 1, "sf0.01")
+    val hits = graft.model.Views.diskHits.get()
+    val misses = graft.model.Views.diskMisses.get()
+    assert(line ==
+      s"""{"metric":"total","value":1.000,"unit":"sec","completed":1,""" +
+        s""""selected":1,"passes":1,"mv_warmup":2.000,"mv_warmup_n":1,""" +
+        s""""mv_disk":{"hits":$hits,"misses":$misses},"queries":{"q_a":1.000},""" +
+        s""""queries_scope":"top20_plus_failed","failed_n":0,""" +
+        s""""steady_total":0.500,"steady_n":1,"steady_scope":"all",""" +
+        s""""steady_worst":{"q_a":0.500},"vs_baseline":{},""" +
+        s""""vs_baseline_stats":{"n":0},"failed":[],"mode":"flat","sf":"sf0.01"}""")
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.model.Views
 
 /** The persisted-MV attach seam (VERDICT r16 next-round #4): with
@@ -160,5 +161,58 @@ class MvDiskSpec extends SparkSpec {
       }
       rm(dir.toFile)
     }
+  }
+
+  // The raw-log fixtures hold no storage memory: the reference decodes
+  // logs as they arrive and stores only the decoded tables. With the
+  // disk layer on the fixture is the parquet copy the layer wrote (no
+  // persist); with it off, it is persisted DISK_ONLY. The decoded MV
+  // built over it keeps the rows it had while the fixture was resident.
+  private def classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  private def memBytes: Long = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
+  private def materialize(mv: String) = {
+    val df = SparkEntry.sessionViews(mv)(spark, sf)
+    df.write.format("noop").mode("overwrite").save()
+    df
+  }
+  /** (rows, sum of row hashes) of decoded_of_trades at sf0.001. */
+  private def decodedDigest(): (Long, java.math.BigDecimal) = {
+    val df = materialize("decoded_of_trades")
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toIndexedSeq.map(col): _*).cast("decimal(38,0)"))).head()
+    (r.getLong(0), r.getDecimal(1))
+  }
+  // measured while the raw-log fixtures were still persisted
+  // MEMORY_AND_DISK (the digest is the same in both disk modes)
+  private val residentDigest = (6000L, new java.math.BigDecimal("426167445820705714051"))
+
+  test("disk layer on: a raw-log fixture is the disk layer's parquet, not a cached frame") {
+    withDisk { _ =>
+      Views.reset(spark)
+      try {
+        materialize("trades")
+        val mem0 = memBytes
+        val logs = materialize("logs_order_filled")
+        assert(classic.sharedState.cacheManager.lookupCachedData(
+          logs.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty)
+        assert(memBytes <= mem0, s"storage memory grew from $mem0 to $memBytes bytes")
+        assert(decodedDigest() == residentDigest)
+        val res = Views.residency(spark).map(r => r._1 -> (r._2, r._3)).toMap
+        assert(res("logs_order_filled") == ((0.0, 0.0)))
+        assert(res("decoded_of_trades")._1 > 0.0)
+      } finally Views.reset(spark)
+    }
+  }
+
+  test("disk layer off: a raw-log fixture is persisted DISK_ONLY") {
+    Views.reset(spark)
+    try {
+      val logs = materialize("logs_order_filled")
+      assert(logs.storageLevel == StorageLevel.DISK_ONLY)
+      assert(decodedDigest() == residentDigest)
+      val res = Views.residency(spark).map(r => r._1 -> (r._2, r._3)).toMap
+      assert(res("logs_order_filled")._1 == 0.0 && res("logs_order_filled")._2 > 0.0)
+      assert(res("decoded_of_trades")._1 > 0.0)
+    } finally Views.reset(spark)
   }
 }

@@ -75,6 +75,25 @@ class ScaleSweepSpec extends AnyFunSuite {
     assert(both == prior + (10 -> (3.0, 2.0)))
   }
 
+  // A SPARK_GRAFT_ONLY focus run is complete once every query it
+  // selected has a cell at every scale point; before, it was checked
+  // against the whole registry and always stayed at `.partial`.
+  test("a focus run is complete once its own selection is covered") {
+    val registry = Set("a", "b", "c")
+    val scales = Seq(1, 2)
+    val cells = Map("a" -> Map(1 -> (1.0, 1.0), 2 -> (2.0, 2.0)))
+    val focus = ScaleSweep.selectedNames(Some(Set("a", "zz")), registry)
+    assert(focus == Set("a"), "unknown names drop out of the selection")
+    assert(ScaleSweep.isComplete(cells, Nil, focus, scales))
+    // an unscoped run still needs the whole registry
+    val all = ScaleSweep.selectedNames(None, registry)
+    assert(all == registry)
+    assert(!ScaleSweep.isComplete(cells, Nil, all, scales))
+    // a focus set that names no registry query never promotes
+    assert(!ScaleSweep.isComplete(Map.empty, Nil,
+      ScaleSweep.selectedNames(Some(Set("zz")), registry), scales))
+  }
+
   test("degenerate inputs return None, never throw") {
     assert(ScaleSweep.exponent(Nil).isEmpty)
     assert(ScaleSweep.exponent(Seq(10 -> 3.0)).isEmpty)

@@ -23,4 +23,20 @@ class SessionBuilderSpec extends AnyFunSuite {
     assert(offenders.isEmpty, "build the session with GraftSession.local " +
       s"instead of SparkSession.builder() in: ${offenders.mkString(", ")}")
   }
+
+  // spark.sql.codegen.cache.maxEntries is static: it must be on the
+  // builder, before the first session exists. Read back from the
+  // builders' own option maps (the shared test session already exists,
+  // so building one here would not apply a static conf).
+  test("both session builders size the codegen cache") {
+    val options = Class.forName("org.apache.spark.sql.SparkSessionBuilder")
+      .getMethod("options")
+    for (b <- Seq(GraftSession.builder(), GraftSession.localBuilder(None))) {
+      val opts = options.invoke(b).asInstanceOf[scala.collection.Map[String, String]]
+      assert(opts.get("spark.sql.codegen.cache.maxEntries")
+        .contains(GraftSession.CodegenCacheEntries.toString))
+    }
+    // at least the distinct classes one full-registry Bench pass compiles
+    assert(GraftSession.CodegenCacheEntries >= 2897)
+  }
 }
