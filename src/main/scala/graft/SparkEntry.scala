@@ -203,10 +203,9 @@ object SparkEntry {
         .withColumn("month", date_format(col("ts"), "yyyy-MM"))
         .repartition(col("month"))
       val cut = lit("1997-01-01").cast("date")
-      graft.sources.VersionedStore.appendPartitioned(
-        t.where(col("ts") < cut), path, "month", statsCol = Some("ts"))
-      graft.sources.VersionedStore.appendPartitioned(
-        t.where(col("ts") >= cut), path, "month")
+      graft.sources.VersionedStore.append(t.where(col("ts") < cut), path,
+        partCol = Some("month"), statsCol = Some("ts"))
+      graft.sources.VersionedStore.append(t.where(col("ts") >= cut), path)
       path
     })
 
@@ -327,7 +326,7 @@ object SparkEntry {
   // customer dim partitioned by market segment, driven through the
   // vectored ops (the store picks the hierarchical path from the
   // table's manifest form):
-  //   v1 = appendPartitioned by segment;
+  //   v1 = append partitioned by segment;
   //   v2 = deleteVectored custkey%7==3 (O(1) metadata:
   //        every pmanifest carried verbatim, one table-level #dv);
   //   v3 = mergeVectored moving every %10==0 key to the
@@ -350,7 +349,8 @@ object SparkEntry {
           col("c_custkey").cast("long").as("c_custkey"),
           col("c_name").as("name"),
           col("c_mktsegment").as("segment"))
-        graft.sources.VersionedStore.appendPartitioned(base, path, "segment")
+        graft.sources.VersionedStore.append(base, path,
+          partCol = Some("segment"))
         graft.sources.VersionedStore.deleteVectored(s, path,
           col("c_custkey") % 7 === 3)
         val updates = base.filter(col("c_custkey") % 10 === 0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -457,7 +457,15 @@ object Ledger {
   private def buildWith(spark: SparkSession, walletTrades: DataFrame,
       folder: Iterator[Fill] => Iterator[LedgerRow]): Dataset[LedgerRow] = {
     import spark.implicits._
-    val fills: Dataset[Fill] = walletTrades.select(
+    foldFills(tradeFills(spark, walletTrades), folder)
+  }
+
+  /** The two-sided trade view as buy/sell [[Fill]]s; `fee` is 0.0
+    * when the input carries no `fee` column. */
+  private def tradeFills(spark: SparkSession,
+                         walletTrades: DataFrame): Dataset[Fill] = {
+    import spark.implicits._
+    walletTrades.select(
         col("wallet").cast("long").as("wallet"),
         col("ts"),
         col("trade_id").cast("long").as("seq"),
@@ -465,7 +473,8 @@ object Ledger {
         (col("side") === "buy").as("isBuy"),
         col("qty").cast("double").as("qty"),
         col("usd").cast("double").as("usd"),
-        col("fee").cast("double").as("fee"),
+        (if (walletTrades.columns.contains("fee")) col("fee").cast("double")
+         else lit(0.0)).as("fee"),
         lit("").as("kind"),
         lit(0L).as("tokenId2"),
         lit(Array.empty[Long]).as("legTokens"),
@@ -473,12 +482,13 @@ object Ledger {
         lit(Array.empty[Long]).as("legTokens2"),
         lit(Array.empty[Double]).as("legQtys2"))
       .as[Fill]
-    foldFills(fills, folder)
   }
 
-  private def foldFills(fills: Dataset[Fill],
-      folder: Iterator[Fill] => Iterator[LedgerRow]): Dataset[LedgerRow] = {
-    import fills.sparkSession.implicits._
+  /** The one per-wallet fold driver: shuffle by wallet, sort each
+    * wallet's fills into the value-determined fold order, and run
+    * `folder` over each wallet's streaming slice. */
+  private def foldFills[T: Encoder](fills: Dataset[Fill],
+      folder: Iterator[Fill] => Iterator[T]): Dataset[T] = {
     fills
       .repartition(col("wallet"))
       // (ts, seq) ties exist in real data (trade_id duplicates within
@@ -497,9 +507,9 @@ object Ledger {
         // folds emit rows lazily as fills are pulled, and any fills a
         // folder leaves unconsumed are drained before the next wallet
         // starts.
-        new Iterator[LedgerRow] {
+        new Iterator[T] {
           private val buf = it.buffered
-          private var cur: Iterator[LedgerRow] = Iterator.empty
+          private var cur: Iterator[T] = Iterator.empty
           private var slice: Iterator[Fill] = Iterator.empty
           private def advance(): Unit =
             while (!cur.hasNext && { while (slice.hasNext) slice.next(); buf.hasNext }) {
@@ -511,7 +521,7 @@ object Ledger {
               cur = folder(slice)
             }
           def hasNext: Boolean = { advance(); cur.hasNext }
-          def next(): LedgerRow = { advance(); cur.next() }
+          def next(): T = { advance(); cur.next() }
         }
       }
   }
@@ -596,47 +606,8 @@ object Ledger {
     import spark.implicits._
     val ps = java.sql.Timestamp.valueOf(periodStart + " 00:00:00")
     val pe = java.sql.Timestamp.valueOf(periodEnd + " 00:00:00")
-    val fills: Dataset[Fill] = walletTrades.select(
-        col("wallet").cast("long").as("wallet"),
-        col("ts"),
-        col("trade_id").cast("long").as("seq"),
-        col("token_id").cast("long").as("tokenId"),
-        (col("side") === "buy").as("isBuy"),
-        col("qty").cast("double").as("qty"),
-        col("usd").cast("double").as("usd"),
-        lit(0.0).as("fee"), lit("").as("kind"), lit(0L).as("tokenId2"),
-        lit(Array.empty[Long]).as("legTokens"),
-        lit(Array.empty[Double]).as("legQtys"),
-        lit(Array.empty[Long]).as("legTokens2"),
-        lit(Array.empty[Double]).as("legQtys2"))
-      .as[Fill]
-    fills
-      .repartition(col("wallet"))
-      // same value-determined tie order as foldFills (buys first,
-      // then usd) so the period twin's SQL windows replay it exactly
-      .sortWithinPartitions(col("wallet"), col("ts"), col("seq"),
-        col("isBuy").desc, col("usd"))
-      .mapPartitions { it =>
-        // streaming per-wallet slice, same shape as foldFills: the
-        // provenance fold consumes each wallet's fills without ever
-        // materializing its history
-        val buf = it.buffered
-        new Iterator[PeriodPnl] {
-          private var cur: Iterator[PeriodPnl] = Iterator.empty
-          private var slice: Iterator[Fill] = Iterator.empty
-          private def advance(): Unit =
-            while (!cur.hasNext && { while (slice.hasNext) slice.next(); buf.hasNext }) {
-              val w = buf.head.wallet
-              slice = new Iterator[Fill] {
-                def hasNext: Boolean = buf.hasNext && buf.head.wallet == w
-                def next(): Fill = buf.next()
-              }
-              cur = foldWalletPeriod(slice, ps, pe)
-            }
-          def hasNext: Boolean = { advance(); cur.hasNext }
-          def next(): PeriodPnl = { advance(); cur.next() }
-        }
-      }
+    foldFills(tradeFills(spark, walletTrades),
+      foldWalletPeriod(_: Iterator[Fill], ps, pe))
   }
 
   /** The four reference PnL modes per wallet (calculate-pnl.ts):

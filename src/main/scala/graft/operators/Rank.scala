@@ -276,13 +276,15 @@ object Rank {
       .withColumn("__lr", row_number().over(
         Window.partitionBy(col("__g"), col("__b"), col("__rk")).orderBy(col("__v"))).cast("long"))
       .filter(col("__lr") === col("__rk") - col("__off"))
-      .select(col("__g"), col("__rk"), col("__v"))
+      .select(col("__g").as("__vg"), col("__rk"), col("__v"))
     // attach the two order statistics per (group, quantile), interpolate
+    // — vals' group column is renamed so the key names both sides (both
+    // derive from withB's one `__g` attribute)
     val perQ = targets
       .join(broadcast(vals),
-        targets("__g") === vals("__g") &&
+        col("__g") === col("__vg") &&
           (col("__rk") === col("__lo") || col("__rk") === col("__hi")))
-      .drop(vals("__g"))
+      .drop("__vg")
       .groupBy(col("__g"), col("__q"))
       .agg(max(col("__n")).as("__n"), max(col("__rn")).as("__rn2"),
         max(col("__lo")).as("__lo2"), max(col("__hi")).as("__hi2"),

@@ -54,6 +54,10 @@ final class VersionedFileIndex(spark: SparkSession, table: String,
     if (VersionedStore.isFlatVersion(table, version)) None
     else Some(VersionedStore.readMlist(table, version))
 
+  /** Every live data file of the version (table-relative). */
+  private lazy val liveFiles: Seq[String] =
+    VersionedStore.filesAsOf(table, version)
+
   override val partitionSchema: StructType = mlist match {
     case Some(ml) => StructType.fromDDL(s"`${ml.partCol}` ${ml.partType}")
     case None => new StructType()
@@ -81,8 +85,7 @@ final class VersionedFileIndex(spark: SparkSession, table: String,
                          dataFilters: Seq[Expression])
       : Seq[PartitionDirectory] = mlist match {
     case None =>
-      Seq(PartitionDirectory(InternalRow.empty,
-        VersionedStore.filesAsOf(table, version).map(status).toArray))
+      Seq(PartitionDirectory(InternalRow.empty, liveFiles.map(status).toArray))
     case Some(ml) =>
       val selected = prunePartitions(ml.parts, partitionFilters)
       // one [lo, hi] window PER declared stats column; a file is
@@ -192,17 +195,11 @@ final class VersionedFileIndex(spark: SparkSession, table: String,
     (lo, hi)
   }
 
-  override def inputFiles: Array[String] = (mlist match {
-    case None => VersionedStore.filesAsOf(table, version)
-    case Some(ml) => ml.parts.flatMap(p =>
-      VersionedStore.readPmanifestEntries(table, p.pmanifest).map(_.file))
-  }).map(rel => new File(table, rel).toURI.toString).toArray
+  override def inputFiles: Array[String] =
+    liveFiles.map(rel => new File(table, rel).toURI.toString).toArray
 
-  override lazy val sizeInBytes: Long = (mlist match {
-    case None => VersionedStore.filesAsOf(table, version)
-    case Some(ml) => ml.parts.flatMap(p =>
-      VersionedStore.readPmanifestEntries(table, p.pmanifest).map(_.file))
-  }).map(rel => new File(table, rel).length()).sum
+  override lazy val sizeInBytes: Long =
+    liveFiles.map(rel => new File(table, rel).length()).sum
 
   /** Snapshots are immutable — nothing to refresh. */
   override def refresh(): Unit = ()

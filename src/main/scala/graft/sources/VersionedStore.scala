@@ -45,7 +45,7 @@ import scala.jdk.CollectionConverters._
   * 100 TB: a flat manifest lists every live file, which works to
   * ~10⁵ files; past that the metadata itself needs the second level,
   * and this store has it — the HIERARCHICAL form (Iceberg's actual
-  * refinement, [[appendPartitioned]]/[[overwritePartitions]]):
+  * refinement, [[append]] with a `partCol`/[[overwritePartitions]]):
   * `v<v>.mlist` is a manifest LIST mapping each partition value to an
   * immutable per-partition manifest file, so a commit touching k of
   * N partitions writes k new pmanifests and one new list (the other
@@ -306,19 +306,14 @@ object VersionedStore {
     * still attached — the find-matches input for the row-level ops:
     * probes read THIS so matched positions (for vectors) and matched
     * files (for rewrites) fall out of the same scan, vector-applied
-    * so already-deleted rows can never re-match. A flat version reads
-    * its files under the recorded schema; a hierarchical one scans
+    * so already-deleted rows can never re-match. Either layout scans
     * through the Catalyst FileIndex ([[snapshotRelation]]), so
     * partition, stats and bloom predicates prune before any data is
     * read. */
   private def probeSnapshot(spark: SparkSession, path: String,
                             v: Int): DataFrame = {
-    val scan =
-      if (isFlatVersion(path, v))
-        readFiles(spark, path, filesAsOf(path, v),
-          Some(effectiveSchema(spark, path, v)))
-      else spark.baseRelationToDataFrame(snapshotRelation(spark, path, v))
-    val stamped = withMeta(scan)
+    val stamped = withMeta(
+      spark.baseRelationToDataFrame(snapshotRelation(spark, path, v)))
     val dvs = deleteVectorsAsOf(path, v)
     if (dvs.isEmpty) stamped
     else stamped.join(dvFrame(spark, path, dvs),
@@ -344,19 +339,13 @@ object VersionedStore {
 
   /** Read the table as of version `v` — a stable snapshot: later
     * commits, compactions and vacuums of other versions never change
-    * what this returns. Dispatches on the version's manifest form, so
-    * flat and hierarchical snapshots read through one API. */
+    * what this returns. Both manifest forms plan through
+    * [[readIndexed]] (a flat version is one unpartitioned listing), under
+    * the version's RECORDED schema: files written before a schema
+    * evolution null-fill the added columns, and every snapshot reads
+    * as the schema it was committed with. */
   def readAsOf(spark: SparkSession, path: String, v: Int): DataFrame =
-    if (manifestFile(path, v).exists())
-      // under the version's RECORDED schema when one exists: files
-      // written before a schema evolution null-fill the added columns
-      // (name-resolved), and every snapshot reads as the schema it was
-      // committed with; delete vectors subtract merge-on-read deletes
-      // (identity when the version carries none)
-      applyDvs(spark, path,
-        readFiles(spark, path, filesAsOf(path, v), schemaAsOf(path, v)),
-        deleteVectorsAsOf(path, v))
-    else readIndexed(spark, path, v)
+    readIndexed(spark, path, v)
 
   /** Read the latest version. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -371,9 +360,9 @@ object VersionedStore {
     * site, and whole-stage codegen spans one scan node. This is the
     * scale path for reads: [[readPartitionsAsOf]] stays as the
     * explicit-API form (and the two are spec-pinned identical).
-    * Schema comes from one data-file footer (the store already
-    * assumes commit-stable schemas), with the partition column
-    * reattached from the manifest list. */
+    * Schema is the version's recorded one (legacy versions: one
+    * data-file footer), with the partition column reattached from the
+    * manifest list. */
   def readIndexed(spark: SparkSession, path: String, v: Int): DataFrame =
     // delete vectors subtract ABOVE the relation (the FileIndex prunes
     // partitions/files inside the planner as ever; the broadcast
@@ -387,15 +376,19 @@ object VersionedStore {
   def snapshotRelation(spark: SparkSession, path: String, v: Int)
       : org.apache.spark.sql.sources.BaseRelation = {
     val idx = new VersionedFileIndex(spark, path, v)
-    val files = idx.inputFiles
-    require(files.nonEmpty, s"version $v of $path lists no data files")
     // recorded schema minus the partition column (reattached by the
-    // index's partitionSchema); legacy versions fall back to a footer
+    // index's partitionSchema); legacy versions fall back to a footer.
+    // A version whose every row was deleted lists no files and reads
+    // empty under its recorded schema.
     val partNames = idx.partitionSchema.fieldNames.toSet
     val dataSchema = schemaAsOf(path, v)
       .map(s => org.apache.spark.sql.types.StructType(
         s.fields.filterNot(f => partNames.contains(f.name))))
-      .getOrElse(spark.read.parquet(files.head).schema)
+      .getOrElse {
+        val files = idx.inputFiles
+        require(files.nonEmpty, s"version $v of $path lists no data files")
+        spark.read.parquet(files.head).schema
+      }
     org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       idx, idx.partitionSchema, dataSchema, None,
       new org.apache.spark.sql.execution.datasources.parquet
@@ -406,14 +399,104 @@ object VersionedStore {
   /** Append `df` as a new version; returns the committed version.
     * Schema-enforced: existing columns must keep name and type; NEW
     * columns need `allowSchemaEvolution = true` and are null-filled
-    * by readers in pre-evolution files. */
+    * by readers in pre-evolution files.
+    *
+    * The table's layout comes from its head version ([[layoutAt]]):
+    * `partCol`, `statsCol` and `bloomCol` declare it only when this
+    * append creates the table. A flat table publishes a `.manifest`
+    * listing every carried file plus the new ones. A hierarchical
+    * table appends rows into their partitions: only the partitions
+    * present in `df` get a NEW per-partition manifest (carried files +
+    * added files); every untouched partition is carried by reference
+    * — the commit writes O(touched partitions) metadata, not O(table).
+    *
+    * `statsCol` declares a numeric/timestamp column whose per-file
+    * min/max land in the pmanifest, harvested from the parquet FOOTERS
+    * the writer already produced (metadata-only — no data re-read at
+    * commit). Readers then skip whole files at PLANNING time — the
+    * manifest-level analogue of ClickHouse's ORDER-BY granule index /
+    * Iceberg's file stats: at 100 TB a time-range query touches the
+    * partition's few overlapping files instead of listing and
+    * footer-probing everything.
+    *
+    * `bloomCol` declares a HIGH-CARDINALITY data column whose per-file
+    * bloom fingerprint lands in the pmanifest — the ClickHouse
+    * bloom_filter skip index in manifest form, for the point-lookup
+    * shape min/max stats can't serve (scattered ids make every file's
+    * [min,max] window cover everything). A `WHERE token_id = X` /
+    * `IN (…)` read then drops whole files whose fingerprint disproves
+    * membership at PLANNING time. Unlike the footer stats this costs
+    * one read-back of the COMMIT'S OWN new files (O(new data), never
+    * the table); sketches are sized from the commit's file row counts
+    * (~16 bits/key, capped) and saturate gracefully — an over-full
+    * bloom keeps its file, never drops it. At object-store scale the
+    * base64 text field becomes a binary sidecar (Iceberg's puffin
+    * shape); the protocol is unchanged. */
   def append(df: DataFrame, path: String,
-             allowSchemaEvolution: Boolean = false): Int = {
-    val prev = currentVersion(path)
-    val carried = if (prev == 0) Seq.empty else carriedLines(path, prev)
-    val schema = evolvedSchema(df.sparkSession, path, prev, df.schema,
-      allowSchemaEvolution)
-    commitData(df, path, prev + 1, carried, schema = Some(schema))
+             allowSchemaEvolution: Boolean = false,
+             partCol: Option[String] = None,
+             statsCol: Option[String] = None,
+             bloomCol: Option[String] = None): Int =
+    appendAt(df, path, currentVersion(path) + 1, allowSchemaEvolution,
+      partCol, statsCol, bloomCol)
+
+  /** [[append]] committing version `v` over `v − 1`. */
+  private def appendAt(df: DataFrame, path: String, v: Int,
+                       allowSchemaEvolution: Boolean = false,
+                       partCol: Option[String] = None,
+                       statsCol: Option[String] = None,
+                       bloomCol: Option[String] = None): Int =
+    layoutAt(path, v - 1, partCol, statsCol, bloomCol) match {
+      case None =>
+        val carried = if (v == 1) Seq.empty else carriedLines(path, v - 1)
+        val schema = evolvedSchema(df.sparkSession, path, v - 1, df.schema,
+          allowSchemaEvolution)
+        commitData(df, path, v, carried, schema = Some(schema))
+      case Some(pc) =>
+        // pure appends auto-rebase when a concurrent writer committed
+        // DISJOINT partitions first (Iceberg's optimistic retry) — the
+        // realistic multi-writer topology (backfill + live stream)
+        // stops serializing through a loud loser; same-partition
+        // conflicts and schema evolution by the winner still lose
+        // loudly
+        commitPartitionedAt(df, path, pc, v, replaceTouched = false,
+          statsCol, allowEvolution = allowSchemaEvolution,
+          bloomCol = bloomCol, retryDisjoint = true)
+    }
+
+  /** Test seam: a hierarchical [[append]] with an EXPLICIT (stale)
+    * target version — deterministic exercise of the optimistic-commit
+    * re-base without relying on a thread race. */
+  private[graft] def appendPartitionedStale(df: DataFrame, path: String,
+                                            partCol: String,
+                                            targetV: Int): Int =
+    appendAt(df, path, targetV, partCol = Some(partCol))
+
+  /** The partition column a write over version `head` lays its rows
+    * out by — None for a flat table. Once the table exists its head
+    * version's manifest form rules: `partCol`, `statsCol` and
+    * `bloomCol` declare the layout only when the write creates the
+    * table (`head == 0`), and any one that disagrees with an existing
+    * table refuses. Stats and bloom columns need a partitioned table. */
+  private def layoutAt(path: String, head: Int, partCol: Option[String],
+                       statsCol: Option[String] = None,
+                       bloomCol: Option[String] = None): Option[String] = {
+    val ml = if (head == 0 || isFlatVersion(path, head)) None
+             else Some(readMlist(path, head))
+    val laid = if (head == 0) partCol else ml.map(_.partCol)
+    val agrees = head == 0 || (partCol.forall(laid.contains) &&
+      statsCol.forall(s => ml.exists(_.statsCols == s.split(",").toSeq)) &&
+      bloomCol.forall(b => ml.exists(_.bloomCol.contains(b))))
+    require(agrees && (laid.nonEmpty || (statsCol.isEmpty && bloomCol.isEmpty)),
+      s"layout partCol=${partCol.getOrElse("-")} statsCol=" +
+        s"${statsCol.getOrElse("-")} bloomCol=${bloomCol.getOrElse("-")} " +
+        s"disagrees with the table at $path, which is " + (ml match {
+          case Some(m) => s"partitioned by ${m.partCol} (statsCol=" +
+            s"${m.statsCols.mkString(",")}, bloomCol=${m.bloomCol.getOrElse("")})"
+          case None if head > 0 => "flat"
+          case None => "new (stats and bloom columns need a partCol)"
+        }))
+    laid
   }
 
   /** Replace the table contents with `df` as a new version — old
@@ -443,8 +526,37 @@ object VersionedStore {
     * batch append()/overwrite() interleaved with the stream. Silently
     * proceeding would REWRITE published history (clobber an old
     * version's manifest and delete part files later manifests still
-    * carry), so this fails fast instead. */
-  def commitBatch(df: DataFrame, path: String, batchId: Long): Int = {
+    * carry), so this fails fast instead.
+    *
+    * The layout comes from the head version; `partCol` declares it
+    * only when the first batch creates the table ([[layoutAt]]). On a
+    * hierarchical table a batch touching k partitions writes k
+    * per-partition manifests + one list; a replayed batch mints fresh
+    * attempt-unique pmanifests and REPUBLISHES the version's mlist
+    * (the earlier attempt's pmanifests and data become unreferenced
+    * debris for vacuum). */
+  def commitBatch(df: DataFrame, path: String, batchId: Long,
+                  partCol: Option[String] = None): Int = {
+    val v = batchVersion(path, batchId)
+    layoutAt(path, currentVersion(path), partCol) match {
+      case None =>
+        val carried = if (v == 1) Seq.empty else carriedLines(path, v - 1)
+        // stream schema drift fails loudly — no silent evolution from
+        // a micro-batch writer
+        val schema = evolvedSchema(df.sparkSession, path, v - 1, df.schema,
+          allowEvolution = false)
+        commitData(df, path, v, carried, replayable = true,
+          schema = Some(schema))
+      case Some(pc) =>
+        commitPartitionedAt(df, path, pc, v, replaceTouched = false,
+          replayable = true)
+    }
+  }
+
+  /** The version a foreachBatch seam commits for `batchId` (batchId+1),
+    * refusing a batch id that is neither the next version nor a replay
+    * of the current one — the checkpoint and the table have diverged. */
+  private def batchVersion(path: String, batchId: Long): Int = {
     require(batchId >= 0 && batchId < Int.MaxValue,
       s"batchId $batchId outside the supported version range")
     val v = batchId.toInt + 1
@@ -453,13 +565,7 @@ object VersionedStore {
       s"batch $batchId would commit version $v but the table at $path is at " +
         s"version $cur — a reset checkpoint or a concurrent batch writer; " +
         "refusing to rewrite published history")
-    val carried = if (v == 1) Seq.empty else carriedLines(path, v - 1)
-    // stream schema drift fails loudly — no silent evolution from a
-    // micro-batch writer
-    val schema = evolvedSchema(df.sparkSession, path, v - 1, df.schema,
-      allowEvolution = false)
-    commitData(df, path, v, carried, replayable = true,
-      schema = Some(schema))
+    v
   }
 
   /** Rewrite the current version's files into `nFiles` outputs as a
@@ -847,32 +953,18 @@ object VersionedStore {
     * table: `Some(c)` makes it hierarchical by `c` (a month-partitioned
     * warehouse: O(touched partitions) metadata per batch, partition
     * moves included). Afterwards the table's own form rules, and a
-    * `partCol` that disagrees with it refuses loudly. */
+    * `partCol` that disagrees with it refuses loudly ([[layoutAt]]). */
   def mergeBatchVectored(df: DataFrame, path: String, keys: Seq[String],
                          batchId: Long,
                          partCol: Option[String] = None): Int = {
-    require(batchId >= 0 && batchId < Int.MaxValue,
-      s"batchId $batchId outside the supported version range")
-    val v = batchId.toInt + 1
-    val cur = currentVersion(path)
-    require(v == cur + 1 || v == cur,
-      s"batch $batchId would commit version $v but the table at $path is at " +
-        s"version $cur — a reset checkpoint or a concurrent batch writer; " +
-        "refusing to rewrite published history")
-    if (cur > 0) {
-      val laid = if (isFlatVersion(path, cur)) None
-                 else Some(readMlist(path, cur).partCol)
-      require(partCol.forall(laid.contains),
-        s"partCol ${partCol.getOrElse("")} disagrees with the table at " +
-          s"$path, which is ${laid.fold("flat")(c => s"partitioned by $c")}")
-    }
+    val v = batchVersion(path, batchId)
     if (v == 1) {
       // bootstrap batch: nothing to match — a plain batch commit that
       // declares the layout, under the same per-batch key contract
       requireMergeKeys(df, keys)
-      partCol.fold(commitBatch(df, path, batchId))(
-        commitBatchPartitioned(df, path, _, batchId))
+      commitBatch(df, path, batchId, partCol)
     } else {
+      layoutAt(path, currentVersion(path), partCol)
       // stream schema drift fails loudly — no silent evolution from a
       // micro-batch writer
       evolvedSchema(df.sparkSession, path, v - 1, df.schema,
@@ -1145,22 +1237,34 @@ object VersionedStore {
     steps.reduce(_.unionByName(_))
   }
 
-  /** Read a subset of version `v`'s files, reattaching the partition
-    * value from v's manifest list when the version is hierarchical.
+  /** Read a subset `rel` of version `v`'s files — the one file-delta
+    * reader behind the rewrites, both change feeds and the versioned
+    * stream source. A hierarchical version groups the files by
+    * partition through v's manifest list and reattaches each group's
+    * value as a literal column (data files do not store it); every
+    * file of `rel` must resolve. `logicalSchema` includes the
+    * partition column, which is stripped for the scan. `scan` reads
+    * one group of absolute file paths under a data schema — a batch
+    * parquet read by default, a streaming-tagged one for the source.
+    * `perScan` runs directly over each scan BEFORE any union or
+    * partition-column projection — the seam that stamps (relative
+    * path, row_index) where a post-union stamp would not resolve.
     * None when `rel` is empty. */
-  private def readVersionFiles(spark: SparkSession, path: String, v: Int,
-                               rel: Seq[String],
-                               logicalSchema: Option[
-                                 org.apache.spark.sql.types.StructType] = None,
-                               perScan: DataFrame => DataFrame = identity)
-      : Option[DataFrame] =
-    // `perScan` runs directly over each file scan BEFORE any union or
-    // partition-column projection — the seam the change feed uses to
-    // stamp (relative path, row_index) where a post-union stamp
-    // would not resolve
+  private[sources] def readVersionFiles(spark: SparkSession, path: String,
+                                        v: Int, rel: Seq[String],
+                                        logicalSchema: Option[
+                                          org.apache.spark.sql.types.StructType]
+                                          = None,
+                                        perScan: DataFrame => DataFrame = identity,
+                                        scan: (SparkSession, Seq[String], Option[
+                                          org.apache.spark.sql.types.StructType])
+                                          => DataFrame = parquetScan)
+      : Option[DataFrame] = {
+    def read(fs: Seq[String],
+             schema: Option[org.apache.spark.sql.types.StructType]) =
+      perScan(scan(spark, fs.map(f => s"$path/$f"), schema))
     if (rel.isEmpty) None
-    else if (v == 0 || isFlatVersion(path, v))
-      Some(perScan(readFiles(spark, path, rel, logicalSchema)))
+    else if (isFlatVersion(path, v)) Some(read(rel, logicalSchema))
     else {
       val ml = readMlist(path, v)
       val dataSchema = logicalSchema.map(s =>
@@ -1172,12 +1276,14 @@ object VersionedStore {
           .filter(want.contains)
         if (fs.isEmpty) None else Some((p.value, fs))
       }
+      require(byPart.map(_._2.size).sum == want.size,
+        s"version $v's mlist does not resolve every requested file")
       Some(byPart.map { case (value, fs) =>
-        perScan(readFiles(spark, path, fs, dataSchema))
-          .withColumn(ml.partCol,
-            org.apache.spark.sql.functions.lit(value).cast(ml.partType))
+        read(fs, dataSchema).withColumn(ml.partCol,
+          org.apache.spark.sql.functions.lit(value).cast(ml.partType))
       }.reduce(_.unionByName(_)))
     }
+  }
 
   /** The head version a row-level operation bases on — refusing an
     * empty table, which has nothing to mutate. */
@@ -1209,12 +1315,12 @@ object VersionedStore {
     }.toSeq.sorted
   }
 
-  private def readFiles(spark: SparkSession, path: String, rel: Seq[String],
-                        schema: Option[org.apache.spark.sql.types.StructType]
-                          = None): DataFrame = {
-    val r = schema.fold(spark.read)(spark.read.schema)
-    r.parquet(rel.map(f => s"$path/$f"): _*)
-  }
+  /** A batch parquet read of absolute `files`, under `schema` when
+    * given (pre-evolution files null-fill the added columns). */
+  private val parquetScan: (SparkSession, Seq[String],
+      Option[org.apache.spark.sql.types.StructType]) => DataFrame =
+    (spark, files, schema) =>
+      schema.fold(spark.read)(spark.read.schema).parquet(files: _*)
 
   /** Publish the copy-on-write commit of version cur+1: new files
     * from `rewritten`, every untouched file carried by reference — a
@@ -1324,57 +1430,6 @@ object VersionedStore {
   private def readPmanifest(path: String, name: String): Seq[String] =
     readPmanifestEntries(path, name).map(_.file)
 
-  /** Append rows into their partitions as a new version: only the
-    * partitions present in `df` get a NEW per-partition manifest
-    * (carried files + added files); every untouched partition is
-    * carried by reference — the commit writes O(touched partitions)
-    * metadata, not O(table).
-    *
-    * `statsCol` (first commit only; inherited afterwards) declares a
-    * numeric/timestamp column whose per-file min/max land in the
-    * pmanifest, harvested from the parquet FOOTERS the writer already
-    * produced (metadata-only — no data re-read at commit). Readers
-    * then skip whole files at PLANNING time ([[readPartitionsAsOf]]'s
-    * statsRange) — the manifest-level analogue of ClickHouse's
-    * ORDER-BY granule index / Iceberg's file stats: at 100 TB a
-    * time-range query touches the partition's few overlapping files
-    * instead of listing and footer-probing everything.
-    *
-    * `bloomCol` (first commit only; inherited afterwards) declares a
-    * HIGH-CARDINALITY data column whose per-file bloom fingerprint
-    * lands in the pmanifest — the ClickHouse bloom_filter skip index
-    * in manifest form, for the point-lookup shape min/max stats can't
-    * serve (scattered ids make every file's [min,max] window cover
-    * everything). A `WHERE token_id = X` / `IN (…)` read then drops
-    * whole files whose fingerprint disproves membership at PLANNING
-    * time. Unlike the footer stats this costs one read-back of the
-    * COMMIT'S OWN new files (O(new data), never the table); sketches
-    * are sized from the commit's file row counts (~16 bits/key,
-    * capped) and saturate gracefully — an over-full bloom keeps its
-    * file, never drops it. At object-store scale the base64 text
-    * field becomes a binary sidecar (Iceberg's puffin shape); the
-    * protocol is unchanged. */
-  def appendPartitioned(df: DataFrame, path: String, partCol: String,
-                        statsCol: Option[String] = None,
-                        allowSchemaEvolution: Boolean = false,
-                        bloomCol: Option[String] = None): Int =
-    // pure appends auto-rebase when a concurrent writer committed
-    // DISJOINT partitions first (Iceberg's optimistic retry) — the
-    // realistic multi-writer topology (backfill + live stream) stops
-    // serializing through a loud loser; same-partition conflicts and
-    // schema evolution by the winner still lose loudly
-    commitPartitioned(df, path, partCol, replaceTouched = false, statsCol,
-      allowSchemaEvolution, bloomCol, retryDisjoint = true)
-
-  /** Test seam: [[appendPartitioned]] with an EXPLICIT (stale) target
-    * version — deterministic exercise of the optimistic-commit
-    * re-base without relying on a thread race. */
-  private[graft] def appendPartitionedStale(df: DataFrame, path: String,
-                                            partCol: String,
-                                            targetV: Int): Int =
-    commitPartitionedAt(df, path, partCol, targetV,
-      replaceTouched = false, retryDisjoint = true)
-
   /** Dynamic-partition overwrite: the partitions present in `df` are
     * REPLACED in the new version, untouched partitions carried by
     * reference — the hot-range rewrite shape (reorg finality) on the
@@ -1387,8 +1442,9 @@ object VersionedStore {
     // a PARTIAL overwrite still carries other partitions' files, so
     // schema compatibility is enforced like an append (unlike the
     // flat overwrite(), which carries nothing)
-    commitPartitioned(df, path, partCol, replaceTouched = true, statsCol,
-      allowSchemaEvolution, bloomCol)
+    commitPartitionedAt(df, path, partCol, currentVersion(path) + 1,
+      replaceTouched = true, statsCol, allowEvolution = allowSchemaEvolution,
+      bloomCol = bloomCol)
 
   /** Read only the partitions `keep` accepts, as of version `v` —
     * planning-level pruning: a rejected partition's per-partition
@@ -1432,35 +1488,13 @@ object VersionedStore {
     // columns do not resolve over a Union node), subtract once after
     val dvs = deleteVectorsAsOf(path, v)
     val u = perPart.map { case (p, entries) =>
-      val raw = readFiles(spark, path, entries.map(_.file), dataSchema)
+      val raw = parquetScan(spark,
+        entries.map(e => s"$path/${e.file}"), dataSchema)
       (if (dvs.isEmpty) raw else withMeta(raw))
         .withColumn(ml.partCol,
           org.apache.spark.sql.functions.lit(p.value).cast(ml.partType))
     }.reduce(_.unionByName(_))
     if (dvs.isEmpty) u else subtractStamped(spark, path, u, dvs)
-  }
-
-  /** foreachBatch seam for PARTITIONED tables — [[commitBatch]]'s
-    * recipe on the hierarchical metadata: version = batchId+1, same
-    * divergence guard. A replayed batch mints fresh attempt-unique
-    * pmanifests and REPUBLISHES the version's mlist (the one
-    * replace-allowed pointer write, because the version is keyed by
-    * batchId and its content derives deterministically from v−1) —
-    * the earlier attempt's pmanifests and data become unreferenced
-    * debris for vacuum, and table STATE lands exactly-once. */
-  def commitBatchPartitioned(df: DataFrame, path: String, partCol: String,
-                             batchId: Long,
-                             statsCol: Option[String] = None): Int = {
-    require(batchId >= 0 && batchId < Int.MaxValue,
-      s"batchId $batchId outside the supported version range")
-    val v = batchId.toInt + 1
-    val cur = currentVersion(path)
-    require(v == cur + 1 || v == cur,
-      s"batch $batchId would commit version $v but the table at $path is at " +
-        s"version $cur — a reset checkpoint or a concurrent batch writer; " +
-        "refusing to rewrite published history")
-    commitPartitionedAt(df, path, partCol, v, replaceTouched = false,
-      statsCol, replayable = true)
   }
 
   /** Compact ONE partition's files into `nFiles` as a new version
@@ -1602,22 +1636,7 @@ object VersionedStore {
                  else filesAsOf(path, fromV).toSet
     val added = filesAsOf(path, toV).filterNot(before)
     require(added.nonEmpty, s"no files were added in ($fromV, $toV]")
-    if (isFlatVersion(path, toV))
-      spark.read.parquet(added.map(f => s"$path/$f"): _*)
-    else {
-      // reattach each added file's partition value from toV's mlist
-      val ml = readMlist(path, toV)
-      val byPart = ml.parts.flatMap { p =>
-        val files = readPmanifestEntries(path, p.pmanifest).map(_.file)
-          .filter(added.contains)
-        if (files.isEmpty) None else Some((p.value, files))
-      }
-      byPart.map { case (value, files) =>
-        spark.read.parquet(files.map(f => s"$path/$f"): _*)
-          .withColumn(ml.partCol,
-            org.apache.spark.sql.functions.lit(value).cast(ml.partType))
-      }.reduce(_.unionByName(_))
-    }
+    readVersionFiles(spark, path, toV, added).get
   }
 
   /** The latest version committed at or before `tsMs` — timestamp
@@ -1633,16 +1652,6 @@ object VersionedStore {
 
   private def enc(v: String): String =
     java.net.URLEncoder.encode(v, "UTF-8")
-
-  private def commitPartitioned(df: DataFrame, path: String, partCol: String,
-                                replaceTouched: Boolean,
-                                statsCol: Option[String] = None,
-                                allowSchemaEvolution: Boolean = false,
-                                bloomCol: Option[String] = None,
-                                retryDisjoint: Boolean = false): Int =
-    commitPartitionedAt(df, path, partCol, currentVersion(path) + 1,
-      replaceTouched, statsCol, allowEvolution = allowSchemaEvolution,
-      bloomCol = bloomCol, retryDisjoint = retryDisjoint)
 
   /** Commit at an EXPLICIT version: carried state derives from v−1
     * (deterministic, replay-independent), which is what makes the

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.StreamShim
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
@@ -47,25 +46,19 @@ import org.apache.spark.sql.types.StructType
   * V1 Source (the FileStreamSource API): `getBatch` returns the
   * batch as a DataFrame built from manifest-listed parquet files, so
   * the whole read path — schema, pruning, codegen — is the ordinary
-  * parquet scan; the source itself is metadata-only. Partition values
-  * of hierarchical tables are reattached per delta group exactly as
-  * [[VersionedStore.readChanges]] does. */
+  * parquet scan; the source itself is metadata-only. Each batch reads
+  * through [[VersionedStore.readVersionFiles]] with a streaming scan,
+  * so partition values of hierarchical tables are reattached exactly
+  * as [[VersionedStore.readChanges]] reattaches them. */
 class VersionedStreamSource(spark: SparkSession, path: String,
                             override val schema: StructType,
                             startVersion: Int, snapshotFirst: Boolean,
                             skipRewrites: Boolean) extends Source {
-  import VersionedStreamSource.dataSchemaOf
 
-  // the data-file schema (without the reattached partition column)
-  private val dataSchema: StructType = dataSchemaOf(spark, path)
-  private val partCol: Option[(String, String)] = {
-    val v = VersionedStore.currentVersion(path)
-    if (VersionedStore.isFlatVersion(path, v)) None
-    else {
-      val ml = VersionedStore.readMlist(path, v)
-      Some((ml.partCol, ml.partType))
-    }
-  }
+  // the table's snapshot schema at stream start: every batch scans
+  // its files under it (pre-evolution files null-fill)
+  private val tableSchema: StructType =
+    VersionedStreamSource.fullSchemaOf(spark, path)
 
   override def getOffset: Option[Offset] = {
     val v = VersionedStore.currentVersion(path)
@@ -89,11 +82,12 @@ class VersionedStreamSource(spark: SparkSession, path: String,
       // same checkpoint as the deltas that follow — delete vectors
       // subtracted (stream-static anti-join, static broadcast side;
       // each scan stamped BEFORE any union, subtracted once after)
-      val files = VersionedStore.filesAsOf(path, endV)
       val dvs = VersionedStore.deleteVectorsAsOf(path, endV)
-      if (dvs.isEmpty) grouped(endV, files)
-      else VersionedStore.subtractStamped(spark, path,
-        grouped(endV, files, stamp = true), dvs)
+      scanFiles(endV, VersionedStore.filesAsOf(path, endV),
+          stamp = dvs.nonEmpty)
+        .map(df => if (dvs.isEmpty) df
+                   else VersionedStore.subtractStamped(spark, path, df, dvs))
+        .getOrElse(StreamShim.emptyStreaming(spark, schema))
     } else if (endV <= fromV) {
       StreamShim.emptyStreaming(spark, schema)
     } else {
@@ -124,26 +118,17 @@ class VersionedStreamSource(spark: SparkSession, path: String,
       // manifests, but must still be delivered from its original
       // file — the rewrite only re-homed rows this stream already
       // carries from the append version
-      val addedPerV = perV.collect {
-        case (v, add, rw) if !rw && add.nonEmpty => (v, add)
-      }
-      if (addedPerV.isEmpty) StreamShim.emptyStreaming(spark, schema)
-      else addedPerV.map { case (v, add) => grouped(v, add) }
-        .reduce(_.unionByName(_))
+      perV.collect { case (v, add, false) => scanFiles(v, add) }.flatten
+        .reduceOption(_.unionByName(_))
+        .getOrElse(StreamShim.emptyStreaming(spark, schema))
     }
   }
 
-  /** Build the batch DataFrame: flat tables scan the file list
-    * directly; hierarchical tables group files by partition (resolved
-    * through version `v`'s mlist) and reattach the value as a literal
-    * column, unioned into one streaming plan. */
-  private def grouped(v: Int, files: Seq[String],
-                      stamp: Boolean = false): DataFrame = {
-    def scan(fs: Seq[String]) = {
-      val s = StreamShim.streamingParquet(
-        spark, fs.map(f => s"$path/$f"), dataSchema)
-      if (stamp) VersionedStore.withMeta(s) else s
-    }
+  /** Version `v`'s `files` as one streaming plan (None when there are
+    * none), read through the store's file-delta reader; `stamp`
+    * attaches the delete-vector key to each scan. */
+  private def scanFiles(v: Int, files: Seq[String],
+                        stamp: Boolean = false): Option[DataFrame] = {
     // a file removed by a SKIPPED rewrite and then vacuumed is gone
     // for good — its rows were re-homed into files this stream
     // deliberately skips. Fail with the actionable remedy instead of
@@ -155,22 +140,10 @@ class VersionedStreamSource(spark: SparkSession, path: String,
           s"skipped rewrite): ${vacuumed.take(3).mkString(", ")}" +
           (if (vacuumed.size > 3) s" (+${vacuumed.size - 3} more)" else "") +
           " — restart the stream from startingVersion=snapshot")
-    partCol match {
-      case None => scan(files)
-      case Some((pc, pt)) =>
-        val ml = VersionedStore.readMlist(path, v)
-        val fileSet = files.toSet
-        val byPart = ml.parts.flatMap { p =>
-          val fs = VersionedStore.readPmanifestEntries(path, p.pmanifest)
-            .map(_.file).filter(fileSet.contains)
-          if (fs.isEmpty) None else Some((p.value, fs))
-        }
-        require(byPart.map(_._2.size).sum == files.size,
-          s"version $v's mlist does not resolve every batch file")
-        byPart.map { case (value, fs) =>
-          scan(fs).withColumn(pc, lit(value).cast(pt))
-        }.reduce(_.unionByName(_))
-    }
+    VersionedStore.readVersionFiles(spark, path, v, files, Some(tableSchema),
+      perScan = if (stamp) VersionedStore.withMeta else identity,
+      // the source always scans under its table schema
+      scan = (s, fs, sch) => StreamShim.streamingParquet(s, fs, sch.get))
   }
 
   override def commit(end: Offset): Unit = ()
@@ -178,37 +151,14 @@ class VersionedStreamSource(spark: SparkSession, path: String,
 }
 
 object VersionedStreamSource {
-  /** The current version's RECORDED schema when the table has one
-    * (schema-aware commits; the partition column is stripped — it is
-    * reattached from the manifest metadata); one data-file footer for
-    * legacy tables. */
-  private[sources] def dataSchemaOf(spark: SparkSession,
-                                    path: String): StructType = {
-    val v = VersionedStore.currentVersion(path)
-    require(v > 0, s"cannot stream from an empty versioned table: $path")
-    VersionedStore.schemaAsOf(path, v) match {
-      case Some(s) if !VersionedStore.isFlatVersion(path, v) =>
-        val partCol = VersionedStore.readMlist(path, v).partCol
-        StructType(s.fields.filterNot(_.name == partCol))
-      case Some(s) => s
-      case None =>
-        val files = VersionedStore.filesAsOf(path, v)
-        require(files.nonEmpty, s"version $v of $path lists no data files")
-        spark.read.parquet(s"$path/${files.head}").schema
-    }
-  }
-
+  /** The current snapshot's schema — the recorded one (legacy
+    * tables: one data-file footer) with a hierarchical table's
+    * partition column last, as every batch carries it. */
   private[sources] def fullSchemaOf(spark: SparkSession,
                                     path: String): StructType = {
     val v = VersionedStore.currentVersion(path)
-    val data = dataSchemaOf(spark, path)
-    if (VersionedStore.isFlatVersion(path, v)) data
-    else {
-      val ml = VersionedStore.readMlist(path, v)
-      val partType = org.apache.spark.sql.types.DataType
-        .fromDDL(ml.partType)
-      data.add(ml.partCol, partType)
-    }
+    require(v > 0, s"cannot stream from an empty versioned table: $path")
+    VersionedStore.snapshotRelation(spark, path, v).schema
   }
 }
 

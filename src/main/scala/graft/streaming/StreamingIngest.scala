@@ -93,33 +93,20 @@ object StreamingIngest {
     * twice — at-least-once delivery, exactly-once table state
     * ([[graft.sources.VersionedStore.commitBatch]]). Downstream batch
     * readers pin a version and are isolated from in-flight commits;
-    * history stays time-travelable until vacuum. */
-  def sinkVersioned(stream: DataFrame, path: String, checkpoint: String)
+    * history stays time-travelable until vacuum. `partCol = Some(c)`
+    * makes the first batch create a hierarchical table partitioned by
+    * `c`: each later micro-batch appends into its rows' partitions, so
+    * a batch touching k partitions writes k per-partition manifests +
+    * one list and the warehouse metadata stays O(touched) per batch at
+    * month-partitioned 100 TB scale. */
+  def sinkVersioned(stream: DataFrame, path: String, checkpoint: String,
+                    partCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.sources.VersionedStore.commitBatch(batch.toDF(), path, id): Unit
-      }
-      .start()
-
-  /** [[sinkVersioned]] onto the HIERARCHICAL store: each micro-batch
-    * appends into its rows' partitions
-    * ([[graft.sources.VersionedStore.commitBatchPartitioned]]) — a
-    * batch touching k partitions writes k per-partition manifests +
-    * one list, everything else carried by reference, so the warehouse
-    * metadata stays O(touched) per batch at month-partitioned 100 TB
-    * scale; the same batch-id versioning makes replays recommit their
-    * own version (the VersionedStoreSpec crash matrix covers both torn
-    * points). */
-  def sinkVersionedPartitioned(stream: DataFrame, path: String,
-                               partCol: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.sources.VersionedStore.commitBatchPartitioned(batch.toDF(),
-          path, partCol, id): Unit
+        graft.sources.VersionedStore.commitBatch(batch.toDF(), path, id,
+          partCol): Unit
       }
       .start()
 

@@ -222,4 +222,24 @@ class RankSpec extends SparkSpec {
     assert(joined.count() == 3)
     assert(joined.filter(col("decile") =!= col("want_decile")).isEmpty)
   }
+
+  test("groupedQuantilesBucketed joins on an explicit key: no trivially " +
+    "true equality in the analyzed plan") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.EqualTo
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    // with Spark's self-join rescue off, a condition that resolves one
+    // attribute on both sides stays `a = a` in the analyzed plan
+    val key = "spark.sql.selfJoinAutoResolveAmbiguity"
+    spark.conf.set(key, "false")
+    try {
+      val t = (1 to 50).map(i => (s"g${i % 3}", i.toDouble)).toDF("g", "x")
+      val got = Rank.groupedQuantiles(t, "g", col("x"),
+        Seq("p50" -> 0.5, "p90" -> 0.9), countName = "n")
+      val trivial = got.queryExecution.analyzed
+        .collect { case j: Join => j.condition }.flatten
+        .flatMap(_.collect { case e @ EqualTo(a, b) if a.semanticEquals(b) => e })
+      assert(trivial.isEmpty, s"trivially true join keys: $trivial")
+    } finally spark.conf.unset(key)
+  }
 }

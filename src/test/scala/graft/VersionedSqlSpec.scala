@@ -26,7 +26,7 @@ class VersionedSqlSpec extends SparkSpec {
     val df = (1L to 100L).map(i =>
       (i, s"n$i", if (i <= 50) "1996-01" else "1996-02"))
       .toDF("id", "name", "month")
-    VersionedStore.appendPartitioned(df, path, "month")
+    VersionedStore.append(df, path, partCol = Some("month"))
     path
   }
 

@@ -193,9 +193,9 @@ class VersionedStoreSpec extends SparkSpec {
 
   test("change feed on the hierarchical store reattaches partition values") {
     val path = freshDir()
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 10L, 20L)),
-      path, "month")
+      path, partCol = Some("month"))
     VersionedStore.delete(spark, path, col("id") === 20L)
     val got = VersionedStore.readChangeFeed(spark, path, 1, 2, Seq("id"))
       .collect()
@@ -253,16 +253,16 @@ class VersionedStoreSpec extends SparkSpec {
   test("schema evolution on the hierarchical store; snapshot scan and " +
       "stream source serve the recorded schema") {
     val path = freshDir()
-    VersionedStore.appendPartitioned(part(path, "1996-01", 1L),
-      path, "month")
+    VersionedStore.append(part(path, "1996-01", 1L),
+      path, partCol = Some("month"))
     intercept[IllegalArgumentException] { // drift without opt-in
-      VersionedStore.appendPartitioned(
+      VersionedStore.append(
         part(path, "1996-02", 2L).withColumn("tag", lit("x")),
-        path, "month")
+        path, partCol = Some("month"))
     }
-    val v2 = VersionedStore.appendPartitioned(
+    val v2 = VersionedStore.append(
       part(path, "1996-02", 2L).withColumn("tag", lit("x")),
-      path, "month", allowSchemaEvolution = true)
+      path, partCol = Some("month"), allowSchemaEvolution = true)
     // the Catalyst FileIndex read serves the evolved schema with the
     // old partition's rows null-filled
     val snap = VersionedStore.readIndexed(spark, path, v2)
@@ -433,15 +433,15 @@ class VersionedStoreSpec extends SparkSpec {
   test("a 1-partition append rewrites O(1) manifest entries") {
     val path = freshDir()
     // v1: three partitions
-    val v1 = VersionedStore.appendPartitioned(
+    val v1 = VersionedStore.append(
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 2L))
-        .unionByName(part(path, "1996-03", 3L)), path, "month")
+        .unionByName(part(path, "1996-03", 3L)), path, partCol = Some("month"))
     assert(v1 == 1)
     val pmsV1 = pmanifests(path)
     assert(pmsV1.size == 3, "one pmanifest per partition")
     // v2: append into ONE partition
-    val v2 = VersionedStore.appendPartitioned(part(path, "1996-02", 20L),
-      path, "month")
+    val v2 = VersionedStore.append(part(path, "1996-02", 20L),
+      path, partCol = Some("month"))
     val pmsV2 = pmanifests(path)
     assert((pmsV2 -- pmsV1).size == 1,
       s"one new pmanifest for the touched partition, got ${pmsV2 -- pmsV1}")
@@ -464,11 +464,11 @@ class VersionedStoreSpec extends SparkSpec {
     val path = freshDir()
     // v1: three partitions; v2: a second FILE into 1996-02, so that
     // partition holds two files with disjoint id ranges
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L, 2L).unionByName(part(path, "1996-02", 10L))
-        .unionByName(part(path, "1996-03", 30L)), path, "month")
-    VersionedStore.appendPartitioned(part(path, "1996-02", 20L),
-      path, "month")
+        .unionByName(part(path, "1996-03", 30L)), path, partCol = Some("month"))
+    VersionedStore.append(part(path, "1996-02", 20L),
+      path, partCol = Some("month"))
     val m2 = VersionedStore.readMlist(path, 2)
     // delete id=20: lives in exactly one of 1996-02's two files
     val v3 = VersionedStore.delete(spark, path, col("id") === 20L)
@@ -506,10 +506,10 @@ class VersionedStoreSpec extends SparkSpec {
 
   test("pruned reads never open unselected partitions' manifests or files") {
     val path = freshDir()
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 2L)),
-      path, "month")
-    VersionedStore.appendPartitioned(part(path, "1996-02", 20L), path, "month")
+      path, partCol = Some("month"))
+    VersionedStore.append(part(path, "1996-02", 20L), path, partCol = Some("month"))
     val pruned = VersionedStore.readPartitionsAsOf(spark, path, 2,
       _ == "1996-01")
     assert(pruned.collect().map(_.getAs[Long]("id")).toSet == Set(1L))
@@ -523,9 +523,9 @@ class VersionedStoreSpec extends SparkSpec {
 
   test("partition overwrite replaces one partition; snapshots + vacuum hold") {
     val path = freshDir()
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 2L)),
-      path, "month")
+      path, partCol = Some("month"))
     // hot-range rewrite of one partition (reorg finality shape)
     val v2 = VersionedStore.overwritePartitions(part(path, "1996-02", 99L),
       path, "month")
@@ -563,8 +563,8 @@ class VersionedStoreSpec extends SparkSpec {
     // row, one partition) was mid-commit: its data + pmanifest exist,
     // the mlist was never renamed
     val ms1 = MemoryStream[Long]
-    val q1 = graft.streaming.StreamingIngest.sinkVersionedPartitioned(
-      withMonth(ms1), path, "month", ckpt)
+    val q1 = graft.streaming.StreamingIngest.sinkVersioned(
+      withMonth(ms1), path, ckpt, partCol = Some("month"))
     ms1.addData(1L, 12L); q1.processAllAvailable(); q1.stop()
     assert(VersionedStore.currentVersion(path) == 1)
     part(path, "1996-01", 3L).write
@@ -576,8 +576,8 @@ class VersionedStoreSpec extends SparkSpec {
       "an unpublished mlist leaves v1 live; orphan pmanifest invisible")
     // restart: replay batch 1, then a later batch
     val ms2 = MemoryStream[Long]
-    val q2 = graft.streaming.StreamingIngest.sinkVersionedPartitioned(
-      withMonth(ms2), path, "month", ckpt)
+    val q2 = graft.streaming.StreamingIngest.sinkVersioned(
+      withMonth(ms2), path, ckpt, partCol = Some("month"))
     ms2.addData(1L, 12L)
     ms2.addData(3L)
     q2.processAllAvailable()
@@ -606,7 +606,7 @@ class VersionedStoreSpec extends SparkSpec {
     val df = (0L until 4000L).map(i => (i, 1000L + i, "1996-01"))
       .toDF("id", "ts", "month")
       .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-    val v1 = VersionedStore.appendPartitioned(df, path, "month",
+    val v1 = VersionedStore.append(df, path, partCol = Some("month"),
       statsCol = Some("ts"))
     val ml = VersionedStore.readMlist(path, v1)
     assert(ml.statsCol.contains("ts"), "stats column is a table property")
@@ -624,15 +624,15 @@ class VersionedStoreSpec extends SparkSpec {
       "the surviving file contains the full answer")
     // inherited on later commits without re-declaring; appended files
     // get their own stats; carried lines keep theirs
-    val v2 = VersionedStore.appendPartitioned(
-      Seq((9000L, 9000L, "1996-01")).toDF("id", "ts", "month"), path, "month")
+    val v2 = VersionedStore.append(
+      Seq((9000L, 9000L, "1996-01")).toDF("id", "ts", "month"), path, partCol = Some("month"))
     val e2 = VersionedStore.readPmanifestEntries(path,
       VersionedStore.readMlist(path, v2).parts.head.pmanifest)
     assert(e2.size == 5 && e2.forall(_.stats.nonEmpty))
     // declaring a DIFFERENT stats column mid-table is refused
     intercept[IllegalArgumentException] {
-      VersionedStore.appendPartitioned(
-        Seq((1L, 1L, "1996-01")).toDF("id", "ts", "month"), path, "month",
+      VersionedStore.append(
+        Seq((1L, 1L, "1996-01")).toDF("id", "ts", "month"), path, partCol = Some("month"),
         statsCol = Some("id"))
     }
     // conservative on range misses beyond all files
@@ -645,9 +645,9 @@ class VersionedStoreSpec extends SparkSpec {
   test("per-partition compaction rewrites one partition, carries the rest") {
     import spark.implicits._
     val path = freshDir()
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L to 8L: _*).repartition(8)
-        .unionByName(part(path, "1996-02", 100L)), path, "month")
+        .unionByName(part(path, "1996-02", 100L)), path, partCol = Some("month"))
     val m1 = VersionedStore.readMlist(path, 1)
     val before = VersionedStore
       .readPmanifestEntries(path, m1.parts.find(_.value == "1996-01").get.pmanifest).size
@@ -668,13 +668,13 @@ class VersionedStoreSpec extends SparkSpec {
     "non-append ranges are refused") {
     import spark.implicits._
     val path = freshDir()
-    VersionedStore.appendPartitioned(part(path, "1996-01", 1L, 2L),
-      path, "month")                                                   // v1
-    VersionedStore.appendPartitioned(part(path, "1996-02", 3L),
-      path, "month")                                                   // v2
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(part(path, "1996-01", 1L, 2L),
+      path, partCol = Some("month"))                                  // v1
+    VersionedStore.append(part(path, "1996-02", 3L),
+      path, partCol = Some("month"))                                  // v2
+    VersionedStore.append(
       part(path, "1996-01", 4L).unionByName(part(path, "1996-03", 5L)),
-      path, "month")                                                   // v3
+      path, partCol = Some("month"))                                  // v3
     val delta = VersionedStore.readChanges(spark, path, 1, 3)
     assert(delta.collect().map(r =>
       (r.getAs[Long]("id"), r.getAs[String]("month"))).toSet ==
@@ -702,7 +702,7 @@ class VersionedStoreSpec extends SparkSpec {
     "wins the exclusive rename, the loser fails loudly, debris vacuums") {
     import spark.implicits._
     val path = freshDir()
-    VersionedStore.appendPartitioned(part(path, "1996-01", 1L), path, "month")
+    VersionedStore.append(part(path, "1996-01", 1L), path, partCol = Some("month"))
     // two writers enter append simultaneously; each reads the current
     // version at entry, writes attempt-unique data, then races the
     // create-exclusive mlist rename for version 2
@@ -710,8 +710,8 @@ class VersionedStoreSpec extends SparkSpec {
     val results = (10 to 11).map { i =>
       val t = new java.util.concurrent.FutureTask(() => {
         gate.await()
-        try Right(VersionedStore.appendPartitioned(
-          part(path, "1996-01", i.toLong), path, "month"))
+        try Right(VersionedStore.append(
+          part(path, "1996-01", i.toLong), path, partCol = Some("month")))
         catch {
           // CME from the exclusive rename, IAE from the cheap
           // fail-fast if the winner published before our data write
@@ -755,7 +755,7 @@ class VersionedStoreSpec extends SparkSpec {
     val df = (0L until 4000L).map(i => (i, 1000L + i, "1996-01"))
       .toDF("id", "ts", "month")
       .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
-    VersionedStore.appendPartitioned(df, path, "month", statsCol = Some("ts"))
+    VersionedStore.append(df, path, partCol = Some("month"), statsCol = Some("ts"))
     val v2 = VersionedStore.compactPartition(spark, path, "1996-01", nFiles = 2)
     val entries = VersionedStore.readPmanifestEntries(path,
       VersionedStore.readMlist(path, v2).parts.head.pmanifest)
@@ -780,13 +780,13 @@ class VersionedStoreSpec extends SparkSpec {
 
   test("history + versionAsOf: derived commit audit and timestamp travel") {
     val path = freshDir()
-    VersionedStore.appendPartitioned(part(path, "1996-01", 1L, 2L),
-      path, "month")                                                   // v1
+    VersionedStore.append(part(path, "1996-01", 1L, 2L),
+      path, partCol = Some("month"))                                  // v1
     Thread.sleep(50)
     val t1 = System.currentTimeMillis()
     Thread.sleep(50)
-    VersionedStore.appendPartitioned(part(path, "1996-02", 3L),
-      path, "month")                                                   // v2
+    VersionedStore.append(part(path, "1996-02", 3L),
+      path, partCol = Some("month"))                                  // v2
     VersionedStore.overwritePartitions(part(path, "1996-01", 9L),
       path, "month")                                                   // v3
     val h = VersionedStore.history(path)
@@ -811,9 +811,9 @@ class VersionedStoreSpec extends SparkSpec {
     "reader, pinned against later commits") {
     import spark.implicits._
     val path = freshDir()
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       part(path, "1996-01", 1L, 2L, 3L)
-        .unionByName(part(path, "1996-02", 10L, 11L)), path, "month")
+        .unionByName(part(path, "1996-02", 10L, 11L)), path, partCol = Some("month"))
     val df = VersionedStore.readIndexed(spark, path, 1)
     assert(df.collect().map(r =>
       (r.getAs[Long]("id"), r.getAs[String]("month"))).toSet == prows(path, 1),
@@ -823,7 +823,7 @@ class VersionedStoreSpec extends SparkSpec {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
     assert(scans.size == 1, s"single scan node, got ${scans.size}")
     // snapshot isolation at the plan level: the index pins version 1
-    VersionedStore.appendPartitioned(part(path, "1996-01", 99L), path, "month")
+    VersionedStore.append(part(path, "1996-01", 99L), path, partCol = Some("month"))
     assert(df.count() == 5, "pinned FileIndex unaffected by later commits")
     // flat tables read through the same API (empty partition schema)
     val fpath = freshDir()
@@ -841,7 +841,7 @@ class VersionedStoreSpec extends SparkSpec {
       .toDF("id", "ts", "month")
       .repartitionByRange(4, col("ts")).sortWithinPartitions("ts")
     val feb = Seq((9000L, 99000L, "1996-02")).toDF("id", "ts", "month")
-    VersionedStore.appendPartitioned(jan.unionByName(feb), path, "month",
+    VersionedStore.append(jan.unionByName(feb), path, partCol = Some("month"),
       statsCol = Some("ts"))
     val df = VersionedStore.readIndexed(spark, path, 1)
     assert(df.inputFiles.length == 5, "five live files before pruning")
@@ -871,7 +871,7 @@ class VersionedStoreSpec extends SparkSpec {
     val path = freshDir()
     VersionedStore.append(Seq(1L).toDF("id"), path)
     intercept[IllegalArgumentException] {
-      VersionedStore.appendPartitioned(part(path, "1996-01", 2L), path, "month")
+      VersionedStore.append(part(path, "1996-01", 2L), path, partCol = Some("month"))
     }
   }
 
@@ -886,8 +886,8 @@ class VersionedStoreSpec extends SparkSpec {
       .toDF("tok", "ts", "month")
     // one append per residue class → four one-file commits into the
     // same partition (declaration on the first, inherited after)
-    val v1 = (0L until 4L).map(r => VersionedStore.appendPartitioned(
-      all.filter(col("tok") % 4 === r).coalesce(1), path, "month",
+    val v1 = (0L until 4L).map(r => VersionedStore.append(
+      all.filter(col("tok") % 4 === r).coalesce(1), path, partCol = Some("month"),
       statsCol = if (r == 0) Some("ts") else None,
       bloomCol = if (r == 0) Some("tok") else None)).last
     val ml = VersionedStore.readMlist(path, v1)
@@ -919,8 +919,8 @@ class VersionedStoreSpec extends SparkSpec {
       "unrecognized shapes keep all files")
     // second commit WITHOUT re-declaring: the bloom column is a table
     // property — new files fingerprint, carried lines ride verbatim
-    val v2 = VersionedStore.appendPartitioned(
-      Seq((9001L, 1L, "q")).toDF("tok", "ts", "month"), path, "month")
+    val v2 = VersionedStore.append(
+      Seq((9001L, 1L, "q")).toDF("tok", "ts", "month"), path, partCol = Some("month"))
     val ml2 = VersionedStore.readMlist(path, v2)
     assert(ml2.bloomCol.contains("tok"), "bloom column inherited")
     val qEntries = VersionedStore.readPmanifestEntries(path,
@@ -941,14 +941,14 @@ class VersionedStoreSpec extends SparkSpec {
       "post-compaction point probe still exact")
     // guards: mid-table change and partition-column blooms refused
     intercept[IllegalArgumentException] {
-      VersionedStore.appendPartitioned(
-        Seq((1L, 1L, "r")).toDF("tok", "ts", "month"), path, "month",
+      VersionedStore.append(
+        Seq((1L, 1L, "r")).toDF("tok", "ts", "month"), path, partCol = Some("month"),
         bloomCol = Some("ts"))
     }
     intercept[IllegalArgumentException] {
       val p2 = freshDir()
-      VersionedStore.appendPartitioned(
-        Seq((1L, 1L, "r")).toDF("tok", "ts", "month"), p2, "month",
+      VersionedStore.append(
+        Seq((1L, 1L, "r")).toDF("tok", "ts", "month"), p2, partCol = Some("month"),
         bloomCol = Some("month"))
     }
   }
@@ -962,7 +962,7 @@ class VersionedStoreSpec extends SparkSpec {
     val rows = (0L until 64L).map(i => (i, (i * 17) % 64, "p"))
       .toDF("x", "y", "month")
       .repartitionByRange(4, col("x")).sortWithinPartitions("x")
-    val v1 = VersionedStore.appendPartitioned(rows, path, "month",
+    val v1 = VersionedStore.append(rows, path, partCol = Some("month"),
       statsCol = Some("x,y"))
     val ml = VersionedStore.readMlist(path, v1)
     assert(ml.statsCols == Seq("x", "y"), "comma-declared column list")
@@ -1169,10 +1169,10 @@ class VersionedStoreSpec extends SparkSpec {
     // two month partitions, several files each, ts as the stats column
     def month(m: String, ids: Range) =
       ids.map(i => (i.toLong, i.toLong % 97, m)).toDF("id", "ts", "month")
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       month("1996-01", 0 until 100).repartition(3)
         .unionByName(month("1996-02", 100 until 200).repartition(3)),
-      path, "month", statsCol = Some("ts"))
+      path, partCol = Some("month"), statsCol = Some("ts"))
     val ml1 = VersionedStore.readMlist(path, 1)
     // v2: vectored delete across BOTH partitions — zero pmanifests
     // re-minted, the part entries are carried byte-identical
@@ -1215,8 +1215,8 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.compactPartition(spark, path, "1996-01", nFiles = 1)
     assert(ids(4) == ids(3), "compaction is row-preserving")
     // append inherits the vectors; deleted rows stay dead
-    VersionedStore.appendPartitioned(
-      Seq((999L, 1L, "1996-03")).toDF("id", "ts", "month"), path, "month")
+    VersionedStore.append(
+      Seq((999L, 1L, "1996-03")).toDF("id", "ts", "month"), path, partCol = Some("month"))
     assert(ids(5) == ids(3) + 999L)
     // the incremental reader refuses the vectored range
     intercept[IllegalArgumentException] {
@@ -1238,8 +1238,8 @@ class VersionedStoreSpec extends SparkSpec {
     // four one-file commits with disjoint token sets (the bloom shape)
     val all = (0L until 4096L).map(i => (i, i % 997, "p"))
       .toDF("tok", "ts", "month")
-    (0L until 4L).foreach(r => VersionedStore.appendPartitioned(
-      all.filter(col("tok") % 4 === r).coalesce(1), path, "month",
+    (0L until 4L).foreach(r => VersionedStore.append(
+      all.filter(col("tok") % 4 === r).coalesce(1), path, partCol = Some("month"),
       statsCol = if (r == 0) Some("ts") else None,
       bloomCol = if (r == 0) Some("tok") else None))
     // vector-delete tok=5 (lives in residue file 1)
@@ -1375,10 +1375,10 @@ class VersionedStoreSpec extends SparkSpec {
     def month(m: String, ids: Range) =
       ids.map(i => (i.toLong, m)).toDF("id", "month")
     // one file per partition (coalesced by the single input partition)
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       month("1996-01", 0 until 1000).coalesce(1)
         .unionByName(month("1996-02", 1000 until 2000).coalesce(1)),
-      path, "month")
+      path, partCol = Some("month"))
     // dense dead in 1996-01 (50%), sparse in 1996-02 (0.1%)
     VersionedStore.deleteVectored(spark, path,
       (col("id") < 500L) || (col("id") === 1500L))
@@ -1416,10 +1416,10 @@ class VersionedStoreSpec extends SparkSpec {
     val path = freshDir()
     def month(m: String, ids: Range) =
       ids.map(i => (i.toLong, s"n$i", m)).toDF("id", "name", "month")
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       month("1996-01", 0 until 50)
         .unionByName(month("1996-02", 50 until 100))
-        .unionByName(month("1996-03", 100 until 150)), path, "month")
+        .unionByName(month("1996-03", 100 until 150)), path, partCol = Some("month"))
     val ml1 = VersionedStore.readMlist(path, 1)
     // updates: in-place update (id 10 stays in 1996-01), a PARTITION
     // MOVE (id 60: 1996-02 -> 1996-01), an insert into a NEW partition
@@ -1483,10 +1483,10 @@ class VersionedStoreSpec extends SparkSpec {
     import spark.implicits._
     def freshTable(): String = {
       val p = freshDir()
-      VersionedStore.appendPartitioned((1L to 90L).map(i =>
+      VersionedStore.append((1L to 90L).map(i =>
           (i, s"n$i", if (i <= 30) "1996-01"
             else if (i <= 60) "1996-02" else "1996-03"))
-        .toDF("id", "name", "month"), p, "month")
+        .toDF("id", "name", "month"), p, partCol = Some("month"))
       p
     }
     val cow = freshTable(); val mor = freshTable()
@@ -1525,8 +1525,8 @@ class VersionedStoreSpec extends SparkSpec {
     def batch(month: String, ids: Long*): org.apache.spark.sql.DataFrame =
       ids.map(i => (i, month)).toDF("id", "month")
     val path = freshDir()
-    VersionedStore.appendPartitioned(batch("1996-01", 1L), path, "month") // v1
-    VersionedStore.appendPartitioned(batch("1996-02", 2L), path, "month") // v2
+    VersionedStore.append(batch("1996-01", 1L), path, partCol = Some("month")) // v1
+    VersionedStore.append(batch("1996-02", 2L), path, partCol = Some("month")) // v2
     // LOSER with a stale base: targets v2 (already taken) carrying a
     // DISJOINT partition — the publish CAS fails, the retry re-bases
     // on v2 and commits v3; nothing serializes through a loud loser
@@ -1553,12 +1553,12 @@ class VersionedStoreSpec extends SparkSpec {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
       val f1 = pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = VersionedStore.appendPartitioned(
-          batch("1996-04", (10L to 500L): _*), path, "month")
+        def call(): Int = VersionedStore.append(
+          batch("1996-04", (10L to 500L): _*), path, partCol = Some("month"))
       })
       val f2 = pool.submit(new java.util.concurrent.Callable[Int] {
-        def call(): Int = VersionedStore.appendPartitioned(
-          batch("1996-05", 6L), path, "month")
+        def call(): Int = VersionedStore.append(
+          batch("1996-05", 6L), path, partCol = Some("month"))
       })
       val (r1, r2) = (f1.get(), f2.get())
       assert(Set(r1, r2) == Set(4, 5),
@@ -1822,11 +1822,11 @@ class VersionedStoreSpec extends SparkSpec {
     val path = freshDir()
     def month(m: String, ids: Range) =
       ids.map(i => (i.toLong, m)).toDF("id", "month")
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       month("1996-01", 0 until 50)
         .unionByName(month("1996-02", 50 until 100))
         .unionByName(month("1996-03", 100 until 150)),
-      path, "month")                                                // v1
+      path, partCol = Some("month"))                               // v1
     // a vectored delete first, so carried `#dv` lines cross the expiry
     val v2 = VersionedStore.deleteVectored(spark, path,
       col("id").isin(10L, 60L, 110L))                               // v2
@@ -1871,7 +1871,7 @@ class VersionedStoreSpec extends SparkSpec {
     def load() = base.toSeq.toDF("id", "name", "month").repartition(3)
     val flat = freshDir(); val hier = freshDir()
     VersionedStore.append(load(), flat)
-    VersionedStore.appendPartitioned(load(), hier, "month")
+    VersionedStore.append(load(), hier, partCol = Some("month"))
     def ups(rs: (Long, String, String)*) = rs.toDF("id", "name", "month")
     def upsert(rs: (Long, String, String)*)(t: Rows): Rows =
       t.filterNot(r => rs.exists(_._1 == r._1)) ++ rs
@@ -1917,5 +1917,66 @@ class VersionedStoreSpec extends SparkSpec {
     assert(VersionedStore.deleteVectorsAsOf(flat, 8).isEmpty &&
       VersionedStore.deleteVectorsAsOf(hier, 8).isEmpty,
       "reorg at ratio 0 folds every vector on both layouts")
+  }
+
+  test("one entry point per append, batch commit, snapshot read and " +
+    "file delta: a flat and a hierarchical table agree row for row") {
+    import spark.implicits._
+    def rows(ids: Seq[Long]) = ids.map(i =>
+      (i, s"n$i", s"1996-0${i % 3 + 1}")).toDF("id", "name", "month")
+    def set(df: org.apache.spark.sql.DataFrame): Set[(Long, String, String)] =
+      df.select("id", "name", "month").as[(Long, String, String)].collect().toSet
+    val want1 = set(rows(1L to 12L)); val want2 = set(rows(13L to 20L))
+    val want3 = set(rows(21L to 24L))
+    val layouts = Seq("flat" -> None, "hierarchical" -> Some("month"))
+    val seen = layouts.map { case (name, partCol) =>
+      val t = freshDir()
+      // the partition column is named only by the write that creates
+      // the table; later writes take the layout from the head version
+      assert(VersionedStore.append(rows(1L to 12L).repartition(3), t,
+        partCol = partCol) == 1, s"[$name] append creates v1")
+      assert(VersionedStore.append(rows(13L to 20L), t) == 2,
+        s"[$name] append with the layout from head")
+      assert(VersionedStore.commitBatch(rows(21L to 24L), t, 2) == 3 &&
+        VersionedStore.commitBatch(rows(21L to 24L), t, 2) == 3,
+        s"[$name] commitBatch and its replay both land v3")
+      assert(VersionedStore.history(t).map(_.form).distinct ==
+        Seq(if (partCol.isEmpty) "flat" else "partitioned"),
+        s"[$name] every commit keeps the table's layout")
+      val snaps = (1 to 3).map(v => set(VersionedStore.readAsOf(spark, t, v)))
+      assert(snaps == Seq(want1, want1 ++ want2, want1 ++ want2 ++ want3),
+        s"[$name] readAsOf: each snapshot holds exactly its versions' rows")
+      val changes = set(VersionedStore.readChanges(spark, t, 1, 3))
+      assert(changes == want2 ++ want3, s"[$name] readChanges (1, 3]")
+      val sink = s"vstore_unified_${name}"
+      val q = spark.readStream.format("graft-versioned").option("path", t)
+        .option("startingVersion", "1").load()
+        .writeStream.format("memory").queryName(sink)
+        .option("checkpointLocation", freshDir() + "/ckpt")
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      val streamed = set(spark.table(sink))
+      assert(streamed == want2 ++ want3,
+        s"[$name] the stream source's first delta batch is (1, 3]")
+      // a copy-on-write delete of every row: the flat parent read this
+      // version as an empty frame with the table's columns, and both
+      // layouts now do
+      assert(VersionedStore.delete(spark, t, lit(true)) == 4)
+      val empty = VersionedStore.readAsOf(spark, t, 4)
+      assert(empty.columns.toSet == Set("id", "name", "month") &&
+        empty.isEmpty, s"[$name] the all-deleted version reads empty")
+      (snaps, changes, streamed, empty.schema.fields.map(_.name).toSet)
+    }
+    assert(seen.head == seen.last, "the two layouts agree row for row")
+    // a layout argument that disagrees with an existing table refuses
+    val flat = freshDir()
+    VersionedStore.append(rows(Seq(1L)), flat)
+    intercept[IllegalArgumentException] {
+      VersionedStore.commitBatch(rows(Seq(2L)), flat, 1,
+        partCol = Some("month"))
+    }
+    intercept[IllegalArgumentException] {
+      VersionedStore.append(rows(Seq(2L)), flat, statsCol = Some("id"))
+    }
   }
 }

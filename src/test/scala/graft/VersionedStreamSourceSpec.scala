@@ -137,11 +137,11 @@ class VersionedStreamSourceSpec extends SparkSpec {
     "(each delta resolves through its own version's manifests)") {
     import spark.implicits._
     val path = freshDir("vss-midrw")
-    VersionedStore.appendPartitioned(
+    VersionedStore.append(
       Seq(1L -> "1997-01", 2L -> "1997-02").toDF("id", "month"),
-      path, "month")                                              // v1
-    VersionedStore.appendPartitioned(
-      Seq(3L -> "1997-02").toDF("id", "month"), path, "month")    // v2
+      path, partCol = Some("month"))                                              // v1
+    VersionedStore.append(
+      Seq(3L -> "1997-02").toDF("id", "month"), path, partCol = Some("month"))    // v2
     VersionedStore.compactPartition(spark, path, "1997-02", 1)    // v3 rewrite
     // ONE batch covers (0, 3]: v2's file is absent from v3's manifests
     // (the skipped compaction re-homed its rows), but the append's rows
@@ -185,12 +185,12 @@ class VersionedStreamSourceSpec extends SparkSpec {
     val path = freshDir("vss-part")
     def batch(ids: Seq[(Long, String)]): DataFrame =
       ids.toDF("id", "month")
-    VersionedStore.appendPartitioned(
-      batch(Seq(1L -> "1997-01", 2L -> "1997-02")), path, "month")  // v1
+    VersionedStore.append(
+      batch(Seq(1L -> "1997-01", 2L -> "1997-02")), path, partCol = Some("month"))  // v1
     val q = startTail(path, "vss_part", freshDir("vss-ckpt"))
     q.processAllAvailable()
-    VersionedStore.appendPartitioned(
-      batch(Seq(3L -> "1997-02", 4L -> "1997-03")), path, "month")  // v2
+    VersionedStore.append(
+      batch(Seq(3L -> "1997-02", 4L -> "1997-03")), path, partCol = Some("month"))  // v2
     q.processAllAvailable(); q.stop()
     val got = spark.sql("SELECT id, month FROM vss_part").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -222,8 +222,8 @@ class VersionedStreamSourceSpec extends SparkSpec {
     // partitioned tables read through the same format with the
     // partition column attached (the Catalyst FileIndex underneath)
     val ppath = freshDir("vss-batch-p")
-    VersionedStore.appendPartitioned(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), ppath, "p")
+    VersionedStore.append(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "p"), ppath, partCol = Some("p"))
     val got = spark.read.format("graft-versioned").option("path", ppath)
       .load().select("id", "p").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
