@@ -84,21 +84,22 @@ object Bench {
   // tools/duckdb_baseline.py, committed) carries DuckDB's wall-times on
   // the ORACLE SQL over the same parquet at the same sf on the same
   // host. ratio = our steady seconds / DuckDB seconds per query.
-  /** Parse {"sf": ..., "times": {name: sec}} with a regex (no JSON lib
-    * on the classpath); returns empty when the file is missing or was
-    * measured at a different sf than this run (an sf0.01 smoke run
-    * must not ratio itself against sf0.1 baselines). */
+  /** Read `times` ({name: sec}) from {"sf": ..., "times": {...}};
+    * returns empty when the file was measured at a different sf than
+    * this run (an sf0.01 smoke run must not ratio itself against sf0.1
+    * baselines). */
   private[graft] def parseBaseline(body: String, sfDir: String)
       : Map[String, Double] = {
-    val sfRe = """"sf"\s*:\s*"([^"]+)"""".r
-    val measured = sfRe.findFirstMatchIn(body).map(_.group(1))
-    if (!measured.contains(sfDir)) return Map.empty
-    val i = body.indexOf("\"times\"")
-    if (i < 0) return Map.empty
-    val re = """"([A-Za-z0-9_]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r
-    re.findAllMatchIn(body.substring(i))
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .filter { case (k, v) => k != "times" && v > 0 }.toMap
+    import org.json4s._
+    val doc = org.json4s.jackson.JsonMethods.parse(body)
+    if (doc \ "sf" != JString(sfDir)) return Map.empty
+    doc \ "times" match {
+      case JObject(fields) => fields.collect {
+        case (k, JDouble(v)) if v > 0 => k -> v
+        case (k, JInt(v)) if v > 0 => k -> v.toDouble
+      }.toMap
+      case _ => Map.empty
+    }
   }
   private lazy val baseline: Map[String, Double] =
     try {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * No reference analogue (LLM-pipeline extension). The testdata
   * documents table carries no URL column, so the driver gate rides a
-  * deterministic synthesized URL (SparkEntry.docsUrl: four
+  * deterministic synthesized URL (CorpusQueries.docsUrl: four
   * scheme/www/port/tracking/fragment/slash variants per dup group) —
   * the Spark side must run the REAL canonicalization chain while the
   * DuckDB oracle states the expected canonical in closed form

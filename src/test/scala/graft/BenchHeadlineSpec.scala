@@ -121,6 +121,11 @@ class BenchHeadlineSpec extends AnyFunSuite {
     assert(Bench.parseBaseline("""{"no":"times"}""", "x").isEmpty)
   }
 
+  test("baseline parser reads only the times object: a numeric key after it is no query time") {
+    val body = """{"sf":"sf0.1","times":{"q_a":0.5,"q_b":2},"threads":32}"""
+    assert(Bench.parseBaseline(body, "sf0.1") == Map("q_a" -> 0.5, "q_b" -> 2.0))
+  }
+
   test("headline is valid JSON shape (balanced, parse-spot-checked)") {
     val cold = (0 until 40).map(i => (mkName(i), i * 1.5, true))
     val line = Bench.renderHeadline(cold, cold.map(c => (c._1, c._2)), Nil,

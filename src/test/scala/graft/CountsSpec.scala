@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.QueryDef
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Machine-derived registry counts (VERDICT r14 #4: the hand-maintained
@@ -31,9 +32,16 @@ class CountsSpec extends AnyFunSuite {
         s"the registry has $q / $o — update SURVEY's COUNTS line")
   }
 
-  test("every declared oracle names a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles with no query entry: " +
-      orphans.toSeq.sorted.mkString(", "))
+  // Names are spread over eight domain modules, so a clash is a real
+  // risk, and a map built from pairs would keep the last entry silently.
+  test("a query name declared twice is refused, and the message names it") {
+    val plan: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+      (_, _) => null
+    val e = intercept[IllegalArgumentException](QueryDef.byName(Seq(
+      QueryDef("q_once", plan, None),
+      QueryDef("q_twice", plan, Some("SELECT 1")),
+      QueryDef("q_twice", plan, None))))
+    assert(e.getMessage.contains("query name declared more than once: q_twice"),
+      e.getMessage)
   }
 }

@@ -6,7 +6,7 @@ import graft.operators.{Stats, UrlOps}
 /** URL canonicalization / host-dedup (§2 #196) and Spearman rankCorr
   * (§2 #197) — edge-case pins for the driver-gated q_url_dedup /
   * q_host_cap / q_rank_corr queries (promoted r19; the driver gate
-  * rides SparkEntry.docsUrl's synthesized URL column since the
+  * rides CorpusQueries.docsUrl's synthesized URL column since the
   * testdata documents table carries none). */
 class UrlOpsSpec extends SparkSpec {
   import spark.implicits._
