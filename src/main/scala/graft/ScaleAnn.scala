@@ -39,10 +39,9 @@ object ScaleAnn {
       .filter(_ >= 1).getOrElse(100)
     val out = sys.env.getOrElse("SPARK_GRAFT_ANN_OUT", "SCALE_ANN.json")
 
-    // the persisted-MV layer rides along by default: truth sets and
-    // per-method gate results attach across ScaleAnn runs the same way
-    // Bench's MVs do (ADVICE r17: the pid-scoped throwaway dir made
-    // the advertised attach seam structurally unreachable)
+    // the persisted-MV layer rides along by default: the clustered
+    // corpus MV attaches across ScaleAnn runs the same way Bench's MVs
+    // do; truth sets and gate results are session-only (AnnGates)
     graft.model.Views.enableDefaultDiskRoot()
 
     val spark = GraftSession.local()
@@ -84,8 +83,8 @@ object ScaleAnn {
       s"sq_refine=${op.sqRefine}")
 
     val tg0 = System.nanoTime()
-    val cells = graft.operators.AnnGates.gates(spark, dir, "isotropic", iso, dir)
-      .unionByName(graft.operators.AnnGates.gates(spark, dir, "clustered",
+    val cells = graft.operators.AnnGates.gates(spark, "isotropic", iso, dir)
+      .unionByName(graft.operators.AnnGates.gates(spark, "clustered",
         clustered, dir + ":clustered"))
       .orderBy(col("method"), col("shape"))
       .collect()

@@ -328,6 +328,10 @@ object Views {
     p
   }
 
+  /** How many frames [[pinned]] holds for `spark`'s application. */
+  private[graft] def pinnedCount(spark: SparkSession): Int =
+    Option(pinnedByApp.get(spark.sparkContext.applicationId)).fold(0)(_.size)
+
   // Memoized tiny plan statistics (e.g. BloomPrune's dim-cardinality
   // probe): scalar values that cost one bounded Spark action to
   // compute and that repeated query CONSTRUCTION would otherwise

@@ -11,14 +11,11 @@ import org.apache.spark.sql.functions._
   * Gate design (r12–r16 history in the scaladoc below): one exact
   * brute-force truth set per corpus shape, seven approximate methods
   * measured against it, each with a recall bar chosen at its
-  * documented operating envelope. Truth sets + per-method results
-  * route through Views.cached (VERDICT r16 #7): within a session that
-  * is plain session caching; with SPARK_GRAFT_MV_DISK set they persist
-  * keyed by (input listing, code build), so a COLD pass pays a k-rows
-  * parquet read instead of rebuilding the models — sound because every
-  * gate is deterministic (seeded hyperplanes/hashes, deterministic
-  * k-means init, fixed probe counts) and the fingerprint moves on any
-  * input or code change.
+  * documented operating envelope. Truth sets + per-method results are
+  * pinned for the session ([[graft.model.Views.pinned]]): a steady
+  * pass reuses them, but they are never written to the MV disk layer,
+  * so a cold pass always computes its recall instead of reading an
+  * earlier run's answer.
   */
 object AnnGates {
 
@@ -114,16 +111,15 @@ object AnnGates {
     * refine·k from the probed cells, exact rerank — operating point
     * measured on the adversarial isotropic shape where ADC ranks
     * near-tie cosines). */
-  def gates(s: SparkSession, d: String, shape: String, corpus: DataFrame,
+  def gates(s: SparkSession, shape: String, corpus: DataFrame,
             cacheKey: String): DataFrame = {
     val queries = corpus.filter(col("id") < 5)
     val exact = graft.model.Views
-      .cached(s, d, s"ann_truth_$shape")(
-        Similarity.bruteForceTopK(corpus, queries, 10))
+      .pinned(Similarity.bruteForceTopK(corpus, queries, 10))
       .select(col("query_id"), col("corpus_id"))
-    def gate(name: String, bar: Double, approx: => DataFrame) =
+    def gate(name: String, bar: Double, approx: DataFrame) =
       exact.join(
-          graft.model.Views.cached(s, d, s"ann_gate_${shape}_$name")(
+          graft.model.Views.pinned(
               approx.select(col("query_id"), col("corpus_id")))
             .withColumn("hit", lit(1)),
           Seq("query_id", "corpus_id"), "left")
@@ -133,18 +129,14 @@ object AnnGates {
           (col("recall") >= bar).as("recall_ge_bar"))
     // the count is memoized per canonical corpus plan (one cached-frame
     // job per session); the hierarchical ivf2 stays FIXED by design.
-    // Models are LAZY (VERDICT r17 #3/#4): each gate's per-method frame
-    // reaches Views.cached as a by-name thunk, so when every gate
-    // result disk-attaches (a primed SPARK_GRAFT_MV_DISK cache), no
-    // k-means/PQ fit runs at all — the cold pass is parquet reads.
     val op = operatingPoint(graft.model.Views.memoizedStat(corpus)(_.count()))
-    lazy val model = IvfIndex.buildCached(s, corpus, corpusKey = cacheKey,
+    val model = IvfIndex.buildCached(s, corpus, corpusKey = cacheKey,
       nlist = op.nlist)
-    lazy val hier = IvfIndex.buildHierarchicalCached(s, corpus,
+    val hier = IvfIndex.buildHierarchicalCached(s, corpus,
       corpusKey = cacheKey + ":hier", nlistTotal = 16)
-    lazy val pq = PqIndex.buildCached(s, model, corpusKey = cacheKey + ":pq",
+    val pq = PqIndex.buildCached(s, model, corpusKey = cacheKey + ":pq",
       dim = 64, m = 8)
-    lazy val pqr = PqIndex.buildCached(s, model, corpusKey = cacheKey + ":pqr",
+    val pqr = PqIndex.buildCached(s, model, corpusKey = cacheKey + ":pqr",
       dim = 64, m = 8, byResidual = true)
     gate("ivf", 0.9,
         IvfIndex.topK(s, model, queries, k = 10, nprobe = op.nprobeIvf))

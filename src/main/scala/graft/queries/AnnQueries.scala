@@ -338,8 +338,8 @@ private[graft] object AnnQueries {
       val emb = Tables.embeddings(s, d)
       val iso = Similarity.normalized(emb, "vec_id", "embedding")
       val clustered = annClusteredCorpus(s, d)
-      operators.AnnGates.gates(s, d, "isotropic", iso, d)
-        .unionByName(operators.AnnGates.gates(s, d, "clustered", clustered,
+      operators.AnnGates.gates(s, "isotropic", iso, d)
+        .unionByName(operators.AnnGates.gates(s, "clustered", clustered,
           d + ":clustered"))
         .select(col("method"), col("shape"), col("bar"),
           col("recall_ge_bar"))

@@ -864,13 +864,14 @@ private[graft] object CorpusQueries {
       val docs = Tables.documents(s, d)
       val templated = docs.select(col("doc_id"),
         concat(lit(NeardupBoiler), lit(" "), col("text")).as("text"))
-      // per-shape recall rows session-cache like the ANN gate results:
-      // deterministic (seeded hashes, exact integer truth), 2 rows per
-      // shape — uncached, every steady pass re-ran both LSH pipelines
-      // over corpus ∪ twins for booleans that cannot change
+      // per-shape recall rows are pinned for the session like the ANN
+      // gate results: deterministic (seeded hashes, exact integer
+      // truth), 2 rows per shape — unpinned, every steady pass re-ran
+      // both LSH pipelines over corpus ∪ twins for booleans that cannot
+      // change; never written to the MV disk layer, so a cold pass
+      // computes them
       def gated(shape: String, in: DataFrame) =
-        Views.cached(s, d, "neardup_gate_" + shape)(
-            Dedup.plantedRecall(in, "doc_id", "text"))
+        Views.pinned(Dedup.plantedRecall(in, "doc_id", "text"))
           .select(col("method"), lit(shape).as("shape"), col("n_truth"),
             when(col("method") === "minhash_lsh", 0.75).otherwise(0.1)
               .as("bar"),

@@ -174,7 +174,7 @@ private[graft] object StoreQueries {
         |WHERE NOT (name = 'UPDATED' AND c_custkey % 20 = 0)
         |ORDER BY c_custkey""".stripMargin)),
 
-    // Hierarchical merge-on-read, driver-gated (fixture doc at
+    // Partitioned merge-on-read, driver-gated (fixture doc at
     // versionedMorPartDim): vectors subtract ABOVE the FileIndex
     // scan, matched keys MOVE partitions without a rewrite, and the
     // final snapshot hash pins all of it against the oracle's
@@ -182,7 +182,7 @@ private[graft] object StoreQueries {
     QueryDef("q_versioned_mor_part", (s, d) =>
       graft.sources.VersionedStore.read(s, versionedMorPartDim(s, d))
         .orderBy(col("c_custkey")),
-    // the hierarchical fixture's recomputation — identical algebra,
+    // the partitioned fixture's recomputation — identical algebra,
     // with the partition column moving on update
     Some(
       """WITH base AS (
@@ -301,7 +301,7 @@ private[graft] object StoreQueries {
       graft.sources.VersionedStore.append(t.where(col("ts") >= cut), path)
     }
 
-  // Flat manifest-versioned customer dim driven through the row-level
+  // Unpartitioned versioned customer dim driven through the row-level
   // operations — the q_versioned_upsert fixture: v1 = the base dim,
   // v2 = MERGE (update every custkey%10==0 row, insert a %100==1
   // echo), v3 = DELETE custkey%7==3. Copy-on-write file rewrite on
@@ -325,7 +325,7 @@ private[graft] object StoreQueries {
         col("c_custkey") % 7 === 3)
     }
 
-  // Flat manifest-versioned customer dim driven across a SCHEMA
+  // Unpartitioned versioned customer dim driven across a SCHEMA
   // EVOLUTION — the q_versioned_evolve fixture:
   //   v1 = even custkeys under (c_custkey, name);
   //   v2 = odd custkeys appended WITH a new `segment` column
@@ -360,7 +360,7 @@ private[graft] object StoreQueries {
         col("segment").isNull && col("c_custkey") % 11 === 5)
     }
 
-  // Flat manifest-versioned customer dim driven through the
+  // Unpartitioned versioned customer dim driven through the
   // MERGE-ON-READ row-level ops — the q_versioned_mor fixture:
   //   v1 = the base dim (4 files);
   //   v2 = deleteVectored custkey%7==3 (a position-vector sidecar,
@@ -396,10 +396,10 @@ private[graft] object StoreQueries {
         col("name") === "UPDATED" && col("c_custkey") % 20 === 0)
     }
 
-  // HIERARCHICAL merge-on-read fixture — q_versioned_mor_part: the
+  // PARTITIONED merge-on-read fixture — q_versioned_mor_part: the
   // customer dim partitioned by market segment, driven through the
-  // vectored ops (the store picks the hierarchical path from the
-  // table's manifest form):
+  // vectored ops (the store reads the layout from the table's
+  // manifest list):
   //   v1 = append partitioned by segment;
   //   v2 = deleteVectored custkey%7==3 (O(1) metadata:
   //        every pmanifest carried verbatim, one table-level #dv);
@@ -409,7 +409,7 @@ private[graft] object StoreQueries {
   //        BUILDING;
   //   v4 = deleteVectored name='UPDATED' AND custkey%20==0
   //        (vectors over the merge's own new files).
-  // The hash pins the hierarchical vector subtraction end-to-end:
+  // The hash pins the partitioned vector subtraction end-to-end:
   // the anti-join above the Catalyst FileIndex scan, cross-partition
   // moves, vector layering.
   private def versionedMorPartDim(s: SparkSession, d: String): String =

@@ -9,10 +9,9 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
-/** Catalyst-integrated snapshot scan for [[VersionedStore]] — the
-  * refinement [[VersionedStore.readPartitionsAsOf]]'s doc promised:
-  * instead of a reader-side UNION of per-partition scans with pruning
-  * done by hand through API parameters, the manifest metadata is
+/** Catalyst-integrated snapshot scan for [[VersionedStore]]: instead
+  * of a reader-side UNION of per-partition scans with pruning done by
+  * hand through API parameters, the manifest metadata is
   * handed to Spark as a [[FileIndex]], so a snapshot read plans as
   * ONE `FileScan` whose partition pruning and file-level stats
   * pruning are driven by the QUERY'S OWN `WHERE` clause inside the
@@ -40,8 +39,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Versions are immutable, so the index never refreshes: a pinned
   * index keeps resolving its snapshot regardless of later commits —
-  * snapshot isolation at the plan level. Works over both manifest
-  * forms (flat tables plan as one unpartitioned listing).
+  * snapshot isolation at the plan level. An unpartitioned table's
+  * list header names no partition column, so its one entry plans as
+  * one listing under an empty partition schema.
   *
   * 100 TB note: file sizes come from one local `stat` per listed file
   * here; on an object store the pmanifest line should carry the
@@ -50,26 +50,23 @@ import org.apache.spark.sql.types.StructType
 final class VersionedFileIndex(spark: SparkSession, table: String,
                                version: Int) extends FileIndex {
 
-  private val mlist: Option[VersionedStore.Mlist] =
-    if (VersionedStore.isFlatVersion(table, version)) None
-    else Some(VersionedStore.readMlist(table, version))
+  private val ml: VersionedStore.Mlist =
+    VersionedStore.readMlist(table, version)
 
   /** Every live data file of the version (table-relative). */
   private lazy val liveFiles: Seq[String] =
     VersionedStore.filesAsOf(table, version)
 
-  override val partitionSchema: StructType = mlist match {
-    case Some(ml) => StructType.fromDDL(s"`${ml.partCol}` ${ml.partType}")
-    case None => new StructType()
-  }
+  override val partitionSchema: StructType = ml.partitionSchema
 
-  /** Partition value string → a one-column InternalRow of the
-    * partition type (the same lossless reattachment the union reader
-    * does with lit().cast, done once per partition at planning). */
+  /** Partition value string → an InternalRow of the partition schema
+    * (the same lossless reattachment the file-delta reader does with
+    * lit().cast, done once per partition at planning; empty when the
+    * table is unpartitioned). */
   private def partValueRow(value: String): InternalRow = {
-    val dt = partitionSchema.head.dataType
     val tz = spark.conf.get("spark.sql.session.timeZone")
-    InternalRow(Cast(Literal(value), dt, Some(tz)).eval(InternalRow.empty))
+    InternalRow.fromSeq(partitionSchema.map(f =>
+      Cast(Literal(value), f.dataType, Some(tz)).eval(InternalRow.empty)))
   }
 
   private def status(rel: String): FileStatus = {
@@ -83,37 +80,34 @@ final class VersionedFileIndex(spark: SparkSession, table: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
-      : Seq[PartitionDirectory] = mlist match {
-    case None =>
-      Seq(PartitionDirectory(InternalRow.empty, liveFiles.map(status).toArray))
-    case Some(ml) =>
-      val selected = prunePartitions(ml.parts, partitionFilters)
-      // one [lo, hi] window PER declared stats column; a file is
-      // skipped when ANY column's recorded (min, max) cannot
-      // intersect its window. Lines whose bounds don't cover the full
-      // declaration (legacy / statless) are always kept.
-      val windows = ml.statsCols.map(c => statsBounds(dataFilters, c))
-      // each conjunct that is WHOLLY an equality/IN shape on the
-      // declared bloom column yields a probe-hash set the file MUST
-      // intersect; a fingerprinted file disproving every value of any
-      // one set cannot hold a matching row
-      val probes = ml.bloomCol.toSeq.flatMap(c =>
-        dataFilters.flatMap(f => probeHashes(f, c)))
-      selected.map { p =>
-        val entries = VersionedStore.readPmanifestEntries(table, p.pmanifest)
-        val kept = entries.filter { e =>
-          val statsOk = windows.isEmpty ||
-            e.bounds.size != windows.size ||
-            e.bounds.zip(windows).forall {
-              case ((mn, mx), (lo, hi)) => mx >= lo && mn <= hi }
-          val bloomOk = e.bloom.isEmpty || probes.forall(set =>
-            set.exists(h =>
-              graft.functions.BloomExprs.contains(e.bloom.get, h)))
-          statsOk && bloomOk
-        }
-        PartitionDirectory(partValueRow(p.value),
-          kept.map(e => status(e.file)).toArray)
-      }.filter(_.files.nonEmpty)
+      : Seq[PartitionDirectory] = {
+    val selected = prunePartitions(ml.parts, partitionFilters)
+    // one [lo, hi] window PER declared stats column; a file is
+    // skipped when ANY column's recorded (min, max) cannot
+    // intersect its window. Lines whose bounds don't cover the full
+    // declaration (legacy / statless) are always kept.
+    val windows = ml.statsCols.map(c => statsBounds(dataFilters, c))
+    // each conjunct that is WHOLLY an equality/IN shape on the
+    // declared bloom column yields a probe-hash set the file MUST
+    // intersect; a fingerprinted file disproving every value of any
+    // one set cannot hold a matching row
+    val probes = ml.bloomCol.toSeq.flatMap(c =>
+      dataFilters.flatMap(f => probeHashes(f, c)))
+    selected.map { p =>
+      val entries = VersionedStore.readPmanifestEntries(table, p.pmanifest)
+      val kept = entries.filter { e =>
+        val statsOk = windows.isEmpty ||
+          e.bounds.size != windows.size ||
+          e.bounds.zip(windows).forall {
+            case ((mn, mx), (lo, hi)) => mx >= lo && mn <= hi }
+        val bloomOk = e.bloom.isEmpty || probes.forall(set =>
+          set.exists(h =>
+            graft.functions.BloomExprs.contains(e.bloom.get, h)))
+        statsOk && bloomOk
+      }
+      PartitionDirectory(partValueRow(p.value),
+        kept.map(e => status(e.file)).toArray)
+    }.filter(_.files.nonEmpty)
   }
 
   /** The probe-hash set a conjunct implies for the bloom column, when

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   * snapshot version, like the API calls they delegate to. The
   * copy-on-write / merge-on-read choice is a session conf,
   * `spark.graft.mutation.mode = cow | vectored` (DML text stays
-  * ANSI): both DELETE and MERGE honor it on flat AND partitioned
+  * ANSI): both DELETE and MERGE honor it on unpartitioned AND partitioned
   * tables — the vectored forms are the O(batch + matched) 100 TB
   * shape, the copy-on-write forms keep the table vector-free.
   * Unregistered table names fall through to Spark's own parser

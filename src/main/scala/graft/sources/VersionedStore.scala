@@ -15,53 +15,53 @@ import scala.jdk.CollectionConverters._
   * swap races the delete, and there is no way to reproduce last
   * week's table state for an audit or a backfill diff. The standard
   * fix is indirection through immutable metadata: data files are
-  * append-only, every commit publishes a MANIFEST (the complete list
-  * of live files for that version) with an atomic rename, and readers
-  * resolve a manifest once — so a query pinned to version v is
+  * append-only, every commit atomically publishes a manifest list
+  * (resolving to the complete set of live files for that version), and
+  * readers resolve a list once — so a query pinned to version v is
   * untouched by later appends, overwrites, compactions or vacuums of
   * other versions.
   *
   * Commit protocol (optimistic, one intended writer — the
   * reference's one indexer process): (1) write the new data files
   * under an ATTEMPT-UNIQUE data/commit-<v>-<attempt>/; (2) write the
-  * manifest to an attempt-unique tmp; (3) RENAME it to v<v>.manifest
-  * — the one atomic publish, CREATE-EXCLUSIVE outside the
-  * batch-replay seams. A crash anywhere before (3) leaves version
-  * v−1 live and the orphaned files invisible (vacuum removes them);
-  * a retry mints a fresh attempt and never touches the debris. If a
-  * second writer races the same version, attempt-unique paths mean
-  * neither can clobber files the other might publish, and the
-  * exclusive rename makes exactly one the winner — the loser fails
-  * loudly with only invisible debris behind (Iceberg's optimistic
-  * commit, minimal form). Compaction is just a commit whose rows are
-  * logically identical; old versions keep reading the uncompacted
-  * files until vacuumed.
+  * touched per-partition manifests under attempt-unique names and the
+  * version's schema record; (3) publish the manifest LIST v<v>.mlist
+  * through an attempt-unique tmp — the one atomic publish,
+  * CREATE-EXCLUSIVE outside the batch-replay seams. A crash anywhere
+  * before (3) leaves version v−1 live and the orphaned files invisible
+  * (vacuum removes them); a retry mints a fresh attempt and never
+  * touches the debris. If a second writer races the same version,
+  * attempt-unique paths mean neither can clobber files the other
+  * might publish, and the exclusive publish makes exactly one the
+  * winner — the loser fails loudly with only invisible debris behind
+  * (Iceberg's optimistic commit, minimal form). Compaction is just a
+  * commit whose rows are logically identical; old versions keep
+  * reading the uncompacted files until vacuumed.
   *
-  * Layout:  <path>/data/commit-<v>-<attempt>/part-*.parquet (immutable)
+  * Layout:  <path>/data/commit-<v>-<attempt>/[<partCol>=<value>/]part-*.parquet
   *          <path>/data/commit-<v>-<attempt>-dv/…   (delete vectors)
-  *          <path>/manifests/v<v>.manifest          (sorted file list;
-  *            `D:<sidecar>` lines carry merge-on-read delete vectors)
+  *          <path>/manifests/v<v>.mlist    (manifest list: header,
+  *            one `<value>\t<pmanifest>` entry per live partition,
+  *            `#dv\t<sidecar>` lines for merge-on-read delete vectors)
+  *          <path>/manifests/p-<value>-v<v>-<attempt>.pmanifest
+  *            (immutable per-partition file list + file stats/blooms)
+  *          <path>/manifests/v<v>.schema   (recorded logical schema)
   *
-  * 100 TB: a flat manifest lists every live file, which works to
-  * ~10⁵ files; past that the metadata itself needs the second level,
-  * and this store has it — the HIERARCHICAL form (Iceberg's actual
-  * refinement, [[append]] with a `partCol`/[[overwritePartitions]]):
-  * `v<v>.mlist` is a manifest LIST mapping each partition value to an
-  * immutable per-partition manifest file, so a commit touching k of
-  * N partitions writes k new pmanifests and one new list (the other
+  * One form for every table (Iceberg's design: partitioned and
+  * unpartitioned tables share the manifest-list structure). The list
+  * header names the partition column and type — or none, for an
+  * unpartitioned table, whose list holds one entry with no partition
+  * directory under its commit dir. A commit touching k of N
+  * partitions writes k new pmanifests and one new list (the other
   * N−k entries are carried BY REFERENCE — O(touched), not O(table)),
-  * and a pruned read ([[readPartitionsAsOf]]) never opens the
-  * untouched partitions' manifests at all. The protocol (immutable
-  * data + atomic metadata pointer swap) is unchanged; flat and
-  * hierarchical versions share one version counter, one reader
-  * dispatch and one vacuum. */
+  * and a pruned read ([[readIndexed]]) never opens the unselected
+  * partitions' manifests at all. Because the header carries the
+  * layout, every commit — appends, overwrites, compactions, row
+  * operations, TTL expiry — keeps it. */
 object VersionedStore {
 
   private def manifestDir(path: String) = new File(path, "manifests")
-  private def manifestFile(path: String, v: Int) =
-    new File(manifestDir(path), s"v$v.manifest")
 
-  private val ManifestRe = "v([0-9]+)\\.manifest".r
   private val MlistRe = "v([0-9]+)\\.mlist".r
   private val SchemaRe = "v([0-9]+)\\.schema".r
   private def mlistFile(path: String, v: Int) =
@@ -71,10 +71,8 @@ object VersionedStore {
 
   // ---- schema tracking + evolution -----------------------------------
 
-  /** The LOGICAL table schema recorded for version `v` (hierarchical
-    * versions include the partition column), when the version was
-    * committed by a schema-aware writer; None for legacy versions,
-    * whose readers fall back to one data-file footer. */
+  /** The LOGICAL table schema recorded for version `v` (partition
+    * column included); None when no commit recorded one for `v`. */
   def schemaAsOf(path: String, v: Int): Option[org.apache.spark.sql.types.StructType] = {
     val f = schemaFile(path, v)
     if (!f.exists()) None
@@ -82,21 +80,12 @@ object VersionedStore {
       new String(Files.readAllBytes(f.toPath), "UTF-8")))
   }
 
-  /** Version `v`'s logical schema: recorded if the commit wrote one,
-    * else inferred from a data-file footer (+ the partition column
-    * for hierarchical versions) — the legacy behavior. */
-  private def effectiveSchema(spark: SparkSession, path: String, v: Int)
+  /** Version `v`'s logical schema. Every commit records its schema
+    * before it publishes, so a published version always has one. */
+  private def effectiveSchema(path: String, v: Int)
       : org.apache.spark.sql.types.StructType =
-    schemaAsOf(path, v).getOrElse {
-      val files = filesAsOf(path, v)
-      val data = spark.read.parquet(s"$path/${files.head}").schema
-      if (isFlatVersion(path, v)) data
-      else {
-        val ml = readMlist(path, v)
-        data.add(ml.partCol,
-          org.apache.spark.sql.types.DataType.fromDDL(ml.partType))
-      }
-    }
+    schemaAsOf(path, v).getOrElse(
+      sys.error(s"version $v of $path has no recorded schema"))
 
   /** Enforce commit-time schema compatibility and produce the new
     * version's recorded schema (Delta's enforcement + mergeSchema):
@@ -113,7 +102,7 @@ object VersionedStore {
       : org.apache.spark.sql.types.StructType = {
     if (prev == 0) incoming
     else {
-      val old = effectiveSchema(spark, path, prev)
+      val old = effectiveSchema(path, prev)
       val byName = incoming.map(f => f.name -> f).toMap
       old.foreach { f =>
         require(byName.contains(f.name),
@@ -164,44 +153,26 @@ object VersionedStore {
     }
   }
 
-  /** Whether version `v` is a flat (non-partitioned) commit. */
-  private[sources] def isFlatVersion(path: String, v: Int): Boolean =
-    manifestFile(path, v).exists()
-
-  /** Latest committed version (flat `.manifest` or hierarchical
-    * `.mlist` — one version counter); 0 = empty table. */
+  /** Latest committed version; 0 = empty table. */
   def currentVersion(path: String): Int = {
     val files = Option(manifestDir(path).list()).getOrElse(Array.empty)
-    files.collect {
-      case ManifestRe(v) => v.toInt
-      case MlistRe(v) => v.toInt
-    }.foldLeft(0)(math.max)
+    files.collect { case MlistRe(v) => v.toInt }.foldLeft(0)(math.max)
   }
 
-  /** The live data files (table-relative) of version `v`, resolving
-    * through the manifest list when `v` is a hierarchical commit.
-    * Delete-vector sidecar lines are NOT data files and are excluded
-    * (see [[deleteVectorsAsOf]]). */
-  def filesAsOf(path: String, v: Int): Seq[String] = {
-    val mf = manifestFile(path, v)
-    if (mf.exists())
-      Files.readAllLines(mf.toPath).asScala.toSeq
-        .filter(l => l.nonEmpty && !l.startsWith(DvPrefix))
-    else {
-      require(mlistFile(path, v).exists(),
-        s"version $v does not exist (vacuumed or never committed)")
-      readMlist(path, v).parts.flatMap(p => readPmanifest(path, p.pmanifest))
-    }
-  }
+  /** The live data files (table-relative) of version `v`, resolved
+    * through its manifest list. Delete-vector sidecars are NOT data
+    * files and are excluded (see [[deleteVectorsAsOf]]). */
+  def filesAsOf(path: String, v: Int): Seq[String] =
+    readMlist(path, v).parts.flatMap(p => readPmanifest(path, p.pmanifest))
 
   // ---- merge-on-read delete vectors ----------------------------------
   //
   // A copy-on-write point delete in a 100 TB table rewrites every file
   // that holds one matching row — O(touched data). The merge-on-read
   // form writes only a DELETE VECTOR sidecar: (table-relative file,
-  // row position) pairs, published in the manifest as `D:<sidecar>`
-  // lines next to the data-file lines (Delta's deletion vectors /
-  // Iceberg v2 position deletes). Commit cost is O(deleted rows);
+  // row position) pairs, published as `#dv` lines of the manifest
+  // list (Delta's deletion vectors / Iceberg v2 position deletes).
+  // Commit cost is O(deleted rows);
   // readers subtract the vector with ONE broadcast anti-join keyed on
   // (_metadata-derived relative path, _metadata.row_index) — zero-DV snapshots
   // keep the plain scan plan with no join at all. Positions are the
@@ -219,28 +190,13 @@ object VersionedStore {
   // vacuum retains sidecars exactly like data files while any
   // retained version references them.
 
-  private val DvPrefix = "D:"
-
   /** The delete-vector sidecar files (table-relative) of version `v`
-    * — `D:` lines in a flat manifest, `#dv` lines in a hierarchical
-    * manifest list (vector rows key on manifest-relative file paths,
-    * so one table-level
-    * vector set serves every partition; a partition's rewrite leaves
-    * its vector rows inert). */
-  def deleteVectorsAsOf(path: String, v: Int): Seq[String] = {
-    val mf = manifestFile(path, v)
-    if (mf.exists())
-      Files.readAllLines(mf.toPath).asScala.toSeq
-        .filter(_.startsWith(DvPrefix)).map(_.substring(DvPrefix.length))
-    else if (mlistFile(path, v).exists()) readMlist(path, v).dvs
-    else Nil
-  }
-
-  /** Full manifest lines to carry into a child commit: data files
-    * plus delete-vector lines (an append on a vectored table must
-    * keep the vectors or deleted rows would resurrect). */
-  private def carriedLines(path: String, v: Int): Seq[String] =
-    filesAsOf(path, v) ++ deleteVectorsAsOf(path, v).map(DvPrefix + _)
+    * — the `#dv` lines of its manifest list (vector rows key on
+    * manifest-relative file paths, so one table-level vector set
+    * serves every partition; a partition's rewrite leaves its vector
+    * rows inert). */
+  def deleteVectorsAsOf(path: String, v: Int): Seq[String] =
+    if (mlistFile(path, v).exists()) readMlist(path, v).dvs else Nil
 
   /** Sidecar bytes above which the vector side stops being broadcast:
     * past this the anti-join plans as a shuffled join instead of
@@ -323,7 +279,7 @@ object VersionedStore {
   /** Version `v`'s data files `rel` with `v`'s delete vectors applied
     * — the copy-on-write rewrite input (a raw read would resurrect
     * vector-deleted rows), under the recorded schema so pre-evolution
-    * files null-fill. A hierarchical version's files come back with
+    * files null-fill. A partitioned table's files come back with
     * their partition value reattached (the predicate may reference it;
     * data files do not store it), so the commit can lay the rows back
     * out by partition. */
@@ -332,15 +288,14 @@ object VersionedStore {
     val dvs = deleteVectorsAsOf(path, v)
     // stamp each scan, subtract once over the union
     val rows = readVersionFiles(spark, path, v, rel,
-      Some(effectiveSchema(spark, path, v)),
+      Some(effectiveSchema(path, v)),
       perScan = if (dvs.isEmpty) identity else withMeta).get
     if (dvs.isEmpty) rows else subtractStamped(spark, path, rows, dvs)
   }
 
   /** Read the table as of version `v` — a stable snapshot: later
     * commits, compactions and vacuums of other versions never change
-    * what this returns. Both manifest forms plan through
-    * [[readIndexed]] (a flat version is one unpartitioned listing), under
+    * what this returns. Plans through [[readIndexed]], under
     * the version's RECORDED schema: files written before a schema
     * evolution null-fill the added columns, and every snapshot reads
     * as the schema it was committed with. */
@@ -357,12 +312,9 @@ object VersionedStore {
     * scan (not a per-partition union) and the query's own WHERE
     * clause drives partition pruning AND file-stats pruning inside
     * the planner — no store-specific pruning parameters at the call
-    * site, and whole-stage codegen spans one scan node. This is the
-    * scale path for reads: [[readPartitionsAsOf]] stays as the
-    * explicit-API form (and the two are spec-pinned identical).
-    * Schema is the version's recorded one (legacy versions: one
-    * data-file footer), with the partition column reattached from the
-    * manifest list. */
+    * site, and whole-stage codegen spans one scan node. Schema is the
+    * version's recorded one, with the partition column reattached
+    * from the manifest list. */
   def readIndexed(spark: SparkSession, path: String, v: Int): DataFrame =
     // delete vectors subtract ABOVE the relation (the FileIndex prunes
     // partitions/files inside the planner as ever; the broadcast
@@ -377,18 +329,11 @@ object VersionedStore {
       : org.apache.spark.sql.sources.BaseRelation = {
     val idx = new VersionedFileIndex(spark, path, v)
     // recorded schema minus the partition column (reattached by the
-    // index's partitionSchema); legacy versions fall back to a footer.
-    // A version whose every row was deleted lists no files and reads
-    // empty under its recorded schema.
+    // index's partitionSchema). A version whose every row was deleted
+    // lists no files and reads empty under its recorded schema.
     val partNames = idx.partitionSchema.fieldNames.toSet
-    val dataSchema = schemaAsOf(path, v)
-      .map(s => org.apache.spark.sql.types.StructType(
-        s.fields.filterNot(f => partNames.contains(f.name))))
-      .getOrElse {
-        val files = idx.inputFiles
-        require(files.nonEmpty, s"version $v of $path lists no data files")
-        spark.read.parquet(files.head).schema
-      }
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      effectiveSchema(path, v).fields.filterNot(f => partNames.contains(f.name)))
     org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       idx, idx.partitionSchema, dataSchema, None,
       new org.apache.spark.sql.execution.datasources.parquet
@@ -403,12 +348,11 @@ object VersionedStore {
     *
     * The table's layout comes from its head version ([[layoutAt]]):
     * `partCol`, `statsCol` and `bloomCol` declare it only when this
-    * append creates the table. A flat table publishes a `.manifest`
-    * listing every carried file plus the new ones. A hierarchical
-    * table appends rows into their partitions: only the partitions
-    * present in `df` get a NEW per-partition manifest (carried files +
-    * added files); every untouched partition is carried by reference
-    * — the commit writes O(touched partitions) metadata, not O(table).
+    * append creates the table. Rows land in their partitions (an
+    * unpartitioned table has one): only the partitions present in
+    * `df` get a NEW per-partition manifest (carried files + added
+    * files); every untouched partition is carried by reference — the
+    * commit writes O(touched partitions) metadata, not O(table).
     *
     * `statsCol` declares a numeric/timestamp column whose per-file
     * min/max land in the pmanifest, harvested from the parquet FOOTERS
@@ -440,31 +384,23 @@ object VersionedStore {
     appendAt(df, path, currentVersion(path) + 1, allowSchemaEvolution,
       partCol, statsCol, bloomCol)
 
-  /** [[append]] committing version `v` over `v − 1`. */
+  /** [[append]] committing version `v` over `v − 1`. Pure appends
+    * auto-rebase when a concurrent writer committed DISJOINT
+    * partitions first (Iceberg's optimistic retry) — the realistic
+    * multi-writer topology (backfill + live stream) stops serializing
+    * through a loud loser; same-partition conflicts and schema
+    * evolution by the winner still lose loudly. */
   private def appendAt(df: DataFrame, path: String, v: Int,
                        allowSchemaEvolution: Boolean = false,
                        partCol: Option[String] = None,
                        statsCol: Option[String] = None,
                        bloomCol: Option[String] = None): Int =
-    layoutAt(path, v - 1, partCol, statsCol, bloomCol) match {
-      case None =>
-        val carried = if (v == 1) Seq.empty else carriedLines(path, v - 1)
-        val schema = evolvedSchema(df.sparkSession, path, v - 1, df.schema,
-          allowSchemaEvolution)
-        commitData(df, path, v, carried, schema = Some(schema))
-      case Some(pc) =>
-        // pure appends auto-rebase when a concurrent writer committed
-        // DISJOINT partitions first (Iceberg's optimistic retry) — the
-        // realistic multi-writer topology (backfill + live stream)
-        // stops serializing through a loud loser; same-partition
-        // conflicts and schema evolution by the winner still lose
-        // loudly
-        commitPartitionedAt(df, path, pc, v, replaceTouched = false,
-          statsCol, allowEvolution = allowSchemaEvolution,
-          bloomCol = bloomCol, retryDisjoint = true)
-    }
+    commitPartitionedAt(df, path, layoutAt(path, v - 1, partCol, statsCol,
+      bloomCol), v, replaceTouched = false, statsCol,
+      allowEvolution = allowSchemaEvolution, bloomCol = bloomCol,
+      retryDisjoint = true)
 
-  /** Test seam: a hierarchical [[append]] with an EXPLICIT (stale)
+  /** Test seam: a partitioned [[append]] with an EXPLICIT (stale)
     * target version — deterministic exercise of the optimistic-commit
     * re-base without relying on a thread race. */
   private[graft] def appendPartitionedStale(df: DataFrame, path: String,
@@ -473,40 +409,48 @@ object VersionedStore {
     appendAt(df, path, targetV, partCol = Some(partCol))
 
   /** The partition column a write over version `head` lays its rows
-    * out by — None for a flat table. Once the table exists its head
-    * version's manifest form rules: `partCol`, `statsCol` and
+    * out by — None for an unpartitioned table. Once the table exists
+    * its manifest-list header rules: `partCol`, `statsCol` and
     * `bloomCol` declare the layout only when the write creates the
     * table (`head == 0`), and any one that disagrees with an existing
     * table refuses. Stats and bloom columns need a partitioned table. */
   private def layoutAt(path: String, head: Int, partCol: Option[String],
                        statsCol: Option[String] = None,
                        bloomCol: Option[String] = None): Option[String] = {
-    val ml = if (head == 0 || isFlatVersion(path, head)) None
-             else Some(readMlist(path, head))
-    val laid = if (head == 0) partCol else ml.map(_.partCol)
-    val agrees = head == 0 || (partCol.forall(laid.contains) &&
-      statsCol.forall(s => ml.exists(_.statsCols == s.split(",").toSeq)) &&
-      bloomCol.forall(b => ml.exists(_.bloomCol.contains(b))))
+    val ml = if (head == 0) None else Some(readMlist(path, head))
+    val laid = ml.fold(partCol)(_.partCol)
+    val agrees = ml.forall(m => partCol.forall(m.partCol.contains) &&
+      statsCol.forall(s => m.statsCols == s.split(",").toSeq) &&
+      bloomCol.forall(b => m.bloomCol.contains(b)))
     require(agrees && (laid.nonEmpty || (statsCol.isEmpty && bloomCol.isEmpty)),
       s"layout partCol=${partCol.getOrElse("-")} statsCol=" +
         s"${statsCol.getOrElse("-")} bloomCol=${bloomCol.getOrElse("-")} " +
         s"disagrees with the table at $path, which is " + (ml match {
-          case Some(m) => s"partitioned by ${m.partCol} (statsCol=" +
-            s"${m.statsCols.mkString(",")}, bloomCol=${m.bloomCol.getOrElse("")})"
-          case None if head > 0 => "flat"
+          case Some(m) => m.partCol.fold("unpartitioned")(pc =>
+            s"partitioned by $pc (statsCol=${m.statsCols.mkString(",")}, " +
+              s"bloomCol=${m.bloomCol.getOrElse("")})")
           case None => "new (stats and bloom columns need a partCol)"
         }))
     laid
   }
 
   /** Replace the table contents with `df` as a new version — old
-    * versions stay readable until vacuumed. The new version records
-    * `df`'s schema as-is (nothing is carried, so no compatibility
-    * constraint — Delta's overwriteSchema shape); old versions keep
-    * reading under their own recorded schemas. */
+    * versions stay readable until vacuumed. The table keeps its
+    * layout: a partitioned table's frame must carry the partition
+    * column. The new version records `df`'s schema as-is (nothing is
+    * carried, so no compatibility constraint — Delta's overwriteSchema
+    * shape); old versions keep reading under their own recorded
+    * schemas. */
   def overwrite(df: DataFrame, path: String): Int =
-    commitData(df, path, currentVersion(path) + 1, Seq.empty,
-      schema = Some(df.schema))
+    replaceAll(df, path, currentVersion(path), df.schema)
+
+  /** Commit `rows` as the whole of version `cur + 1` in the table's
+    * own layout, stats and bloom columns: nothing of `cur` is carried,
+    * so its delete vectors fold away. */
+  private def replaceAll(rows: DataFrame, path: String, cur: Int,
+                         schema: org.apache.spark.sql.types.StructType): Int =
+    commitPartitionedAt(rows, path, layoutAt(path, cur, None), cur + 1,
+      replaceTouched = true, replaceAll = true, schemaOverride = Some(schema))
 
   /** foreachBatch seam: append `df` as version batchId+1. Replay-safe
     * under Spark's at-least-once micro-batch contract — a re-delivered
@@ -529,28 +473,18 @@ object VersionedStore {
     * carry), so this fails fast instead.
     *
     * The layout comes from the head version; `partCol` declares it
-    * only when the first batch creates the table ([[layoutAt]]). On a
-    * hierarchical table a batch touching k partitions writes k
-    * per-partition manifests + one list; a replayed batch mints fresh
-    * attempt-unique pmanifests and REPUBLISHES the version's mlist
-    * (the earlier attempt's pmanifests and data become unreferenced
-    * debris for vacuum). */
+    * only when the first batch creates the table ([[layoutAt]]). A
+    * batch touching k partitions writes k per-partition manifests +
+    * one list; a replayed batch mints fresh attempt-unique pmanifests
+    * and REPUBLISHES the version's mlist (the earlier attempt's
+    * pmanifests and data become unreferenced debris for vacuum). */
   def commitBatch(df: DataFrame, path: String, batchId: Long,
                   partCol: Option[String] = None): Int = {
     val v = batchVersion(path, batchId)
-    layoutAt(path, currentVersion(path), partCol) match {
-      case None =>
-        val carried = if (v == 1) Seq.empty else carriedLines(path, v - 1)
-        // stream schema drift fails loudly — no silent evolution from
-        // a micro-batch writer
-        val schema = evolvedSchema(df.sparkSession, path, v - 1, df.schema,
-          allowEvolution = false)
-        commitData(df, path, v, carried, replayable = true,
-          schema = Some(schema))
-      case Some(pc) =>
-        commitPartitionedAt(df, path, pc, v, replaceTouched = false,
-          replayable = true)
-    }
+    // stream schema drift fails loudly — no silent evolution from a
+    // micro-batch writer
+    commitPartitionedAt(df, path, layoutAt(path, currentVersion(path), partCol),
+      v, replaceTouched = false, replayable = true)
   }
 
   /** The version a foreachBatch seam commits for `batchId` (batchId+1),
@@ -568,14 +502,17 @@ object VersionedStore {
     v
   }
 
-  /** Rewrite the current version's files into `nFiles` outputs as a
-    * new version (logically identical rows) — the background-merge
+  /** Rewrite the current version's rows into `nFiles` write tasks as
+    * a new version (logically identical rows) — the background-merge
     * analogue; readers of older versions keep the small files until
-    * vacuum. */
+    * vacuum. The table keeps its partitioning, stats and bloom
+    * columns, and the rewrite clusters on the stats columns
+    * ([[clustered]]), so file pruning survives it. */
   def compact(spark: SparkSession, path: String, nFiles: Int): Int = {
-    val cur = read(spark, path)
-    commitData(cur.repartition(nFiles), path, currentVersion(path) + 1,
-      Seq.empty, schema = Some(cur.schema))
+    val cur = headVersion(path, "compact")
+    replaceAll(clustered(readAsOf(spark, path, cur),
+      readMlist(path, cur).statsCols, nFiles), path, cur,
+      effectiveSchema(path, cur))
   }
 
   /** Size-targeted small-file compaction (Delta's OPTIMIZE bin-pack,
@@ -588,16 +525,14 @@ object VersionedStore {
     * commit lands one small file per batch, and a periodic
     * `compactSmall` folds the accumulated tail without touching the
     * compacted bulk. Inputs read vector-applied (their delete-vector
-    * rows fold away; vectors guarding carried files ride along).
+    * rows fold away; vectors guarding carried files ride along), and
+    * land back in their own partitions on a partitioned table.
     * No-op (current version returned) when fewer than `minFiles`
     * small files exist — below that the rewrite buys nothing. */
   def compactSmall(spark: SparkSession, path: String, targetBytes: Long,
                    minFiles: Int = 2): Int = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val cur = headVersion(path, "compactSmall")
-    require(isFlatVersion(path, cur),
-      s"compactSmall bin-packs flat tables; version $cur is hierarchical " +
-        "— compactPartition compacts one of its partitions")
     val small = filesAsOf(path, cur)
       .filter(f => new File(path, f).length() < targetBytes)
     if (small.isEmpty || small.size < minFiles) cur
@@ -606,18 +541,16 @@ object VersionedStore {
       val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
       val rewritten = readTouched(spark, path, cur, small)
         .repartition(nOut.toInt)
-      commitRewrite(spark, rewritten, path, cur, small)
+      commitRewrite(rewritten, path, cur, small)
     }
   }
 
   // ---- row-level operations ------------------------------------------
   //
-  // One entry point per verb, on either layout: each operation reads
-  // its base version's manifest form and runs that layout's commit — a
-  // flat version publishes a `.manifest` (carried data files + `D:`
-  // vector lines), a hierarchical one a manifest list whose touched
-  // partitions re-mint their pmanifests while untouched ones are
-  // carried by reference (`#dv` lines for vectors). The find-matches
+  // One entry point per verb, partitioned or not: each operation
+  // publishes a manifest list whose touched partitions re-mint their
+  // pmanifests while untouched ones are carried by reference (`#dv`
+  // lines for vectors). The find-matches
   // probe ([[probeSnapshot]]), the rewrite input ([[readTouched]]) and
   // the vector sidecar ([[vectorOf]]) are shared; the caller never
   // says how the table is laid out (ClickHouse's `ALTER TABLE …
@@ -631,8 +564,8 @@ object VersionedStore {
     *
     * Two scans, both file-bounded: (1) a find-matches scan whose
     * predicate is pushed to the parquet reader (row-group stats skip
-    * non-matching files wholesale; on a hierarchical table the scan
-    * runs through the Catalyst FileIndex, so a partition or stats
+    * non-matching files wholesale; the scan runs through the
+    * Catalyst FileIndex, so a partition or stats
     * predicate prunes whole partitions and files first), collecting
     * the DISTINCT file names that contain matches — driver state is
     * O(#files), never O(rows); (2) a rewrite scan over only those
@@ -686,7 +619,7 @@ object VersionedStore {
     * through `sets`, their file-mates carried into the rewrite
     * verbatim), every other file carried by reference. ClickHouse's
     * `ALTER TABLE … UPDATE` / Delta's UPDATE. Returns the new version,
-    * or the current one when nothing matched. SET on a hierarchical
+    * or the current one when nothing matched. SET on a partitioned
     * table's partition column refuses loudly: a partition-moving
     * update is [[updateVectored]] territory (copy-on-write would have
     * to rewrite both partitions). */
@@ -694,12 +627,10 @@ object VersionedStore {
              predicate: org.apache.spark.sql.Column,
              sets: Seq[(String, org.apache.spark.sql.Column)]): Int = {
     val cur = headVersion(path, "update")
-    if (!isFlatVersion(path, cur)) {
-      val partCol = readMlist(path, cur).partCol
+    for (partCol <- readMlist(path, cur).partCol)
       require(!sets.exists(_._1.equalsIgnoreCase(partCol)),
         s"UPDATE SET on partition column $partCol is not supported " +
           "copy-on-write — use the vectored mode for partition moves")
-    }
     rewriteMatched(spark, path, cur, _.filter(predicate),
       applySets(_, predicate, sets))
   }
@@ -711,7 +642,7 @@ object VersionedStore {
     * (Delta's MERGE, specialized to whenMatched-update-all /
     * whenNotMatched-insert-all: the ReplacingMergeTree keep-latest
     * upsert as a table operation instead of a read-time dedup). On a
-    * hierarchical table the update rows land in THEIR OWN partitions,
+    * partitioned table the update rows land in THEIR OWN partitions,
     * so a partition-moving update rewrites both sides; the table stays
     * vector-free (e.g. to stay servable through the relation-based
     * reader).
@@ -750,7 +681,7 @@ object VersionedStore {
       val kept =
         if (touched.isEmpty) None
         else Some(rewrite(readTouched(spark, path, cur, touched)))
-      commitRewrite(spark, (kept ++ inserts).reduce(_.unionByName(_)),
+      commitRewrite((kept ++ inserts).reduce(_.unionByName(_)),
         path, cur, touched)
     }
   }
@@ -759,10 +690,9 @@ object VersionedStore {
     * matched rows' (file, position) pairs instead of rewriting any
     * data file — commit cost O(matched rows), not O(touched files),
     * the right shape for a point/narrow delete in a huge table (a
-    * GDPR erasure, a reorg retraction). On a hierarchical table the
-    * commit carries the ENTIRE previous manifest list VERBATIM plus
-    * the new `#dv` lines — O(1) metadata, not even the touched
-    * partitions' pmanifests re-mint; vector rows key on
+    * GDPR erasure, a reorg retraction). The commit carries every
+    * entry of the previous manifest list by reference plus the new
+    * `#dv` lines — no pmanifest re-mints; vector rows key on
     * manifest-relative paths, so one table-level set serves every
     * partition. Readers subtract the vector with one broadcast
     * anti-join; [[reorgVectored]], [[compact]] and [[compactPartition]]
@@ -806,7 +736,6 @@ object VersionedStore {
     * stays serializable. */
   private def publishDvCommit(spark: SparkSession, path: String,
                               baseV: Int, dvParts: Seq[String]): Int = {
-    val flat = isFlatVersion(path, baseV)
     var base = baseV
     var target = baseV + 1
     var tries = 0
@@ -815,27 +744,17 @@ object VersionedStore {
     lazy val named: Set[String] =
       dvParts.flatMap(p => spark.read.parquet(s"$path/$p")
         .select("file").distinct().collect().map(_.getString(0))).toSet
+    val ml = readMlist(path, baseV)
     var done = -1
     while (done < 0) {
-      try {
-        recordSchema(path, target, effectiveSchema(spark, path, base))
-        if (flat)
-          publishManifest(path, target,
-            (carriedLines(path, base) ++ dvParts.map(DvPrefix + _)).sorted)
-        else {
-          val prevLines = Files.readAllLines(mlistFile(path, base).toPath)
-            .asScala.toSeq.filter(_.nonEmpty)
-          writeAtomic(mlistFile(path, target),
-            (prevLines ++ dvParts.map(p => s"#dv\t$p")).mkString("\n"),
-            replace = false)
-        }
-        done = target
-      } catch {
+      try done = publishList(spark, path, ml.partCol, ml.partType, base, target,
+        effectiveSchema(path, base), extraDvs = dvParts)
+      catch {
         case e: java.util.ConcurrentModificationException =>
           tries += 1
           if (tries > MaxCommitRetries) throw e
           val head = currentVersion(path)
-          if (head < target || isFlatVersion(path, head) != flat) throw e
+          if (head < target) throw e
           if (!named.subsetOf(filesAsOf(path, head).toSet))
             throw new java.util.ConcurrentModificationException(
               "concurrent commit removed or rewrote file(s) this delete " +
@@ -853,8 +772,8 @@ object VersionedStore {
     * rewritten, so commit cost is O(updates + matched rows) even when
     * the matches scatter across thousands of files (the dimension-
     * refresh-into-giant-fact shape copy-on-write merge handles worst).
-    * On a hierarchical table the update rows land through the ordinary
-    * partitioned commit into THEIR partitions (untouched partitions
+    * The update rows land through the ordinary commit into THEIR
+    * partitions (untouched partitions
     * carried by reference), and because the old row dies by position
     * this natively supports PARTITION-MOVING upserts. Same contract as
     * [[merge]] otherwise: whenMatched-replace-all /
@@ -869,7 +788,7 @@ object VersionedStore {
     * nothing rewritten, commit cost O(matched rows), the scattered-
     * point-update shape at 100 TB. Because the old row dies by
     * position while the new row lands wherever its (possibly updated)
-    * partition value says, SET on a hierarchical table's partition
+    * partition value says, SET on a partitioned table's partition
     * column works natively here. Returns the current version unchanged
     * when nothing matched. */
   def updateVectored(spark: SparkSession, path: String,
@@ -884,7 +803,7 @@ object VersionedStore {
     if (dv.isEmpty) cur
     // the replacements: matched rows, every SET applied (predicate
     // already filtered, so the projection is unconditional)
-    else commitVectored(spark, path, cur + 1,
+    else commitVectored(path, cur + 1,
       applySets(matched, lit(true), sets), dv, replayable = false)
   }
 
@@ -896,9 +815,9 @@ object VersionedStore {
     * decision input is O(vector rows + one footer probe per dead
     * file): a small aggregation over the sidecars gives per-file dead
     * counts, footers give totals. Untouched files (and the vector
-    * lines still guarding them) are carried by reference — on a
-    * hierarchical table a dead-heavy file rewrites inside its own
-    * partition and untouched partitions are carried; when the rewrite
+    * lines still guarding them) are carried by reference — a
+    * dead-heavy file rewrites inside its own partition and untouched
+    * partitions are carried; when the rewrite
     * covers every file the vectors name, the vector lines are dropped
     * entirely and reads return to a bare scan. At `minDeadRatio = 0`
     * this IS the full vector fold, still rewriting only the files that
@@ -927,7 +846,7 @@ object VersionedStore {
       if (touched.isEmpty) cur
       else {
         val liveDead = deadByFile.keySet.filter(live.contains)
-        commitRewrite(spark, readTouched(spark, path, cur, touched), path,
+        commitRewrite(readTouched(spark, path, cur, touched), path,
           cur, touched, dropDvs = liveDead.subsetOf(touched.toSet))
       }
     }
@@ -950,7 +869,7 @@ object VersionedStore {
     * table shape.
     *
     * `partCol` declares the layout when the first batch creates the
-    * table: `Some(c)` makes it hierarchical by `c` (a month-partitioned
+    * table: `Some(c)` partitions it by `c` (a month-partitioned
     * warehouse: O(touched partitions) metadata per batch, partition
     * moves included). Afterwards the table's own form rules, and a
     * `partCol` that disagrees with it refuses loudly ([[layoutAt]]). */
@@ -984,7 +903,7 @@ object VersionedStore {
     val (cols, keyRows) = mergeInput(spark, path, v - 1, updates, keys)
     val dv = vectorOf(probeSnapshot(spark, path, v - 1)
       .join(keyRows, keys, "left_semi"), path, v)
-    commitVectored(spark, path, v,
+    commitVectored(path, v,
       updates.select(cols.map(org.apache.spark.sql.functions.col): _*), dv,
       replayable)
   }
@@ -996,7 +915,7 @@ object VersionedStore {
   private def mergeInput(spark: SparkSession, path: String, v: Int,
                          updates: DataFrame, keys: Seq[String])
       : (Seq[String], DataFrame) = {
-    val cols = effectiveSchema(spark, path, v).fieldNames.toSeq
+    val cols = effectiveSchema(path, v).fieldNames.toSeq
     require(updates.columns.toSet == cols.toSet,
       s"merge schema mismatch: table has ${cols.sorted.mkString(",")}" +
         s" but updates carry ${updates.columns.sorted.mkString(",")}")
@@ -1044,21 +963,15 @@ object VersionedStore {
   }
 
   /** The merge-on-read commit of version `v` over `v − 1`: `rows` land
-    * in new data files (on a hierarchical table, in THEIR partitions),
+    * in new data files (in THEIR partitions),
     * `dv` kills the matched positions, nothing is rewritten and every
     * existing file is carried by reference. Row-level operations never
     * change the schema — the new version re-records v−1's. */
-  private def commitVectored(spark: SparkSession, path: String, v: Int,
-                             rows: DataFrame, dv: Seq[String],
-                             replayable: Boolean): Int = {
-    val schema = Some(effectiveSchema(spark, path, v - 1))
-    if (isFlatVersion(path, v - 1))
-      commitData(rows, path, v,
-        carriedLines(path, v - 1) ++ dv.map(DvPrefix + _), replayable, schema)
-    else commitPartitionedAt(rows, path, readMlist(path, v - 1).partCol, v,
+  private def commitVectored(path: String, v: Int, rows: DataFrame,
+                             dv: Seq[String], replayable: Boolean): Int =
+    commitPartitionedAt(rows, path, readMlist(path, v - 1).partCol, v,
       replaceTouched = false, replayable = replayable,
-      schemaOverride = schema, extraDvs = dv)
-  }
+      schemaOverride = Some(effectiveSchema(path, v - 1)), extraDvs = dv)
 
   private def listParquet(path: String, rel: String): Seq[String] =
     Option(new File(path, rel).listFiles()).getOrElse(Array.empty)
@@ -1086,25 +999,16 @@ object VersionedStore {
   def expirePartitions(spark: SparkSession, path: String,
                        expired: String => Boolean): Int = {
     val cur = headVersion(path, "expire")
-    require(!isFlatVersion(path, cur),
-      s"version $cur is flat — TTL expiry drops PARTITIONS")
     val ml = readMlist(path, cur)
+    require(ml.partCol.nonEmpty,
+      s"the table at $path is unpartitioned — TTL expiry drops PARTITIONS")
     val (dead, live) = ml.parts.partition(p => expired(p.value))
     if (dead.isEmpty) cur
     else {
       require(live.nonEmpty,
         "TTL would expire every partition — refusing (use overwrite())")
-      val v = cur + 1
-      val deadVals = dead.map(_.value).toSet
-      val prevLines = Files.readAllLines(mlistFile(path, cur).toPath)
-        .asScala.toSeq.filter(_.nonEmpty)
-      val kept = prevLines.tail.filterNot { l =>
-        !l.startsWith("#dv\t") && deadVals.contains(l.split("\t", -1)(0))
-      }
-      recordSchema(path, v, effectiveSchema(spark, path, cur))
-      writeAtomic(mlistFile(path, v),
-        (prevLines.head +: kept).mkString("\n"), replace = false)
-      v
+      publishList(spark, path, ml.partCol, ml.partType, cur, cur + 1,
+        effectiveSchema(path, cur), droppedParts = dead.map(_.value).toSet)
     }
   }
 
@@ -1239,11 +1143,12 @@ object VersionedStore {
 
   /** Read a subset `rel` of version `v`'s files — the one file-delta
     * reader behind the rewrites, both change feeds and the versioned
-    * stream source. A hierarchical version groups the files by
-    * partition through v's manifest list and reattaches each group's
-    * value as a literal column (data files do not store it); every
-    * file of `rel` must resolve. `logicalSchema` includes the
-    * partition column, which is stripped for the scan. `scan` reads
+    * stream source. The files are grouped by partition through v's
+    * manifest list, one scan per group, and each group's value is
+    * reattached as a literal column (data files do not store it;
+    * an unpartitioned table has one group and no column to
+    * reattach); every file of `rel` must resolve. `logicalSchema`
+    * includes the partition column, which is stripped for the scan. `scan` reads
     * one group of absolute file paths under a data schema — a batch
     * parquet read by default, a streaming-tagged one for the source.
     * `perScan` runs directly over each scan BEFORE any union or
@@ -1264,23 +1169,23 @@ object VersionedStore {
              schema: Option[org.apache.spark.sql.types.StructType]) =
       perScan(scan(spark, fs.map(f => s"$path/$f"), schema))
     if (rel.isEmpty) None
-    else if (isFlatVersion(path, v)) Some(read(rel, logicalSchema))
     else {
       val ml = readMlist(path, v)
+      val partSchema = ml.partitionSchema
       val dataSchema = logicalSchema.map(s =>
         org.apache.spark.sql.types.StructType(
-          s.fields.filterNot(_.name == ml.partCol)))
+          s.fields.filterNot(f => partSchema.fieldNames.contains(f.name))))
       val want = rel.toSet
       val byPart = ml.parts.flatMap { p =>
-        val fs = readPmanifestEntries(path, p.pmanifest).map(_.file)
-          .filter(want.contains)
+        val fs = readPmanifest(path, p.pmanifest).filter(want.contains)
         if (fs.isEmpty) None else Some((p.value, fs))
       }
       require(byPart.map(_._2.size).sum == want.size,
         s"version $v's mlist does not resolve every requested file")
       Some(byPart.map { case (value, fs) =>
-        read(fs, dataSchema).withColumn(ml.partCol,
-          org.apache.spark.sql.functions.lit(value).cast(ml.partType))
+        partSchema.fields.foldLeft(read(fs, dataSchema))((df, f) =>
+          df.withColumn(f.name,
+            org.apache.spark.sql.functions.lit(value).cast(f.dataType)))
       }.reduce(_.unionByName(_)))
     }
   }
@@ -1323,47 +1228,45 @@ object VersionedStore {
       schema.fold(spark.read)(spark.read.schema).parquet(files: _*)
 
   /** Publish the copy-on-write commit of version cur+1: new files
-    * from `rewritten`, every untouched file carried by reference — a
-    * flat manifest lists them, a hierarchical commit strikes `touched`
-    * from their partitions' pmanifests (re-minting only those; an
-    * emptied partition leaves the list) and lays `rewritten` out by
-    * partition. Delete-vector lines ride along verbatim — vector rows
+    * from `rewritten`, laid out by partition, every untouched file
+    * carried by reference — `touched` is struck from its partitions'
+    * pmanifests (re-minting only those; an emptied partition leaves
+    * the list). Delete-vector lines ride along verbatim — vector rows
     * whose data file was just rewritten are inert (path-keyed, and the
     * file left the manifest), the rest still guard untouched files —
     * unless `dropDvs` (the rewrite folded every file they name).
     * Row-level operations never change the schema — the new version
     * re-records the current one. */
-  private def commitRewrite(spark: SparkSession, rewritten: DataFrame,
-                            path: String, cur: Int, touched: Seq[String],
-                            dropDvs: Boolean = false): Int = {
-    val schema = Some(effectiveSchema(spark, path, cur))
-    if (isFlatVersion(path, cur))
-      commitData(rewritten, path, cur + 1,
-        filesAsOf(path, cur).filterNot(touched.toSet) ++
-          (if (dropDvs) Nil else deleteVectorsAsOf(path, cur).map(DvPrefix + _)),
-        schema = schema)
-    else commitPartitionedAt(rewritten, path, readMlist(path, cur).partCol,
+  private def commitRewrite(rewritten: DataFrame, path: String, cur: Int,
+                            touched: Seq[String],
+                            dropDvs: Boolean = false): Int =
+    commitPartitionedAt(rewritten, path, readMlist(path, cur).partCol,
       cur + 1, replaceTouched = false, removedFiles = touched.toSet,
-      schemaOverride = schema, dropDvs = dropDvs)
-  }
+      schemaOverride = Some(effectiveSchema(path, cur)), dropDvs = dropDvs)
 
-  // ---- hierarchical manifests (manifest list + per-partition) --------
+  // ---- manifests (manifest list + per-partition) ---------------------
 
   /** One manifest-list entry: a partition value and the name of the
     * immutable per-partition manifest holding its live files. */
   final case class PartEntry(value: String, pmanifest: String)
   /** A parsed manifest list: the partition column (name + Spark DDL
-    * type, so readers reattach the column losslessly), the optional
-    * per-file STATS columns (one or more, comma-joined in the header
-    * — Iceberg-style per-column file stats), and one entry per live
-    * partition. `statsCol` keeps the first declared column as the
-    * single-column view (the clustering / statsRange key). */
-  final case class Mlist(partCol: String, partType: String,
+    * type, so readers reattach the column losslessly; None for an
+    * unpartitioned table, whose one entry has an empty value), the
+    * optional per-file STATS columns (one or more, comma-joined in the
+    * header — Iceberg-style per-column file stats), and one entry per
+    * live partition. `statsCol` keeps the first declared column as the
+    * single-column view (the clustering key). */
+  final case class Mlist(partCol: Option[String], partType: String,
                          parts: Seq[PartEntry],
                          statsCols: Seq[String] = Nil,
                          bloomCol: Option[String] = None,
                          dvs: Seq[String] = Nil) {
     def statsCol: Option[String] = statsCols.headOption
+    /** The partition column as a schema — empty when unpartitioned. */
+    def partitionSchema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType(partCol.toSeq.map(c =>
+        org.apache.spark.sql.types.StructField(c,
+          org.apache.spark.sql.types.DataType.fromDDL(partType))))
   }
   /** One pmanifest line: a data file, its optional footer stats —
     * rowCount plus (min, max) PER declared stats column, in
@@ -1378,19 +1281,20 @@ object VersionedStore {
       for (r <- rows; (mn, mx) <- bounds.headOption) yield (r, mn, mx)
   }
 
-  /** Parse version `v`'s manifest list. */
+  /** Parse version `v`'s manifest list. Header:
+    * `#part[\t<partCol>\t<type>[\t<statsCols>[\t<bloomCol>]]]`. */
   def readMlist(path: String, v: Int): Mlist = {
     val mf = mlistFile(path, v)
     require(mf.exists(),
-      s"version $v does not exist or is not a partitioned commit")
+      s"version $v does not exist (vacuumed or never committed)")
     val lines = Files.readAllLines(mf.toPath).asScala.toSeq.filter(_.nonEmpty)
     val header = lines.head.split("\t", -1)
-    require(header.length >= 3 && header.length <= 5 && header(0) == "#part",
-      s"malformed manifest list header: ${lines.head}")
+    require((header.length == 1 || (header.length >= 3 && header.length <= 5))
+      && header(0) == "#part", s"malformed manifest list header: ${lines.head}")
     // `#dv` lines carry table-level delete-vector sidecars; the rest
     // are partition entries
     val (dvLines, partLines) = lines.tail.partition(_.startsWith("#dv\t"))
-    Mlist(header(1), header(2), partLines.map { l =>
+    Mlist(header.lift(1), header.lift(2).getOrElse(""), partLines.map { l =>
       val f = l.split("\t", -1); PartEntry(f(0), f(1))
     },
       if (header.length >= 4 && header(3).nonEmpty)
@@ -1440,98 +1344,55 @@ object VersionedStore {
                           allowSchemaEvolution: Boolean = false,
                           bloomCol: Option[String] = None): Int =
     // a PARTIAL overwrite still carries other partitions' files, so
-    // schema compatibility is enforced like an append (unlike the
-    // flat overwrite(), which carries nothing)
-    commitPartitionedAt(df, path, partCol, currentVersion(path) + 1,
-      replaceTouched = true, statsCol, allowEvolution = allowSchemaEvolution,
-      bloomCol = bloomCol)
-
-  /** Read only the partitions `keep` accepts, as of version `v` —
-    * planning-level pruning: a rejected partition's per-partition
-    * manifest is never even opened, so a one-partition query on an
-    * N-partition table does O(1) metadata work. Each selected
-    * partition becomes its own parquet scan (partition value
-    * reattached as a literal column — it is not stored in the data
-    * files); the scans union into one plan. This is the EXPLICIT-API
-    * form; [[readIndexed]] is the planner-integrated one (a single
-    * scan whose pruning derives from the query's WHERE clause via
-    * [[VersionedFileIndex]]) and is what [[readAsOf]] dispatches to —
-    * the two are spec-pinned row-identical. */
-  def readPartitionsAsOf(spark: SparkSession, path: String, v: Int,
-                         keep: String => Boolean,
-                         statsRange: Option[(Double, Double)] = None)
-      : DataFrame = {
-    val ml = readMlist(path, v)
-    val selected = ml.parts.filter(p => keep(p.value))
-    require(selected.nonEmpty, s"no partition of version $v matches")
-    // second pruning level: a file whose [min,max] of the table's
-    // stats column cannot intersect [lo,hi] never enters the plan.
-    // Conservative by construction — files without recorded stats
-    // (legacy lines, non-numeric footers) are always kept.
-    val perPart = selected.map { p =>
-      val entries = readPmanifestEntries(path, p.pmanifest)
-      val kept = statsRange match {
-        case Some((lo, hi)) => entries.filter(_.stats.forall {
-          case (_, mn, mx) => mx >= lo && mn <= hi })
-        case None => entries
-      }
-      p -> kept
-    }.filter(_._2.nonEmpty)
-    require(perPart.nonEmpty,
-      s"every file of version $v was pruned by the stats range $statsRange")
-    // recorded schema (minus the reattached partition column) so a
-    // partition holding pre- and post-evolution files reads uniformly
-    val dataSchema = schemaAsOf(path, v).map(s =>
-      org.apache.spark.sql.types.StructType(
-        s.fields.filterNot(_.name == ml.partCol)))
-    // delete vectors: stamp each scan BEFORE the union (metadata
-    // columns do not resolve over a Union node), subtract once after
-    val dvs = deleteVectorsAsOf(path, v)
-    val u = perPart.map { case (p, entries) =>
-      val raw = parquetScan(spark,
-        entries.map(e => s"$path/${e.file}"), dataSchema)
-      (if (dvs.isEmpty) raw else withMeta(raw))
-        .withColumn(ml.partCol,
-          org.apache.spark.sql.functions.lit(p.value).cast(ml.partType))
-    }.reduce(_.unionByName(_))
-    if (dvs.isEmpty) u else subtractStamped(spark, path, u, dvs)
-  }
+    // schema compatibility is enforced like an append (unlike
+    // overwrite(), which carries nothing)
+    commitPartitionedAt(df, path,
+      layoutAt(path, currentVersion(path), Some(partCol), statsCol, bloomCol),
+      currentVersion(path) + 1, replaceTouched = true, statsCol,
+      allowEvolution = allowSchemaEvolution, bloomCol = bloomCol)
 
   /** Compact ONE partition's files into `nFiles` as a new version
     * (logically identical rows; all other partitions carried by
-    * reference) — the background-merge analogue on the hierarchical
-    * store: at 100 TB compaction is per-partition maintenance that
+    * reference) — the background-merge analogue on a partitioned
+    * table: at 100 TB compaction is per-partition maintenance that
     * rewrites O(one partition) data and metadata, never the table.
     * Old versions keep resolving the uncompacted files until vacuum.
-    *
-    * When the table declares a stats column, the rewrite CLUSTERS on
-    * it (range-partition + local sort) instead of round-robin
-    * repartitioning: ingest order usually gives time-banded files
-    * whose (min,max) windows are disjoint, and a round-robin rewrite
-    * would hand every output file the full value range — file-stats
-    * pruning (#149) would silently die at the first compaction. A
-    * clustered rewrite keeps the windows disjoint, so a time-range
-    * read stays O(overlapping files) across the table's whole
-    * maintenance lifetime; stats are re-harvested from the new
-    * footers either way. */
+    * The rewrite clusters on the table's stats columns
+    * ([[clustered]]), so a time-range read stays O(overlapping files)
+    * across the table's whole maintenance lifetime; stats are
+    * re-harvested from the new footers either way. */
   def compactPartition(spark: SparkSession, path: String, value: String,
                        nFiles: Int): Int = {
-    val cur = currentVersion(path)
+    val cur = headVersion(path, "compactPartition")
     val ml = readMlist(path, cur)
-    require(ml.parts.exists(_.value == value),
+    require(ml.partCol.nonEmpty && ml.parts.exists(_.value == value),
       s"partition $value does not exist in version $cur")
-    val rows = readPartitionsAsOf(spark, path, cur, _ == value)
+    val rows = readTouched(spark, path, cur,
+      readPmanifest(path, ml.parts.find(_.value == value).get.pmanifest))
+    commitPartitionedAt(clustered(rows, ml.statsCols, nFiles), path,
+      ml.partCol, cur + 1, replaceTouched = true,
+      schemaOverride = Some(effectiveSchema(path, cur)))
+  }
+
+  /** `rows` laid out over `nFiles` write tasks for a compaction. With
+    * one stats column the rewrite CLUSTERS on it (range-partition +
+    * local sort) instead of round-robin repartitioning: ingest order
+    * usually gives time-banded files whose (min,max) windows are
+    * disjoint, and a round-robin rewrite would hand every output file
+    * the full value range — file-stats pruning would silently die at
+    * the first compaction. With two or more, it clusters on the
+    * MORTON interleave of the first two, so each output file covers a
+    * bounded window in BOTH dimensions and the per-column manifest
+    * stats prune on either predicate — a single-key sort would keep
+    * only its own column's windows narrow (Delta's OPTIMIZE ZORDER BY,
+    * manifest-stats form). */
+  private def clustered(rows: DataFrame, statsCols: Seq[String],
+                        nFiles: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val laid = ml.statsCols match {
+    statsCols match {
       case Seq(c) =>
         rows.repartitionByRange(nFiles, col(c)).sortWithinPartitions(c)
       case a +: b +: _ =>
-        // two or more stats columns: cluster the rewrite on the
-        // MORTON interleave of the first two, so each output file
-        // covers a bounded window in BOTH dimensions and the
-        // per-column manifest stats prune on either predicate — a
-        // single-key sort would keep only its own column's windows
-        // narrow (Delta's OPTIMIZE ZORDER BY, manifest-stats form)
         val z = graft.functions.ZOrder.z_order(
           col(a).cast("long"), col(b).cast("long"))
         rows.withColumn("__z", z)
@@ -1540,9 +1401,6 @@ object VersionedStore {
           .drop("__z")
       case _ => rows.repartition(nFiles)
     }
-    commitPartitionedAt(laid, path, ml.partCol, cur + 1,
-      replaceTouched = true,
-      schemaOverride = Some(effectiveSchema(spark, path, cur)))
   }
 
   /** One commit's audit record, derived entirely from the metadata a
@@ -1563,44 +1421,30 @@ object VersionedStore {
     * "what changed when", and the substrate for [[versionAsOf]]
     * timestamp travel. Vacuumed versions disappear from history the
     * same way their snapshots do. */
-  def history(path: String): Seq[CommitInfo] = {
-    val cur = currentVersion(path)
-    (1 to cur).flatMap { v =>
-      val flat = manifestFile(path, v)
-      val ml = mlistFile(path, v)
-      val mf = if (flat.exists()) Some(flat)
-               else if (ml.exists()) Some(ml) else None
-      mf.map { f =>
-        val files = filesAsOf(path, v).toSet
-        val prev =
-          if (v == 1 || (!manifestFile(path, v - 1).exists() &&
-            !mlistFile(path, v - 1).exists())) Set.empty[String]
-          else filesAsOf(path, v - 1).toSet
-        val added = files -- prev
-        val (form, touched, rows) =
-          if (flat.exists()) ("flat", Seq.empty[String], None)
-          else {
-            val m = readMlist(path, v)
-            val mintedHere = s"-v$v-[0-9a-f]+\\.pmanifest$$".r
-            val t = m.parts.filter(p =>
-              mintedHere.findFirstIn(p.pmanifest).nonEmpty)
-            val r = if (m.statsCols.isEmpty) None else Some(
-              t.flatMap(p => readPmanifestEntries(path, p.pmanifest))
-                .filter(e => added.contains(e.file))
-                .flatMap(_.rows).sum)
-            ("partitioned", t.map(_.value), r)
-          }
-        // delete-vector sidecars added at this version: distinguishes
-        // a merge-on-read commit (rows retracted!) from a genuinely
-        // metadata-only one in the audit surface
-        val dvPrev = if (v == 1) Set.empty[String]
-                     else deleteVectorsAsOf(path, v - 1).toSet
-        val dvAdded = deleteVectorsAsOf(path, v).count(!dvPrev.contains(_))
-        CommitInfo(v, f.lastModified(), form, touched,
-          added.size, (prev -- files).size, rows, dvAdded)
-      }
+  def history(path: String): Seq[CommitInfo] =
+    (1 to currentVersion(path)).filter(v => mlistFile(path, v).exists()).map { v =>
+      val m = readMlist(path, v)
+      val files = filesAsOf(path, v).toSet
+      val prev = if (mlistFile(path, v - 1).exists()) filesAsOf(path, v - 1).toSet
+                 else Set.empty[String]
+      val added = files -- prev
+      val mintedHere = s"-v$v-[0-9a-f]+\\.pmanifest$$".r
+      val touched = m.parts.filter(p =>
+        mintedHere.findFirstIn(p.pmanifest).nonEmpty)
+      val rows = if (m.statsCols.isEmpty) None else Some(
+        touched.flatMap(p => readPmanifestEntries(path, p.pmanifest))
+          .filter(e => added.contains(e.file))
+          .flatMap(_.rows).sum)
+      // delete-vector sidecars added at this version: distinguishes
+      // a merge-on-read commit (rows retracted!) from a genuinely
+      // metadata-only one in the audit surface
+      val dvPrev = deleteVectorsAsOf(path, v - 1).toSet
+      val dvAdded = deleteVectorsAsOf(path, v).count(!dvPrev.contains(_))
+      CommitInfo(v, mlistFile(path, v).lastModified(),
+        if (m.partCol.isEmpty) "flat" else "partitioned",
+        if (m.partCol.isEmpty) Nil else touched.map(_.value),
+        added.size, (prev -- files).size, rows, dvAdded)
     }
-  }
 
   /** The rows ADDED in versions (fromV, toV] — the incremental read
     * an append-only consumer wants ("give me what landed since my
@@ -1653,10 +1497,14 @@ object VersionedStore {
   private def enc(v: String): String =
     java.net.URLEncoder.encode(v, "UTF-8")
 
-  /** Commit at an EXPLICIT version: carried state derives from v−1
-    * (deterministic, replay-independent), which is what makes the
-    * streaming recommit path idempotent. */
-  private def commitPartitionedAt(df: DataFrame, path: String, partCol: String,
+  /** Commit `df` at an EXPLICIT version `v` over `v − 1`: its rows
+    * land in their partitions of `partCol` (None: the one entry of an
+    * unpartitioned table), and [[publishList]] publishes the list.
+    * Carried state derives from v−1 (deterministic,
+    * replay-independent), which is what makes the streaming recommit
+    * path idempotent. */
+  private def commitPartitionedAt(df: DataFrame, path: String,
+                                  partCol: Option[String],
                                   v: Int, replaceTouched: Boolean,
                                   statsCol: Option[String] = None,
                                   replayable: Boolean = false,
@@ -1668,197 +1516,64 @@ object VersionedStore {
                                   bloomCol: Option[String] = None,
                                   extraDvs: Seq[String] = Nil,
                                   dropDvs: Boolean = false,
+                                  replaceAll: Boolean = false,
                                   retryDisjoint: Boolean = false): Int = {
     val prev = v - 1
     require(!retryDisjoint || (removedFiles.isEmpty && extraDvs.isEmpty &&
-      !dropDvs && !replayable && schemaOverride.isEmpty),
+      !dropDvs && !replaceAll && !replayable && schemaOverride.isEmpty),
       "auto-rebase retry is sound only for pure appends")
-    require(prev == 0 || mlistFile(path, prev).exists(),
-      s"version $prev is a flat commit — a table is flat or partitioned, not both")
+    for (c <- partCol)
+      require(df.columns.contains(c), s"the frame has no partition column " +
+        s"$c — the table at $path is partitioned by $c")
     // logical schema (partition column included) enforced/evolved
     // against v−1; the rewrite paths pass the current schema through
     val schema = schemaOverride.getOrElse(
       evolvedSchema(df.sparkSession, path, prev, df.schema, allowEvolution))
     if (!replayable && !retryDisjoint)
-      require(!manifestFile(path, v).exists() && !mlistFile(path, v).exists(),
+      require(!mlistFile(path, v).exists(),
         s"version $v already published — concurrent writer? (the exclusive " +
-          "mlist rename below is the authoritative check; this is the " +
-          "cheap fail-fast before the data write; retryDisjoint commits " +
-          "skip it — their publish loop re-bases instead)")
-    val partType = df.schema(partCol).dataType.catalogString
-    val attempt = attemptId()
-    // attempt-unique dir (same argument as commitData); partitionBy
-    // lays the files out as <commit>/<partCol>=<value>/…
-    val commitRel = s"data/commit-$v-$attempt"
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(partCol).parquet(s"$path/$commitRel")
-    val touched: Map[String, Seq[String]] =
-      Option(new File(path, commitRel).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith(partCol + "="))
-        .map { dir =>
-          val value = dir.getName.stripPrefix(partCol + "=")
-          value -> Option(dir.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => s"$commitRel/${dir.getName}/${f.getName}")
-            .toSeq.sorted
-        }.toMap
-    // ---- metadata assembly + publish, parameterized on the BASE
-    // version so the optimistic-commit retry can re-base: everything
-    // below derives from (prevV, targetV) only — the data files and
-    // their `touched` layout are already on disk and base-independent
-    def publish(prevV: Int, targetV: Int): Int = {
-    if (!replayable &&
-        (manifestFile(path, targetV).exists() ||
-          mlistFile(path, targetV).exists()))
-      throw new java.util.ConcurrentModificationException(
-        s"version $targetV already published — a concurrent writer won " +
-          "this version; this attempt's files are unreferenced debris")
-    val pubSchema =
-      if (prevV == prev) schema
-      else schemaOverride.getOrElse(evolvedSchema(df.sparkSession, path,
-        prevV, df.schema, allowEvolution))
-    val prevMl = if (prevV == 0) None else Some(readMlist(path, prevV))
-    val prevParts: Map[String, PartEntry] =
-      prevMl.map(_.parts.map(p => p.value -> p).toMap).getOrElse(Map.empty)
-    for (pm <- prevMl)
-      require(pm.partCol == partCol,
-        s"table is partitioned by ${pm.partCol}, not $partCol")
-    // the stats column LIST is a TABLE property: declared on the
-    // first commit (comma-joined for more than one — per-column file
-    // stats, Iceberg shape), inherited afterwards (carried lines'
-    // stats stay meaningful only if the list never changes)
-    val declared = statsCol.map(_.split(",").toSeq).getOrElse(Nil)
-    val inherited = prevMl.map(_.statsCols).getOrElse(Nil)
-    val effStats = if (declared.nonEmpty) declared else inherited
-    if (declared.nonEmpty && inherited.nonEmpty)
-      require(declared == inherited,
-        s"stats columns cannot change mid-table: $inherited -> $declared")
-    // the bloom column is a table property with the same lifecycle
-    val inheritedBloom = prevMl.flatMap(_.bloomCol)
-    val effBloom = bloomCol.orElse(inheritedBloom)
-    for (b <- bloomCol; i <- inheritedBloom)
-      require(b == i, s"bloom column cannot change mid-table: $i -> $b")
-    for (b <- effBloom)
-      require(b != partCol,
-        "the bloom column must be a data column (the partition column " +
-          "already prunes at the manifest-list level)")
-    // per-file bloom fingerprints of the commit's OWN new files: one
-    // read-back job over O(new data), grouped by file — each sketch
-    // sized from the commit's largest file (~16 bits/key, capped) so
-    // a point probe's false-positive rate stays low without per-file
-    // sizing machinery. Any failure degrades to "no fingerprint"
-    // (files without one are always kept), never a failed commit.
-    val addedRels = touched.values.flatten.toSeq.sorted
-    val blooms: Map[String, Array[Byte]] =
-      if (effBloom.isEmpty || addedRels.isEmpty) Map.empty
-      else try {
-        val bcol = effBloom.get
-        val maxRows = addedRels
-          .flatMap(r => footerRowCount(df.sparkSession, new File(path, r)))
-          .foldLeft(0L)(math.max)
-        val numBits = math.min(1L << 20,
-          math.max(1024L, ((16 * maxRows + 63) / 64) * 64)).toInt
-        import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
-        val spark = df.sparkSession
-        val perFile = spark.read
-          .parquet(addedRels.map(r => s"$path/$r"): _*)
-          .select(input_file_name().as("__f"), col(bcol))
-          .groupBy(col("__f"))
-          .agg(graft.functions.BloomExprs.bloom_agg(
-            xxhash64(col(bcol)), numBits, 7).as("__b"))
-          .collect()
-        perFile.flatMap { row =>
-          val abs = row.getString(0)
-          // absolute URI → the commit-relative path (file names can
-          // repeat across partition dirs, so match the full suffix)
-          addedRels.find(rel => abs.endsWith(rel))
-            .map(_ -> row.getAs[Array[Byte]](1))
-        }.toMap
-      } catch { case _: Throwable => Map.empty }
-    // pmanifests land BEFORE the list publish: a crash in between
-    // leaves them orphaned and invisible, same as data files
-    // a carried pmanifest LINE's leading field is its file; a
-    // row-level delete strikes removed files from carried lines while
-    // the stats fields of the surviving lines ride along verbatim
-    def keepLine(l: String): Boolean =
-      removedFiles.isEmpty || !removedFiles.contains(l.split("\t", 2)(0))
-    val entries = (prevParts.keySet ++ touched.keySet).toSeq.sorted.flatMap { value =>
-      touched.get(value) match {
-        case None =>
-          val prev = prevParts(value)
-          val lines = readPmanifestLines(path, prev.pmanifest)
-          val kept = lines.filter(keepLine)
-          if (kept.size == lines.size) Some(prev) // untouched: by reference
-          else if (kept.isEmpty) None // every file deleted: partition gone
-          else {
-            // files struck but no new data for this partition: re-mint
-            // the pmanifest with the surviving lines
-            val name = s"p-${enc(value)}-v$targetV-$attempt.pmanifest"
-            writeAtomic(new File(manifestDir(path), name),
-              kept.sorted.mkString("\n"))
-            Some(PartEntry(value, name))
-          }
-        case Some(added) =>
-          // carried LINES verbatim (their stats fields ride along);
-          // added files get footer-harvested stats when declared
-          val carried =
-            if (replaceTouched) Seq.empty
-            else prevParts.get(value).toSeq
-              .flatMap(p => readPmanifestLines(path, p.pmanifest))
-              .filter(keepLine)
-          val addedLines = added.map { rel =>
-            // all-or-nothing per line: bounds must cover EVERY
-            // declared column or the line stays bare (conservative)
-            val per = effStats.map(c =>
-              footerStats(df.sparkSession, new File(path, rel), c))
-            val base = if (per.nonEmpty && per.forall(_.isDefined)) {
-              val rows = per.head.get._1
-              val bounds = per.flatten.map { case (_, mn, mx) => s"$mn\t$mx" }
-              s"$rel\t$rows\t${bounds.mkString("\t")}"
-            } else rel
-            blooms.get(rel).fold(base)(b =>
-              s"$base\tB:${java.util.Base64.getEncoder.encodeToString(b)}")
-          }
-          // attempt-unique name: racing writers (or a retry over torn
-          // debris) mint disjoint pmanifests, so nothing a published
-          // mlist references can ever be overwritten
-          val name = s"p-${enc(value)}-v$targetV-$attempt.pmanifest"
-          writeAtomic(new File(manifestDir(path), name),
-            (carried ++ addedLines).sorted.mkString("\n"))
-          Some(PartEntry(value, name))
-      }
+          "mlist publish is the authoritative check; this is the cheap " +
+          "fail-fast before the data write; retryDisjoint commits skip " +
+          "it — their publish loop re-bases instead)")
+    val partType = partCol.fold("")(c => df.schema(c).dataType.catalogString)
+    // attempt-unique dir: a torn earlier attempt at this version (or a
+    // concurrent one) left ITS OWN dir — never clobbered, never
+    // clobbering; unpublished attempts are invisible vacuum debris.
+    // partitionBy lays the files out as <commit>/<partCol>=<value>/…
+    val commitRel = s"data/commit-$v-${attemptId()}"
+    val writer = df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    partCol.fold(writer)(writer.partitionBy(_)).parquet(s"$path/$commitRel")
+    val dirs = partCol match {
+      case None => Seq("" -> commitRel)
+      case Some(c) =>
+        Option(new File(path, commitRel).listFiles()).getOrElse(Array.empty)
+          .toSeq.filter(f => f.isDirectory && f.getName.startsWith(c + "="))
+          .map(d => d.getName.stripPrefix(c + "=") -> s"$commitRel/${d.getName}")
     }
-    val header = s"#part\t$partCol\t$partType" +
-      (if (effStats.isEmpty && effBloom.isEmpty) ""
-       else s"\t${effStats.mkString(",")}") +
-      effBloom.fold("")(b => s"\t$b")
-    // delete-vector lines are a table property carried verbatim: a
-    // partition rewrite leaves its vector rows inert (path-keyed),
-    // other partitions' vectors must keep guarding their files
-    val dvLines =
-      ((if (dropDvs) Nil else prevMl.map(_.dvs).getOrElse(Nil)) ++ extraDvs)
-        .map(d => s"#dv\t$d")
-    val body = (header +:
-      (entries.map(e => s"${e.value}\t${e.pmanifest}") ++ dvLines))
-      .mkString("\n")
-    // schema before the pointer (same ordering argument as commitData)
-    recordSchema(path, targetV, pubSchema)
-    // the one contended write: create-exclusive unless a batch replay
-    writeAtomic(mlistFile(path, targetV), body, replace = replayable)
-    targetV
-    } // publish
+    val touched = dirs.map { case (value, rel) => value -> listParquet(path, rel) }
+      .filter(_._2.nonEmpty).toMap
+    def publish(prevV: Int, targetV: Int): Int = {
+      val pubSchema =
+        if (prevV == prev) schema
+        else schemaOverride.getOrElse(evolvedSchema(df.sparkSession, path,
+          prevV, df.schema, allowEvolution))
+      publishList(df.sparkSession, path, partCol, partType, prevV, targetV,
+        pubSchema, touched, replaceTouched, replaceAll, removedFiles,
+        statsCol = statsCol, bloomCol = bloomCol, extraDvs = extraDvs,
+        dropDvs = dropDvs, replayable = replayable)
+    }
 
     if (!retryDisjoint) publish(prev, v)
     else {
       // optimistic-commit auto-retry (Iceberg's re-base): a loser
       // whose partitions are DISJOINT from every winner's re-bases
       // its manifest list on the new head and publishes the next
-      // version — data files and pmanifest content are already on
-      // disk and base-independent, so the retry is metadata-only
-      // (plus the bloom read-back, re-run per attempt; retries are
-      // rare). A winner that touched one of OUR partitions stays a
-      // loud loser: merging two appends into one partition would need
-      // line-level union this protocol reserves for single writers.
+      // version — data files are already on disk and base-independent,
+      // so the retry is metadata-only (plus the bloom read-back, re-run
+      // per attempt; retries are rare). A winner that touched one of
+      // OUR partitions stays a loud loser: merging two appends into one
+      // partition would need line-level union this protocol reserves
+      // for single writers.
       var basePrev = prev
       var target = v
       var tries = 0
@@ -1870,7 +1585,7 @@ object VersionedStore {
             tries += 1
             if (tries > MaxCommitRetries) throw e
             val cur = currentVersion(path)
-            if (cur < target || isFlatVersion(path, cur)) throw e
+            if (cur < target) throw e
             val newParts = readMlist(path, cur).parts
               .map(p => p.value -> p.pmanifest).toMap
             val oldParts =
@@ -1891,6 +1606,155 @@ object VersionedStore {
       }
       done
     }
+  }
+
+  /** Publish version `targetV` over `prevV` — the one publish of
+    * every commit, data-writing or metadata-only. `added` maps
+    * partition values to their new data files; each partition it
+    * touches gets a NEW per-partition manifest (v's carried lines,
+    * unless `replaceTouched`, plus the added files with
+    * footer-harvested stats and bloom fingerprints when the table
+    * declares them), while every untouched partition is carried by
+    * reference. `removedFiles` are struck from the carried lines
+    * (re-minting only their partitions; an emptied partition leaves
+    * the list), `droppedParts` leave the list whole, and `replaceAll`
+    * carries no partition at all. Delete-vector lines ride along
+    * unless `dropDvs` or `replaceAll`; `extraDvs` adds new ones. The
+    * schema is recorded before the list, whose write is
+    * create-exclusive unless `replayable` (a batch replay republishes
+    * its version). */
+  private def publishList(spark: SparkSession, path: String,
+                          partCol: Option[String],
+                          partType: String, prevV: Int, targetV: Int,
+                          schema: org.apache.spark.sql.types.StructType,
+                          added: Map[String, Seq[String]] = Map.empty,
+                          replaceTouched: Boolean = false,
+                          replaceAll: Boolean = false,
+                          removedFiles: Set[String] = Set.empty,
+                          droppedParts: Set[String] = Set.empty,
+                          statsCol: Option[String] = None,
+                          bloomCol: Option[String] = None,
+                          extraDvs: Seq[String] = Nil,
+                          dropDvs: Boolean = false,
+                          replayable: Boolean = false): Int = {
+    if (!replayable && mlistFile(path, targetV).exists())
+      throw new java.util.ConcurrentModificationException(
+        s"version $targetV already published — a concurrent writer won " +
+          "this version; this attempt's files are unreferenced debris")
+    val prevMl = if (prevV == 0) None else Some(readMlist(path, prevV))
+    for (pm <- prevMl)
+      require(pm.partCol == partCol,
+        s"table is partitioned by ${pm.partCol.getOrElse("nothing")}, " +
+          s"not ${partCol.getOrElse("nothing")}")
+    // the stats columns (comma-joined for more than one — per-column
+    // file stats, Iceberg shape) and the bloom column are TABLE
+    // properties: declared by the write that creates the table,
+    // inherited afterwards ([[layoutAt]] refuses a disagreeing one),
+    // so carried lines' stats stay meaningful
+    val effStats = prevMl.fold(statsCol.map(_.split(",").toSeq).getOrElse(Nil))(
+      _.statsCols)
+    val effBloom = prevMl.fold(bloomCol)(_.bloomCol)
+    require(effBloom.isEmpty || effBloom != partCol,
+      "the bloom column must be a data column (the partition column " +
+        "already prunes at the manifest-list level)")
+    // per-file bloom fingerprints of the commit's OWN new files: one
+    // read-back job over O(new data), grouped by file — each sketch
+    // sized from the commit's largest file (~16 bits/key, capped) so
+    // a point probe's false-positive rate stays low without per-file
+    // sizing machinery. Any failure degrades to "no fingerprint"
+    // (files without one are always kept), never a failed commit.
+    val addedRels = added.values.flatten.toSeq.sorted
+    val blooms: Map[String, Array[Byte]] =
+      if (effBloom.isEmpty || addedRels.isEmpty) Map.empty
+      else try {
+        val bcol = effBloom.get
+        val maxRows = addedRels
+          .flatMap(r => footerRowCount(spark, new File(path, r)))
+          .foldLeft(0L)(math.max)
+        val numBits = math.min(1L << 20,
+          math.max(1024L, ((16 * maxRows + 63) / 64) * 64)).toInt
+        import org.apache.spark.sql.functions.{col, input_file_name, xxhash64}
+        val perFile = spark.read
+          .parquet(addedRels.map(r => s"$path/$r"): _*)
+          .select(input_file_name().as("__f"), col(bcol))
+          .groupBy(col("__f"))
+          .agg(graft.functions.BloomExprs.bloom_agg(
+            xxhash64(col(bcol)), numBits, 7).as("__b"))
+          .collect()
+        perFile.flatMap { row =>
+          val abs = row.getString(0)
+          // absolute URI → the commit-relative path (file names can
+          // repeat across partition dirs, so match the full suffix)
+          addedRels.find(rel => abs.endsWith(rel))
+            .map(_ -> row.getAs[Array[Byte]](1))
+        }.toMap
+      } catch { case _: Throwable => Map.empty }
+    // pmanifests land BEFORE the list publish: a crash in between
+    // leaves them orphaned and invisible, same as data files.
+    // Attempt-unique names: racing writers (or a retry over torn
+    // debris) mint disjoint pmanifests, so nothing a published mlist
+    // references can ever be overwritten.
+    def mint(value: String, lines: Seq[String]): PartEntry = {
+      val name = s"p-${enc(value)}-v$targetV-${attemptId()}.pmanifest"
+      writeAtomic(new File(manifestDir(path), name), lines.sorted.mkString("\n"))
+      PartEntry(value, name)
+    }
+    // a carried pmanifest LINE's leading field is its file; a
+    // row-level delete strikes removed files from carried lines while
+    // the stats fields of the surviving lines ride along verbatim
+    def struck(l: String): Boolean = removedFiles.contains(l.split("\t", 2)(0))
+    val prevParts: Map[String, PartEntry] =
+      if (replaceAll) Map.empty
+      else prevMl.fold(Map.empty[String, PartEntry])(
+        _.parts.map(p => p.value -> p).toMap) -- droppedParts
+    val entries = (prevParts.keySet ++ added.keySet).toSeq.sorted.flatMap { value =>
+      added.get(value) match {
+        case None if removedFiles.isEmpty => prevParts.get(value) // by reference
+        case None =>
+          val p = prevParts(value)
+          val lines = readPmanifestLines(path, p.pmanifest)
+          val kept = lines.filterNot(struck)
+          if (kept.size == lines.size) Some(p)
+          else if (kept.isEmpty) None // every file deleted: partition gone
+          else Some(mint(value, kept))
+        case Some(files) =>
+          val addedLines = files.map { rel =>
+            // all-or-nothing per line: bounds must cover EVERY
+            // declared column or the line stays bare (conservative)
+            val per = effStats.map(c => footerStats(spark, new File(path, rel), c))
+            val base = if (per.nonEmpty && per.forall(_.isDefined)) {
+              val rows = per.head.get._1
+              val bounds = per.flatten.map { case (_, mn, mx) => s"$mn\t$mx" }
+              s"$rel\t$rows\t${bounds.mkString("\t")}"
+            } else rel
+            blooms.get(rel).fold(base)(b =>
+              s"$base\tB:${java.util.Base64.getEncoder.encodeToString(b)}")
+          }
+          val kept = if (replaceTouched) Nil else prevParts.get(value).toSeq
+            .flatMap(p => readPmanifestLines(path, p.pmanifest)).filterNot(struck)
+          Some(mint(value, kept ++ addedLines))
+      }
+    }
+    val header = (("#part" +: partCol.toSeq.flatMap(Seq(_, partType))) ++
+      (if (effStats.isEmpty && effBloom.isEmpty) Nil
+       else effStats.mkString(",") +: effBloom.toSeq)).mkString("\t")
+    // delete-vector lines are a table property carried verbatim: a
+    // partition rewrite leaves its vector rows inert (path-keyed),
+    // other partitions' vectors must keep guarding their files
+    val dvLines =
+      ((if (dropDvs || replaceAll) Nil else prevMl.fold(Seq.empty[String])(_.dvs)) ++
+        extraDvs).map(d => s"#dv\t$d")
+    val body = (header +:
+      (entries.map(e => s"${e.value}\t${e.pmanifest}") ++ dvLines))
+      .mkString("\n")
+    // schema lands BEFORE the version pointer: a crash in between
+    // leaves an orphaned .schema file for an unpublished version —
+    // invisible (readers resolve versions through the pointer) and
+    // reclaimed by vacuum like any other debris
+    recordSchema(path, targetV, schema)
+    // the one contended write: create-exclusive unless a batch replay
+    writeAtomic(mlistFile(path, targetV), body, replace = replayable)
+    targetV
   }
 
   /** Bounded re-base attempts for [[commitPartitionedAt]]'s
@@ -2032,16 +1896,15 @@ object VersionedStore {
     require(keepVersions >= 1, "must retain at least the current version")
     val cur = currentVersion(path)
     val cutoff = cur - keepVersions + 1
-    val retainedVs = (cutoff to cur).filter(v =>
-      manifestFile(path, v).exists() || mlistFile(path, v).exists())
+    val retainedVs = (cutoff to cur).filter(v => mlistFile(path, v).exists())
     val retained = retainedVs.flatMap(v =>
       filesAsOf(path, v) ++ deleteVectorsAsOf(path, v)).toSet
     // pmanifests any retained manifest list still references must
     // survive — a list carries old versions' pmanifests by reference
-    val retainedPms = retainedVs.filter(v => mlistFile(path, v).exists())
+    val retainedPms = retainedVs
       .flatMap(v => readMlist(path, v).parts.map(_.pmanifest)).toSet
     val dataRoot = new File(path, "data")
-    // walk commit dirs recursively: flat commits keep files one level
+    // walk commit dirs recursively: unpartitioned commits keep files one level
     // deep, partitioned commits nest them under <partCol>=<value>/
     def walk(f: File): Seq[File] =
       if (f.isDirectory)
@@ -2067,11 +1930,10 @@ object VersionedStore {
     }
     Option(dataRoot.listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).foreach(prune)
-    // expired version pointers (both forms) and any pmanifest no
+    // expired manifest lists and any pmanifest no
     // retained manifest list still references
     Option(manifestDir(path).list()).getOrElse(Array.empty)
       .collect {
-        case n @ ManifestRe(v) if v.toInt < cutoff => n
         case n @ MlistRe(v) if v.toInt < cutoff => n
         // expired schema files (a torn-commit orphan at cur+1 is NOT
         // reclaimed here — commits write the schema BEFORE the version
@@ -2083,35 +1945,4 @@ object VersionedStore {
       .foreach(n => new File(manifestDir(path), n).delete(): Unit)
     doomed.map(rel).toSeq
   }
-
-  private def commitData(df: DataFrame, path: String, v: Int,
-                         carriedFiles: Seq[String],
-                         replayable: Boolean = false,
-                         schema: Option[org.apache.spark.sql.types.StructType]
-                           = None): Int = {
-    // attempt-unique dir: a torn earlier attempt at this version (or
-    // a concurrent one) left ITS OWN dir — never clobbered, never
-    // clobbering; unpublished attempts are invisible vacuum debris
-    val commitRel = s"data/commit-$v-${attemptId()}"
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/$commitRel")
-    val added = listParquet(path, commitRel)
-    // schema lands BEFORE the version pointer: a crash in between
-    // leaves an orphaned .schema file for an unpublished version —
-    // invisible (readers resolve versions through the pointer) and
-    // reclaimed by vacuum like any other debris
-    schema.foreach(s => recordSchema(path, v, s))
-    publishManifest(path, v, (carriedFiles ++ added).sorted, replayable)
-    v
-  }
-
-  /** The atomic publish: full file list to a tmp file, one rename —
-    * create-exclusive unless this is a batch-replay seam (whose
-    * version is keyed by batchId, so republishing IS the idempotency
-    * contract). */
-  private def publishManifest(path: String, v: Int,
-                              files: Seq[String],
-                              replayable: Boolean = false): Unit =
-    writeAtomic(manifestFile(path, v), files.mkString("\n"),
-      replace = replayable)
 }

@@ -48,7 +48,7 @@ import org.apache.spark.sql.types.StructType
   * the whole read path — schema, pruning, codegen — is the ordinary
   * parquet scan; the source itself is metadata-only. Each batch reads
   * through [[VersionedStore.readVersionFiles]] with a streaming scan,
-  * so partition values of hierarchical tables are reattached exactly
+  * so partition values of partitioned tables are reattached exactly
   * as [[VersionedStore.readChanges]] reattaches them. */
 class VersionedStreamSource(spark: SparkSession, path: String,
                             override val schema: StructType,
@@ -151,9 +151,9 @@ class VersionedStreamSource(spark: SparkSession, path: String,
 }
 
 object VersionedStreamSource {
-  /** The current snapshot's schema — the recorded one (legacy
-    * tables: one data-file footer) with a hierarchical table's
-    * partition column last, as every batch carries it. */
+  /** The current snapshot's schema — the recorded one, with a
+    * partitioned table's partition column last, as every batch
+    * carries it. */
   private[sources] def fullSchemaOf(spark: SparkSession,
                                     path: String): StructType = {
     val v = VersionedStore.currentVersion(path)

@@ -94,7 +94,7 @@ object StreamingIngest {
     * ([[graft.sources.VersionedStore.commitBatch]]). Downstream batch
     * readers pin a version and are isolated from in-flight commits;
     * history stays time-travelable until vacuum. `partCol = Some(c)`
-    * makes the first batch create a hierarchical table partitioned by
+    * makes the first batch create a table partitioned by
     * `c`: each later micro-batch appends into its rows' partitions, so
     * a batch touching k partitions writes k per-partition manifests +
     * one list and the warehouse metadata stays O(touched) per batch at
@@ -118,7 +118,7 @@ object StreamingIngest {
     * own version — an at-least-once upsert stream lands exactly-once
     * table STATE. Batches must be key-unique: dedup a raw CDC batch
     * keep-latest first (the engine's ReplacingMergeTree operator).
-    * `partCol = Some(c)` makes the first batch create a hierarchical
+    * `partCol = Some(c)` makes the first batch create a
     * table partitioned by `c` — the full 100 TB shape: a CDC-upsert
     * stream into a month-partitioned warehouse table, O(touched
     * partitions) metadata per micro-batch, partition-moving updates

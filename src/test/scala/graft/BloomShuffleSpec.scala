@@ -83,7 +83,7 @@ class BloomShuffleSpec extends SparkSpec {
       // parquet round-trip so the optimizer has a REAL byte estimate
       // (an in-memory range plan estimates rows, not string payload)
       .repartition(1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wide-dim")
+    val dir = tempDir("graft-wide-dim")
     wide.write.mode("overwrite").parquet(dir.toString)
     val dimOnDisk = spark.read.parquet(dir.toString)
     val bytes = BigInt(

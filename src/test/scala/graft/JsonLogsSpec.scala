@@ -26,7 +26,7 @@ class JsonLogsSpec extends SparkSpec {
         lit(7L).as("block_number"),
         col("log_index"), col("ts"))).as("line"))
       .collect().map(_.getString(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonlogs")
+    val dir = tempDir("graft-jsonlogs")
     val corrupt = """{"address": "0xdead", "topics": ["""
     val shapeless = """{"address": "0xbeef", "data": "0x00", "block_number": 9}"""
     java.nio.file.Files.write(dir.resolve("page.jsonl"),
@@ -58,7 +58,7 @@ class JsonLogsSpec extends SparkSpec {
     // with fewer than 4 topics (ERC-20 Transfer has 3, anonymous
     // events 1) must flow through good() with null topic slots, not
     // kill the job (ADVICE r11 high).
-    val dir = java.nio.file.Files.createTempDirectory("graft-shorttopics")
+    val dir = tempDir("graft-shorttopics")
     val lines = Seq(
       // anonymous event: 1 topic
       """{"address":"0x01","topics":["0xaa"],"data":"0x00","block_number":1,"log_index":0}""",
@@ -95,7 +95,7 @@ class JsonLogsSpec extends SparkSpec {
         lit(7L).as("block_number"),
         col("log_index"), col("ts"))).as("line"))
       .collect().map(_.getString(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonstream")
+    val dir = tempDir("graft-jsonstream")
     // two pages arriving as separate micro-batches
     val Array(p1, p2) = Array(
       page(encoded.filter(col("log_index") % 2 === 0)),

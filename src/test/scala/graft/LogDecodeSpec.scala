@@ -102,7 +102,7 @@ class LogDecodeSpec extends SparkSpec {
     // column exprs do, but this pins the topology end to end:
     // log stream -> decode -> trade rows -> grouped volume.
     val trades = Tables.trades(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-logstream").toString
+    val dir = tempDir("graft-logstream").toString
     val logs = LogDecode.encodeOrderFilled(trades)
     logs.coalesce(2).write.parquet(s"$dir/logs")
     val decoded = LogDecode.decodedToTrades(LogDecode.decodeOrderFilled(

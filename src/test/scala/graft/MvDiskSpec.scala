@@ -14,22 +14,39 @@ import graft.model.Views
 class MvDiskSpec extends SparkSpec {
 
   private def withDisk[A](body: java.nio.file.Path => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("graft-mvdisk")
+    val root = tempDir("graft-mvdisk")
     Views.diskRootOverride = Some(root)
     try body(root)
     finally {
       Views.diskRootOverride = None
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root.toFile)
+      Views.rmTree(root)
+    }
+  }
+
+  // Gate answers are session-only: with a disk root set, the near-dup
+  // recall gate's rows are pinned for the session, never written under
+  // the root, so a later run cannot attach an earlier run's answer.
+  test("q_neardup_recall keeps its gate rows session-only: no disk " +
+    "entry, one pinned frame per shape reused by a second run") {
+    withDisk { root =>
+      Views.reset(spark)
+      val q = SparkEntry.queries("q_neardup_recall")
+      val first = q(spark, sf).collect().map(_.toString)
+      val pinned = Views.pinnedCount(spark)
+      assert(pinned == 2, s"one pinned frame per shape, got $pinned")
+      val second = q(spark, sf).collect().map(_.toString)
+      assert(first.sameElements(second))
+      assert(Views.pinnedCount(spark) == pinned,
+        "the second run reuses the pinned gate frames")
+      val gateEntries = root.toFile.list().filter(_.startsWith("neardup_gate_"))
+      assert(gateEntries.isEmpty, gateEntries.mkString(", "))
+      Views.reset(spark)
     }
   }
 
   test("second session attaches: builder runs once, rows identical") {
     withDisk { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-mvdisk-in")
+      val dir = tempDir("graft-mvdisk-in")
       try {
         spark.range(0, 1000).select(col("id"), (col("id") % 7).as("k"))
           .write.mode("overwrite").parquet(dir.resolve("t.parquet").toString)
@@ -59,11 +76,7 @@ class MvDiskSpec extends SparkSpec {
         assert(builds.get() == 2, "changed inputs must rebuild, not attach")
         assert(third.count() == 7)
       } finally {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(dir.toFile)
+        Views.rmTree(dir)
       }
     }
   }
@@ -139,7 +152,7 @@ class MvDiskSpec extends SparkSpec {
   }
 
   test("disk layer off (default): builder runs per session, no disk traffic") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mvdisk-off")
+    val dir = tempDir("graft-mvdisk-off")
     try {
       spark.range(0, 10).toDF("id")
         .write.mode("overwrite").parquet(dir.resolve("t.parquet").toString)
@@ -155,11 +168,7 @@ class MvDiskSpec extends SparkSpec {
       assert(builds.get() == 2)
       assert(Views.diskMisses.get() == m0 && Views.diskHits.get() == h0)
     } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
+      Views.rmTree(dir)
     }
   }
 

@@ -215,8 +215,7 @@ class RollupRewriteSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     RollupRewrite.clear(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_srollup").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_srollup").toFile
     val path = new java.io.File(dir, "flows").getAbsolutePath
 
     // the batch plan queries will NAME; the stream delivers the same

@@ -18,7 +18,7 @@ class SnapshotWriterSpec extends SparkSpec {
     val wt = Leaderboard.walletTrades(Tables.trades(spark, sf))
     val lastPrice = Candles.lastPrice(Tables.trades(spark, sf),
       col("token_id"), col("ts"), col("trade_id"), col("price"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-snapw").toString
+    val dir = tempDir("graft-snapw").toString
     val flowsDir = s"$dir/flows"
     val snapsDir = s"$dir/snaps"
     // flow partials are additive day-aggregates, so batch order is
@@ -59,7 +59,7 @@ class SnapshotWriterSpec extends SparkSpec {
         col("side"), col("qty"), col("usd"))
     val lastPrice = Candles.lastPrice(Tables.trades(spark, sf),
       col("token_id"), col("ts"), col("trade_id"), col("price"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-snapw2").toString
+    val dir = tempDir("graft-snapw2").toString
     new java.io.File(s"$dir/in").mkdirs()
     wt.coalesce(2).write.parquet(s"$dir/src")
 

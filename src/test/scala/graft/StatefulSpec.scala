@@ -17,7 +17,7 @@ class StatefulSpec extends SparkSpec {
       (col("side") === "buy").as("isBuy"),
       col("qty").cast("double").as("qty"),
       col("usd").cast("double").as("usd"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-fills").toString
+    val dir = tempDir("graft-fills").toString
     fills.write.mode("overwrite").parquet(dir)
 
     val stream = spark.readStream.schema(fills.schema).parquet(dir)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class StoreSpec extends SparkSpec {
 
   test("monthly-partitioned store roundtrips and prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-store").toString
+    val dir = tempDir("graft-store").toString
     val trades = Tables.trades(spark, sf)
     PartitionedStore.writeMonthly(trades, "ts", dir, Seq("token_id", "trade_id"))
 
@@ -28,7 +28,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compaction merges small files per partition, preserving data") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val dir = tempDir("graft-compact").toString
     val trades = Tables.trades(spark, sf)
     // simulate micro-batch ingest: many small files inside one month
     trades.filter(date_format(col("ts"), "yyyyMM") === "199601")

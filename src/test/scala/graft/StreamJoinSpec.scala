@@ -20,7 +20,7 @@ class StreamJoinSpec extends SparkSpec {
     StructField("fill_ts", TimestampType)))
 
   test("fills join orders within the interval; stream equals batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sj").toString
+    val dir = tempDir("graft-sj").toString
     new java.io.File(s"$dir/orders").mkdirs()
     new java.io.File(s"$dir/fills").mkdirs()
 

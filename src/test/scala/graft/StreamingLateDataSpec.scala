@@ -22,7 +22,7 @@ class StreamingLateDataSpec extends SparkSpec {
     StructField("usd", DoubleType)))
 
   test("append candles: in-watermark merges, beyond-watermark late rows drop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late").toString
     new java.io.File(s"$dir/in").mkdirs()
 
     def write(sub: String, rs: Seq[(Long, String, Long, Double, Double)]): Unit =

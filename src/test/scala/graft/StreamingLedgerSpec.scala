@@ -77,7 +77,7 @@ class StreamingLedgerSpec extends SparkSpec {
 
     // split by time so batch 2 strictly follows batch 1
     val cut = "1998-01-01"
-    val dir = java.nio.file.Files.createTempDirectory("graft-sled").toString
+    val dir = tempDir("graft-sled").toString
     fills.filter(col("ts") < lit(cut)).write.parquet(s"$dir/b1")
 
     new java.io.File(s"$dir/in").mkdirs()

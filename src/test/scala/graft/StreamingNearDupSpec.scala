@@ -34,7 +34,7 @@ class StreamingNearDupSpec extends SparkSpec {
   }
 
   test("incremental: a doc pairs against history from earlier batches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    val dir = tempDir("graft-neardup").toString
     val first = corpus.filter(_._1 != 2L).toDF("doc_id", "text")
     val postsSchema = StreamingNearDup.bandPosts(first, "doc_id", "text",
       3, 8, 4).schema

@@ -18,7 +18,7 @@ class StreamingSessionsSpec extends SparkSpec {
     StructField("value", DoubleType)))
 
   test("sessions close when the watermark passes the gap; open sessions extend") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssess").toString
+    val dir = tempDir("graft-ssess").toString
     new java.io.File(s"$dir/in").mkdirs()
 
     def write(sub: String, rs: Seq[(Long, String, Double)]): Unit =
@@ -68,7 +68,7 @@ class StreamingSessionsSpec extends SparkSpec {
   }
 
   test("late event inside the watermark bridges two gap-closed sessions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ssess2").toString
+    val dir = tempDir("graft-ssess2").toString
     new java.io.File(s"$dir/in").mkdirs()
 
     def write(sub: String, rs: Seq[(Long, String, Double)]): Unit =

@@ -10,7 +10,7 @@ class StreamingSpec extends SparkSpec {
 
   // readStream needs a directory source: stage the single parquet file
   private lazy val stageDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
+    val dir = tempDir("graft-stream")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     dir.toString
@@ -151,8 +151,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch sink lands month-partitioned parquet that compaction can merge") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft-sink-ck").toString
+    val out = tempDir("graft-sink").toString
+    val ck = tempDir("graft-sink-ck").toString
     val q = StreamingIngest.sinkMonthly(streamingEvents, "ts", s"$out/events",
       Seq("event_id"), ck)
     q.processAllAvailable()

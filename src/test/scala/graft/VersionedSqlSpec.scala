@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
   * table, in both copy-on-write and vectored modes. */
 class VersionedSqlSpec extends SparkSpec {
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("vsql").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def freshDir(): String = tempDir("vsql").toString
 
   private lazy val parser =
     new GraftSqlParser(spark, spark.sessionState.sqlParser)

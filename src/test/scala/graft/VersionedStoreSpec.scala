@@ -8,11 +8,7 @@ import org.apache.spark.sql.functions._
   * protocol in its minimal single-writer form. */
 class VersionedStoreSpec extends SparkSpec {
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("vstore").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def freshDir(): String = tempDir("vstore").toString
 
   private def rows(path: String, v: Int): Set[Long] =
     VersionedStore.readAsOf(spark, path, v)
@@ -70,9 +66,9 @@ class VersionedStoreSpec extends SparkSpec {
     VersionedStore.overwrite(Seq(2L).toDF("id"), path)   // v2 (v1 orphan)
     VersionedStore.append(Seq(3L).toDF("id"), path)      // v3 carries v2
     // age v1's commit a day into the past (history reads manifest
-    // mtimes — the same clock timestampAsOf resolves against)
+    // list mtimes — the same clock timestampAsOf resolves against)
     val cutoff = System.currentTimeMillis() - 3600 * 1000L
-    val m1 = new java.io.File(path, "manifests/v1.manifest")
+    val m1 = new java.io.File(path, "manifests/v1.mlist")
     assert(m1.exists() && m1.setLastModified(cutoff - 86400000L))
     val deleted = VersionedStore.vacuumOlderThan(path, cutoff)
     assert(deleted.nonEmpty && deleted.forall(_.contains("commit-1")),
@@ -271,9 +267,9 @@ class VersionedStoreSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("id"), r.getAs[String]("month"),
         Option(r.getAs[String]("tag")))).toSet
     assert(got == Set((1L, "1996-01", None), (2L, "1996-02", Some("x"))))
-    // explicit-API reader agrees
-    val viaParts = VersionedStore.readPartitionsAsOf(spark, path, v2, _ => true)
-    assert(viaParts.columns.toSet == Set("id", "month", "tag"))
+    // a partition-pruned read of the old partition null-fills too
+    assert(snap.where(col("month") === "1996-01").collect()
+      .map(r => Option(r.getAs[String]("tag"))).toSeq == Seq(None))
     // the stream source's schema authority is the recorded schema
     assert(spark.readStream.format("graft-versioned").load(path)
       .schema.fieldNames.toSet == Set("id", "month", "tag"))
@@ -283,12 +279,12 @@ class VersionedStoreSpec extends SparkSpec {
     import spark.implicits._
     val path = freshDir()
     VersionedStore.append(Seq(1L).toDF("id"), path)
-    // simulate a crash between data write and manifest publish: data
-    // files exist, the manifest rename never happened
+    // simulate a crash between data write and list publish: data
+    // files exist, the manifest list's link never happened
     Seq(99L).toDF("id").write.parquet(s"$path/data/commit-2")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$path/manifests/v2.manifest.tmp"),
-      "data/commit-2/bogus.parquet".getBytes("UTF-8"))
+      java.nio.file.Paths.get(s"$path/manifests/v2.mlist.tmp"),
+      "#part\n\tp--v2-bogus.pmanifest".getBytes("UTF-8"))
     assert(VersionedStore.currentVersion(path) == 1,
       "tmp manifest is not a committed version")
     assert(rows(path, 1) == Set(1L), "orphaned files stay invisible")
@@ -426,6 +422,15 @@ class VersionedStoreSpec extends SparkSpec {
   private def pmanifests(path: String): Set[String] =
     new java.io.File(path, "manifests").list().toSet
       .filter(_.endsWith(".pmanifest"))
+  /** Files a fresh execution of `df`'s scan read — the planner's
+    * pruning result (`numFiles` of its one FileSourceScanExec). */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    val q = df.where(lit(true)) // a new plan: `df`'s metrics may be spent
+    q.collect()
+    q.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get.metrics("numFiles").value
+  }
   private def prows(path: String, v: Int): Set[(Long, String)] =
     VersionedStore.readAsOf(spark, path, v)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("month"))).toSet
@@ -510,13 +515,15 @@ class VersionedStoreSpec extends SparkSpec {
       part(path, "1996-01", 1L).unionByName(part(path, "1996-02", 2L)),
       path, partCol = Some("month"))
     VersionedStore.append(part(path, "1996-02", 20L), path, partCol = Some("month"))
-    val pruned = VersionedStore.readPartitionsAsOf(spark, path, 2,
-      _ == "1996-01")
+    val pruned = VersionedStore.readIndexed(spark, path, 2)
+      .where(col("month") === "1996-01")
     assert(pruned.collect().map(_.getAs[Long]("id")).toSet == Set(1L))
-    // planning prunes whole manifests: the only files in the plan are
-    // the selected partition's — which live in commit-1, because v2
+    // planning prunes whole manifests: the only file in the scan is
+    // the selected partition's — which lives in commit-1, because v2
     // never touched it
-    val inputs = pruned.inputFiles
+    assert(scannedFiles(pruned) == 1)
+    val inputs = pruned.select(input_file_name()).distinct()
+      .collect().map(_.getString(0))
     assert(inputs.nonEmpty && inputs.forall(f =>
       f.contains("commit-1") && f.contains("month=1996-01")), inputs.toSeq)
   }
@@ -616,12 +623,10 @@ class VersionedStoreSpec extends SparkSpec {
       s"every file carries footer-harvested (rows, min, max): $entries")
     assert(entries.map(_.stats.get._1).sum == 4000L, "row counts harvested")
     // a narrow range: only the one file whose [min,max] intersects
-    val pruned = VersionedStore.readPartitionsAsOf(spark, path, v1,
-      _ => true, statsRange = Some((1100.0, 1200.0)))
-    assert(pruned.inputFiles.length == 1,
-      s"3 of 4 files pruned at PLANNING time: ${pruned.inputFiles.toSeq}")
-    assert(pruned.filter(col("ts").between(1100, 1200)).count() == 101,
-      "the surviving file contains the full answer")
+    val pruned = VersionedStore.readIndexed(spark, path, v1)
+      .where(col("ts").between(1100, 1200))
+    assert(pruned.count() == 101, "the surviving file holds the full answer")
+    assert(scannedFiles(pruned) == 1, "3 of 4 files pruned at PLANNING time")
     // inherited on later commits without re-declaring; appended files
     // get their own stats; carried lines keep theirs
     val v2 = VersionedStore.append(
@@ -635,11 +640,10 @@ class VersionedStoreSpec extends SparkSpec {
         Seq((1L, 1L, "1996-01")).toDF("id", "ts", "month"), path, partCol = Some("month"),
         statsCol = Some("id"))
     }
-    // conservative on range misses beyond all files
-    intercept[IllegalArgumentException] {
-      VersionedStore.readPartitionsAsOf(spark, path, v1, _ => true,
-        statsRange = Some((999999.0, 999999.5)))
-    }
+    // a range beyond every file's window scans no file at all
+    val miss = VersionedStore.readIndexed(spark, path, v1)
+      .where(col("ts").between(999999, 1000000))
+    assert(miss.count() == 0 && scannedFiles(miss) == 0)
   }
 
   test("per-partition compaction rewrites one partition, carries the rest") {
@@ -765,9 +769,9 @@ class VersionedStoreSpec extends SparkSpec {
     // windows stay disjoint and a narrow range still reads ONE file —
     // a round-robin rewrite would hand both files the full range and
     // quietly kill #149's pruning at the first compaction
-    val pruned = VersionedStore.readPartitionsAsOf(spark, path, v2,
-      _ => true, statsRange = Some((1100.0, 1200.0)))
-    assert(pruned.inputFiles.length == 1,
+    val pruned = VersionedStore.readIndexed(spark, path, v2)
+      .where(col("ts").between(1100, 1200))
+    assert(pruned.count() == 101 && scannedFiles(pruned) == 1,
       s"stats pruning survives compaction: ${entries.map(_.stats)}")
     assert(VersionedStore.readAsOf(spark, path, v2).count() == 4000)
     // history: the compaction commit is a full-partition rewrite
@@ -1197,7 +1201,8 @@ class VersionedStoreSpec extends SparkSpec {
     assert(VersionedStore.deleteVectored(spark, path,
       col("id") === -5L) == 2)
     // pruned read paths subtract too
-    assert(VersionedStore.readPartitionsAsOf(spark, path, 2, _ == "1996-01")
+    assert(VersionedStore.readIndexed(spark, path, 2)
+      .where(col("month") === "1996-01")
       .collect().map(_.getLong(0)).toSet ==
       (0L until 100L).filterNot(_ % 10 == 4).toSet,
       "partition-pruned read applies the vectors")
@@ -1451,7 +1456,8 @@ class VersionedStoreSpec extends SparkSpec {
     // snapshot isolation: v1 unchanged
     assert(VersionedStore.readAsOf(spark, path, 1).count() == 150)
     // partition-pruned read of the move SOURCE subtracts the moved row
-    assert(VersionedStore.readPartitionsAsOf(spark, path, 2, _ == "1996-02")
+    assert(VersionedStore.readIndexed(spark, path, 2)
+      .where(col("month") === "1996-02")
       .collect().map(_.getLong(0)).toSet == (50L until 100L).toSet - 60L)
   }
 
@@ -1978,5 +1984,52 @@ class VersionedStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       VersionedStore.append(rows(Seq(2L)), flat, statsCol = Some("id"))
     }
+  }
+
+  test("compact and overwrite keep a month-partitioned table's layout: " +
+    "form, stats columns, later appends, TTL expiry and pruning hold") {
+    import spark.implicits._
+    val path = freshDir()
+    def rows(m: String, ids: Range) =
+      ids.map(i => (i.toLong, 1000L + i, m)).toDF("id", "ts", "month")
+    VersionedStore.append(rows("1996-01", 0 until 40)
+      .unionByName(rows("1996-02", 40 until 80)).repartition(4), path,
+      partCol = Some("month"), statsCol = Some("ts"))
+    def layoutHolds(v: Int, op: String): Unit = {
+      assert(VersionedStore.history(path).last.form == "partitioned",
+        s"[$op] the commit keeps the partitioned form")
+      val ml = VersionedStore.readMlist(path, v)
+      assert(ml.partCol.contains("month") && ml.statsCols == Seq("ts"),
+        s"[$op] the list header keeps partition and stats columns: $ml")
+      val entries = ml.parts.map(p =>
+        p.value -> VersionedStore.readPmanifestEntries(path, p.pmanifest))
+      assert(entries.forall(_._2.forall(_.stats.nonEmpty)),
+        s"[$op] every file carries its stats")
+      val (first, firstFiles) = entries.head
+      val q = VersionedStore.readAsOf(spark, path, v)
+        .where(col("month") === first)
+      assert(scannedFiles(q) == firstFiles.size &&
+        firstFiles.size < VersionedStore.filesAsOf(path, v).size,
+        s"[$op] WHERE month = $first scans only that partition's files")
+    }
+    val v2 = VersionedStore.compact(spark, path, nFiles = 1)
+    layoutHolds(v2, "compact")
+    assert(prows(path, v2) == prows(path, 1), "compaction changes no rows")
+    assert(VersionedStore.append(rows("1996-03", 80 until 90), path,
+      partCol = Some("month")) == 3)
+    assert(VersionedStore.expirePartitions(spark, path, _ < "1996-02") == 4)
+    assert(prows(path, 4).map(_._2) == Set("1996-02", "1996-03"))
+    val v5 = VersionedStore.overwrite(rows("1996-04", 0 until 20)
+      .unionByName(rows("1996-05", 20 until 30)), path)
+    layoutHolds(v5, "overwrite")
+    assert(prows(path, v5).size == 30)
+    assert(VersionedStore.append(rows("1996-06", 30 until 35), path,
+      partCol = Some("month")) == 6)
+    assert(VersionedStore.expirePartitions(spark, path, _ < "1996-05") == 7)
+    assert(prows(path, 7).map(_._2) == Set("1996-05", "1996-06"))
+    val e = intercept[IllegalArgumentException] {
+      VersionedStore.overwrite(rows("1996-07", 0 until 5).drop("month"), path)
+    }
+    assert(e.getMessage.contains("month"), e.getMessage)
   }
 }

@@ -11,11 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * file-list deltas, rewrites fail loudly unless skipped. */
 class VersionedStreamSourceSpec extends SparkSpec {
 
-  private def freshDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def freshDir(prefix: String): String = tempDir(prefix).toString
 
   private def startTail(path: String, sinkName: String, ckpt: String,
                         options: Map[String, String] = Map.empty)

@@ -23,7 +23,7 @@ class ZOrderSpec extends SparkSpec {
       col("token_id"),
       datediff(col("ts"), lit("1992-01-01").cast("date")).as("day"),
       col("qty"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder").toString
     // single-key layout: clustered by day only (the "obvious" sort)
     base.withColumn("_s", col("day"))
       .repartitionByRange(24, col("_s")).sortWithinPartitions(col("_s"))
