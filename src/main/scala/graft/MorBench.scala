@@ -14,13 +14,14 @@ import graft.sources.VersionedStore
   * most read-amplifying regime the format allows. One JSON line:
   *
   *   {"metric":"mor_read_amp","rows":…,"files":…,
-  *    "clean_sec":…, "points":[{"dead_pct":…, "sidecar_bytes":…,
-  *    "read_sec":…, "amp":…}, …],
+  *    "clean_sec":…, "clean_med":…, "points":[{"dead_pct":…,
+  *    "sidecar_bytes":…, "read_sec":…, "read_med":…, "amp":…}, …],
   *    "reorg_min_dead_ratio":…, "reorg_sec":…, "post_reorg_sec":…,
-  *    "post_reorg_amp":…, "post_reorg_vectors":…}
+  *    "post_reorg_med":…, "post_reorg_amp":…, "post_reorg_vectors":…}
   *
-  * `amp` = read_sec / clean_sec. Reads are min-of-2 full scans to a
-  * noop sink (no count() shortcuts). Committed as BENCH_MOR.json. */
+  * Each read point is 5 full scans to a noop sink (no count()
+  * shortcuts): `*_sec` is their min, `*_med` their median, and
+  * `amp` = read_sec / clean_sec. Committed as BENCH_MOR.json. */
 object MorBench {
 
   private def fmt(v: Double): String = f"$v%.3f"
@@ -44,21 +45,22 @@ object MorBench {
       .repartition(files)
     VersionedStore.append(df, path) // v1
 
-    def readSec(): Double = {
-      val ts = (1 to 2).map { _ =>
+    /** (min, median) of 5 timed full scans. */
+    def readSec(): (Double, Double) = {
+      val ts = (1 to 5).map { _ =>
         val t0 = System.nanoTime()
         VersionedStore.read(spark, path)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      }
-      ts.min
+      }.sorted
+      (ts.head, ts(ts.size / 2))
     }
     def sidecarBytes(): Long =
       VersionedStore.deleteVectorsAsOf(path,
         VersionedStore.currentVersion(path))
         .map(d => new java.io.File(path, d).length()).sum
 
-    val clean = readSec()
+    val (clean, cleanMed) = readSec()
 
     // cumulative scattered deletes: residue classes touch EVERY file.
     // Steps land at ~0.1%, ~1.1%, ~6.1% cumulative dead fraction.
@@ -68,9 +70,10 @@ object MorBench {
       ("6.1", col("id") % 20 === 2))
     val points = steps.map { case (label, pred) =>
       VersionedStore.deleteVectored(spark, path, pred)
-      val sec = readSec()
+      val (sec, med) = readSec()
       s"""{"dead_pct":$label,"sidecar_bytes":${sidecarBytes()},""" +
-        s""""read_sec":${fmt(sec)},"amp":${fmt(sec / clean)}}"""
+        s""""read_sec":${fmt(sec)},"read_med":${fmt(med)},""" +
+        s""""amp":${fmt(sec / clean)}}"""
     }
 
     // reorg at the default operating threshold: fold files whose dead
@@ -83,13 +86,15 @@ object MorBench {
     val reorgSec = (System.nanoTime() - t0) / 1e9
     val postVectors = VersionedStore.deleteVectorsAsOf(path,
       VersionedStore.currentVersion(path)).size
-    val post = readSec()
+    val (post, postMed) = readSec()
 
     val line =
       s"""{"metric":"mor_read_amp","rows":$rows,"files":$files,""" +
-        s""""clean_sec":${fmt(clean)},"points":[${points.mkString(",")}],""" +
+        s""""clean_sec":${fmt(clean)},"clean_med":${fmt(cleanMed)},""" +
+        s""""points":[${points.mkString(",")}],""" +
         s""""reorg_min_dead_ratio":$minDeadRatio,"reorg_sec":${fmt(reorgSec)},""" +
-        s""""post_reorg_sec":${fmt(post)},"post_reorg_amp":${fmt(post / clean)},""" +
+        s""""post_reorg_sec":${fmt(post)},"post_reorg_med":${fmt(postMed)},""" +
+        s""""post_reorg_amp":${fmt(post / clean)},""" +
         s""""post_reorg_vectors":$postVectors}"""
     println(line)
 

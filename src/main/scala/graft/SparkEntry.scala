@@ -58,7 +58,6 @@ object SparkEntry {
         .groupBy(col("token_id"), date_trunc("day", col("ts")).as("day"))
         .agg(sum(round(col("usd") * 10000).cast("long")).as("ui"),
           sum(round(col("qty") * 10000).cast("long")).as("qi"),
-          sum(col("usd")).as("vol_dec"),
           count(lit(1)).as("n"),
           // day-grain last price (ts is date-grain, so the last trade
           // of the day IS the last trade of the tick): the as-of
@@ -97,41 +96,49 @@ object SparkEntry {
           sum(col("bi")).as("bi"), sum(col("si")).as("si"))
         .sortWithinPartitions(col("wallet"), col("market")))
 
-  /** Register the session rollups (idempotent — register() dedupes
-    * structurally). Sum partials are the same 1e-4-scaled longs /
-    * exact decimals the raw plans compute, so rewrites are
-    * value-identical, not just approximately equal. */
+  /** Count of [[registerRollups]] registration runs — test-visible,
+    * so specs can pin "two query builds, one registration". */
+  private[graft] val rollupRegistrations = new java.util.concurrent.atomic.AtomicLong
+
+  /** Register the session rollups, once per session and dir. Sum
+    * partials are the same 1e-4-scaled longs the raw plans compute, so
+    * rewrites are value-identical, not just approximately equal. The
+    * mark holds the rollup frames themselves: after a Views.reset
+    * rebuilds them, the new frames register again. */
   private[graft] def registerRollups(s: SparkSession, d: String): Unit = {
-    graft.plans.RollupRewrite.register(s, Views.trades(s, d), tradesTokenDay(s, d),
-      dims = Seq((col("token_id"), "token_id"),
-        (date_trunc("day", col("ts")), "day")),
-      sums = Seq((round(col("usd") * 10000).cast("long"), "ui"),
-        (round(col("qty") * 10000).cast("long"), "qi"),
-        (col("usd"), "vol_dec")),
-      countCol = Some("n"))
-    graft.plans.RollupRewrite.register(s,
-      walletTokenFlows(s, d).join(broadcast(markets(s, d)), Seq("token_id")),
-      walletMarketFlows(s, d),
-      dims = Seq((col("wallet"), "wallet"), (col("market"), "market")),
-      sums = Seq((col("trades"), "trades"), (col("bi"), "bi"),
-        (col("si"), "si")),
-      countCol = None)
-    // the two-sided explode → flows rollup, full partial set (the
-    // q_rollup_auto gate registers a subset of the same pair — both
-    // co-exist; the rule tries each)
-    val ui = round(col("usd") * 10000).cast("long")
-    graft.plans.RollupRewrite.register(s, wt(s, d), walletTokenFlows(s, d),
-      dims = Seq((col("wallet"), "wallet"), (col("token_id"), "token_id")),
-      sums = Seq(
-        (when(col("side") === "buy", col("qty")).otherwise(lit(0.0)),
-          "buy_qty"),
-        (when(col("side") === "sell", col("qty")).otherwise(lit(0.0)),
-          "sell_qty"),
-        (when(col("side") === "buy", ui).otherwise(0L), "bi"),
-        (when(col("side") === "sell", ui).otherwise(0L), "si"),
-        (col("qty"), "tq")),
-      countCol = Some("trades"),
-      maxs = Seq((col("qty"), "mxq")))
+    val (ttd, wmf, wtf) =
+      (tradesTokenDay(s, d), walletMarketFlows(s, d), walletTokenFlows(s, d))
+    graft.plans.RollupRewrite.registerOnce(s, (d, ttd, wmf, wtf)) {
+      rollupRegistrations.incrementAndGet()
+      graft.plans.RollupRewrite.register(s, Views.trades(s, d), ttd,
+        dims = Seq((col("token_id"), "token_id"),
+          (date_trunc("day", col("ts")), "day")),
+        sums = Seq((round(col("usd") * 10000).cast("long"), "ui"),
+          (round(col("qty") * 10000).cast("long"), "qi")),
+        countCol = Some("n"))
+      graft.plans.RollupRewrite.register(s,
+        wtf.join(broadcast(markets(s, d)), Seq("token_id")), wmf,
+        dims = Seq((col("wallet"), "wallet"), (col("market"), "market")),
+        sums = Seq((col("trades"), "trades"), (col("bi"), "bi"),
+          (col("si"), "si")),
+        countCol = None)
+      // the two-sided explode → flows rollup, full partial set (the
+      // q_rollup_auto gate registers a subset of the same pair — both
+      // co-exist; the rule tries each)
+      val ui = round(col("usd") * 10000).cast("long")
+      graft.plans.RollupRewrite.register(s, wt(s, d), wtf,
+        dims = Seq((col("wallet"), "wallet"), (col("token_id"), "token_id")),
+        sums = Seq(
+          (when(col("side") === "buy", col("qty")).otherwise(lit(0.0)),
+            "buy_qty"),
+          (when(col("side") === "sell", col("qty")).otherwise(lit(0.0)),
+            "sell_qty"),
+          (when(col("side") === "buy", ui).otherwise(0L), "bi"),
+          (when(col("side") === "sell", ui).otherwise(0L), "si"),
+          (col("qty"), "tq")),
+        countCol = Some("trades"),
+        maxs = Seq((col("qty"), "mxq")))
+    }
   }
 
   /** Apply the rollup rewrite to `q` and REQUIRE it fired: the

@@ -16,7 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * All money amounts are computed as DECIMAL(18,4) so that sums are
   * exact and order-independent (oracle-hash safe), then exposed as
-  * DOUBLE in final projections.
+  * DOUBLE in final projections. A stored rollup partial (a session MV
+  * column) holds such a decimal's unscaled value as a 1e-4-scaled
+  * BIGINT: fixed-width, integer-summed, and while |value| < 2^53
+  * `/ 10000.0` gives the same double as the decimal's cast.
   */
 object Tables {
 

@@ -42,17 +42,19 @@ object Candles {
         max(price).as("high"),
         min(price).as("low"),
         max_by(price, ord).as("close"),
-        // decimal partial so re-aggregation stays exact and
-        // order-independent; cast to double only at the edge
-        sum(usd).as("volume_dec"),
+        // volume partial as the exact 1e-4-scaled BIGINT of the
+        // DECIMAL(18,4) sum: re-aggregation is an exact, order-
+        // independent integer sum; /1e4 to double only at the edge
+        sum(round(usd * 10000).cast("long")).as("volume_i"),
         count(lit(1)).as("trades")
       )
   }
 
-  /** Public output shape: volume as double. */
+  /** Public output shape: volume as double (the same double as the
+    * DECIMAL(18,4) sum's cast). */
   def finalize(candles: DataFrame): DataFrame =
-    candles.withColumn("volume", col("volume_dec").cast("double"))
-      .drop("volume_dec")
+    candles.withColumn("volume", col("volume_i") / 10000.0)
+      .drop("volume_i")
 
   /** Re-aggregate fine candles into a coarser interval. `open` of the
     * coarse candle = `open` of the earliest fine bucket, etc. */
@@ -65,7 +67,7 @@ object Candles {
         max(col("high")).as("high"),
         min(col("low")).as("low"),
         max_by(col("close"), ord).as("close"),
-        sum(col("volume_dec")).as("volume_dec"),
+        sum(col("volume_i")).as("volume_i"),
         sum(col("trades")).as("trades")
       )
       .withColumnRenamed("bucket2", "bucket")
@@ -89,7 +91,7 @@ object Candles {
         max(col("high")).as("high"),
         min(col("low")).as("low"),
         max_by(col("close"), ord).as("close"),
-        sum(col("volume_dec")).as("volume_dec"),
+        sum(col("volume_i")).as("volume_i"),
         sum(col("trades")).as("trades")
       )
       .withColumnRenamed("bucket2", "bucket")

@@ -77,17 +77,19 @@ object Leaderboard {
   /** The rollup MV state itself (reference: wallet_leaderboard_stats_1h,
     * 002:6-38 — countState/sumState/uniqExactState per (wallet, hour)):
     * one partial row per (wallet, bucket, token) carrying count/volume/
-    * cashflow partials. The token key is the relational encoding of
-    * uniqExactState's member set. Built once at ingest (session-cache
-    * via graft.model.Views.cached); every leaderboard re-aggregates
-    * these partials instead of the raw trades. */
-  def rollupState(walletTrades: DataFrame, bucket: String): DataFrame =
+    * cashflow partials, the money ones as the exact 1e-4-scaled BIGINT
+    * of their DECIMAL(18,4) sums. The token key is the relational
+    * encoding of uniqExactState's member set. Built once at ingest
+    * (session-cache via graft.model.Views.cached); every leaderboard
+    * re-aggregates these partials instead of the raw trades. */
+  def rollupState(walletTrades: DataFrame, bucket: String): DataFrame = {
+    val ui = round(col("usd") * 10000).cast("long")
     walletTrades
       .groupBy(col("wallet"), date_trunc(bucket, col("ts")).as("bucket"),
         col("token_id"))
-      .agg(count(lit(1)).as("t"), sum(col("usd")).as("v"),
-        sum(when(col("side") === "sell", col("usd")).otherwise(-col("usd")))
-          .as("c"))
+      .agg(count(lit(1)).as("t"), sum(ui).as("v_i"),
+        sum(when(col("side") === "sell", ui).otherwise(-ui)).as("c_i"))
+  }
 
   /** Leaderboard from the materialized [[rollupState]] partials — the
     * countMerge/sumMerge/uniqExactMerge read path: per-wallet sums plus
@@ -100,11 +102,12 @@ object Leaderboard {
     // grain first — the markets count is then a row count riding the
     // SAME aggregation chain instead of a second full scan + distinct
     val perTok = base.groupBy(col("wallet"), col("token_id"))
-      .agg(sum(col("t")).as("t"), sum(col("v")).as("v"), sum(col("c")).as("c"))
+      .agg(sum(col("t")).as("t"), sum(col("v_i")).as("v_i"),
+        sum(col("c_i")).as("c_i"))
     perTok.groupBy(col("wallet"))
       .agg(sum(col("t")).as("trades"),
-        sum(col("v")).cast("double").as("volume_usd"),
-        sum(col("c")).cast("double").as("net_cashflow_usd"),
+        (sum(col("v_i")) / 10000.0).as("volume_usd"),
+        (sum(col("c_i")) / 10000.0).as("net_cashflow_usd"),
         count(lit(1)).as("markets"))
       .select(col("wallet"), col("trades"), col("volume_usd"),
         col("net_cashflow_usd"), col("markets"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,32 +21,32 @@ object Snapshots {
 
   /** Per (wallet, token, day) buy/sell flow partials — the additive
     * wallet-day MV shape (`graft.model.Views.dailyFlows`, the
-    * reference's wallet_pnl_snapshots feeder). ADDITIVE: partial rows
-    * for the same key from different batches sum — re-aggregate with
+    * reference's wallet_pnl_snapshots feeder). Each partial is the
+    * exact unscaled value of a DECIMAL(18,4) sum as a 1e-4-scaled
+    * BIGINT (`usd` is DECIMAL(18,4) already; `qty` is rounded by the
+    * decimal cast first), so the stored state is fixed-width and every
+    * re-aggregation is an integer sum. ADDITIVE: partial rows for the
+    * same key from different batches sum — re-aggregate with
     * [[mergeDailyFlows]] before consuming. */
   def dailyFlowPartials(walletTrades: DataFrame): DataFrame = {
-    val dec0 = lit(0).cast("decimal(18,4)")
+    val usdI = round(col("usd") * 10000).cast("long")
+    val qtyI = (col("qty").cast("decimal(18,4)") * 10000).cast("long")
+    def side(s: String, v: Column) =
+      sum(when(col("side") === s, v).otherwise(0L))
     walletTrades
       .groupBy(col("wallet"), col("token_id"),
         date_trunc("day", col("ts")).as("day"))
-      .agg(
-        sum(when(col("side") === "buy", col("usd")).otherwise(dec0))
-          .as("buy_usd_d"),
-        sum(when(col("side") === "buy", col("qty")).otherwise(lit(0))
-          .cast("decimal(18,4)")).as("buy_qty_d"),
-        sum(when(col("side") === "sell", col("usd")).otherwise(dec0))
-          .as("sell_usd_d"),
-        sum(when(col("side") === "sell", col("qty")).otherwise(lit(0))
-          .cast("decimal(18,4)")).as("sell_qty_d"))
+      .agg(side("buy", usdI).as("buy_usd_i"), side("buy", qtyI).as("buy_qty_i"),
+        side("sell", usdI).as("sell_usd_i"), side("sell", qtyI).as("sell_qty_i"))
   }
 
   /** Re-aggregate appended flow partials to one row per key. */
   def mergeDailyFlows(partials: DataFrame): DataFrame =
     partials.groupBy(col("wallet"), col("token_id"), col("day"))
-      .agg(sum(col("buy_usd_d")).as("buy_usd_d"),
-        sum(col("buy_qty_d")).as("buy_qty_d"),
-        sum(col("sell_usd_d")).as("sell_usd_d"),
-        sum(col("sell_qty_d")).as("sell_qty_d"))
+      .agg(sum(col("buy_usd_i")).as("buy_usd_i"),
+        sum(col("buy_qty_i")).as("buy_qty_i"),
+        sum(col("sell_usd_i")).as("sell_usd_i"),
+        sum(col("sell_qty_i")).as("sell_qty_i"))
 
   /** Per wallet × day: running net cashflow, running inventory value
     * (holdings marked at the global last price), and their sum.
@@ -54,48 +54,30 @@ object Snapshots {
     * @param walletTrades [[Leaderboard.walletTrades]] output
     * @param lastPrice    (token_id, last_price) dim, broadcast
     */
-  def portfolioHistory(walletTrades: DataFrame, lastPrice: DataFrame): DataFrame = {
-    // Day-level partials per wallet × token (tiny vs raw trades). The
-    // portfolio value as-of day d, marked at the final last price, is
-    // Σ_t cumqty_t(d)·lp_t = running sum over days of Σ_t Δqty_t(d)·lp_t,
-    // so one wallet-level running window over day deltas suffices.
-    val daily = walletTrades
-      .groupBy(col("wallet"), col("token_id"),
-        date_trunc("day", col("ts")).as("day"))
-      .agg(
-        sum(when(col("side") === "sell", col("usd")).otherwise(-col("usd")))
-          .as("cashflow_dec"),
-        sum(when(col("side") === "buy", col("qty")).otherwise(-col("qty"))
-          .cast("decimal(18,4)")).as("qty_dec"))
-    portfolioHistoryFromDaily(daily, lastPrice)
-  }
+  def portfolioHistory(walletTrades: DataFrame, lastPrice: DataFrame): DataFrame =
+    portfolioHistoryFromDaily(dailyFlowPartials(walletTrades), lastPrice)
 
   /** [[portfolioHistory]] over pre-maintained wallet-day flow partials
     * (`graft.model.Views.dailyFlows` — the reference's ingest-time
     * MV): the raw-trade groupBy is skipped entirely; the partials are
-    * orders of magnitude smaller than the trades. Accepts either the
-    * (cashflow_dec, qty_dec) shape or the buy/sell flow shape. */
+    * orders of magnitude smaller than the trades. The portfolio value
+    * as-of day d, marked at the final last price, is
+    * Σ_t cumqty_t(d)·lp_t = running sum over days of Σ_t Δqty_t(d)·lp_t,
+    * so one wallet-level running window over day deltas suffices. */
   def portfolioHistoryFromDaily(daily: DataFrame, lastPrice: DataFrame): DataFrame = {
-    val cols = daily.columns.toSet
-    val shaped =
-      if (cols("cashflow_dec")) daily
-      else daily.select(col("wallet"), col("token_id"), col("day"),
-        (col("sell_usd_d") - col("buy_usd_d")).as("cashflow_dec"),
-        (col("buy_qty_d") - col("sell_qty_d")).as("qty_dec"))
     // Product-of-doubles summands are scaled ×10⁴ and floored to
     // BIGINT: floor depends only on the binary double (identical in
     // any engine), and integer sums are exact — so the running totals
-    // are bit-reproducible.
-    val perDay = shaped
+    // are bit-reproducible. The day's net qty as a double is the
+    // scaled integer / 1e4: the same double as its DECIMAL(18,4) cast.
+    val perDay = daily
       .join(broadcast(lastPrice.select(col("token_id"), col("last_price"))),
         Seq("token_id"), "left")
       .withColumn("value_delta_s",
-        floor(col("qty_dec").cast("double") * coalesce(col("last_price"), lit(0.0))
-          * 1e4).cast("long"))
+        floor((col("buy_qty_i") - col("sell_qty_i")) / 10000.0
+          * coalesce(col("last_price"), lit(0.0)) * 1e4).cast("long"))
       .groupBy(col("wallet"), col("day"))
-      // cashflow_dec is DECIMAL(18,4): ×1e4 is exact — integer sums
-      // from here on (PLANS r13)
-      .agg(sum(round(col("cashflow_dec") * 10000).cast("long")).as("day_cash_s"),
+      .agg(sum(col("sell_usd_i") - col("buy_usd_i")).as("day_cash_s"),
            sum(col("value_delta_s")).as("day_value_s"))
 
     runningTotals(perDay)
@@ -204,19 +186,21 @@ object Snapshots {
     // move a float (oracle-hash safe).
     val state = daily
       .repartitionByRange(col("wallet"))
-      .withColumn("cum_buy_usd", sum(col("buy_usd_d")).over(w))
-      .withColumn("cum_buy_qty", sum(col("buy_qty_d")).over(w))
-      .withColumn("cum_sell_usd", sum(col("sell_usd_d")).over(w))
-      .withColumn("cum_sell_qty", sum(col("sell_qty_d")).over(w))
+      .withColumn("cum_buy_usd", sum(col("buy_usd_i")).over(w))
+      .withColumn("cum_buy_qty", sum(col("buy_qty_i")).over(w))
+      .withColumn("cum_sell_usd", sum(col("sell_usd_i")).over(w))
+      .withColumn("cum_sell_qty", sum(col("sell_qty_i")).over(w))
       .join(broadcast(lastPrice.select(col("token_id"), col("last_price"))),
         Seq("token_id"), "left")
       .withColumn("lp", coalesce(col("last_price"), lit(0.0)))
+      // each running sum enters double arithmetic once, as its exact
+      // value / 1e4 (the double of the decimal it stands for)
       .withColumn("avg_cost", when(col("cum_buy_qty") > 0,
-        col("cum_buy_usd").cast("double") / col("cum_buy_qty").cast("double"))
+        (col("cum_buy_usd") / 10000.0) / (col("cum_buy_qty") / 10000.0))
         .otherwise(0.0))
-      .withColumn("open_qty", (col("cum_buy_qty") - col("cum_sell_qty")).cast("double"))
-      .withColumn("realized_s", floor((col("cum_sell_usd").cast("double") -
-        col("cum_sell_qty").cast("double") * col("avg_cost")) * 1e4).cast("long"))
+      .withColumn("open_qty", (col("cum_buy_qty") - col("cum_sell_qty")) / 10000.0)
+      .withColumn("realized_s", floor((col("cum_sell_usd") / 10000.0 -
+        col("cum_sell_qty") / 10000.0 * col("avg_cost")) * 1e4).cast("long"))
       .withColumn("unreal_s",
         floor(col("open_qty") * (col("lp") - col("avg_cost")) * 1e4).cast("long"))
       .withColumn("value_s", floor(col("open_qty") * col("lp") * 1e4).cast("long"))
@@ -262,19 +246,19 @@ object Snapshots {
 
   /** [[pnlDelta]] re-aggregated from the (wallet, token, day) daily-flow
     * partials: both cut timestamps are day-aligned, so `ts < cut` ⟺
-    * `day < cut`, and the signed decimal sums fold exactly from the
-    * per-day (sell_usd_d − buy_usd_d) partials. */
+    * `day < cut`, and the signed sums fold exactly from the per-day
+    * (sell_usd_i − buy_usd_i) scaled partials; `/ 10000.0` is the
+    * same double the raw path's decimal cast gives. */
   def pnlDeltaFromDaily(dailyFlows: DataFrame, fromTs: String,
                         toTs: String): DataFrame = {
-    val signed = col("sell_usd_d") - col("buy_usd_d")
-    val dec0 = lit(0).cast("decimal(19,4)")
+    val signed = col("sell_usd_i") - col("buy_usd_i")
     dailyFlows.groupBy(col("wallet"))
       .agg(
-        sum(when(col("day") < lit(fromTs), signed).otherwise(dec0))
-          .cast("double").as("cashflow_before"),
-        sum(when(col("day") >= lit(fromTs) && col("day") < lit(toTs), signed)
-          .otherwise(dec0)).cast("double").as("cashflow_delta"),
-        sum(signed).cast("double").as("cashflow_total"))
+        (sum(when(col("day") < lit(fromTs), signed).otherwise(0L)) / 10000.0)
+          .as("cashflow_before"),
+        (sum(when(col("day") >= lit(fromTs) && col("day") < lit(toTs), signed)
+          .otherwise(0L)) / 10000.0).as("cashflow_delta"),
+        (sum(signed) / 10000.0).as("cashflow_total"))
   }
 
   /** [[totalPnl]] with the cashflow side folded from the (wallet,

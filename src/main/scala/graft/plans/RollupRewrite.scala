@@ -61,8 +61,13 @@ object RollupRewrite {
                                 mins: Seq[(Expression, String)] = Nil,
                                 maxs: Seq[(Expression, String)] = Nil)
 
+  /** One session's registrations, and the marks of the registration
+    * sets [[registerOnce]] has already run for it. */
+  private final case class SessionRegs(regs: Vector[Registration],
+                                       marks: Set[Any] = Set.empty)
+
   private val regs = new java.util.concurrent.ConcurrentHashMap[
-    String, Vector[Registration]]()
+    String, SessionRegs]()
 
   private def key(spark: SparkSession) = spark.sparkContext.applicationId
 
@@ -94,10 +99,24 @@ object RollupRewrite {
                mins: Seq[(Column, String)] = Nil,
                maxs: Seq[(Column, String)] = Nil): Unit = {
     val reg = mkRegistration(source, rollup, dims, sums, countCol, mins, maxs)
-    regs.merge(key(spark), Vector(reg),
-      (a, b) => if (a.exists(sameReg(_, b.head))) a else a ++ b)
+    regs.merge(key(spark), SessionRegs(Vector(reg)),
+      (a, _) => if (a.regs.exists(sameReg(_, reg))) a
+                else a.copy(regs = a.regs :+ reg))
     ()
   }
+
+  /** Run `registerAll` once per session for `mark`: a later call with
+    * an equal mark is a no-op until [[clear]] drops the session's
+    * registrations and marks together. For registration sets that
+    * query construction repeats, whose mkRegistration analyses cost
+    * far more than the rewrite itself. */
+  def registerOnce(spark: SparkSession, mark: Any)(registerAll: => Unit): Unit =
+    if (!Option(regs.get(key(spark))).exists(_.marks(mark))) {
+      registerAll
+      regs.merge(key(spark), SessionRegs(Vector.empty, Set(mark)),
+        (a, _) => a.copy(marks = a.marks + mark))
+      ()
+    }
 
   /** Register, REPLACING any prior registration of the same source and
     * column mapping whose ROLLUP plan differs — the stream-maintained
@@ -113,8 +132,8 @@ object RollupRewrite {
                         mins: Seq[(Column, String)] = Nil,
                         maxs: Seq[(Column, String)] = Nil): Unit = {
     val reg = mkRegistration(source, rollup, dims, sums, countCol, mins, maxs)
-    regs.merge(key(spark), Vector(reg),
-      (a, b) => a.filterNot(sameMapping(_, b.head)) ++ b)
+    regs.merge(key(spark), SessionRegs(Vector(reg)),
+      (a, _) => a.copy(regs = a.regs.filterNot(sameMapping(_, reg)) :+ reg))
     ()
   }
 
@@ -166,7 +185,7 @@ object RollupRewrite {
     * (postHocResolutionRule) or apply directly to an analyzed plan. */
   class RewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
-      val rs = Option(regs.get(key(spark))).getOrElse(Vector.empty)
+      val rs = Option(regs.get(key(spark))).fold(Vector.empty[Registration])(_.regs)
       if (rs.isEmpty) plan else go(plan, rs)
     }
 

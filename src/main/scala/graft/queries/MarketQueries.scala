@@ -950,7 +950,7 @@ private[graft] object MarketQueries {
 
     // Served by the trades_token_day rollup via RollupRewrite (VERDICT
     // r14 #1): the daily-volume aggregate names raw trades; the rule
-    // substitutes the MV's exact decimal partial (vol_dec). The re-agg
+    // substitutes the MV's exact 1e-4-scaled partial (ui). The re-agg
     // reuses the cached rollup's hash(token, day) partitioning (no
     // exchange), then ONE range exchange on token_id serves BOTH the
     // MA window (RangePartitioning(token) clusters each token) and
@@ -963,7 +963,7 @@ private[graft] object MarketQueries {
       registerRollups(s, d)
       val daily0 = Views.trades(s, d)
         .groupBy(col("token_id"), date_trunc("day", col("ts")).as("day"))
-        .agg(sum(col("usd")).as("vol_dec"))
+        .agg(sum(round(col("usd") * 10000).cast("long")).as("ui"))
       // exact grain ⇒ Project over the pre-sorted MV: the whole query
       // is the window's one keyed exchange over cached narrow rows
       // (IMR forwards ordering, not partitioning — measured), and the
@@ -974,10 +974,11 @@ private[graft] object MarketQueries {
       val w = Window.partitionBy(col("token_id")).orderBy(col("day_num"))
         .rangeBetween(-6, 0)
       daily
-        .withColumn("volume_usd", col("vol_dec").cast("double"))
+        .withColumn("volume_usd", col("ui") / 10000.0)
         // double division (not decimal/decimal): engines share IEEE
-        // semantics but not decimal-division scale rules
-        .withColumn("ma7_usd", sum(col("vol_dec")).over(w).cast("double") /
+        // semantics but not decimal-division scale rules; the window
+        // sum's /1e4 is the double of the oracle's decimal sum
+        .withColumn("ma7_usd", sum(col("ui")).over(w) / 10000.0 /
           count(lit(1)).over(w))
         .sortWithinPartitions(col("token_id"), col("day_num"))
         .select(col("token_id"), col("day"), col("volume_usd"), col("ma7_usd"))

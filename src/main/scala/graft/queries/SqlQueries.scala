@@ -87,7 +87,7 @@ private[graft] object SqlQueries {
       graft.model.GraftCatalog.register(s, d)
       s.sql("""WITH c4 AS (
               |  SELECT token_id, bucket, open, high, low, close,
-              |    volume_dec, trades,
+              |    volume_i, trades,
               |    CAST(timestamp_seconds(
               |      CAST(FLOOR(CAST(bucket AS BIGINT) / 14400) AS BIGINT) * 14400)
               |      AS TIMESTAMP_NTZ) AS b4
@@ -96,7 +96,7 @@ private[graft] object SqlQueries {
               |  min_by(open, bucket) AS open, MAX(high) AS high,
               |  MIN(low) AS low, max_by(close, bucket) AS close,
               |  SUM(trades) AS trades,
-              |  CAST(SUM(volume_dec) AS DOUBLE) AS volume
+              |  CAST(SUM(volume_i) AS DOUBLE) / 10000.0 AS volume
               |FROM c4 GROUP BY token_id, b4
               |ORDER BY token_id, bucket""".stripMargin)
     }, Some(

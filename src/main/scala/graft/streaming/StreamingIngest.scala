@@ -36,11 +36,11 @@ object StreamingIngest {
         max(col("price")).as("high"),
         min(col("price")).as("low"),
         max_by(col("price"), struct(col("ts"), col("event_id"), col("price"))).as("close"),
-        sum(col("usd")).as("volume_dec"),
+        sum(round(col("usd") * 10000).cast("long")).as("volume_i"),
         count(lit(1)).as("trades"))
       .select(col("w.start").as("bucket"), col("token_id"), col("open"),
         col("high"), col("low"), col("close"),
-        col("volume_dec").cast("double").as("volume"), col("trades"))
+        (col("volume_i") / 10000.0).as("volume"), col("trades"))
 
   /** Incremental leaderboard aggregates over a fill stream — the
     * streaming twin of the wallet_leaderboard_stats_1h MV (update

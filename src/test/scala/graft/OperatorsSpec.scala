@@ -46,8 +46,8 @@ class OperatorsSpec extends SparkSpec {
     val c1m = Candles.fromTicks(ev, "minute", col("token_id"), col("ts"),
       col("event_id"), col("price"), col("usd"))
     val c1h = Candles.reaggregate(c1m, "hour")
-    val v1m = c1m.agg(sum("volume_dec"), sum("trades")).head()
-    val v1h = c1h.agg(sum("volume_dec"), sum("trades")).head()
+    val v1m = c1m.agg(sum("volume_i"), sum("trades")).head()
+    val v1h = c1h.agg(sum("volume_i"), sum("trades")).head()
     assert(v1m == v1h)
   }
 
@@ -218,5 +218,46 @@ class OperatorsSpec extends SparkSpec {
       (1L, "1996-01-01 03", 16.0, false),
       (2L, "1996-01-01 05", 2.0, false),
       (2L, "1996-01-01 06", 4.0, false)))
+  }
+
+  test("rollup MVs hold money partials in no DECIMAL wider than 18 digits") {
+    import org.apache.spark.sql.types.DecimalType
+    for (name <- Seq("daily_flows", "trades_token_day", "candles_1m",
+        "lb_rollup_day")) {
+      val wide = SparkEntry.sessionViews(name)(spark, sf).schema.fields
+        .filter(_.dataType match {
+          case d: DecimalType => d.precision > 18
+          case _              => false
+        })
+      assert(wide.isEmpty, s"$name holds ${wide.mkString(", ")}")
+    }
+  }
+
+  test("a scaled partial / 1e4 is the double of its DECIMAL(18,4) value") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val top = (1L << 53) - 1
+    val rnd = new scala.util.Random(3)
+    val unscaled = Seq(0L, 1L, -1L, top, -top) ++
+      Seq.fill(100000)(rnd.nextLong() % (top + 1))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(unscaled.map(u =>
+        Row(u, java.math.BigDecimal.valueOf(u, 4))): _*),
+      StructType(Seq(StructField("u", LongType),
+        StructField("d", DecimalType(18, 4)))))
+    val bad = df.filter(
+      round(col("d") * 10000).cast("long") =!= col("u") ||
+        (col("u") / 10000.0) =!= col("d").cast("double"))
+    assert(df.count() == unscaled.size)
+    assert(bad.count() == 0, bad.limit(5).collect().mkString("; "))
+  }
+
+  test("an overflowing BIGINT partial sum raises instead of wrapping") {
+    import spark.implicits._
+    val e = intercept[Exception](
+      Seq(Long.MaxValue, 1L).toDF("v").agg(sum(col("v"))).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("ARITHMETIC_OVERFLOW")), msgs.mkString(" | "))
   }
 }

@@ -201,7 +201,7 @@ class PlanAuditSpec extends SparkSpec {
     val rawMarkers = Set("usd", "qty", "price", "ts", "side", "trade_id")
     val pins: Seq[(String, Set[String], Long)] = Seq(
       ("q_vwap",       Set("ui", "qi"),         tokenDayN),
-      ("q_volume_ma7", Set("vol_dec"),          tokenDayN),
+      ("q_volume_ma7", Set("ui"),               tokenDayN),
       ("q_lb_explain", Set("bi", "si", "market"), walletMarketN),
       ("q_summap",     Set("tq", "mxq"),        walletTokenN))
     for ((name, partials, grainN) <- pins) {

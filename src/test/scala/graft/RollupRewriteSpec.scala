@@ -289,4 +289,19 @@ class RollupRewriteSpec extends SparkSpec {
       RollupRewrite.clear(spark)
     }
   }
+
+  test("session rollups register once per session; a cleared session " +
+       "registers again") {
+    RollupRewrite.clear(spark)
+    val before = SparkEntry.rollupRegistrations.get()
+    SparkEntry.queries("q_lb_explain")(spark, sf)
+    SparkEntry.queries("q_lb_explain")(spark, sf)
+    assert(SparkEntry.rollupRegistrations.get() - before == 1)
+    RollupRewrite.clear(spark)
+    // q_lb_explain's rolledUp requires the rule to fire: it builds only
+    // if the cleared session registered its rollups again
+    SparkEntry.queries("q_lb_explain")(spark, sf)
+    assert(SparkEntry.rollupRegistrations.get() - before == 2)
+    RollupRewrite.clear(spark)
+  }
 }
