@@ -177,13 +177,13 @@ object StreamBench {
 
       // streaming quantile-state MV (§2 #182): per-(token, day) KLL
       // sketch states maintained incrementally — the
-      // TypedImperativeAggregate buffer serializes through the state
+      // kll_sketch_agg_double buffer serializes through the state
       // store each batch, so this measures sketch-state commit cost
       // next to the count/sum MV (leaderboard) above
       val kll = replay(s"$tmp/ticks", pt)
         .withWatermark("ts", "30 days")
         .groupBy(col("token_id"), date_trunc("day", col("ts")).as("day"))
-        .agg(graft.functions.KllExprs.kll_agg(col("price"), 200).as("st"))
+        .agg(kll_sketch_agg_double(col("price"), 200).as("st"))
       val l2b = run("quantile_state_mv", kll, "update", s"$tmp/ckpt", tag, store)
 
       // incremental FIFO ledger: open lots carried across batches

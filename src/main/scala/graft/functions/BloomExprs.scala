@@ -34,6 +34,9 @@ import org.apache.spark.sql.types._
   * Sketch layout (BinaryType): int numBits, int numHashes, then the
   * bitset little-endian-long-packed — self-describing, so the probe
   * side needs no sizing parameters.
+  *
+  * Kept over Spark's `bloom_filter_agg`: its probe `might_contain` is
+  * not in the 4.1.2 function registry (`UNRESOLVED_ROUTINE`).
   */
 case class BloomAgg(child: Expression, numBits: Int, numHashes: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)

@@ -31,6 +31,9 @@ import org.apache.spark.sql.types._
   * Sketch layout (BinaryType): int depth, int width, then the
   * depth×width counter matrix row-major little-endian — self-
   * describing; N is recoverable as the sum of any row.
+  *
+  * Kept over Spark's `count_min_sketch`: it has no point-estimate
+  * function, so its state cannot answer "how often does x occur".
   */
 case class CountMinAgg(child: Expression, depth: Int, width: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)

@@ -39,21 +39,7 @@ object GraftFunctions {
       CountMinEstimate(es(0), es(1))),
     "graft_uniq_up_to" -> ((es: Seq[Expression]) =>
       UniqUpToAgg(es(0), intArg(es(1)))),
-    "graft_zorder" -> ((es: Seq[Expression]) => ZOrder(es(0), es(1))),
-    "graft_theta_agg" -> ((es: Seq[Expression]) =>
-      ThetaSketchAgg(es(0), intArg(es(1)))),
-    "graft_theta_union" -> ((es: Seq[Expression]) =>
-      ThetaSetEstimate(es(0), es(1), "union")),
-    "graft_theta_intersect" -> ((es: Seq[Expression]) =>
-      ThetaSetEstimate(es(0), es(1), "intersect")),
-    "graft_theta_diff" -> ((es: Seq[Expression]) =>
-      ThetaSetEstimate(es(0), es(1), "diff")),
-    "graft_kll_agg" -> ((es: Seq[Expression]) =>
-      KllSketchAgg(es(0), intArg(es(1)))),
-    "graft_kll_merge" -> ((es: Seq[Expression]) =>
-      KllMergeAgg(es(0), intArg(es(1)))),
-    "graft_kll_quantile" -> ((es: Seq[Expression]) =>
-      KllQuantile(es(0), es(1))))
+    "graft_zorder" -> ((es: Seq[Expression]) => ZOrder(es(0), es(1))))
 
   def register(spark: SparkSession): Unit = all.foreach { case (name, builder) =>
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -21,7 +21,7 @@ import scala.collection.mutable
   * partial aggregation runs map-side and the Exchange carries at most
   * k entries per key per task — at 100 TB the shuffle tracks key
   * count, not row count. Returns the values ordered most-recent-first
-  * by (ts, seq).
+  * by (ts, seq). Spark has no built-in equivalent.
   */
 case class RecentTopK(ts: Expression, seq: Expression, value: Expression,
     k: Int, mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)

@@ -29,6 +29,7 @@ final class UpToBuf(val set: java.util.HashSet[Long], var saturated: Boolean) {
   *
   * Exact, not sketched: the buffer stores raw long values, so there
   * is no hash-collision error term. Input must be LongType ids.
+  * Spark has no built-in equivalent.
   */
 case class UniqUpToAgg(child: Expression, n: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)

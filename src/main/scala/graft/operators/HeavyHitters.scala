@@ -16,6 +16,10 @@ import scala.collection.mutable
   * only `capacity` counters; summed per item, any item with true count
   * > n/capacity is guaranteed to survive. The shuffle is
   * O(partitions × capacity), independent of vocabulary size.
+  *
+  * Kept over Spark's `approx_top_k`: it returns only `{item, count}`,
+  * no error term, so the gates' lower bound `count_est − err` cannot
+  * be formed from it.
   */
 object HeavyHitters {
 

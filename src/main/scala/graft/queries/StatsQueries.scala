@@ -841,7 +841,7 @@ private[graft] object StatsQueries {
         |ORDER BY token_id""".stripMargin)),
 
     // Mergeable KLL quantile states (CH quantileTDigestState/Merge MV
-    // pattern, functions/KllExprs.scala): per-(token, day) sketch
+    // pattern, Spark's kll_sketch_* built-ins): per-(token, day) sketch
     // states re-aggregated per token, median/p90 read from the MERGED
     // state. The gate is tie-robust and estimation-safe: v is an
     // accepted q-quantile when count(<v)/n ≤ q+ε and count(≤v)/n ≥
@@ -851,17 +851,17 @@ private[graft] object StatsQueries {
     // is merge-order-dependent, only the rank-error CONTRACT is
     // deterministic.
     QueryDef("q_kll_gate", (s, d) => {
-      import graft.functions.KllExprs._
       val states = Views.trades(s, d)
         .select(col("token_id"), date_trunc("day", col("ts")).as("day"),
           col("qty"))
         .groupBy(col("token_id"), col("day"))
-        .agg(kll_agg(col("qty"), 200).as("st"))
+        .agg(kll_sketch_agg_double(col("qty"), 200).as("st"))
       val merged = states.groupBy(col("token_id"))
-        .agg(count(lit(1)).as("n_states"), kll_merge(col("st"), 200).as("st"))
+        .agg(count(lit(1)).as("n_states"),
+          kll_merge_agg_double(col("st"), 200).as("st"))
         .select(col("token_id"), col("n_states"),
-          kll_quantile(col("st"), lit(0.5)).as("m"),
-          kll_quantile(col("st"), lit(0.9)).as("p90"))
+          kll_sketch_get_quantile_double(col("st"), lit(0.5)).as("m"),
+          kll_sketch_get_quantile_double(col("st"), lit(0.9)).as("p90"))
       // Gate margin derived from the sketch's own bound, not a magic
       // constant (ADVICE r14: DataSketches KLL compaction is
       // randomized, so estimation-mode merges are run-to-run
@@ -1162,17 +1162,17 @@ private[graft] object StatsQueries {
         |  v(check_name, ok)
         |ORDER BY check_name""".stripMargin)),
 
-    // Theta-sketch set algebra (CH uniqTheta*): HLL states union but
-    // cannot intersect — "wallets active in BOTH years" from sketches
-    // alone needs theta. One O(k) sketch per cohort, then ∩/∪/\
-    // estimates from the states; gated against the exact set joins.
+    // Theta-sketch set algebra (CH uniqTheta*, Spark's theta_*
+    // built-ins): HLL states union but cannot intersect — "wallets
+    // active in BOTH years" from sketches alone needs theta. One O(k)
+    // sketch per cohort, then ∩/∪/\ estimates from the states; gated
+    // against the exact set joins.
     QueryDef("q_cohort_overlap", (s, d) => {
-      import graft.functions.ThetaExprs
       val w = wt(s, d)
       def cohort(y: Int) =
         w.filter(year(col("ts")) === y).select(col("wallet"))
       def sk(y: Int, as: String) = cohort(y)
-        .agg(ThetaExprs.theta_agg(col("wallet"), lgK = 14).as(as))
+        .agg(theta_sketch_agg(col("wallet"), 14).as(as))
       def exact(df: DataFrame, as: String) =
         df.agg(count(lit(1)).as(as))
       val a = cohort(1996).distinct()
@@ -1182,12 +1182,17 @@ private[graft] object StatsQueries {
         .crossJoin(exact(a.unionByName(b).distinct(), "ex_u"))
         .crossJoin(exact(a.join(b, Seq("wallet"), "left_anti"), "ex_d"))
         .select(
-          ThetaExprs.theta_intersect_est(col("ska"), col("skb")).as("est_i"),
-          ThetaExprs.theta_union_est(col("ska"), col("skb")).as("est_u"),
-          ThetaExprs.theta_diff_est(col("ska"), col("skb")).as("est_d"),
+          theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+            .as("est_i"),
+          theta_sketch_estimate(theta_union(col("ska"), col("skb")))
+            .as("est_u"),
+          theta_sketch_estimate(theta_difference(col("ska"), col("skb")))
+            .as("est_d"),
           col("ex_i"), col("ex_u"), col("ex_d"))
+      // estimates are BIGINT: the relative error is formed in double
       def within(est: Column, ex: Column) =
-        abs(est - ex) / greatest(ex.cast("double"), lit(1.0)) <= 0.05
+        abs(est.cast("double") - ex) /
+          greatest(ex.cast("double"), lit(1.0)) <= 0.05
       one.select(explode(array(
           struct(lit("theta_diff").as("check_name"), col("ex_d").as("n"),
             within(col("est_d"), col("ex_d")).as("ok")),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.StreamingIngest
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -116,17 +117,17 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming KLL quantile-state MV: streamed states equal batch states, merge level reads true quantiles") {
     // The quantile rollup-MV (§2 #182) maintained BY A STREAM: the
-    // TypedImperativeAggregate's serialize/deserialize round-trips
+    // kll_sketch_agg_double buffer's serialize/deserialize round-trips
     // through the state store across micro-batches, so per-group
     // sketch states stream exactly like count/sum MVs do.
-    import graft.functions.KllExprs._
+    def median(st: Column) = kll_sketch_get_quantile_double(st, lit(0.5))
     val grouped = streamingEvents
       .select((col("user_id") % 8).as("g"), col("value"))
-      .groupBy(col("g")).agg(kll_agg(col("value"), 200).as("st"))
+      .groupBy(col("g")).agg(kll_sketch_agg_double(col("value"), 200).as("st"))
     StreamingIngest.runToMemory(spark, grouped, "kll_stream_out",
       outputMode = "complete")
     val streamed = spark.table("kll_stream_out")
-      .select(col("g"), kll_quantile(col("st"), lit(0.5)).as("m"))
+      .select(col("g"), median(col("st")).as("m"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     // batch twin: exact-mode medians (events per group < k=200 at
     // sf0.001 → the sketch holds every value; quantiles are the true
@@ -136,16 +137,17 @@ class StreamingSpec extends SparkSpec {
     val sizes = ev.groupBy(col("g")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sizes.values.forall(_ < 200), s"exact-mode precondition: $sizes")
-    val batch = ev.groupBy(col("g")).agg(kll_agg(col("value"), 200).as("st"))
-      .select(col("g"), kll_quantile(col("st"), lit(0.5)).as("m"))
+    val batch = ev.groupBy(col("g"))
+      .agg(kll_sketch_agg_double(col("value"), 200).as("st"))
+      .select(col("g"), median(col("st")).as("m"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(streamed == batch)
     // merge level over the STREAMED states answers the global median
     // within the KLL rank bound (merged n > k → estimation mode)
     val n = ev.count()
     val est = spark.table("kll_stream_out")
-      .agg(kll_merge(col("st"), 200).as("st"))
-      .select(kll_quantile(col("st"), lit(0.5)).as("m")).head().getDouble(0)
+      .agg(kll_merge_agg_double(col("st"), 200).as("st"))
+      .select(median(col("st")).as("m")).head().getDouble(0)
     val rank = ev.filter(col("value") <= est).count().toDouble / n
     assert(math.abs(rank - 0.5) < 0.05, s"merged median rank $rank")
   }
